@@ -300,14 +300,16 @@ object SparkEntry {
     "q91_setback" -> ((s, dir) => {
       // distance to the NEAREST footprint boundary per event (setback
       // analysis — the planning metric behind "how far is this point from
-      // the closest building"): the 100 square rings broadcast, the exact
-      // st_dist2_ring kernel scores every (point, ring) pair scan-locally,
-      // and min(struct(d2, fid)) picks the closest with a total-order tie
-      // break. Per-pair distances carry q75's op-order-exact contract, min
-      // is order-free, sqrt is one op → bit-exact end to end. Routed through
-      // Setback.auto: 100 rings take the broadcast path here; past the
-      // spark.graft.setback.broadcastRingLimit threshold the same call takes
-      // the cell-prefiltered ring search (bit-identical rows — SetbackSpec)
+      // the closest building"): the 100 square rings ride the plan as a
+      // SetbackIndex and the codegen setback_nearest kernel scores, per
+      // event, only the rings its hex-ring walk meets — each with the exact
+      // st_dist2_ring kernel — keeping the min(struct(d2, fid)) row (ties on
+      // fid). Per-ring distances carry q75's op-order-exact contract, the
+      // min is order-free, sqrt is one op → bit-exact end to end. Routed
+      // through Setback.auto: 100 rings take the map-only index path here;
+      // past the spark.graft.setback.broadcastRingLimit threshold the same
+      // call takes the distributed ring search (bit-identical rows —
+      // SetbackSpec)
       val pts = withXY(t(s, dir, "events"), "event_id")
         .select(col("event_id"), col("x"), col("y"))
       val polys = t(s, dir, "part").where(col("p_partkey") < 100)

@@ -1,0 +1,66 @@
+package graft.core
+
+/**
+ * Cell id → ordinals table shared by the plan-reference indexes
+ * ([[graft.operators.PipIndex]], [[graft.operators.KnnIndex]],
+ * [[graft.operators.SetbackIndex]]). Open addressing with linear probing over
+ * primitive arrays (power-of-two capacity, [[Hashing.mix64]] slots): a
+ * `java.util.HashMap[java.lang.Long, _]` would BOX the key on every probe —
+ * 10^12 boxed Longs on the probe scan. Each bucket lists its ordinals in
+ * ascending order; an empty slot has a null bucket.
+ */
+final class CellBuckets private (keys: Array[Long], vals: Array[Array[Int]], mask: Int) {
+
+  /** Ordinals bucketed in `cell`, or null. Allocation-free. */
+  def apply(cell: Long): Array[Int] = {
+    var slot = (Hashing.mix64(cell) & mask).toInt
+    while (true) {
+      val v = vals(slot)
+      if (v == null) return null
+      if (keys(slot) == cell) return v
+      slot = (slot + 1) & mask
+    }
+    null
+  }
+}
+
+object CellBuckets {
+
+  /** `cells(i)`: the cells ordinal i belongs to (distinct; null = none). */
+  def build(cells: Array[Array[Long]]): CellBuckets = {
+    var total = 0
+    cells.foreach(cs => if (cs != null) total += cs.length)
+    var cap = 16
+    while (cap < total * 2) cap <<= 1
+    val keys = new Array[Long](cap)
+    val counts = new Array[Int](cap)
+    val mask = cap - 1
+    def slotOf(cell: Long): Int = {
+      var slot = (Hashing.mix64(cell) & mask).toInt
+      while (counts(slot) != 0 && keys(slot) != cell) slot = (slot + 1) & mask
+      slot
+    }
+    // two passes: count per cell, then fill exact-size buckets in ordinal order
+    val vals = new Array[Array[Int]](cap)
+    var pass = 0
+    while (pass < 2) {
+      var i = 0
+      while (i < cells.length) {
+        val cs = cells(i)
+        var k = 0
+        while (cs != null && k < cs.length) {
+          val slot = slotOf(cs(k))
+          if (pass == 0) { keys(slot) = cs(k); counts(slot) += 1 }
+          else {
+            if (vals(slot) == null) { vals(slot) = new Array[Int](counts(slot)); counts(slot) = 0 }
+            vals(slot)(counts(slot)) = i; counts(slot) += 1
+          }
+          k += 1
+        }
+        i += 1
+      }
+      pass += 1
+    }
+    new CellBuckets(keys, vals, mask)
+  }
+}

@@ -123,23 +123,28 @@ object HexGrid {
   }
 
   /**
-   * Conservative polygon cover at `res`: every cell whose hexagon could intersect
-   * the polygon's bounding box, refined so the hexagon's own bbox intersects the
-   * polygon env and, when the polygon has > 4 ring points, the hex center or a
-   * corner relates to the polygon. Guarantee needed by the PIP join prefilter:
+   * Conservative polygon cover at `res`: every cell whose hexagon's own bbox
+   * intersects the polygon env. Guarantee needed by the PIP join prefilter:
    * for any point p with covers(p) true, encode(p, res) ∈ cover(poly, res).
    * That holds because the containing hexagon of p intersects the polygon, hence
    * its bbox intersects the polygon env, and we only prune by bbox tests.
    */
   def cover(poly: Polygon, res: Int): Array[Long] = {
     val env = poly.env
+    coverBox(env.minx, env.miny, env.maxx, env.maxy, res)
+  }
+
+  /** [[cover]] of an axis-aligned box (the polygon's env). Each (q, r) of
+    * the scan is visited once, so the cells come out distinct. */
+  def coverBox(minx: Double, miny: Double, maxx: Double, maxy: Double,
+               res: Int): Array[Long] = {
     val size = edge(res)
     val rc = size // circumradius
-    val seen = new java.util.HashSet[java.lang.Long]()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val ap = apothem(res)
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
     // scan candidate axial range from bbox corners expanded by circumradius
-    val xs = Array(env.minx - rc, env.maxx + rc)
-    val ys = Array(env.miny - rc, env.maxy + rc)
+    val xs = Array(minx - rc, maxx + rc)
+    val ys = Array(miny - rc, maxy + rc)
     var qMin = Int.MaxValue; var qMax = Int.MinValue
     for (x <- xs; y <- ys) {
       val c = encode(x, y, res)
@@ -155,15 +160,12 @@ object HexGrid {
       while (r <= rMax) {
         val cy = size * (Sqrt3 / 2.0 * q + Sqrt3 * r)
         // hex bbox vs polygon env (touching included — reference P6 semantics)
-        if (cx + rc >= env.minx && cx - rc <= env.maxx &&
-            cy + apothem(res) >= env.miny && cy - apothem(res) <= env.maxy) {
-          val cell = pack(res, q, r)
-          if (seen.add(cell)) out += cell
-        }
+        if (cx + rc >= minx && cx - rc <= maxx &&
+            cy + ap >= miny && cy - ap <= maxy) out += pack(res, q, r)
         r += 1
       }
       q += 1
     }
-    out.toArray
+    out.result()
   }
 }

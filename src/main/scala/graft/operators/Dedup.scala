@@ -92,11 +92,8 @@ object Dedup {
     * pin the equality); (id, band ∈ 0..perms−1, bucket) rows as before. */
   private def md5SliceBuckets(docs: DataFrame, idCol: String, textCol: String,
                               perms: Int, ngram: Int): DataFrame = {
-    // central guard (all entry points — lshPairs, lshPairsWeighted,
-    // containmentPairs — route here): the kernel slices a 16-byte digest,
-    // so perms > 4 would index past it at execution time
-    require(perms >= 1 && perms <= 4,
-      s"perms must be 1..4 (a 16-byte md5 digest yields 4 4-byte slices; got $perms)")
+    // perms outside 1..4 fails analysis of this select (the expression's
+    // checkInputDataTypes) for every entry point routed here
     docs.select(col(idCol).as("id"),
       posexplode(org.apache.spark.sql.graft.TextFunctionsImpl.md5_minhash_sig(
         col(textCol), lit(ngram), lit(perms))).as(Seq("band", "bucket")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.HexGrid
+import graft.core.{CellBuckets, HexGrid}
 
 /**
  * Serializable kNN index over target centroids for the codegen kNN path
@@ -14,9 +14,8 @@ import graft.core.HexGrid
  *    city-scale target sets this beats walking hex rings, especially for
  *    far-field probes whose ring radius would be huge;
  *  - otherwise: hex-cell ring expansion with the provable stop bound
- *    ([[KnnJoin.ringLowerBound]]), buckets in an open-addressing
- *    primitive-key table (a boxed HashMap probe per row would allocate on
- *    the 10^12-row scan; see PipIndex.lookup).
+ *    ([[KnnJoin.ringLowerBound]]), buckets in the primitive-key
+ *    [[graft.core.CellBuckets]] table.
  *
  * Tie-break: (d2, target_id) ascending — targets are pre-sorted by id, so
  * ordinal order IS id order and the insertion sort compares ordinals.
@@ -38,40 +37,9 @@ final class KnnIndex(targets: Seq[(String, Double, Double)], val k: Int,
   @transient private lazy val tids: Array[org.apache.spark.unsafe.types.UTF8String] =
     sorted.map(t => org.apache.spark.unsafe.types.UTF8String.fromString(t._1))
 
-  /** cell → target ordinals; open addressing, power-of-two capacity. */
-  @transient private lazy val buckets: (Array[Long], Array[Array[Int]], Int) = {
-    val tmp = new java.util.HashMap[java.lang.Long, scala.collection.mutable.ArrayBuffer[Int]]()
-    var i = 0
-    while (i < n) {
-      tmp.computeIfAbsent(HexGrid.encode(txs(i), tys(i), res),
-        _ => scala.collection.mutable.ArrayBuffer.empty[Int]) += i
-      i += 1
-    }
-    var cap = 16
-    while (cap < tmp.size * 4) cap <<= 1
-    val keys = new Array[Long](cap)
-    val vals = new Array[Array[Int]](cap)
-    val mask = cap - 1
-    tmp.forEach { (key, v) =>
-      var slot = (graft.core.Hashing.mix64(key) & mask).toInt
-      while (vals(slot) != null) slot = (slot + 1) & mask
-      keys(slot) = key
-      vals(slot) = v.toArray
-    }
-    (keys, vals, mask)
-  }
-
-  private def lookup(cell: Long): Array[Int] = {
-    val (keys, vals, mask) = buckets
-    var slot = (graft.core.Hashing.mix64(cell) & mask).toInt
-    while (true) {
-      val v = vals(slot)
-      if (v == null) return null
-      if (keys(slot) == cell) return v
-      slot = (slot + 1) & mask
-    }
-    null
-  }
+  /** cell → target ordinals (each target in the cell of its centroid). */
+  @transient private lazy val buckets: CellBuckets = CellBuckets.build(
+    Array.tabulate(n)(i => Array(HexGrid.encode(txs(i), tys(i), res))))
 
   private val EmptyArray =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](0))
@@ -111,7 +79,7 @@ final class KnnIndex(targets: Seq[(String, Double, Double)], val k: Int,
         val cells = if (r == 0) Array(c0) else HexGrid.ring(c0, r)
         var ci = 0
         while (ci < cells.length) {
-          val cand = lookup(cells(ci))
+          val cand = buckets(cells(ci))
           if (cand != null) {
             var j = 0
             while (j < cand.length) {

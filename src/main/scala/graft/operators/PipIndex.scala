@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Geom.{Polygon, PreparedPolygon, Pt}
-import graft.core.HexGrid
+import graft.core.{CellBuckets, HexGrid}
 import graft.model.Footprint
 
 /**
@@ -27,48 +27,9 @@ final class PipIndex(polys: Seq[Footprint], res: Int) extends Serializable {
   @transient private lazy val ids: Array[org.apache.spark.unsafe.types.UTF8String] =
     entries.map(e => org.apache.spark.unsafe.types.UTF8String.fromString(e.id))
 
-  /**
-   * Open-addressing long→Array[Int] table (linear probing, power-of-two
-   * capacity). A java.util.HashMap[java.lang.Long, _] here would BOX the key
-   * on every probe — 10^12 boxed Longs on the target scan. Empty slot =
-   * null value; primitive key array probed with a mixed hash.
-   */
-  @transient private lazy val buckets: (Array[Long], Array[Array[Int]], Int) = {
-    val tmp = new java.util.HashMap[java.lang.Long, scala.collection.mutable.ArrayBuffer[Int]]()
-    var i = 0
-    while (i < entries.length) {
-      val poly = Polygon(entries(i).ring, entries(i).holes)
-      HexGrid.cover(poly, res).foreach { cell =>
-        tmp.computeIfAbsent(cell, _ => scala.collection.mutable.ArrayBuffer.empty[Int]) += i
-      }
-      i += 1
-    }
-    var cap = 16
-    while (cap < tmp.size * 4) cap <<= 1
-    val keys = new Array[Long](cap)
-    val vals = new Array[Array[Int]](cap)
-    val mask = cap - 1
-    tmp.forEach { (k, v) =>
-      var slot = (graft.core.Hashing.mix64(k) & mask).toInt
-      while (vals(slot) != null) slot = (slot + 1) & mask
-      keys(slot) = k
-      vals(slot) = v.toArray
-    }
-    (keys, vals, mask)
-  }
-
-  /** Allocation-free probe. Returns null on miss. */
-  private def lookup(cell: Long): Array[Int] = {
-    val (keys, vals, mask) = buckets
-    var slot = (graft.core.Hashing.mix64(cell) & mask).toInt
-    while (true) {
-      val v = vals(slot)
-      if (v == null) return null
-      if (keys(slot) == cell) return v
-      slot = (slot + 1) & mask
-    }
-    null
-  }
+  /** cell → polygon ordinals over each polygon's hex cover. */
+  @transient private lazy val buckets: CellBuckets = CellBuckets.build(
+    entries.map(e => HexGrid.cover(Polygon(e.ring, e.holes), res)))
 
   @transient private lazy val prepared: Array[PreparedPolygon] =
     entries.map(e => new PreparedPolygon(Polygon(e.ring, e.holes)))
@@ -77,7 +38,7 @@ final class PipIndex(polys: Seq[Footprint], res: Int) extends Serializable {
 
   /** Matched feature ids as ArrayData (shared empty instance on miss). */
   def matches(x: Double, y: Double): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val cand = lookup(HexGrid.encode(x, y, res))
+    val cand = buckets(HexGrid.encode(x, y, res))
     if (cand == null) return EmptyArray
     var n = 0
     var i = 0
@@ -91,18 +52,5 @@ final class PipIndex(polys: Seq[Footprint], res: Int) extends Serializable {
     else if (n == hit.length) new org.apache.spark.sql.catalyst.util.GenericArrayData(hit)
     else new org.apache.spark.sql.catalyst.util.GenericArrayData(
       java.util.Arrays.copyOf(hit.asInstanceOf[Array[AnyRef]], n).asInstanceOf[Array[Any]])
-  }
-
-  /** Number of containing polygons (pure-primitive hot path for counts). */
-  def countMatches(x: Double, y: Double): Int = {
-    val cand = lookup(HexGrid.encode(x, y, res))
-    if (cand == null) return 0
-    var n = 0
-    var i = 0
-    while (i < cand.length) {
-      if (prepared(cand(i)).covers(x, y)) n += 1
-      i += 1
-    }
-    n
   }
 }

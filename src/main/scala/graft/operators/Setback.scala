@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.GeoFunctionsImpl.st_dist2_ring
+import org.apache.spark.sql.graft.GeoFunctionsImpl.{setback_nearest, st_dist2_ring}
 import graft.functions.GeoFunctions.{hex_cover, hex_ring}
 
 /**
@@ -15,54 +15,51 @@ import graft.functions.GeoFunctions.{hex_cover, hex_ring}
  * tie-break on footprint id ascending (`min(struct(d2, fid))` — order-free,
  * so results never depend on partitioning).
  *
- * Two physical paths, mirroring [[KnnJoin]]:
+ * Two physical paths, both over the one exact [[
+ * org.apache.spark.sql.graft.RingKernels.dist2ToRing]] kernel:
  *
- *  1. [[broadcastExact]] — the ring side fits in a broadcast: every point
- *     scores every ring scan-locally with the codegen [[
- *     org.apache.spark.sql.graft.RingKernels.dist2ToRing]] kernel. Exact and
- *     shuffle-free on the point side, but LINEAR in #rings per point — right
- *     for ≤ a few thousand footprints (the q91 fixture's 100), wrong for a
- *     metro-scale footprint set.
- *  2. [[ringSearch]] — the scale path: rings bucket into the hex cells their
- *     cover spans ([[graft.functions.GeoFunctions.hex_cover]] covers the
- *     whole footprint, so every boundary point lies in a covered cell);
- *     points expand hex rings round by round (geometric spans, like
+ *  1. [[indexed]] — the ring side fits on the driver: a [[SetbackIndex]]
+ *     (rings bucketed by their hex cover cells) rides the plan as a
+ *     reference object and the codegen `setback_nearest` kernel walks hex
+ *     rings outward from each point's cell, scoring each met ring once,
+ *     until the [[KnnJoin.ringLowerBound]] stop rule proves no unmet ring
+ *     can be nearer (exact linear scan past `maxR`). One map-only
+ *     projection: no join, no exchange, no rounds; per-point work is
+ *     local-density-bounded.
+ *  2. [[ringSearch]] — the scale path for ring sets too large to collect:
+ *     rings bucket into the hex cells their cover spans
+ *     ([[graft.functions.GeoFunctions.hex_cover]] covers the whole
+ *     footprint, so every boundary point lies in a covered cell); points
+ *     expand hex rings round by round (geometric spans, like
  *     [[KnnJoin.ringJoin]]) and only candidate (point, ring) pairs within
- *     the current ring batch get the exact kernel. Stop bound: once the
- *     running best distance beats [[KnnJoin.ringLowerBound]](res, R+1), no
- *     footprint first met beyond ring R can be nearer — every boundary point
- *     of an unmet footprint sits in a cell at hex distance > R. Per-point
- *     work is local-density-bounded instead of #rings-bounded.
+ *     the current ring batch get the exact kernel, under the same stop rule.
  *
- * [[auto]] picks per ring-side size with a BOUNDED probe
- * (`limit(threshold + 1).count()` — O(threshold) even on a huge ring table),
- * conf `spark.graft.setback.broadcastRingLimit`.
+ * [[auto]] picks per ring-side size with ONE bounded collect
+ * (`limit(threshold + 1)` — O(threshold) even on a huge ring table, and the
+ * collected rows are the index when they fit), conf
+ * `spark.graft.setback.broadcastRingLimit`. The threshold caps the driver
+ * collect and the plan-object size, not per-point work.
  *
  * Inputs: `points` carries (`idCol`, x, y); `rings` carries
- * (fid, xs: array<double>, ys: array<double>). Output: (`idCol`, d2, dist,
- * nearest). Both paths return bit-identical rows (same kernel expression
- * tree, same order-free min) — property-pinned in SetbackSpec.
+ * (fid: string, xs: array<double>, ys: array<double>). Output: (`idCol`, d2,
+ * dist, nearest). Both paths return bit-identical rows (same kernel, same
+ * order) — pinned against the relational crossJoin oracle in SetbackSpec.
  */
 object Setback {
 
   val BroadcastRingLimitConf = "spark.graft.setback.broadcastRingLimit"
+  val DefaultRingLimit = 65536
 
-  /** Exact brute path: broadcast the rings, score every pair scan-locally.
-    * The point side gets the [[graft.core.Spread]] parallelism floor: rows
-    * are three scalars but each carries #rings exact-kernel evaluations, so
-    * a single-split input would run the whole scoring pass on one task. */
-  def broadcastExact(points: DataFrame, rings: DataFrame,
-                     idCol: String = "event_id"): DataFrame =
-    finish(idCol,
-      graft.core.Spread.floor(points.select(col(idCol),
-          col("x").cast("double").as("x"),
-          col("y").cast("double").as("y")))
-        .crossJoin(broadcast(rings.select(col("fid"), col("xs"), col("ys"))))
-        .select(col(idCol), col("fid"),
-          st_dist2_ring(col("xs"), col("ys"), col("x"), col("y")).as("d2"))
-        .groupBy(idCol)
-        .agg(min(struct(col("d2"), col("fid"))).as("m"))
-        .select(col(idCol), col("m.d2").as("d2"), col("m.fid").as("fid")))
+  /** Map-only index path: one codegen projection over the point scan. */
+  def indexed(points: DataFrame, index: SetbackIndex,
+              idCol: String = "event_id"): DataFrame = {
+    // no rings → no rows, as under the relational min over an empty cross product
+    val pts = if (index.isEmpty) points.where(lit(false)) else points
+    finish(idCol, pts
+      .select(col(idCol), setback_nearest(col("x").cast("double"),
+        col("y").cast("double"), index).as("m"))
+      .select(col(idCol), col("m.d2").as("d2"), col("m.fid").as("fid")))
+  }
 
   /**
    * Cell-prefiltered scale path: per round, pending points explode their next
@@ -71,7 +68,7 @@ object Setback {
    * bound exit. Rounds double their span (the [[KnnJoin.ringJoin]] shape:
    * O(log maxR) barriers, constant-factor candidate overshoot). Points still
    * open after `maxR` (far-field stragglers — small by construction) fall
-   * back to the exact broadcast score against the full ring table rather
+   * back to the exact crossJoin score against the full ring table rather
    * than returning a silently-truncated answer.
    */
   def ringSearch(points: DataFrame, rings: DataFrame,
@@ -132,15 +129,16 @@ object Setback {
     } finally t.unpersist(blocking = false)
   }
 
-  /** Route by ring-side size: broadcast under the conf threshold (default
-    * 4096 rings), cell-prefiltered ring search above it. */
+  /** Route by ring-side size: the index path up to the conf threshold
+    * (default 65536 rings), the distributed ring search above it. */
   def auto(points: DataFrame, rings: DataFrame, idCol: String = "event_id",
            res: Int = 12, maxR: Int = 16,
            checkpointDir: Option[String] = None): DataFrame = {
     val limit = points.sparkSession.conf
-      .getOption(BroadcastRingLimitConf).map(_.toInt).getOrElse(4096)
-    if (rings.limit(limit + 1).count() <= limit)
-      broadcastExact(points, rings, idCol)
+      .getOption(BroadcastRingLimitConf).map(_.toInt).getOrElse(DefaultRingLimit)
+    val probe = rings.select(col("fid"), col("xs"), col("ys")).limit(limit + 1).collect()
+    if (probe.length <= limit)
+      indexed(points, SetbackIndex.fromRows(probe, res, maxR), idCol)
     else ringSearch(points, rings, idCol, res, maxR, checkpointDir = checkpointDir)
   }
 

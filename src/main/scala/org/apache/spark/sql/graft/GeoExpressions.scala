@@ -9,7 +9,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -263,6 +263,46 @@ case class KnnMatchesExpr(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
   override def prettyName: String = "knn_matches"
+}
+
+/**
+ * Fully-codegen nearest ring boundary (same reference-object pattern as
+ * [[KnnMatchesExpr]]): the ring index ships in the plan, the generated code
+ * calls `index.nearest(x, y)` and returns `struct<fid, d2>` — the row
+ * `min(struct(d2, fid))` over every ring would give, without a join or an
+ * aggregate. NOT null-intolerant: a null x or y still gets the lowest fid
+ * with a null d2 (every per-ring distance is null there); the result is null
+ * only when the index holds no ring.
+ */
+case class SetbackNearestExpr(left: Expression, right: Expression,
+                              index: graft.operators.SetbackIndex)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def dataType: DataType =
+    new StructType().add("fid", StringType).add("d2", DoubleType)
+  override def nullable: Boolean = true
+  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType)
+  override def eval(input: InternalRow): Any = {
+    val x = left.eval(input)
+    val y = right.eval(input)
+    if (x == null || y == null) index.nullPoint()
+    else index.nearest(x.asInstanceOf[Double], y.asInstanceOf[Double])
+  }
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("setbackIndex", index,
+      classOf[graft.operators.SetbackIndex].getName)
+    val l = left.genCode(ctx)
+    val r = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${l.code}
+      ${r.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = (${l.isNull} || ${r.isNull})
+        ? $ref.nullPoint() : $ref.nearest(${l.value}, ${r.value});
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+  override def prettyName: String = "setback_nearest"
 }
 
 /** Column index (x) of a quad cell — codegen'd static call. */
@@ -901,6 +941,8 @@ object GeoFunctionsImpl {
     column(PipMatchesExpr(expression(x), expression(y), index))
   def knn_matches(x: Column, y: Column, index: graft.operators.KnnIndex): Column =
     column(KnnMatchesExpr(expression(x), expression(y), index))
+  def setback_nearest(x: Column, y: Column, index: graft.operators.SetbackIndex): Column =
+    column(SetbackNearestExpr(expression(x), expression(y), index))
   def hex_ring(x: Column, y: Column, res: Column, r: Column): Column =
     column(HexRingExpr(expression(x), expression(y), expression(res), expression(r)))
   def st_area(xs: Column, ys: Column): Column =

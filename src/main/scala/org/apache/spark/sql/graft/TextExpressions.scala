@@ -205,6 +205,18 @@ case class Md5MinHashSigExpr(first: Expression, second: Expression, third: Expre
     extends TernaryExpression with ExpectsInputTypes {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType, IntegerType)
+  // a 32-hex md5 digest has 4 slices: reject other band counts at analysis,
+  // not with an out-of-bounds read inside the generated row loop
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    val types = super.checkInputDataTypes()
+    if (types.isFailure) types
+    else if (!third.foldable || !Option(third.eval()).exists { p =>
+        val v = p.asInstanceOf[Int]; v >= 1 && v <= 4 })
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a constant perms in [1, 4] (a 32-hex md5 digest " +
+          s"yields 4 8-char slices), got ${third.sql}")
+    else types
+  }
   override def nullSafeEval(t: Any, n: Any, p: Any): Any =
     Md5MinHashKernel.eval(t.asInstanceOf[UTF8String], n.asInstanceOf[Int], p.asInstanceOf[Int])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -19,6 +19,19 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(got === Set((1L, 2L), (3L, 1L)))
   }
 
+  test("md5_minhash_sig: perms outside [1, 4] fails at analysis, not in codegen") {
+    import org.apache.spark.sql.graft.TextFunctionsImpl.md5_minhash_sig
+    val d = Seq("alpha bravo charlie delta").toDF("text")
+    def sig(perms: org.apache.spark.sql.Column) =
+      d.select(md5_minhash_sig(col("text"), lit(3), perms))
+    // analysis runs when the select is built: no job, no generated row loop
+    Seq(lit(5), lit(0), length(col("text"))).foreach { bad =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](sig(bad))
+      assert(e.getMessage.contains("requires a constant perms in [1, 4]"), e.getMessage)
+    }
+    assert(sig(lit(4)).head().getSeq[String](0).length === 4)
+  }
+
   test("crossSourceDupMatrix: unordered source pairs, diagonal = within-source, totals match") {
     val d = Seq(
       (1L, "alpha bravo charlie delta echo", "beta"),

@@ -540,15 +540,14 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(rows.map(r => (r.getAs[Number](0).longValue, r.getLong(1))).toSet === cover)
   }
 
-  test("setback distance (q91): rings broadcast, one reduce shuffle, codegen kernel, sanity") {
+  test("setback distance (q91): map-only index kernel, no exchange, sanity") {
     val q = graft.SparkEntry.queries("q91_setback")(spark, sf)
     val rows = q.collect()
     val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-      s"the 100-ring side must broadcast — the point side never shuffles pairs:\n$plan")
-    assert(plan.linesIterator.count(_.contains("Exchange hashpartitioning")) === 1,
-      s"only the per-event min reduce may shuffle:\n$plan")
-    assert(plan.contains("st_dist2_ring"), s"exact kernel must score pairs:\n$plan")
+    assert(plan.contains("setback_nearest"),
+      s"the 100 rings must ride the plan as the setback index:\n$plan")
+    assert(!plan.contains("Exchange"), s"the index path is one map-only projection:\n$plan")
+    assert(!plan.contains("NestedLoopJoin"), s"no point x ring expansion:\n$plan")
     // sanity: one row per event; distance 0 only ON a boundary; nearest is
     // a real footprint id; interior/exterior both occur on this fixture
     val n = spark.read.parquet(s"$sf/events.parquet").count()
