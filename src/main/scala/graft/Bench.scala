@@ -41,8 +41,8 @@ object Bench {
   }
 
   /** One timed PIP-join pass; returns (inputRows, joinedRows, seconds).
-    * mode: "probe" (broadcast prepared-polygon mapPartitions — the designed
-    * fast path), "broadcast" (declarative Catalyst variant), "salted". */
+    * mode: "expr" (codegen pip_matches, the default), "broadcast"
+    * (declarative Catalyst variant), "salted". */
   def timedPipJoin(spark: SparkSession, pointsDir: String,
                    polys: Seq[model.Footprint],
                    mode: String = sys.env.getOrElse("SPARK_GRAFT_PIP_MODE", "expr")): (Long, Long, Double) = {
@@ -53,13 +53,13 @@ object Bench {
     val joined = mode match {
       case "expr" =>
         operators.PipJoin.exprJoin(pts, polys).count()
-      case "probe" =>
-        operators.PipJoin.probeJoin(
-          pts.as[(String, Double, Double)], polys).count()
       case "salted" =>
         operators.PipJoin.saltedJoin(pts, spark.createDataset(polys)).count()
-      case _ =>
+      case "broadcast" =>
         operators.PipJoin.broadcastJoin(pts, spark.createDataset(polys)).count()
+      case other =>
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_PIP_MODE must be expr|broadcast|salted, got '$other'")
     }
     val secs = (System.nanoTime() - t0) / 1e9
     (inputRows, joined, secs)

@@ -350,7 +350,12 @@ object SparkEntry {
       // and the round-1 stop bound (0.5 m ≫ the ~0.03 m k-th distance)
       // still fires. Pure index sizing (guide §2.5): the kNN result is
       // res-independent — the ring stop bound proves completeness at any
-      // res, and the q90 oracle hash pins the rows unchanged.
+      // res, and the q90 oracle hash pins the rows unchanged. The cost is
+      // not: with ringJoin's default maxR 16, res 15 guarantees only
+      // ringLowerBound(15, 17) ≈ 12 m of ring coverage (res 12: ≈ 220 m),
+      // so a probe whose 8th neighbour lies farther out (sparser data)
+      // drops into the exact crossJoin fallback against the full target
+      // table.
       val knn = graft.operators.KnnJoin.ringJoin(probes, targets, k = 8, res = 15)
       val vals = t(s, dir, "events")
         .select(col("event_id").cast("string").as("target_id"), col("value").as("v"))

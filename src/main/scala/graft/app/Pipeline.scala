@@ -48,9 +48,10 @@ object Pipeline {
     val enriched = PipJoin.auto(
         images.select((Seq("image_id", "x", "y") ++ keepCols).map(col): _*), polys,
         exprLimit = graft.core.Confs.intConf(images.sparkSession,
-          "spark.graft.pipeline.pipExprVertexLimit", 100000, min = 0),
+          "spark.graft.pipeline.pipExprVertexLimit", PipJoin.DefaultExprVertexLimit, min = 0),
         broadcastLimit = graft.core.Confs.intConf(images.sparkSession,
-          "spark.graft.pipeline.pipBroadcastVertexLimit", 5000000, min = 0))
+          "spark.graft.pipeline.pipBroadcastVertexLimit", PipJoin.DefaultBroadcastVertexLimit,
+          min = 0))
       .withColumn("cell", graft.functions.GeoFunctions.hex_encode(
         col("x"), col("y"), lit(PipJoin.DefaultRes)))
       .withColumn("tile_id", graft.functions.GeoFunctions.tile_of(

@@ -41,17 +41,6 @@ object Geom {
   object Env {
     /** Empty/missing filter box = "everything" (reference `CityKGDBConfig.java:16-25`). */
     val Infinite: Env = Env(-1e9, -1e9, -1e9, 1e9, 1e9, 1e9)
-
-    def ofPoints(pts: Iterable[(Double, Double, Double)]): Env = {
-      var nx, ny, nz = Double.PositiveInfinity
-      var xx, xy, xz = Double.NegativeInfinity
-      pts.foreach { case (x, y, z) =>
-        if (x < nx) nx = x; if (x > xx) xx = x
-        if (y < ny) ny = y; if (y > xy) xy = y
-        if (z < nz) nz = z; if (z > xz) xz = z
-      }
-      Env(nx, ny, nz, xx, xy, xz)
-    }
   }
 
   /**

@@ -54,9 +54,6 @@ object Hashing {
   def uniform(seed: Long, stream: Long): Double =
     ((mix64(seed * 0x9e3779b97f4a7c15L + stream) >>> 11).toDouble) / (1L << 53).toDouble
 
-  /** MinHash permutation h_i(x) = mix64(x ^ seed_i). */
-  def minhashPerm(x: Long, perm: Int): Long = mix64(x ^ (0x5851f42d4c957f2dL * (perm + 1)))
-
   /** Rolling polynomial hash (document fingerprinting). */
   def rollingHash(s: String, base: Long = 257L, mod: Long = (1L << 61) - 1): Long = {
     var h = 0L

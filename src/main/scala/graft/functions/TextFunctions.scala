@@ -47,13 +47,6 @@ object TextFunctions {
       .otherwise(lit("und"))
   }
 
-  /** Token count: whitespace tokens. */
-  def tokenCount(textCol: Column): Column = size(split(textCol, "\\s+"))
-
-  /** BPE-ish subword count estimate: regex word-piece segmentation. */
-  def subwordCount(textCol: Column): Column =
-    size(split(textCol, "(?<=[a-z])(?=[A-Z])|\\s+|(?=[^\\w\\s])"))
-
   /**
    * Quality score ∈ [0,1]: length, lexical diversity, mean word length.
    * All arithmetic is ANSI-expressible (DuckDB-oracle-checked as q26).

@@ -50,6 +50,24 @@ object AnnSearch {
         col("e.score").as("cos"), col("e.rnk").as("rnk"))
 
   /**
+   * Bounded, deterministic fit sample (centroids, codebooks), ordered by id:
+   * an id-range predicate pushes to the scan (an orderBy().limit() is a full
+   * TakeOrdered pass) — but that assumes ids dense from 0; with sparse or
+   * offset ids the range comes back with fewer than `minRows` rows and we
+   * fall back to the `sampleN` smallest ids rather than fit too few points.
+   */
+  private[operators] def fitSample(table: DataFrame, idCol: String, vecCol: String,
+                                   sampleN: Int, minRows: Int): Array[Array[Float]] = {
+    val spark = table.sparkSession
+    import spark.implicits._
+    val rows = table.select(col(idCol), col(vecCol))
+    val ranged = rows.where(col(idCol) < lit(sampleN.toLong)).as[(Long, Array[Float])].collect()
+    (if (ranged.length >= minRows) ranged
+      else rows.orderBy(col(idCol)).limit(sampleN).as[(Long, Array[Float])].collect())
+      .sortBy(_._1).map(_._2)
+  }
+
+  /**
    * Brute-force cosine top-k: every probe scores every row.
    * probes: (probe_id, pvec); table: (idCol, vecCol). Output:
    * (probe_id, vec_id, cos, rnk) with deterministic (cos desc, vec_id asc).
@@ -108,18 +126,7 @@ object AnnSearch {
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = table.sparkSession
     import spark.implicits._
-    // bounded, deterministic fit sample: an id-range predicate pushes to the
-    // scan (an orderBy().limit() is a full TakeOrdered pass) — but that
-    // assumes ids dense from 0; with sparse/offset ids the range comes back
-    // short and we fall back to TakeOrdered rather than fit zero centroids
-    val sampleN = math.max(1000, nlist * 100)
-    val ranged = table.select(col(idCol), col(vecCol))
-      .where(col(idCol) < lit(sampleN.toLong))
-      .as[(Long, Array[Float])].collect()
-    val sample = (if (ranged.length >= nlist) ranged
-      else table.select(col(idCol), col(vecCol))
-        .orderBy(col(idCol)).limit(sampleN)
-        .as[(Long, Array[Float])].collect()).sortBy(_._1).map(_._2)
+    val sample = fitSample(table, idCol, vecCol, math.max(1000, nlist * 100), nlist)
     require(sample.nonEmpty, s"ivfTopK: table has no rows to fit centroids from")
     val centroids = kmeans(sample, nlist, iters)
     val bc = spark.sparkContext.broadcast(centroids)
@@ -218,16 +225,7 @@ object AnnSearch {
   def pqTopK(table: DataFrame, probes: DataFrame, k: Int,
              m: Int = 8, ksub: Int = 16, iters: Int = 5, rerank: Int = 0,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = table.sparkSession
-    import spark.implicits._
-    val sampleN = math.max(1000, ksub * 40)
-    val ranged = table.select(col(idCol), col(vecCol))
-      .where(col(idCol) < lit(sampleN.toLong))
-      .as[(Long, Array[Float])].collect()
-    val sample = (if (ranged.length >= ksub) ranged
-      else table.select(col(idCol), col(vecCol))
-        .orderBy(col(idCol)).limit(sampleN)
-        .as[(Long, Array[Float])].collect()).sortBy(_._1).map(_._2)
+    val sample = fitSample(table, idCol, vecCol, math.max(1000, ksub * 40), ksub)
     require(sample.nonEmpty, "pqTopK: table has no rows to fit codebooks from")
     val dim = sample.head.length
     require(dim % m == 0, s"pqTopK: dim $dim not divisible by m=$m")
@@ -303,14 +301,8 @@ object AnnSearch {
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = table.sparkSession
     import spark.implicits._
-    val sampleN = math.max(1000, math.max(nlist, ksub) * 40)
-    val ranged = table.select(col(idCol), col(vecCol))
-      .where(col(idCol) < lit(sampleN.toLong))
-      .as[(Long, Array[Float])].collect()
-    val sample = (if (ranged.length >= math.max(nlist, ksub)) ranged
-      else table.select(col(idCol), col(vecCol))
-        .orderBy(col(idCol)).limit(sampleN)
-        .as[(Long, Array[Float])].collect()).sortBy(_._1).map(_._2)
+    val sample = fitSample(table, idCol, vecCol,
+      math.max(1000, math.max(nlist, ksub) * 40), math.max(nlist, ksub))
     require(sample.nonEmpty, "ivfPqTopK: table has no rows to fit from")
     val dim = sample.head.length
     require(dim % m == 0, s"ivfPqTopK: dim $dim not divisible by m=$m")

@@ -9,7 +9,7 @@ import graft.model.Footprint
  * Label census report — the reference's `Neo4jDB.summarize`
  * (`Neo4jDB.java:471-518`) + `DBStats` table formatting
  * (`DBStats.java:49-103`): counts per feature type with percentages, sorted
- * desc by count then asc by type; plus the per-partition (dataset) census.
+ * desc by count then asc by type.
  */
 object Census {
 
@@ -20,9 +20,4 @@ object Census {
       .withColumn("pct", round(col("cnt") * 100.0 / total, 2))
       .orderBy(desc("cnt"), asc("feature_type"))
   }
-
-  def byPartition(fps: Dataset[Footprint]): DataFrame =
-    fps.toDF().groupBy("partition_id", "feature_type")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(asc("partition_id"), desc("cnt"), asc("feature_type"))
 }

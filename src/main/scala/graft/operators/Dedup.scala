@@ -637,16 +637,7 @@ object Dedup {
                     nlist: Int = 64, iters: Int = 5, clusterCap: Int = 20000,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     checkpointDir: Option[String] = None): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val sampleN = math.max(1000, nlist * 100)
-    val ranged = embs.select(col(idCol), col(vecCol))
-      .where(col(idCol) < lit(sampleN.toLong))
-      .as[(Long, Array[Float])].collect()
-    val sample = (if (ranged.length >= nlist) ranged
-      else embs.select(col(idCol), col(vecCol))
-        .orderBy(col(idCol)).limit(sampleN)
-        .as[(Long, Array[Float])].collect()).sortBy(_._1).map(_._2)
+    val sample = AnnSearch.fitSample(embs, idCol, vecCol, math.max(1000, nlist * 100), nlist)
     require(sample.nonEmpty, "semanticDedup: no rows to fit centroids from")
     val centroids = AnnSearch.kmeans(sample, nlist, iters)
     val ivf = new org.apache.spark.sql.graft.IvfCentroids(
@@ -767,15 +758,17 @@ object Dedup {
     // is Spark's own
     val longIds = edges0.schema("u").dataType ==
       org.apache.spark.sql.types.LongType
-    if (smallMax > 0 && longIds && edges0.count() <= smallMax) {
-      import spark.implicits._
-      // null-id pairs are dropped: the distributed star joins ignore them
-      // identically, and the tuple encoder would reject them at collect
-      val es = edges0.select(col("u"), col("v"))
-        .where(col("u").isNotNull && col("v").isNotNull)
-        .as[(Long, Long)].collect()
-      val labels = bruteComponents(es.toSeq).toSeq.sortBy(_._1).toDF("node", "root")
-      return (labels, 0)
+    // ONE bounded collect is both the size probe and the fast path's input
+    if (longIds) graft.core.Regime.collectUpTo(edges0, smallMax) match {
+      case Some(rows) =>
+        import spark.implicits._
+        // null-id pairs are dropped: the distributed star joins ignore them
+        // identically (they still count toward the threshold)
+        val es = rows.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) =>
+          (r.getLong(0), r.getLong(1)) }
+        val labels = bruteComponents(es.toSeq).toSeq.sortBy(_._1).toDF("node", "root")
+        return (labels, 0)
+      case None =>
     }
     // inter-pass distinct threshold: in a k-clique large-star emits each
     // (v, min) edge ~k times, so ABOVE the threshold the dedup shuffle is k×

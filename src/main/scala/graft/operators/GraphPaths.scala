@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,6 +26,10 @@ import org.apache.spark.sql.functions._
  */
 object GraphPaths {
 
+  /** The small-graph fast paths' edge threshold (see [[bfsWithPred]]). */
+  private def smallGraphMaxEdges(spark: SparkSession): Long =
+    graft.core.Confs.longConf(spark, "spark.graft.graph.smallGraphMaxEdges", 1L << 20, min = 0L)
+
   /**
    * BFS levels + deterministic predecessor: every node reachable from
    * `source` within `maxDepth` hops, with its minimal hop distance and the
@@ -49,22 +53,16 @@ object GraphPaths {
     // local relation, so downstream joins broadcast. Above the threshold
     // (billion-edge XLink graphs) the distributed loop below is unchanged.
     // GraphPathsSpec pins both paths row-identical.
-    val smallMax = graft.core.Confs.longConf(spark,
-      "spark.graft.graph.smallGraphMaxEdges", 1L << 20, min = 0L)
-    val probeN = math.min(smallMax + 1, Int.MaxValue.toLong - 1).toInt
     // null-keyed edges are dropped up front: the distributed equi-join below
     // ignores them identically, and the tuple encoder would reject them at
-    // collect. ONE limited collect serves as both the size probe and the
-    // fast path's input — ≤ smallMax rows back means the limited result IS
-    // the complete edge set (the un-probed alternative ran the edge lineage
-    // twice: once for the count, once for the collect).
+    // collect. ONE bounded collect serves as both the size probe and the
+    // fast path's input.
     val eNarrow = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-    if (smallMax > 0) {
-      val es = eNarrow.limit(probeN).as[(Long, Long)].collect()
-      if (es.length <= smallMax)
-        return bruteBfsRounds(es.toSeq, source, maxDepth, stopAt)
-          .toDF("node", "dist", "pred")
+    graft.core.Regime.collectUpTo(eNarrow.as[(Long, Long)], smallGraphMaxEdges(spark)) match {
+      case Some(es) =>
+        return bruteBfsRounds(es.toSeq, source, maxDepth, stopAt).toDF("node", "dist", "pred")
+      case None =>
     }
     val ck = graft.core.Checkpoints.strategy(edges, checkpointDir)
     // materialize the edge table ONCE, pre-partitioned by the per-round join
@@ -182,18 +180,14 @@ object GraphPaths {
     // round semantics (incl. the maxRounds cap, so an un-converged exit
     // matches the distributed loop too); see bfsWithPred for the threshold
     // contract. GraphPathsSpec pins both paths row-identical.
-    val smallMax = graft.core.Confs.longConf(spark,
-      "spark.graft.graph.smallGraphMaxEdges", 1L << 20, min = 0L)
-    val probeN = math.min(smallMax + 1, Int.MaxValue.toLong - 1).toInt
-    // null handling + single limited collect: see bfsWithPred
+    // null handling + single bounded collect: see bfsWithPred
     val eNarrow = edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("w").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
-    if (smallMax > 0) {
-      val es = eNarrow.limit(probeN).as[(Long, Long, Long)].collect()
-      if (es.length <= smallMax)
-        return bruteSsspRounds(es.toSeq, source, maxRounds).toSeq.sorted
-          .toDF("node", "dist")
+    graft.core.Regime.collectUpTo(eNarrow.as[(Long, Long, Long)], smallGraphMaxEdges(spark)) match {
+      case Some(es) =>
+        return bruteSsspRounds(es.toSeq, source, maxRounds).toSeq.sorted.toDF("node", "dist")
+      case None =>
     }
     val ck = graft.core.Checkpoints.strategy(edges, checkpointDir)
     val e = ck(edges.select(col("src").cast("long"), col("dst").cast("long"),

@@ -138,8 +138,10 @@ object KnnJoin {
     // -1 keeps the empty-input flow on the original path: one (empty) round
     // still runs, so doneParts is never an empty reduce
     var nPending = if (nProbes0 == 0) -1L else nProbes0
-    // acc = running top-k candidates of UNFINISHED probes only (no rnk col)
-    var acc: DataFrame = candOf(pending.limit(0).crossJoin(t.limit(0)))
+    // acc = running top-k candidates of UNFINISHED probes only (no rnk col);
+    // None before the first round, which ranks its candidates on their own
+    var acc: Option[DataFrame] = None
+    def withAcc(c: DataFrame): DataFrame = acc.fold(c)(_.unionByName(c))
     // finalized (probe_id, target_id, d2, rnk) blocks — checkpointed leaves
     var doneParts: List[DataFrame] = Nil
     var r = 0
@@ -171,14 +173,14 @@ object KnnJoin {
       val cand = candOf(probeSide.join(t, col("pcell") === col("tcell")))
       // rank old top-k ∪ new candidates, keep top-k — the only rows a later
       // round could ever emit (d2 never changes; candidates only accumulate)
-      val topk = ck(rankTopK(acc.unionByName(cand)))
+      val topk = ck(rankTopK(withAcc(cand)))
       val bound = ringLowerBound(res, rHi + 1)
       val doneProbes = topk.where(col("rnk") === k && sqrt(col("d2")) < bound)
         .select(col("probe_id").as("done_id"))
       // finished probes exit the loop: their top-k (incl. rnk) is final —
       // no later ring can beat the bound — and never re-sorts again
       doneParts ::= topk.join(doneProbes, col("probe_id") === col("done_id"), "left_semi")
-      acc = topk.join(doneProbes, col("probe_id") === col("done_id"), "left_anti").drop("rnk")
+      acc = Some(topk.join(doneProbes, col("probe_id") === col("done_id"), "left_anti").drop("rnk"))
       pending = ck(pending.join(doneProbes, col("probe_id") === col("done_id"), "left_anti"))
       nPending = pending.count()
       r = rHi + 1
@@ -191,7 +193,7 @@ object KnnJoin {
       // Materialize the tail ranking eagerly so the returned plan references
       // only checkpointed blocks — the finally below can then release the
       // (huge by premise) persisted target table on every exit path
-      val openRows = acc.unionByName(candOf(pending.crossJoin(t))).distinct()
+      val openRows = withAcc(candOf(pending.crossJoin(t))).distinct()
       val tail = ck(rankTopK(openRows))
       doneParts.foldLeft(tail)(_ unionByName _)
     } else {

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.core.Geom
-import graft.core.Geom.{Pt, PreparedPolygon}
+import graft.core.Geom.Pt
 import graft.functions.GeoFunctions._
 import graft.model.Footprint
 
@@ -32,6 +32,10 @@ import graft.model.Footprint
 object PipJoin {
 
   val DefaultRes = 11 // hex edge ≈ 25 m — sized to the building-footprint scale
+
+  /** [[auto]]'s default routing thresholds, in total polygon vertices. */
+  val DefaultExprVertexLimit = 100000
+  val DefaultBroadcastVertexLimit = 5000000
 
   /** Small-side build: one row per (cell, polygon) at `res`. */
   def polygonCells(polys: Dataset[Footprint], res: Int): DataFrame =
@@ -74,39 +78,6 @@ object PipJoin {
     st_covers(col("ring"), col("holes"), col("x"), col("y"))
 
   /**
-   * mapPartitions probe path (fastest single-node / densest-skew variant):
-   * driver broadcasts cell → prepared-polygon buckets; each partition probes
-   * locally with zero shuffle. The per-partition hash-grid probe is the moral
-   * equivalent of the reference's in-memory R*-tree query, but share-nothing.
-   */
-  def probeJoin(points: Dataset[(String, Double, Double)],
-                polys: Seq[Footprint], res: Int = DefaultRes): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val index: Map[Long, Array[(String, PreparedPolygon)]] = {
-      val pairs = polys.flatMap { f =>
-        val ring = f.ring.map(p => Pt(p.x, p.y)).toArray
-        val holes = f.holes.map(_.map(p => Pt(p.x, p.y)).toArray).toArray
-        val prep = new PreparedPolygon(Geom.Polygon(ring, holes))
-        graft.core.HexGrid.cover(Geom.Polygon(ring, holes), res)
-          .map(cell => (cell, (f.feature_id, prep)))
-      }
-      pairs.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
-    }
-    val bc = spark.sparkContext.broadcast(index)
-    points.mapPartitions { it =>
-      val idx = bc.value
-      it.flatMap { case (id, x, y) =>
-        idx.get(graft.core.HexGrid.encode(x, y, res)) match {
-          case Some(cands) =>
-            cands.iterator.filter(_._2.covers(x, y)).map(c => (id, x, y, c._1))
-          case None => Iterator.empty
-        }
-      }
-    }.toDF("image_id", "x", "y", "feature_id")
-  }
-
-  /**
    * Fully-codegen expression path: no join operator at all — the polygon
    * index rides in the plan as a reference object and the scan-side generated
    * code calls it per row (see PipMatchesExpr). Fastest variant when the
@@ -126,7 +97,8 @@ object PipJoin {
    * side). Mirrors what a planner strategy would choose from statistics.
    */
   def auto(points: DataFrame, polys: Seq[Footprint], res: Int = DefaultRes,
-           exprLimit: Int = 100000, broadcastLimit: Int = 5000000): DataFrame = {
+           exprLimit: Int = DefaultExprVertexLimit,
+           broadcastLimit: Int = DefaultBroadcastVertexLimit): DataFrame = {
     val vertices = polys.iterator.map(f => f.ring.size + f.holes.map(_.size).sum).sum
     if (vertices <= exprLimit) exprJoin(points, polys, res)
     else {

@@ -94,7 +94,10 @@ object Setback {
       def best(c: DataFrame): DataFrame = c.groupBy(idCol)
         .agg(min(struct(col("d2"), col("fid"))).as("m"))
         .select(col(idCol), col("m.d2").as("d2"), col("m.fid").as("fid"))
-      var acc: DataFrame = candOf(pending.limit(0).crossJoin(t.limit(0)))
+      // best-so-far of the still-open points; None before the first round,
+      // which ranks its candidates on their own
+      var acc: Option[DataFrame] = None
+      def withAcc(c: DataFrame): DataFrame = acc.fold(c)(_.unionByName(c))
       var doneParts: List[DataFrame] = Nil
       var r = 0
       while (r <= maxR && nPending != 0) {
@@ -106,11 +109,11 @@ object Setback {
         // collapse in the min, no distinct stage needed
         val cand = candOf(pending.withColumn("pcell", explode(ringCells))
           .join(t, col("pcell") === col("tcell")))
-        val b = ck(best(acc.unionByName(cand)))
+        val b = ck(best(withAcc(cand)))
         val bound = KnnJoin.ringLowerBound(res, rHi + 1)
         val done = b.where(sqrt(col("d2")) < bound).select(col(idCol).as("done_id"))
         doneParts ::= b.join(done, col(idCol) === col("done_id"), "left_semi")
-        acc = b.join(done, col(idCol) === col("done_id"), "left_anti")
+        acc = Some(b.join(done, col(idCol) === col("done_id"), "left_anti"))
         pending = ck(pending.join(done, col(idCol) === col("done_id"), "left_anti"))
         nPending = pending.count()
         r = rHi + 1
@@ -122,7 +125,7 @@ object Setback {
           // covered cell (identical d2 rows, collapsed by the min, but
           // cover-size× wasted kernel work)
           doneParts.foldLeft(
-            ck(best(acc.unionByName(candOf(pending.crossJoin(
+            ck(best(withAcc(candOf(pending.crossJoin(
               rings.select(col("fid"), col("xs"), col("ys"))))))))(_ unionByName _)
         else doneParts.reduce(_ unionByName _)
       finish(idCol, all)
@@ -134,12 +137,12 @@ object Setback {
   def auto(points: DataFrame, rings: DataFrame, idCol: String = "event_id",
            res: Int = 12, maxR: Int = 16,
            checkpointDir: Option[String] = None): DataFrame = {
-    val limit = points.sparkSession.conf
-      .getOption(BroadcastRingLimitConf).map(_.toInt).getOrElse(DefaultRingLimit)
-    val probe = rings.select(col("fid"), col("xs"), col("ys")).limit(limit + 1).collect()
-    if (probe.length <= limit)
-      indexed(points, SetbackIndex.fromRows(probe, res, maxR), idCol)
-    else ringSearch(points, rings, idCol, res, maxR, checkpointDir = checkpointDir)
+    val limit = graft.core.Confs.intConf(points.sparkSession,
+      BroadcastRingLimitConf, DefaultRingLimit, min = 0)
+    graft.core.Regime.collectUpTo(rings.select(col("fid"), col("xs"), col("ys")), limit) match {
+      case Some(probe) => indexed(points, SetbackIndex.fromRows(probe, res, maxR), idCol)
+      case None => ringSearch(points, rings, idCol, res, maxR, checkpointDir = checkpointDir)
+    }
   }
 
   private def finish(idCol: String, best: DataFrame): DataFrame =

@@ -80,11 +80,8 @@ object TileAssign {
           .head()
         row.getLong(0)
       }
-    val ft = featureTiles(fps, zooms)
-    if (cnt <= broadcastLimit)
-      pointTiles(points, zooms).join(broadcast(ft), Seq("zoom", "tile_id"))
-    else
-      pointTiles(points, zooms).hint("merge").join(ft, Seq("zoom", "tile_id"))
+    if (cnt <= broadcastLimit) assignBroadcast(points, fps, zooms)
+    else assignShuffle(points, fps, zooms)
   }
 
   /** Deterministic top-k rows per (zoom, tile). */

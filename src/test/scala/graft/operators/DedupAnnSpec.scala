@@ -368,6 +368,33 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(again === got)
   }
 
+  test("fit-sample fallback: ids keyed from 10^6 give the 0-keyed IVF and semanticDedup rows, shifted") {
+    // near-copies of every 25th row, keyed 500..519 right after the table,
+    // so the 0-keyed id-range sample and the shifted table's TakeOrdered
+    // fallback (no id below the range bound) both fit on all 520 rows
+    val base = embs.select("vec_id", "embedding")
+    val planted = base.where(col("vec_id") % 25 === 0)
+      .select(expr("vec_id div 25 + 500").as("vec_id"),
+        concat(slice(transform(col("embedding"), v => v + lit(0.001f)), 1, 1),
+          slice(col("embedding"), 2, 1000)).as("embedding"))
+    val zero = base.unionByName(planted)
+    val shift = 1000000L
+    val shifted = zero.select((col("vec_id") + shift).as("vec_id"), col("embedding"))
+    val probes = zero.where(col("vec_id") % 40 === 0)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
+    def ivf(t: org.apache.spark.sql.DataFrame) =
+      AnnSearch.ivfTopK(t, probes, k = 5, nlist = 16, nprobe = 4)
+        .select("probe_id", "vec_id", "cos", "rnk").as[(Long, Long, Double, Int)].collect().toSet
+    val want = ivf(zero)
+    assert(want.nonEmpty)
+    assert(ivf(shifted) === want.map(r => r.copy(_2 = r._2 + shift)))
+    def dedup(t: org.apache.spark.sql.DataFrame) = Dedup.semanticDedup(t, minCosine = 0.999, nlist = 16)
+      .as[(Long, Long, Long, Boolean, Boolean)].collect().toSet
+    val out0 = dedup(zero)
+    assert(out0.exists(!_._4), "the planted copies must be deduplicated")
+    assert(dedup(shifted) === out0.map(r => r.copy(_1 = r._1 + shift, _3 = r._3 + shift)))
+  }
+
   test("PQ kernels: encode is per-subspace argmin, ADC equals the naive table sum") {
     import org.apache.spark.sql.graft.PqCodebooks
     import org.apache.spark.sql.catalyst.util.GenericArrayData

@@ -60,14 +60,6 @@ class PipJoinSpec extends AnyFunSuite {
     assert(s === b)
   }
 
-  test("probe (mapPartitions) join ≡ brute force, zero shuffle") {
-    val pts = spark.createDataset(fzkPoints)
-    val got = PipJoin.probeJoin(pts, fzkFps)
-      .select("image_id", "feature_id").as[(String, String)].collect().toSet
-    val want = PipJoin.bruteForce(fzkPoints, fzkFps)
-    assert(got === want)
-  }
-
   test("codegen expr path (pip_matches) ≡ brute force on both fixtures") {
     val all = fzkFps ++ cjFps
     val pts = (fzkPoints ++ cjPoints).toDF("image_id", "x", "y")

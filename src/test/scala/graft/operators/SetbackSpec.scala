@@ -67,6 +67,11 @@ class SetbackSpec extends AnyFunSuite {
   private def indexOf(r: DataFrame, res: Int = 12, maxR: Int = 16) =
     SetbackIndex.fromRows(r.select("fid", "xs", "ys").collect(), res, maxR)
 
+  private def withRingLimit[T](limit: String)(body: => T): T = {
+    spark.conf.set(Setback.BroadcastRingLimitConf, limit)
+    try body finally spark.conf.unset(Setback.BroadcastRingLimitConf)
+  }
+
   test("ringSearch == broadcastExact bit-exact (incl. far-field stragglers)") {
     val want = rows(broadcastExact(points, rings))
     assert(want.size === 400)
@@ -125,13 +130,10 @@ class SetbackSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange") && !plan.contains("Join"), s"index path is map-only:\n$plan")
     assert(rows(viaIndex) === want)
     // both sides of the threshold, exactly at the ring count
-    def routed(limit: Int): String = {
-      spark.conf.set(Setback.BroadcastRingLimitConf, limit.toString)
-      try {
-        val df = Setback.auto(points, rings)
-        assert(rows(df) === want)
-        df.queryExecution.executedPlan.toString
-      } finally spark.conf.unset(Setback.BroadcastRingLimitConf)
+    def routed(limit: Int): String = withRingLimit(limit.toString) {
+      val df = Setback.auto(points, rings)
+      assert(rows(df) === want)
+      df.queryExecution.executedPlan.toString
     }
     assert(routed(150).contains("setback_nearest"), "limit == #rings keeps the index path")
     // below the ring count the same call takes the ring search — the
@@ -141,6 +143,20 @@ class SetbackSpec extends AnyFunSuite {
       val p = routed(limit)
       assert(!p.contains("setback_nearest") && !p.contains("NestedLoopJoin"),
         s"limit $limit must take the ring search:\n$p")
+    }
+  }
+
+  test("broadcastRingLimit: a non-number or negative value fails naming the key; Int.MaxValue keeps the index") {
+    Seq("abc", "-1").foreach { bad =>
+      val e = withRingLimit(bad)(intercept[IllegalArgumentException](Setback.auto(points, rings)))
+      assert(e.getMessage.contains(Setback.BroadcastRingLimitConf), e.getMessage)
+    }
+    // the probe's `limit + 1` must not overflow at the top of the Int range
+    withRingLimit(Int.MaxValue.toString) {
+      val df = Setback.auto(points, rings)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("setback_nearest"), s"Int.MaxValue must take the index path:\n$plan")
+      assert(rows(df) === rows(broadcastExact(points, rings)))
     }
   }
 
