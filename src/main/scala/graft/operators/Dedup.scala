@@ -70,13 +70,7 @@ object Dedup {
     // a shared min-shingle that frequent carries no signal, and an uncapped
     // mega-bucket is an O(bucket²) pair explosion (standard LSH practice;
     // the DuckDB oracle applies the identical cap, so row parity holds).
-    // persisted: both verify-join sides re-attach the token sets — without
-    // the persist each side re-scans and re-tokenizes the corpus (their
-    // join keys differ, so no exchange is reusable between them). Cache
-    // lifetime: see the honest-contract note on lshPairsWeighted's toks.
-    val toks = docs.select(col(idCol).as("id"),
-      array_distinct(tokens(col(textCol))).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = tokenSets(docs, idCol, textCol)
     jaccardVerify(bandCandidates(
       md5SliceBuckets(docs, idCol, textCol, perms, ngram), maxBucket), toks, minJaccard)
   }
@@ -145,9 +139,7 @@ object Dedup {
     // KnnJoin/Setback try/finally shape).
     // The shingle pass in md5SliceBuckets is a genuinely different
     // derivation and stays separate.
-    val toks = docs.select(col(idCol).as("id"),
-      array_distinct(tokens(col(textCol))).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = tokenSets(docs, idCol, textCol)
     val nDocs = toks.count() // also materializes the cache
     val wTok = toks.select(explode(col("toks")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("df"))
@@ -165,10 +157,8 @@ object Dedup {
     // and longs cross the pair-key shuffle (guide §2.3). All sums are exact
     // longs; jac/wjac divisions are spelled as before → bit-identical
     // output (the q94 DuckDB oracle stays green unchanged).
-    val pairToks = bandCandidates(
-        md5SliceBuckets(docs, idCol, textCol, perms, ngram), maxBucket)
-      .join(toks.select(col("id").as("id_a"), col("toks").as("toks_a")), Seq("id_a"))
-      .join(toks.select(col("id").as("id_b"), col("toks").as("toks_b")), Seq("id_b"))
+    val pairToks = withTokenSets(bandCandidates(
+        md5SliceBuckets(docs, idCol, textCol, perms, ngram), maxBucket), toks)
       .select(col("id_a"), col("id_b"), col("toks_a"), col("toks_b"),
         explode(array_union(col("toks_a"), col("toks_b"))).as("tok"))
       .select(col("id_a"), col("id_b"), col("tok"),
@@ -209,12 +199,9 @@ object Dedup {
                        textCol: String = "text", perms: Int = 4, ngram: Int = 3,
                        minContainment: Double = 0.8,
                        maxBucket: Int = 100): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-      array_distinct(tokens(col(textCol))).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // both join sides — see lshPairs
-    bandCandidates(md5SliceBuckets(docs, idCol, textCol, perms, ngram), maxBucket)
-      .join(toks.select(col("id").as("id_a"), col("toks").as("toks_a")), Seq("id_a"))
-      .join(toks.select(col("id").as("id_b"), col("toks").as("toks_b")), Seq("id_b"))
+    val toks = tokenSets(docs, idCol, textCol)
+    withTokenSets(bandCandidates(
+        md5SliceBuckets(docs, idCol, textCol, perms, ngram), maxBucket), toks)
       .withColumn("containment",
         size(array_intersect(col("toks_a"), col("toks_b"))).cast("double") /
           least(size(col("toks_a")), size(col("toks_b"))).cast("double"))
@@ -247,9 +234,7 @@ object Dedup {
     require(bands >= 1 && rows >= 1, s"need bands, rows >= 1; got ($bands, $rows)")
     require(!multiprobe || rows >= 2,
       "multiprobe needs rows >= 2 (a leave-one-out of a 1-row band is the constant key)")
-    val toks = docs.select(col(idCol).as("id"),
-      array_distinct(tokens(col(textCol))).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // both join sides — see lshPairs
+    val toks = tokenSets(docs, idCol, textCol)
     val keys =
       if (multiprobe) org.apache.spark.sql.graft.TextFunctionsImpl.minhash_bands_mp(
         col(textCol), lit(ngram), lit(bands), lit(rows))
@@ -288,13 +273,26 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** Exact token-set Jaccard verify over distinct candidate pairs: tokens are
-    * re-attached per pair with two equi-joins (ids-only shuffles upstream),
-    * then the threshold filter. */
-  private def jaccardVerify(pairs: DataFrame, toks: DataFrame, minJaccard: Double): DataFrame =
+  /** (id, distinct whitespace tokens) per doc, persisted MEMORY_AND_DISK:
+    * both verify-join sides re-attach the token sets — without the persist
+    * each side re-scans and re-tokenizes the corpus (their join keys differ,
+    * so no exchange is reusable between them). Cache lifetime: see the
+    * honest-contract note in [[lshPairsWeighted]]. */
+  private def tokenSets(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), array_distinct(tokens(col(textCol))).as("toks"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Candidate (id_a, id_b) pairs with both token sets re-attached as
+    * toks_a / toks_b — two equi-joins (ids-only shuffles upstream). */
+  private def withTokenSets(pairs: DataFrame, toks: DataFrame): DataFrame =
     pairs
       .join(toks.select(col("id").as("id_a"), col("toks").as("toks_a")), Seq("id_a"))
       .join(toks.select(col("id").as("id_b"), col("toks").as("toks_b")), Seq("id_b"))
+
+  /** Exact token-set Jaccard verify over distinct candidate pairs: tokens are
+    * re-attached per pair ([[withTokenSets]]), then the threshold filter. */
+  private def jaccardVerify(pairs: DataFrame, toks: DataFrame, minJaccard: Double): DataFrame =
+    withTokenSets(pairs, toks)
       .withColumn("jac",
         size(array_intersect(col("toks_a"), col("toks_b"))).cast("double") /
           size(array_union(col("toks_a"), col("toks_b"))).cast("double"))

@@ -13,8 +13,8 @@ import graft.core.{CellBuckets, HexGrid}
  *    an insertion top-k (k·n flops, zero per-candidate allocation) — for
  *    city-scale target sets this beats walking hex rings, especially for
  *    far-field probes whose ring radius would be huge;
- *  - otherwise: hex-cell ring expansion with the provable stop bound
- *    ([[KnnJoin.ringLowerBound]]), buckets in the primitive-key
+ *  - otherwise: the shared hex-cell ring walk [[KnnJoin.ringWalk]] with
+ *    its provable stop bound, buckets in the primitive-key
  *    [[graft.core.CellBuckets]] table.
  *
  * Tie-break: (d2, target_id) ascending — targets are pre-sorted by id, so
@@ -64,51 +64,18 @@ final class KnnIndex(targets: Seq[(String, Double, Double)], val k: Int,
       if (filled < kk) filled += 1
     }
 
-    if (linear) {
+    def scan(i: Int): Unit = {
+      val dx = txs(i) - x; val dy = tys(i) - y
+      consider(i, dx * dx + dy * dy)
+    }
+    // the linear strategy, or the grid walk's exact fallback when the ring
+    // budget runs out before the stop bound (far-field probe or sparse
+    // targets) — never a silently truncated top-k
+    if (linear || !KnnJoin.ringWalk(buckets, x, y, res, maxR, scan,
+        () => if (filled == kk) bd(kk - 1) else Double.PositiveInfinity)) {
+      filled = 0
       var i = 0
-      while (i < n) {
-        val dx = txs(i) - x; val dy = tys(i) - y
-        consider(i, dx * dx + dy * dy)
-        i += 1
-      }
-    } else {
-      val c0 = HexGrid.encode(x, y, res)
-      var r = 0
-      var done = false
-      while (!done && r <= maxR) {
-        val cells = if (r == 0) Array(c0) else HexGrid.ring(c0, r)
-        var ci = 0
-        while (ci < cells.length) {
-          val cand = buckets(cells(ci))
-          if (cand != null) {
-            var j = 0
-            while (j < cand.length) {
-              val i = cand(j)
-              val dx = txs(i) - x; val dy = tys(i) - y
-              consider(i, dx * dx + dy * dy)
-              j += 1
-            }
-          }
-          ci += 1
-        }
-        // strict <: unseen targets are then strictly farther, so no tie with
-        // the k-th candidate can be missed
-        if (filled == kk &&
-            math.sqrt(bd(kk - 1)) < KnnJoin.ringLowerBound(res, r + 1)) done = true
-        r += 1
-      }
-      if (!done) {
-        // ring budget exhausted before the stop bound (far-field probe or
-        // sparse targets): fall back to the exact linear scan instead of
-        // returning a silently truncated/incomplete top-k
-        filled = 0
-        var i = 0
-        while (i < n) {
-          val dx = txs(i) - x; val dy = tys(i) - y
-          consider(i, dx * dx + dy * dy)
-          i += 1
-        }
-      }
+      while (i < n) { scan(i); i += 1 }
     }
 
     val out = new Array[Any](filled)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.GeoFunctionsImpl.{setback_nearest, st_dist2_ring}
-import graft.functions.GeoFunctions.{hex_cover, hex_ring}
+import graft.functions.GeoFunctions.hex_cover
 
 /**
  * Nearest-footprint-boundary distance per point ("setback" analysis — the
@@ -30,8 +30,8 @@ import graft.functions.GeoFunctions.{hex_cover, hex_ring}
  *     rings bucket into the hex cells their cover spans
  *     ([[graft.functions.GeoFunctions.hex_cover]] covers the whole
  *     footprint, so every boundary point lies in a covered cell); points
- *     expand hex rings round by round (geometric spans, like
- *     [[KnnJoin.ringJoin]]) and only candidate (point, ring) pairs within
+ *     expand hex rings round by round in [[KnnJoin.ringJoin]]'s loop
+ *     ([[KnnJoin.ringRounds]]) and only candidate (point, ring) pairs within
  *     the current ring batch get the exact kernel, under the same stop rule.
  *
  * [[auto]] picks per ring-side size with ONE bounded collect
@@ -62,73 +62,46 @@ object Setback {
   }
 
   /**
-   * Cell-prefiltered scale path: per round, pending points explode their next
-   * hex-ring span and equi-join rings bucketed by covered cell; the exact
-   * kernel refines candidates; points whose best distance beats the ring
-   * bound exit. Rounds double their span (the [[KnnJoin.ringJoin]] shape:
-   * O(log maxR) barriers, constant-factor candidate overshoot). Points still
-   * open after `maxR` (far-field stragglers — small by construction) fall
-   * back to the exact crossJoin score against the full ring table rather
-   * than returning a silently-truncated answer.
+   * Cell-prefiltered scale path: the shared [[KnnJoin.ringRounds]] loop with
+   * k = 1 — per round, pending points explode their next hex-ring span and
+   * equi-join rings bucketed by covered cell; the exact kernel refines
+   * candidates; points whose best distance beats the ring bound exit. Points
+   * still open after `maxR` (far-field stragglers — small by construction)
+   * fall back to the exact crossJoin score against the full ring table
+   * rather than returning a silently-truncated answer.
    */
   def ringSearch(points: DataFrame, rings: DataFrame,
                  idCol: String = "event_id",
                  res: Int = 12, maxR: Int = 16, ringsPerRound: Int = 2,
                  checkpointDir: Option[String] = None): DataFrame = {
+    val ringCols = rings.select(col("fid"), col("xs"), col("ys"))
     // positional cast renames arrays_zip's (xs, ys) fields to hex_cover's
     // expected (x, y) ring-vertex struct
     val ringStruct = arrays_zip(col("xs"), col("ys"))
       .cast("array<struct<x:double,y:double>>")
-    val t = rings.select(col("fid"), col("xs"), col("ys"))
+    val t = ringCols
       .withColumn("tcell", explode(hex_cover(ringStruct, lit(res))))
       .repartition(col("tcell")).persist()
     try {
       val ck = graft.core.Checkpoints.strategy(points, checkpointDir)
-      var pending = ck(points.select(col(idCol),
-        col("x").cast("double").as("x"), col("y").cast("double").as("y")))
-      var nPending = -1L
       def candOf(p: DataFrame): DataFrame = p.select(col(idCol), col("fid"),
         st_dist2_ring(col("xs"), col("ys"), col("x"), col("y")).as("d2"))
       // k=1 keep-best: min(struct) is a plain map-side-combining agg — the
       // shuffle carries one row per point, candidate-count-independent
       def best(c: DataFrame): DataFrame = c.groupBy(idCol)
         .agg(min(struct(col("d2"), col("fid"))).as("m"))
-        .select(col(idCol), col("m.d2").as("d2"), col("m.fid").as("fid"))
-      // best-so-far of the still-open points; None before the first round,
-      // which ranks its candidates on their own
-      var acc: Option[DataFrame] = None
-      def withAcc(c: DataFrame): DataFrame = acc.fold(c)(_.unionByName(c))
-      var doneParts: List[DataFrame] = Nil
-      var r = 0
-      while (r <= maxR && nPending != 0) {
-        val rHi = math.min(maxR, math.max(r + ringsPerRound - 1, 2 * r))
-        val ringCells = flatten(array((r to rHi).map(rr =>
-          hex_ring(col("x"), col("y"), lit(res), lit(rr))): _*))
+        .select(col(idCol), col("m.d2").as("d2"), col("m.fid").as("fid"), lit(1).as("rnk"))
+      finish(idCol, KnnJoin.ringRounds(ck(points.select(col(idCol),
+          col("x").cast("double").as("x"), col("y").cast("double").as("y"))),
+        -1L, idCol, 1, res, maxR, ringsPerRound, ck)(
         // the same footprint can be met through several covered cells in one
         // span — duplicate (point, fid) candidates carry identical d2 and
         // collapse in the min, no distinct stage needed
-        val cand = candOf(pending.withColumn("pcell", explode(ringCells))
-          .join(t, col("pcell") === col("tcell")))
-        val b = ck(best(withAcc(cand)))
-        val bound = KnnJoin.ringLowerBound(res, rHi + 1)
-        val done = b.where(sqrt(col("d2")) < bound).select(col(idCol).as("done_id"))
-        doneParts ::= b.join(done, col(idCol) === col("done_id"), "left_semi")
-        acc = Some(b.join(done, col(idCol) === col("done_id"), "left_anti"))
-        pending = ck(pending.join(done, col(idCol) === col("done_id"), "left_anti"))
-        nPending = pending.count()
-        r = rHi + 1
-      }
-      val all =
-        if (nPending > 0)
-          // fall back against the ORIGINAL ring table, not the cell-exploded
-          // `t` — the exploded form scores each (point, ring) pair once per
-          // covered cell (identical d2 rows, collapsed by the min, but
-          // cover-size× wasted kernel work)
-          doneParts.foldLeft(
-            ck(best(withAcc(candOf(pending.crossJoin(
-              rings.select(col("fid"), col("xs"), col("ys"))))))))(_ unionByName _)
-        else doneParts.reduce(_ unionByName _)
-      finish(idCol, all)
+        (exploded, _) => candOf(exploded.join(t, col("pcell") === col("tcell"))),
+        best,
+        // the ORIGINAL ring table, not the cell-exploded `t` — the exploded
+        // form scores each (point, ring) pair once per covered cell
+        open => candOf(open.crossJoin(ringCols))))
     } finally t.unpersist(blocking = false)
   }
 

@@ -22,11 +22,12 @@ import graft.core.{CellBuckets, HexGrid}
  * primitive table. A point walks hex rings outward from its own cell and
  * scores each newly met ring ONCE with the unchanged
  * [[RingKernels.dist2ToRing]] kernel, so results are bit-identical to the
- * relational paths. Stop rule: after ring r, a ring not yet met has every
- * boundary point in a cell at hex distance ≥ r+1, hence at distance
- * ≥ [[KnnJoin.ringLowerBound]](res, r+1); once `sqrt(best)` is STRICTLY
- * below that, no unmet ring can beat or tie the best. Points still open
- * after `maxR` (far field) fall back to the exact linear scan.
+ * relational paths. The walk is the shared [[KnnJoin.ringWalk]] with k = 1:
+ * after ring r, a ring not yet met has every boundary point in a cell at
+ * hex distance ≥ r+1, hence at distance ≥ [[KnnJoin.ringLowerBound]](res,
+ * r+1); once `sqrt(best)` is STRICTLY below that, no unmet ring can beat or
+ * tie the best. Points still open after `maxR` (far field) fall back to the
+ * exact linear scan.
  *
  * Rings without a finite bbox — empty rings (the kernel's NaN) or
  * non-finite coordinates — have no cover; they are scored for every point
@@ -121,28 +122,10 @@ final class SetbackIndex(rings: Seq[(String, Array[Double], Array[Double])],
     val (table, loose) = buckets
     var j = 0
     while (j < loose.length) { score(p, loose(j), x, y); j += 1 }
-    val c0 = HexGrid.encode(x, y, res)
-    var r = 0
-    var done = false
-    while (!done && r <= maxR) {
-      val cells = if (r == 0) Array(c0) else HexGrid.ring(c0, r)
-      var ci = 0
-      while (ci < cells.length) {
-        val cand = table(cells(ci))
-        if (cand != null) {
-          var k = 0
-          while (k < cand.length) { score(p, cand(k), x, y); k += 1 }
-        }
-        ci += 1
-      }
-      // strict <: unmet rings are then strictly farther, so no tie is missed
-      // (NaN never passes, so an all-NaN best keeps walking)
-      if (p.best >= 0 && math.sqrt(p.bestD2) < KnnJoin.ringLowerBound(res, r + 1)) done = true
-      r += 1
-    }
-    if (!done) {
-      // ring budget exhausted before the stop bound (far-field point or
-      // sparse rings): exact linear scan over the rings not yet scored
+    // ring budget exhausted before the stop bound (far-field point or sparse
+    // rings): exact linear scan over the rings not yet scored
+    if (!KnnJoin.ringWalk(table, x, y, res, maxR, score(p, _, x, y),
+        () => if (p.best < 0) Double.PositiveInfinity else p.bestD2)) {
       var i = 0
       while (i < n) { score(p, i, x, y); i += 1 }
     }

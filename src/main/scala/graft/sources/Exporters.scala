@@ -31,60 +31,12 @@ object Exporters {
         f.env.miny > b.maxy || f.env.maxy < b.miny))
   }
 
+  /** Ground-projection CityGML 2.0 export: each Building's footprint ring
+    * (and holes) at its min z as one GroundSurface polygon — the
+    * [[exportCityGmlFull]] writer over [[groundPolys]]. */
   def exportCityGml(fps: Seq[Footprint], path: String, bbox: Option[Env6] = None,
-                    srs: String = "urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH"): Unit = {
-    val sel = bboxFilter(fps.filter(_.feature_type == "Building"), bbox)
-    val w = new BufferedWriter(new FileWriter(path))
-    val xof = XMLOutputFactory.newInstance()
-    val x = xof.createXMLStreamWriter(w)
-    try {
-      x.writeStartDocument("UTF-8", "1.0")
-      x.writeStartElement("core", "CityModel", NsCore)
-      x.writeNamespace("core", NsCore)
-      x.writeNamespace("bldg", NsBldg)
-      x.writeNamespace("gml", NsGml)
-      x.writeNamespace("gen", NsGen)
-      if (sel.nonEmpty) {
-        val env = sel.map(_.env).reduce((a, b) => Env6(
-          math.min(a.minx, b.minx), math.min(a.miny, b.miny), math.min(a.minz, b.minz),
-          math.max(a.maxx, b.maxx), math.max(a.maxy, b.maxy), math.max(a.maxz, b.maxz)))
-        x.writeStartElement(NsGml, "boundedBy")
-        x.writeStartElement(NsGml, "Envelope")
-        x.writeAttribute("srsName", srs)
-        x.writeAttribute("srsDimension", "3")
-        el(x, NsGml, "lowerCorner", s"${env.minx} ${env.miny} ${env.minz}")
-        el(x, NsGml, "upperCorner", s"${env.maxx} ${env.maxy} ${env.maxz}")
-        x.writeEndElement(); x.writeEndElement()
-      }
-      sel.foreach { f =>
-        x.writeStartElement(NsCore, "cityObjectMember")
-        x.writeStartElement(NsBldg, "Building")
-        x.writeAttribute(NsGml, "id", f.feature_id)
-        f.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          x.writeStartElement(NsGen, "stringAttribute")
-          x.writeAttribute("name", k)
-          el(x, NsGen, "value", v)
-          x.writeEndElement()
-        }
-        // ground surface with the footprint ring at minz
-        x.writeStartElement(NsBldg, "boundedBy")
-        x.writeStartElement(NsBldg, "GroundSurface")
-        x.writeAttribute(NsGml, "id", s"${f.feature_id}_ground")
-        x.writeStartElement(NsBldg, "lod2MultiSurface")
-        x.writeStartElement(NsGml, "MultiSurface")
-        x.writeStartElement(NsGml, "surfaceMember")
-        x.writeStartElement(NsGml, "Polygon")
-        x.writeAttribute(NsGml, "id", s"${f.feature_id}_ground_poly")
-        ring(x, "exterior", f.ring, f.env.minz)
-        f.holes.foreach(h => ring(x, "interior", h, f.env.minz))
-        x.writeEndElement(); x.writeEndElement(); x.writeEndElement()
-        x.writeEndElement(); x.writeEndElement(); x.writeEndElement()
-        x.writeEndElement(); x.writeEndElement()
-      }
-      x.writeEndElement()
-      x.writeEndDocument()
-    } finally { x.close(); w.close() }
-  }
+                    srs: String = "urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH"): Unit =
+    exportCityGmlFull(fps, groundPolys(fps), path, bbox, srs)
 
   /**
    * Full-surface CityGML 2.0 export: re-emits EVERY boundary-surface polygon
@@ -189,15 +141,11 @@ object Exporters {
     exportDistributed(buildings, surfaces, outDir, filePrefix, ".gml") {
       (bSorted, sSorted, tmp) =>
         // partitions with no surface rows still carry geometry: synthesize
-        // the LOD0 ground polygons from the footprints (what the v2 path's
-        // exportCityGml fallback writes) so neither version ever emits a
-        // Building with attributes and zero geometry
-        if (version == "v3") {
-          val sFor = if (sSorted.nonEmpty) sSorted else groundPolys(bSorted)
-          exportCityGmlV3Full(bSorted, sFor, tmp, bbox, srs)
-        }
-        else if (sSorted.nonEmpty) exportCityGmlFull(bSorted, sSorted, tmp, bbox, srs)
-        else exportCityGml(bSorted, tmp, bbox, srs)
+        // the LOD0 ground polygons from the footprints so neither version
+        // ever emits a Building with attributes and zero geometry
+        val sFor = if (sSorted.nonEmpty) sSorted else groundPolys(bSorted)
+        if (version == "v3") exportCityGmlV3Full(bSorted, sFor, tmp, bbox, srs)
+        else exportCityGmlFull(bSorted, sFor, tmp, bbox, srs)
     }
   }
 
@@ -220,13 +168,16 @@ object Exporters {
         else exportCityJson(bSorted, tmp, srs)
     }
 
-  /** LOD0 ground polygons synthesized from footprints (fallback geometry). */
-  private def groundPolys(bSorted: Seq[Footprint]): Seq[SurfacePoly] =
-    bSorted.map { f =>
+  /** LOD0 ground polygons synthesized from footprints (fallback geometry):
+    * rings at the footprint's min z, closed as a gml:LinearRing requires
+    * (the first vertex repeated unless the ring already ends on it). */
+  private def groundPolys(fps: Seq[Footprint]): Seq[SurfacePoly] =
+    fps.map { f =>
+      def closed(pts: Seq[XY]): Seq[XYZ] =
+        (if (pts.isEmpty || pts.head == pts.last) pts else pts :+ pts.head)
+          .map(xy => XYZ(xy.x, xy.y, f.env.minz))
       SurfacePoly(f.feature_id, s"${f.feature_id}_ground", "GroundSurface",
-        f.partition_id, s"${f.feature_id}_ground_poly",
-        f.ring.map(xy => XYZ(xy.x, xy.y, f.env.minz)),
-        f.holes.map(_.map(xy => XYZ(xy.x, xy.y, f.env.minz))))
+        f.partition_id, s"${f.feature_id}_ground_poly", closed(f.ring), f.holes.map(closed))
     }
 
   /** Shared cogroup-per-partition task-commit writer behind the distributed
@@ -389,14 +340,6 @@ object Exporters {
 
   private def el(x: javax.xml.stream.XMLStreamWriter, ns: String, name: String, text: String): Unit = {
     x.writeStartElement(ns, name); x.writeCharacters(text); x.writeEndElement()
-  }
-
-  private def ring(x: javax.xml.stream.XMLStreamWriter, kind: String, pts: Seq[XY], z: Double): Unit = {
-    x.writeStartElement(NsGml, kind)
-    x.writeStartElement(NsGml, "LinearRing")
-    val closed = if (pts.nonEmpty && pts.head == pts.last) pts else pts :+ pts.head
-    el(x, NsGml, "posList", closed.map(p => s"${p.x} ${p.y} $z").mkString(" "))
-    x.writeEndElement(); x.writeEndElement()
   }
 
   /**

@@ -120,6 +120,30 @@ object IceLite {
     (row.getLong(0), Option(row.get(1)).map(_.toString).getOrElse("0"))
   }
 
+  /** Per-partition (rows, checksum) of `df`'s `cols`, keyed by the string
+    * value of `partCol` — ONE grouped aggregation, one collect. */
+  private def lineageByPartition(df: DataFrame, cols: Seq[String],
+                                 partCol: String): Map[String, (Long, String)] = {
+    val aggs = lineageAggs(df.select(cols.map(col): _*))
+    df.groupBy(col(partCol).cast("string").as("__pv"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map(r => r.getString(0) ->
+        (r.getLong(1), Option(r.get(2)).map(_.toString).getOrElse("0")))
+      .toMap
+  }
+
+  /** Dir of partition value `pv` under a `partitionBy("__pk")` stage. Spark's
+    * partitionBy naming maps the EMPTY string (like null) to
+    * __HIVE_DEFAULT_PARTITION__, not to escapePathName("") — while the final
+    * dir name uses [[escapePart]] (same escaping + dot-only/empty names
+    * encoded). */
+  private def stagedDir(stage: String, pv: String): Path =
+    Paths.get(stage, "__pk=" + (if (pv.isEmpty)
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    else
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(pv)))
+
   /** Hive/Iceberg-style percent-escaping for partition values used in paths
     * ('/', '..', ':' … would otherwise traverse outside the table dir or
     * produce unreadable file names); the manifest stores the RAW value. */
@@ -161,7 +185,6 @@ object IceLite {
     val todo = all.filterNot(snap.committedSet.contains)
     if (todo.isEmpty) return (Seq.empty, skipped)
 
-    val origCols = df.columns.toSeq
     val stage = s"$table/_icelite_stage"
     // pending filter: a literal In-list is fine for human-scale partition
     // counts, but at 10^4+ pending values the expression itself bloats the
@@ -180,27 +203,13 @@ object IceLite {
     // job 2: per-partition lineage in one aggregation over the staged files
     // (reads back what was actually persisted — a stronger audit base than
     // re-aggregating the upstream plan)
-    val stagedAll = df.sparkSession.read.parquet(stage)
-    val aggs = lineageAggs(stagedAll.select(origCols.map(col): _*))
-    val lineage = stagedAll
-      .groupBy(col(partCol).cast("string").as("__pv"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), Option(r.get(2)).map(_.toString).getOrElse("0")))
-      .toMap
+    val lineage =
+      lineageByPartition(df.sparkSession.read.parquet(stage), df.columns.toSeq, partCol)
     // commit loop: driver-side only — move staged dir into place, advance
     // the snapshot pointer once per partition (the crash-tolerant unit)
     var current = snap
     todo.foreach { pv =>
-      // the staged dir name uses Spark's partitionBy naming — which maps the
-      // EMPTY string (like null) to __HIVE_DEFAULT_PARTITION__, not to
-      // escapePathName("") — while the final dir name uses escapePart
-      // (same escaping + dot-only/empty names encoded)
-      val from = Paths.get(stage, "__pk=" + (if (pv.isEmpty)
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      else
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(pv)))
+      val from = stagedDir(stage, pv)
       val to = Paths.get(table, "data", escapePart(pv))
       Files.createDirectories(to.getParent)
       if (Files.exists(to)) deleteRecursive(to) // re-run after crash-before-commit
@@ -267,15 +276,7 @@ object IceLite {
     src.repartition(col(partCol))
       .withColumn("__pk", col(partCol).cast("string"))
       .write.mode("overwrite").partitionBy("__pk").parquet(stage)
-    val origCols = src.columns.toSeq
-    val staged = spark.read.parquet(stage)
-    val aggs = lineageAggs(staged.select(origCols.map(col): _*))
-    val got = staged.groupBy(col(partCol).cast("string").as("__pv"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), Option(r.get(2)).map(_.toString).getOrElse("0")))
-      .toMap
+    val got = lineageByPartition(spark.read.parquet(stage), src.columns.toSeq, partCol)
     todo.foreach { pv =>
       val want = byPv(pv)
       val (rows, checksum) = got.getOrElse(pv,
@@ -285,10 +286,7 @@ object IceLite {
           s"(rows $rows vs ${want.rows}, checksum $checksum vs ${want.checksum}) — aborting before swap")
     }
     todo.foreach { pv =>
-      val from = Paths.get(stage, "__pk=" + (if (pv.isEmpty)
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      else
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(pv)))
+      val from = stagedDir(stage, pv)
       val live = Paths.get(table, "data", escapePart(pv))
       val parked = parkedDir(table).resolve(escapePart(pv))
       Files.createDirectories(parked.getParent)
@@ -411,13 +409,7 @@ object IceLite {
     val snap = currentSnapshot(table)
     if (snap.partitions.isEmpty) return Seq.empty
     val df = read(spark, table)
-    val aggs = lineageAggs(df)
-    val got = df.groupBy(col(partCol).cast("string").as("__pv"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), Option(r.get(2)).map(_.toString).getOrElse("0")))
-      .toMap
+    val got = lineageByPartition(df, df.columns.toSeq, partCol)
     snap.partitions.map { p =>
       p.partition -> got.get(p.partition).exists { case (rows, cs) =>
         rows == p.rows && cs == p.checksum

@@ -15,6 +15,10 @@ class KnnJoinSpec extends AnyFunSuite {
   val probes: Seq[(String, Double, Double)] = (0 until 500).map { i =>
     (f"p$i%03d", 457790.0 + rnd.nextDouble() * 220, 5438990.0 + rnd.nextDouble() * 220)
   }
+  // probes far outside the target window: the k-th neighbour lies beyond
+  // any small ring budget, so a capped ring walk alone would truncate
+  val far: Seq[(String, Double, Double)] =
+    (0 until 20).map { i => (f"f$i%03d", 450000.0 + i * 3.0, 5432000.0) }
 
   test("broadcastGrid kNN == brute force at several resolutions (stop-bound proof)") {
     val want = KnnJoin.bruteForce(probes, targets, 3).toSet
@@ -71,9 +75,6 @@ class KnnJoinSpec extends AnyFunSuite {
   }
 
   test("ring-budget exhaustion falls back to exact results (no silent truncation)") {
-    // probes far outside the target window: the k-th neighbour lies beyond
-    // any small ring budget, so the capped ring walk alone would truncate
-    val far = (0 until 20).map { i => (f"f$i%03d", 450000.0 + i * 3.0, 5432000.0) }
     val want = KnnJoin.bruteForce(far, targets, 3).toSet
     // codegen-index path, hex-ring strategy forced, tiny cap
     val gotIdx = KnnJoin.broadcastGrid(far.toDF("probe_id", "x", "y"), targets, k = 3,
@@ -86,6 +87,23 @@ class KnnJoinSpec extends AnyFunSuite {
       .select("probe_id", "target_id", "d2", "rnk")
       .as[(String, String, Double, Int)].collect().toSet
     assert(gotRing === want, "ringJoin must finish pending probes exactly at the maxR cap")
+  }
+
+  test("duplicate target rows survive the maxR fallback (ringJoin, broadcastGrid == brute force)") {
+    // the far probes' nearest target, listed twice: both copies rank
+    val nearest = KnnJoin.bruteForce(far.take(1), targets, 1).head._2
+    val dup = targets ++ targets.filter(_._1 == nearest)
+    val want = KnnJoin.bruteForce(far, dup, 3).sorted
+    assert(want.count(r => r._1 == far.head._1 && r._2 == nearest) === 2)
+    val gotRing = KnnJoin.ringJoin(far.toDF("probe_id", "x", "y"),
+      dup.toDF("target_id", "cx", "cy"), k = 3, res = 12, maxR = 2)
+      .select("probe_id", "target_id", "d2", "rnk")
+      .as[(String, String, Double, Int)].collect().toSeq.sorted
+    assert(gotRing === want, "ringJoin fallback must keep duplicate target rows")
+    val gotIdx = KnnJoin.broadcastGrid(far.toDF("probe_id", "x", "y"), dup, k = 3,
+      res = 12, maxR = 2, linearLimit = 0)
+      .as[(String, String, Double, Int)].collect().toSeq.sorted
+    assert(gotIdx === want)
   }
 
   test("ringJoin with reliable checkpoints (executor-loss-safe) == brute force") {

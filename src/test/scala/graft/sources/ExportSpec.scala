@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model._
 
 class ExportSpec extends AnyFunSuite {
+  import ExportSpec.GroundGml
 
   lazy val fzk = CityGmlReader.toFootprints(
     CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"), 0)
@@ -223,6 +224,85 @@ class ExportSpec extends AnyFunSuite {
       Set((1.235, 2.0), (4.0, 2.0), (4.0, 9.5), (1.235, 9.5)))
   }
 
+  // hermetic ground-ring fixture: b1 has an OPEN exterior and an open hole,
+  // b2 a CLOSED exterior, b3 lies outside the bbox below, x1 is no Building
+  private val groundFps = Seq(
+    Footprint("b1", "Building", 3,
+      Seq(XY(457800.5, 5439000.25), XY(457804.0, 5439000.25), XY(457804.0, 5439003.0),
+        XY(457800.5, 5439003.0)),
+      Seq(Seq(XY(457801.0, 5439001.0), XY(457802.0, 5439001.0), XY(457802.0, 5439002.0))),
+      Env6(457800.5, 5439000.25, 1.5, 457804.0, 5439003.0, 12.0), XY(457802.25, 5439001.625),
+      Map("name" -> "A & <b>", "height" -> "10.5")),
+    Footprint("b2", "Building", 3,
+      Seq(XY(457810.0, 5439000.0), XY(457812.0, 5439000.0), XY(457812.0, 5439002.0),
+        XY(457810.0, 5439000.0)),
+      Seq.empty, Env6(457810.0, 5439000.0, 0.0, 457812.0, 5439002.0, 6.0),
+      XY(457811.0, 5439001.0), Map.empty),
+    Footprint("b3", "Building", 3,
+      Seq(XY(457850.0, 5439000.0), XY(457851.0, 5439000.0), XY(457851.0, 5439001.0)),
+      Seq.empty, Env6(457850.0, 5439000.0, 0.0, 457851.0, 5439001.0, 3.0),
+      XY(457850.5, 5439000.5), Map("k" -> "v")),
+    Footprint("x1", "Road", 3,
+      Seq(XY(457801.0, 5439001.0), XY(457802.0, 5439001.0)),
+      Seq.empty, Env6(457801.0, 5439001.0, 0.0, 457802.0, 5439001.0, 0.0),
+      XY(457801.5, 5439001.0), Map.empty))
+  // keeps b1 and b2 (b2's envelope only TOUCHES it at x = 457810), drops b3
+  private val groundBox = Some(Env6(457790.0, 5438990.0, 0.0, 457810.0, 5439010.0, 0.0))
+
+  test("exportCityGml writes the ground-ring document byte for byte (closed rings, hole, attrs, touching bbox)") {
+    val out = java.nio.file.Files.createTempDirectory("gml").resolve("g.gml")
+    Exporters.exportCityGml(groundFps, out.toString, groundBox)
+    assert(new String(java.nio.file.Files.readAllBytes(out), "UTF-8") === GroundGml)
+  }
+
+  test("footprint-only distributed CityGML export writes closed LinearRings (v2 and v3)") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    for (version <- Seq("v2", "v3")) {
+      val outDir = java.nio.file.Files.createTempDirectory("gmlground").toString
+      Exporters.exportCityGmlDistributed(groundFps.toDS(),
+        spark.emptyDataset[SurfacePoly], outDir, version = version)
+      val doc = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$outDir/part_3.gml")), "UTF-8")
+      val posLists = "<gml:posList>([^<]*)</gml:posList>".r.findAllMatchIn(doc)
+        .map(_.group(1).split(' ').grouped(3).map(_.toSeq).toSeq).toSeq
+      // b1 exterior + hole, b2, b3 (no bbox: all three Buildings)
+      assert(posLists.size === 4, s"$version: $doc")
+      posLists.foreach(ring => assert(ring.head === ring.last, s"$version: open ring $ring"))
+    }
+  }
+
   private def closedSet(r: Seq[XY]): Set[(Double, Double)] =
     r.map(p => (p.x, p.y)).toSet
+}
+
+object ExportSpec {
+  /** The exact document `exportCityGml(groundFps, _, groundBox)` writes —
+    * a golden for the ground-ring CityGML 2.0 writer. */
+  val GroundGml: String =
+    """<?xml version='1.0' encoding='UTF-8'?>""" +
+    """<core:CityModel xmlns:core="http://www.opengis.net/citygml/2.0" xmlns:bldg="http://www.opengis.net/citygml/building/2.0" xmlns:gml="http://www.opengis.net/gml" xmlns:gen="http://www.opengis.net/citygml/generics/2.0">""" +
+    """<gml:boundedBy>""" +
+    """<gml:Envelope srsName="urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH" srsDimension="3">""" +
+    """<gml:lowerCorner>457800.5 5439000.0 0.0</gml:lowerCorner>""" +
+    """<gml:upperCorner>457812.0 5439003.0 12.0</gml:upperCorner></gml:Envelope>""" +
+    """</gml:boundedBy>""" +
+    """<core:cityObjectMember><bldg:Building gml:id="b1"><gen:stringAttribute name="height">""" +
+    """<gen:value>10.5</gen:value></gen:stringAttribute><gen:stringAttribute name="name">""" +
+    """<gen:value>A &amp; &lt;b></gen:value></gen:stringAttribute><bldg:boundedBy>""" +
+    """<bldg:GroundSurface gml:id="b1_ground"><bldg:lod2MultiSurface><gml:MultiSurface>""" +
+    """<gml:surfaceMember><gml:Polygon gml:id="b1_ground_poly"><gml:exterior><gml:LinearRing>""" +
+    """<gml:posList>457800.5 5439000.25 1.5 457804.0 5439000.25 1.5 457804.0 5439003.0 1.5 457800.5 5439003.0 1.5 457800.5 5439000.25 1.5</gml:posList>""" +
+    """</gml:LinearRing></gml:exterior><gml:interior><gml:LinearRing>""" +
+    """<gml:posList>457801.0 5439001.0 1.5 457802.0 5439001.0 1.5 457802.0 5439002.0 1.5 457801.0 5439001.0 1.5</gml:posList>""" +
+    """</gml:LinearRing></gml:interior></gml:Polygon></gml:surfaceMember></gml:MultiSurface>""" +
+    """</bldg:lod2MultiSurface></bldg:GroundSurface></bldg:boundedBy></bldg:Building>""" +
+    """</core:cityObjectMember>""" +
+    """<core:cityObjectMember><bldg:Building gml:id="b2"><bldg:boundedBy>""" +
+    """<bldg:GroundSurface gml:id="b2_ground"><bldg:lod2MultiSurface><gml:MultiSurface>""" +
+    """<gml:surfaceMember><gml:Polygon gml:id="b2_ground_poly"><gml:exterior><gml:LinearRing>""" +
+    """<gml:posList>457810.0 5439000.0 0.0 457812.0 5439000.0 0.0 457812.0 5439002.0 0.0 457810.0 5439000.0 0.0</gml:posList>""" +
+    """</gml:LinearRing></gml:exterior></gml:Polygon></gml:surfaceMember></gml:MultiSurface>""" +
+    """</bldg:lod2MultiSurface></bldg:GroundSurface></bldg:boundedBy></bldg:Building>""" +
+    """</core:cityObjectMember></core:CityModel>"""
 }
