@@ -105,8 +105,8 @@ object ScaleBench {
          |
          |North-star operator: filter-refine PIP spatial join (hex cell-key
          |prefilter + exact boundary-inclusive refine), `$mode` physical path
-         |(fully-codegen pip_matches expression, polygon index as plan
-         |reference object), of geotagged points against 101 CityGML-LoD2
+         |(fully-codegen pip_matches expression, polygon index broadcast
+         |once per executor), of geotagged points against 101 CityGML-LoD2
          |building footprints (FZK-Haus + 100-building CityJSON grid), skewed
          |input (60% of points inside one footprint).
          |

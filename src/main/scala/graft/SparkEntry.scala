@@ -300,7 +300,7 @@ object SparkEntry {
     "q91_setback" -> ((s, dir) => {
       // distance to the NEAREST footprint boundary per event (setback
       // analysis — the planning metric behind "how far is this point from
-      // the closest building"): the 100 square rings ride the plan as a
+      // the closest building"): the 100 square rings ship as a broadcast
       // SetbackIndex and the codegen setback_nearest kernel scores, per
       // event, only the rings its hex-ring walk meets — each with the exact
       // st_dist2_ring kernel — keeping the min(struct(d2, fid)) row (ties on

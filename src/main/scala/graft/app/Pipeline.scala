@@ -33,18 +33,19 @@ object Pipeline {
     * through the enrichment untouched.
     *
     * PIP physical path: [[PipJoin.auto]] picks by total polygon vertex
-    * count — the plan-reference codegen `exprJoin` for the north-star shape
-    * (≤100s of footprints vs 10^12 points), the broadcast cell-join when
-    * the set is plan-too-big but broadcast-fits, the salted SMJ beyond
+    * count — the broadcast-index codegen `exprJoin` for the north-star shape
+    * (up to city scale vs 10^12 points), the broadcast cell-join when the
+    * index is too big but the cells broadcast-fit, the salted SMJ beyond
     * that — so the entry point is safe by default when someone feeds it a
     * continent's worth of footprints. Thresholds (total vertices):
-    * `spark.graft.pipeline.pipExprVertexLimit` (default 100k) /
+    * `spark.graft.pipeline.pipExprVertexLimit` (default 1M) /
     * `spark.graft.pipeline.pipBroadcastVertexLimit` (default 5M). */
   def enrich(images: DataFrame, polys: Seq[Footprint],
              zoom: Int = 20, k: Int = 1, nBuckets: Int = 16,
              keepCols: Seq[String] = Nil): DataFrame = {
     val centroids = polys.map(f => (f.feature_id, f.centroid.x, f.centroid.y))
-    val nn = new graft.operators.KnnIndex(centroids, k)
+    val nn = graft.operators.PlanIndex.broadcast(images,
+      new graft.operators.KnnIndex(centroids, k))
     val enriched = PipJoin.auto(
         images.select((Seq("image_id", "x", "y") ++ keepCols).map(col): _*), polys,
         exprLimit = graft.core.Confs.intConf(images.sparkSession,

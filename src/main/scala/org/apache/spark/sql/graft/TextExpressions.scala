@@ -573,7 +573,7 @@ case class NormTextExpr(child: Expression) extends UnaryExpression with ExpectsI
 /**
  * bpe_encode(text) — scan-local BPE subword stream. The trained merge table
  * ([[graft.functions.BpeTokenizer.BpeModel]]) rides the plan as a reference
- * object (the `pip_matches` pattern): the generated code calls
+ * object (`ctx.addReferenceObj`): the generated code calls
  * `model.encodeUtf8(text)` directly — no join, no broadcast variable
  * plumbing, no shuffle; at 10^12 docs the encode prices as part of the scan.
  */

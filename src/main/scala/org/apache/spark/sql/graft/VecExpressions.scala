@@ -104,7 +104,7 @@ case class CosineExpr(left: Expression, right: Expression) extends VecBinaryExpr
 
 /**
  * IVF coarse-quantizer table: centroid ids + vectors, shipped inside the
- * query plan as a reference object (same pattern as PipIndex/KnnIndex) so
+ * query plan as a reference object (`ctx.addReferenceObj`) so
  * the 10^12-row assignment pass is a single codegen projection — no join,
  * no Encoder round-trip, no shuffle. Ties break toward the lowest index,
  * which is the lowest centroid id (ids are pre-sorted).
