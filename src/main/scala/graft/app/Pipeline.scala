@@ -18,9 +18,10 @@ import graft.sources.IceLite
  * Scale shape (all stages verified in PlanQualitySpec on actual plans):
  *  - the image table scan prunes to (image_id, x, y) — payload bytes never
  *    flow through the join;
- *  - PIP + kNN are codegen expressions (polygon / centroid index ride the
- *    plan as reference objects): map-only, no join operator, no shuffle on
- *    the 10^12-row side;
+ *  - PIP + kNN are codegen expressions over the polygon / centroid index,
+ *    which ships once per executor as a Spark broadcast
+ *    ([[graft.operators.PlanIndex]]; the plan holds only the handle):
+ *    map-only, no join operator, no shuffle on the 10^12-row side;
  *  - the only shuffle is the final write's partitionBy on the deterministic
  *    bucket key — which is also the resume/commit unit;
  *  - a re-run after a crash recomputes ONLY the uncommitted buckets

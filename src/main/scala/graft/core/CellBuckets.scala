@@ -1,33 +1,46 @@
 package graft.core
 
+import scala.reflect.ClassTag
+
 /**
  * Cell id → ordinals table shared by the broadcast indexes
  * ([[graft.operators.PipIndex]], [[graft.operators.KnnIndex]],
- * [[graft.operators.SetbackIndex]]), built lazily once per executor and
- * probed read-only by every task there. Open addressing with linear probing over
- * primitive arrays (power-of-two capacity, [[Hashing.mix64]] slots): a
- * `java.util.HashMap[java.lang.Long, _]` would BOX the key on every probe —
- * 10^12 boxed Longs on the probe scan. Each bucket lists its ordinals in
+ * [[graft.operators.SetbackIndex]], [[graft.operators.TileIndex]]), built
+ * lazily once per executor and probed read-only by every task there. Open
+ * addressing with linear probing over primitive arrays (power-of-two
+ * capacity, [[Hashing.mix64]] slots): a `java.util.HashMap[java.lang.Long, _]`
+ * would BOX the key on every probe — 10^12 boxed Longs on the probe scan. Each bucket lists its ordinals in
  * ascending order; an empty slot has a null bucket.
  */
 final class CellBuckets private (keys: Array[Long], vals: Array[Array[Int]], mask: Int) {
 
-  /** Ordinals bucketed in `cell`, or null. Allocation-free. */
-  def apply(cell: Long): Array[Int] = {
+  /** Slot of `cell`'s bucket, or -1. Allocation-free. */
+  def slot(cell: Long): Int = {
     var slot = (Hashing.mix64(cell) & mask).toInt
     while (true) {
-      val v = vals(slot)
-      if (v == null) return null
-      if (keys(slot) == cell) return v
+      if (vals(slot) == null) return -1
+      if (keys(slot) == cell) return slot
       slot = (slot + 1) & mask
     }
-    null
+    -1
   }
+
+  /** Ordinals bucketed in `cell`, or null. Allocation-free. */
+  def apply(cell: Long): Array[Int] = {
+    val s = slot(cell)
+    if (s < 0) null else vals(s)
+  }
+
+  /** `f` of every bucket, indexed by [[slot]] (null at empty slots): a
+    * per-bucket value built once and then read with one probe. */
+  def mapBuckets[T >: Null : ClassTag](f: Array[Int] => T): Array[T] =
+    vals.map(b => if (b == null) null else f(b))
 }
 
 object CellBuckets {
 
-  /** `cells(i)`: the cells ordinal i belongs to (distinct; null = none). */
+  /** `cells(i)`: the cells ordinal i belongs to (null = none); a cell listed
+    * twice for one ordinal lists that ordinal twice in its bucket. */
   def build(cells: Array[Array[Long]]): CellBuckets = {
     var total = 0
     cells.foreach(cs => if (cs != null) total += cs.length)

@@ -30,21 +30,35 @@ object Tiles {
     Tile(z, tx, n - 1 - tyFromBottom)
   }
 
-  /** Tiles at zoom z intersecting the rectangle (touching included). */
+  /** Number of tiles [[coverRect]] returns, without allocating them: 0 for an
+    * inverted or NaN envelope (`minx > maxx`, `miny > maxy` — what an empty
+    * geometry's ±Infinity envelope is), else the clamped column × row count
+    * between the corner tiles. */
+  def coverCount(minx: Double, miny: Double, maxx: Double, maxy: Double, z: Int): Long =
+    if (!(minx <= maxx && miny <= maxy)) 0L
+    else {
+      val (tl, br) = (tileOf(minx, maxy, z), tileOf(maxx, miny, z))
+      (br.x - tl.x + 1) * (br.y - tl.y + 1)
+    }
+
+  /** Largest array the JVM allocates reliably (the JDK's own soft limit). */
+  private val MaxCover = Int.MaxValue - 8
+
+  /** Tiles at zoom z intersecting the rectangle (touching included): the
+    * block from the top-left corner's tile to the bottom-right corner's
+    * (y counts from the top). None for an inverted or NaN envelope; a cover
+    * too large for one array fails with a message naming envelope and zoom. */
   def coverRect(minx: Double, miny: Double, maxx: Double, maxy: Double, z: Int): Array[Tile] = {
-    val n = 1L << z
-    def clampIdx(v: Long) = math.max(0L, math.min(n - 1, v))
-    val tx0 = clampIdx(math.floor(minx / Span * n).toLong)
-    val tx1 = clampIdx(math.floor(maxx / Span * n).toLong)
-    // y flips: maxy -> smallest row
-    val ty0 = clampIdx(n - 1 - math.floor(maxy / Span * n).toLong)
-    val ty1 = clampIdx(n - 1 - math.floor(miny / Span * n).toLong)
-    val out = new Array[Tile](((tx1 - tx0 + 1) * (ty1 - ty0 + 1)).toInt)
+    val count = coverCount(minx, miny, maxx, maxy, z)
+    require(count <= MaxCover, s"tile cover of envelope ($minx, $miny, $maxx, $maxy) at " +
+      s"zoom $z holds $count tiles, more than one array can hold")
+    val out = new Array[Tile](count.toInt)
+    val (tl, br) = (tileOf(minx, maxy, z), tileOf(maxx, miny, z))
     var k = 0
-    var xi = tx0
-    while (xi <= tx1) {
-      var yi = ty0
-      while (yi <= ty1) { out(k) = Tile(z, xi, yi); k += 1; yi += 1 }
+    var xi = tl.x
+    while (k < out.length && xi <= br.x) { // k: an empty cover writes nothing
+      var yi = tl.y
+      while (yi <= br.y) { out(k) = Tile(z, xi, yi); k += 1; yi += 1 }
       xi += 1
     }
     out

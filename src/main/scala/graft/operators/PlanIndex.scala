@@ -7,10 +7,10 @@ import org.apache.spark.sql.DataFrame
 
 /**
  * Shipping for the driver-built indexes of the map-only kernels
- * ([[PipIndex]], [[KnnIndex]], [[SetbackIndex]]): a Spark broadcast from the
- * probe DataFrame's own session. The expression then carries only the handle,
- * each executor fetches the index once and every task there shares that one
- * instance and its lazy builds. The handle is not destroyed eagerly — plans
+ * ([[PipIndex]], [[KnnIndex]], [[SetbackIndex]], [[TileIndex]]): a Spark
+ * broadcast from the probe DataFrame's own session. The expression then
+ * carries only the handle, each executor fetches the index once and every
+ * task there shares that one instance and its lazy builds. The handle is not destroyed eagerly — plans
  * re-execute (streaming micro-batches, repeated actions); `ContextCleaner`
  * frees it once the plan holding it is garbage.
  */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graft.GeoFunctionsImpl.tile_matches
 import graft.functions.GeoFunctions._
 import graft.model.Footprint
 
@@ -16,7 +17,10 @@ import graft.model.Footprint
  *  - feature → all tiles its envelope touches, per zoom (tile_cover expression,
  *    touching-inclusive like the reference bbox test, Neo4jDB.java:378-380);
  *  - point/image → its containing tile (tile_of, codegen'd);
- *  - tile contents join = equi-join on tile_id — broadcastable per zoom;
+ *  - tile contents = the features whose cover holds the point's tile: a
+ *    map-only probe of the broadcast [[TileIndex]] while the exploded
+ *    feature-tile side fits the broadcast budget, else an equi-join on
+ *    (zoom, tile_id) with both sides shuffled;
  *  - top-k images per tile = row_number window (deterministic tie-break).
  */
 object TileAssign {
@@ -34,18 +38,11 @@ object TileAssign {
       .withColumn("zoom", explode(lit(zooms.toArray)))
       .withColumn("tile_id", tile_of(col("x"), col("y"), col("zoom")))
 
-  /** images ⋈ features per tile (the raster↔vector assignment). Routes
-    * through [[auto]]: broadcast only when the exploded feature-tile side is
-    * provably bounded — features × zooms × cover-tiles can exceed any
-    * broadcast budget even when the feature TABLE looks small. */
+  /** images ⋈ features per tile (the raster↔vector assignment), routed by
+    * [[auto]]. Rows: `zoom, tile_id, <point columns>, feature_id,
+    * partition_id`, one per (point, zoom, feature-tile) match. */
   def assign(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int]): DataFrame =
     auto(points, fps, zooms)
-
-  /** Broadcast path: feature-tile side ships to every executor; the point
-    * side never shuffles. */
-  def assignBroadcast(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int]): DataFrame =
-    pointTiles(points, zooms)
-      .join(broadcast(featureTiles(fps, zooms)), Seq("zoom", "tile_id"))
 
   /** Shuffle (sort-merge) path for an unbounded feature-tile side: plain
     * equi-join on (zoom, tile_id) — both sides shuffle on the tile key, no
@@ -56,32 +53,31 @@ object TileAssign {
       .join(featureTiles(fps, zooms), Seq("zoom", "tile_id"))
 
   /**
-   * Physical-path auto-selection (same treatment as [[PipJoin.auto]]): count
-   * the exploded feature-tile rows with one small-side pass (the point side
-   * is untouched) and broadcast only under `broadcastLimit`; otherwise take
-   * the shuffle join.
+   * Physical-path auto-selection (same treatment as [[Setback.auto]]): ONE
+   * bounded collect of the features is both the size probe and the index
+   * input. A feature with a valid envelope covers at least one tile per
+   * zoom, so more than `broadcastLimit / zooms.size` features cannot fit
+   * (the few with an empty cover only lean toward the exact shuffle path);
+   * the exploded size is then Σ [[graft.core.Tiles.coverCount]] on the
+   * driver. Within the limit the [[TileIndex]] ships once per executor and
+   * one codegen `tile_matches` probe per point tile replaces the join — no
+   * join, no exchange, the same rows, columns and duplicates as
+   * [[assignShuffle]], which runs otherwise. A local footprint Dataset
+   * collects without a job; empty `zooms` runs none and gives no rows.
    */
   def auto(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int],
            broadcastLimit: Long = 2000000L): DataFrame = {
-    // size the exploded side WITHOUT materializing it: the exploded row
-    // count is exactly Σ per-feature cover sizes, computable as one narrow
-    // aggregation over array lengths. No cache — the previous form cached
-    // the full explode for the sizing count, which pinned a multi-million-
-    // row relation for the session precisely when the side was too big to
-    // broadcast; each branch's join now computes the explode exactly once.
-    val cnt = if (zooms.isEmpty) 0L
-      else {
-        val row = fps.toDF().select(
-          // coalesce: sum over ZERO rows (empty footprint set) is null, and
-          // head().getLong would NPE — degenerate inputs must size to 0 and
-          // fall through to an empty join, like the pre-sizing form did
-          coalesce(zooms.map(z => sum(size(graft.functions.GeoFunctions.tile_cover(
-            col("env"), lit(z)))).cast("long")).reduce(_ + _), lit(0L)).as("n"))
-          .head()
-        row.getLong(0)
-      }
-    if (cnt <= broadcastLimit) assignBroadcast(points, fps, zooms)
-    else assignShuffle(points, fps, zooms)
+    val features = if (zooms.isEmpty) Some(Array.empty[TileIndex.Feature])
+      else graft.core.Regime.collectUpTo(fps.select("feature_id", "partition_id", "env")
+        .as(TileIndex.featureEncoder), broadcastLimit / zooms.size)
+    features.map(new TileIndex(_, zooms)).filter(_.size <= broadcastLimit) match {
+      case Some(index) =>
+        val pts = pointTiles(points, zooms)
+        val keys = Seq("zoom", "tile_id")
+        val cols = (keys ++ pts.columns.filterNot(keys.contains)).map(c => col(s"`${c.replace("`", "``")}`"))
+        pts.select(cols :+ inline(tile_matches(col("tile_id"), PlanIndex.broadcast(points, index))): _*)
+      case None => assignShuffle(points, fps, zooms)
+    }
   }
 
   /** Deterministic top-k rows per (zoom, tile). */

@@ -284,6 +284,31 @@ case class KnnMatchesExpr(left: Expression, right: Expression,
 }
 
 /**
+ * Fully-codegen tile assignment (shipped like [[PipMatchesExpr]]): the
+ * generated code calls the broadcast feature-tile index's `matches(tile)`
+ * on a packed tile id and returns the `array<struct<feature_id,
+ * partition_id>>` of the features whose envelope cover holds that tile —
+ * the rows the `(zoom, tile_id)` equi-join against the exploded feature
+ * pyramid would give, without a join, a shuffle or a sizing job. A null
+ * tile id gives null (no rows under `inline`/`explode`).
+ */
+case class TileMatchesExpr(child: Expression, bc: Broadcast[graft.operators.TileIndex])
+    extends UnaryExpression with ExpectsInputTypes {
+  @transient private lazy val index = bc.value
+  override def dataType: DataType = ArrayType(new StructType()
+    .add("feature_id", StringType).add("partition_id", IntegerType, nullable = false),
+    containsNull = false)
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
+  override def nullSafeEval(tile: Any): Any = index.matches(tile.asInstanceOf[Long])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idx = BroadcastIndex.field(ctx, bc, classOf[graft.operators.TileIndex])
+    defineCodeGen(ctx, ev, t => s"$idx.matches($t)")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "tile_matches"
+}
+
+/**
  * Fully-codegen nearest ring boundary (shipped like [[KnnMatchesExpr]]):
  * the generated code calls the broadcast ring index's `nearest(x, y)` and
  * returns `struct<fid, d2>` — the row `min(struct(d2, fid))` over every
@@ -959,6 +984,8 @@ object GeoFunctionsImpl {
     column(PipMatchesExpr(expression(x), expression(y), index))
   def knn_matches(x: Column, y: Column, index: Broadcast[graft.operators.KnnIndex]): Column =
     column(KnnMatchesExpr(expression(x), expression(y), index))
+  def tile_matches(tile: Column, index: Broadcast[graft.operators.TileIndex]): Column =
+    column(TileMatchesExpr(expression(tile), index))
   def setback_nearest(x: Column, y: Column,
                       index: Broadcast[graft.operators.SetbackIndex]): Column =
     column(SetbackNearestExpr(expression(x), expression(y), index))

@@ -150,6 +150,34 @@ class CellGridSpec extends AnyFunSuite {
     }
   }
 
+  test("Tiles: inverted or NaN envelopes cover no tile; coverCount matches coverRect") {
+    val inf = Double.PositiveInfinity
+    // an empty geometry's envelope: (+Inf, +Inf) .. (-Inf, -Inf)
+    assert(Tiles.coverRect(inf, inf, -inf, -inf, 16).isEmpty)
+    // inverted inside one tile, and inverted across tiles, on either axis
+    assert(Tiles.coverRect(10.5, 10.0, 10.2, 20.0, 16).isEmpty)
+    assert(Tiles.coverRect(5000.0, 10.0, 100.0, 20.0, 18).isEmpty)
+    assert(Tiles.coverRect(10.0, 5000.0, 20.0, 100.0, 18).isEmpty)
+    assert(Tiles.coverRect(Double.NaN, 0.0, 10.0, 10.0, 16).isEmpty)
+    assert(Tiles.coverCount(inf, inf, -inf, -inf, 16) === 0L)
+    val rnd = new scala.util.Random(11)
+    for (_ <- 1 to 500) {
+      val (x0, y0) = (rnd.nextDouble() * 4000 - 500, rnd.nextDouble() * 4000 - 500)
+      val (w, h) = (rnd.nextDouble() * 1500 - 100, rnd.nextDouble() * 1500 - 100)
+      val z = 14 + rnd.nextInt(6)
+      assert(Tiles.coverCount(x0, y0, x0 + w, y0 + h, z) ===
+        Tiles.coverRect(x0, y0, x0 + w, y0 + h, z).length.toLong)
+    }
+  }
+
+  test("Tiles: a cover too large for one array fails naming the envelope and zoom") {
+    // the whole domain at z17: 2^34 tiles, which an Int length would wrap
+    assert(Tiles.coverCount(0, 0, Tiles.Span, Tiles.Span, 17) === (1L << 34))
+    val e = intercept[IllegalArgumentException](Tiles.coverRect(0, 0, Tiles.Span, Tiles.Span, 17))
+    assert(e.getMessage.contains(s"(0.0, 0.0, ${Tiles.Span}, ${Tiles.Span})") &&
+      e.getMessage.contains("zoom 17"), e.getMessage)
+  }
+
   test("Hashing: determinism and spread") {
     assert(Hashing.fnv1a("abc") === Hashing.fnv1a("abc"))
     assert(Hashing.fnv1a("abc") !== Hashing.fnv1a("abd"))

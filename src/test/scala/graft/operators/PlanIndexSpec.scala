@@ -4,11 +4,12 @@ import java.io.{ByteArrayOutputStream, ObjectOutputStream}
 import java.util.Collections
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{KnnMatchesExpr, PipMatchesExpr, SetbackNearestExpr}
+import org.apache.spark.sql.graft.{KnnMatchesExpr, PipMatchesExpr, SetbackNearestExpr, TileMatchesExpr}
 
 import graft.TestSpark
 
@@ -28,7 +29,7 @@ class PlanIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     ((col("id") % 100) * 40.0 + 1.0).as("x"), ((col("id") / 100).cast("int") * 40.0).as("y"))
 
   /** The executed plan's expressions matching `pf`, after running it. */
-  private def executed[T <: Expression](df: DataFrame)(pf: PartialFunction[Expression, T]): Seq[T] = {
+  private def executed[T](df: DataFrame)(pf: PartialFunction[Expression, T]): Seq[T] = {
     df.write.format("noop").mode("overwrite").save()
     collect(df.queryExecution.executedPlan)(p => p.expressions.flatMap(_.collect(pf)))
       .flatten
@@ -48,7 +49,13 @@ class PlanIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     bytes.size() - before
   }
 
-  test("pip_matches, knn_matches and setback_nearest carry < 2 KB at 7000 features") {
+  private def tiles(pts: DataFrame): DataFrame = {
+    val spark = pts.sparkSession
+    import spark.implicits._
+    TileAssign.auto(pts, city.toDS(), Seq(16, 18))
+  }
+
+  test("pip_matches, knn_matches, setback_nearest and tile_matches carry < 2 KB at 7000 features") {
     val pts = points(4)
     val pip = executed(PipJoin.exprJoin(pts, city)) { case e: PipMatchesExpr => e }
     val knn = executed(KnnJoin.broadcastGrid(pts,
@@ -58,7 +65,9 @@ class PlanIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val ringIndex = new SetbackIndex(city.map(f => (f.feature_id,
       f.ring.map(_.x).toArray, f.ring.map(_.y).toArray)))
     val setback = executed(Setback.indexed(pts, ringIndex)) { case e: SetbackNearestExpr => e }
-    Seq("pip_matches" -> pip, "knn_matches" -> knn, "setback_nearest" -> setback).foreach {
+    val tile = executed(tiles(pts)) { case e: TileMatchesExpr => e }
+    Seq("pip_matches" -> pip, "knn_matches" -> knn, "setback_nearest" -> setback,
+      "tile_matches" -> tile).foreach {
       case (name, es) =>
         assert(es.size === 1, s"$name must be in the executed plan")
         val size = ownBytes(es.head, es.head.children: _*)
@@ -69,19 +78,24 @@ class PlanIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("all 16 tasks of a 16-partition scan share the driver's index instance (local mode)") {
-    val df = PipJoin.exprJoin(points(16), city)
-    val expr = executed(df) { case e: PipMatchesExpr => e }.head
-    val seen = PlanIndexSpec.seen
-    seen.clear()
-    // each task deserializes its own copy of the expression, as a scan task does
-    val tasks = df.queryExecution.executedPlan.execute().mapPartitions { it =>
-      it.foreach(_ => ())
-      PlanIndexSpec.seen.add(expr.bc.value)
-      Iterator(1)
-    }.collect()
-    assert(tasks.length === 16)
-    assert(seen.size === 1, "every task must resolve the same index instance")
-    assert(seen.iterator().next() eq expr.bc.value, "local mode: the driver's own object")
+    val pts = points(16)
+    val pip = PipJoin.exprJoin(pts, city)
+    val tile = tiles(pts)
+    Seq(pip -> executed(pip) { case e: PipMatchesExpr => e.bc },
+      tile -> executed(tile) { case e: TileMatchesExpr => e.bc }).foreach { case (df, bcs) =>
+      val bc: Broadcast[_] = bcs.head
+      val seen = PlanIndexSpec.seen
+      seen.clear()
+      // each task deserializes its own copy of the handle, as a scan task does
+      val tasks = df.queryExecution.executedPlan.execute().mapPartitions { it =>
+        it.foreach(_ => ())
+        PlanIndexSpec.seen.add(bc.value.asInstanceOf[AnyRef])
+        Iterator(1)
+      }.collect()
+      assert(tasks.length === 16)
+      assert(seen.size === 1, "every task must resolve the same index instance")
+      assert(seen.iterator().next() eq bc.value.asInstanceOf[AnyRef], "local mode: the driver's own object")
+    }
   }
 }
 

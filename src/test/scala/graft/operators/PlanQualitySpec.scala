@@ -187,23 +187,29 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("TileAssign.auto: large feature-tile side takes the shuffle path, no broadcast") {
     val fps = graft.Bench.benchPolygons
-    val pts = (0L until 2000L).map { i =>
+    val zooms = Seq(18, 19, 20)
+    val ptSeq = (0L until 2000L).map { i =>
       val (x, y) = graft.sources.ImageGen.geotag(i); (f"i$i%06d", x, y)
-    }.toDF("image_id", "x", "y")
+    }
+    val pts = ptSeq.toDF("image_id", "x", "y")
     val ds = spark.createDataset(fps)
     // force the "feature pyramid exceeds the broadcast budget" branch
-    val q = TileAssign.auto(pts, ds, Seq(18, 19, 20), broadcastLimit = 10)
+    val q = TileAssign.auto(pts, ds, zooms, broadcastLimit = 10)
     q.collect()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastHashJoin"),
       s"over-limit feature side must not broadcast:\n$plan")
     assert(plan.contains("SortMergeJoin"), plan)
-    // row set identical to the broadcast path
+    // row set identical to the brute-force feature-tile cover oracle
     val got = q.select("image_id", "feature_id", "zoom", "tile_id")
       .as[(String, String, Int, Long)].collect().toSet
-    val want = TileAssign.assignBroadcast(pts, ds, Seq(18, 19, 20))
-      .select("image_id", "feature_id", "zoom", "tile_id")
-      .as[(String, String, Int, Long)].collect().toSet
+    val cover = TileAssign.bruteForceFeatureTiles(fps, zooms).groupBy(t => (t._2, t._3))
+    val want = (for {
+      (id, x, y) <- ptSeq
+      z <- zooms
+      t = graft.core.Tiles.pack(graft.core.Tiles.tileOf(x, y, z))
+      (fid, _, _) <- cover.getOrElse((z, t), Set.empty)
+    } yield (id, fid, z, t)).toSet
     assert(got === want && want.nonEmpty)
   }
 
