@@ -41,25 +41,23 @@ object Bench {
   }
 
   /** One timed PIP-join pass; returns (inputRows, joinedRows, seconds).
-    * mode: "expr" (codegen pip_matches, the default), "broadcast"
-    * (declarative Catalyst variant), "salted". */
+    * mode: "expr" (codegen pip_matches via PipJoin.auto, the default and
+    * only path; "broadcast" and "salted" name the removed cell joins). */
   def timedPipJoin(spark: SparkSession, pointsDir: String,
                    polys: Seq[model.Footprint],
                    mode: String = sys.env.getOrElse("SPARK_GRAFT_PIP_MODE", "expr")): (Long, Long, Double) = {
-    import spark.implicits._
     val pts = spark.read.parquet(pointsDir)
     val inputRows = pts.count()
     val t0 = System.nanoTime()
     val joined = mode match {
       case "expr" =>
-        operators.PipJoin.exprJoin(pts, polys).count()
-      case "salted" =>
-        operators.PipJoin.saltedJoin(pts, spark.createDataset(polys)).count()
-      case "broadcast" =>
-        operators.PipJoin.broadcastJoin(pts, spark.createDataset(polys)).count()
+        operators.PipJoin.auto(pts, polys).count()
+      case "broadcast" | "salted" =>
+        throw new IllegalArgumentException(s"SPARK_GRAFT_PIP_MODE=$mode: the $mode PIP cell " +
+          "join was removed; PipJoin.auto (pip_matches) is the only path, use expr")
       case other =>
         throw new IllegalArgumentException(
-          s"SPARK_GRAFT_PIP_MODE must be expr|broadcast|salted, got '$other'")
+          s"SPARK_GRAFT_PIP_MODE must be expr, got '$other'")
     }
     val secs = (System.nanoTime() - t0) / 1e9
     (inputRows, joined, secs)
@@ -158,7 +156,7 @@ object Bench {
     if (!new java.io.File(s"$imgDir/_SUCCESS").exists())
       sources.ImageGen.table(spark, nImg, 64).write.mode("overwrite").parquet(imgDir)
     val (fullJoined, fullSecs) = bestOf3 {
-      operators.PipJoin.exprJoin(spark.read.parquet(imgDir), polys)
+      operators.PipJoin.auto(spark.read.parquet(imgDir), polys)
         .select("image_id", "feature_id").count()
     }
 

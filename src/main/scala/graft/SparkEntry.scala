@@ -56,10 +56,8 @@ object SparkEntry {
 
   /** Flagship: synthetic geotagged images PIP-joined to the FZK footprint. */
   def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val pts = ImageGen.points(spark, 2000, 8).toDF("image_id", "x", "y")
-    val polys = spark.createDataset(fzkFootprints.filter(_.feature_type == "Building"))
-    PipJoin.broadcastJoin(pts, polys)
+    PipJoin.auto(pts, fzkFootprints.filter(_.feature_type == "Building"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -137,7 +135,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("cnt"))
     }),
     "q11_pip_join" -> ((s, dir) => {
-      import s.implicits._
       val pts = withXY(t(s, dir, "events"), "event_id")
         .select(col("event_id"), col("x"), col("y"))
       val rect = Footprint("rect_fzk", "Query", 0,
@@ -147,7 +144,7 @@ object SparkEntry {
         Seq(XY(457845.335, 5439084.125), XY(457852.785, 5439086.295), XY(457848.115, 5439092.635)),
         Seq.empty, Env6(457845.335, 5439084.125, 0, 457852.785, 5439092.635, 0),
         XY(457848.745, 5439087.685), Map.empty)
-      PipJoin.broadcastJoin(pts, s.createDataset(Seq(rect, tri)), res = 12)
+      PipJoin.auto(pts, Seq(rect, tri), res = 12)
         .select(col("event_id"), col("feature_id"))
     }),
     "q12_knn" -> ((s, dir) => {
@@ -1483,11 +1480,9 @@ object SparkEntry {
         .toDF("partition", "rows", "checksum", "lineage_ok", "resumed_skip")
     }),
     "g2_pip_images" -> ((s, dir) => {
-      import s.implicits._
       val pts = ImageGen.points(s, 5000, 8).toDF("image_id", "x", "y")
-      val polys = s.createDataset(
-        (fzkFootprints ++ cjFootprints).filter(_.feature_type == "Building"))
-      PipJoin.broadcastJoin(pts, polys).select("image_id", "feature_id", "x", "y")
+      val polys = (fzkFootprints ++ cjFootprints).filter(_.feature_type == "Building")
+      PipJoin.auto(pts, polys).select("image_id", "feature_id", "x", "y")
     }),
     "g5_image_neardup" -> ((s, dir) => {
       // perceptual near-dup over the binary image payload: planted png/jpeg

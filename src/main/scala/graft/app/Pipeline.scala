@@ -33,14 +33,9 @@ object Pipeline {
     * `keepCols` carries extra upstream columns (e.g. the curation `split`)
     * through the enrichment untouched.
     *
-    * PIP physical path: [[PipJoin.auto]] picks by total polygon vertex
-    * count — the broadcast-index codegen `exprJoin` for the north-star shape
-    * (up to city scale vs 10^12 points), the broadcast cell-join when the
-    * index is too big but the cells broadcast-fit, the salted SMJ beyond
-    * that — so the entry point is safe by default when someone feeds it a
-    * continent's worth of footprints. Thresholds (total vertices):
-    * `spark.graft.pipeline.pipExprVertexLimit` (default 1M) /
-    * `spark.graft.pipeline.pipBroadcastVertexLimit` (default 5M). */
+    * PIP: [[PipJoin.auto]], the one physical path — the polygon index
+    * ships once per executor and `pip_matches` runs inside the scan's codegen
+    * span, with no join and no shuffle, at every polygon-side size. */
   def enrich(images: DataFrame, polys: Seq[Footprint],
              zoom: Int = 20, k: Int = 1, nBuckets: Int = 16,
              keepCols: Seq[String] = Nil): DataFrame = {
@@ -48,12 +43,7 @@ object Pipeline {
     val nn = graft.operators.PlanIndex.broadcast(images,
       new graft.operators.KnnIndex(centroids, k))
     val enriched = PipJoin.auto(
-        images.select((Seq("image_id", "x", "y") ++ keepCols).map(col): _*), polys,
-        exprLimit = graft.core.Confs.intConf(images.sparkSession,
-          "spark.graft.pipeline.pipExprVertexLimit", PipJoin.DefaultExprVertexLimit, min = 0),
-        broadcastLimit = graft.core.Confs.intConf(images.sparkSession,
-          "spark.graft.pipeline.pipBroadcastVertexLimit", PipJoin.DefaultBroadcastVertexLimit,
-          min = 0))
+        images.select((Seq("image_id", "x", "y") ++ keepCols).map(col): _*), polys)
       .withColumn("cell", graft.functions.GeoFunctions.hex_encode(
         col("x"), col("y"), lit(PipJoin.DefaultRes)))
       .withColumn("tile_id", graft.functions.GeoFunctions.tile_of(

@@ -8,7 +8,7 @@ import graft.core.{CellBuckets, HexGrid}
 import graft.model.Footprint
 
 /**
- * Cell-bucketed polygon index for the codegen PIP path ([[PipJoin.exprJoin]]).
+ * Cell-bucketed polygon index behind the PIP join ([[PipJoin.auto]]).
  * Ships to each executor once, as a Spark broadcast ([[PlanIndex]]): the
  * `pip_matches` expression holds only the handle, every task on an executor
  * probes the one shared instance, and its lazy builds run once there (in
@@ -32,6 +32,8 @@ import graft.model.Footprint
  * polygon: zero allocation on the miss path.
  */
 final class PipIndex(polys: Seq[Footprint], res: Int) extends Serializable {
+  // the cell table is lazy: check here so a bad res fails on the driver, not in a task
+  require(res >= 0 && res <= HexGrid.MaxRes, s"PIP res must be in [0, ${HexGrid.MaxRes}], got $res")
 
   private val fids: Array[String] = polys.map(_.feature_id).toArray
   private val polyOff: Array[Int] = polys.map(1 + _.holes.size).scanLeft(0)(_ + _).toArray

@@ -17,7 +17,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
  *
  * Geotags are skewed around the FZK-Haus footprint (fzk_haus_lod2_v2.gml:6-7):
  * 60% inside the footprint, 30% in a 10–40 m ring, 10% far field — this is the
- * dense-cell skew workload the salted join path must handle.
+ * dense-cell skew workload the PIP join (one hot cell-table bucket) must handle.
  *
  * Pixel content: smooth two-axis gradient + low-amplitude deterministic noise,
  * chosen so JPEG (quality 0.95) round-trips at PSNR ≥ 40 dB per the input_hint

@@ -126,7 +126,7 @@ object EventStream {
       .add("image_id", StringType).add("x", DoubleType).add("y", DoubleType)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 2).parquet(pointsDir)
-    graft.operators.PipJoin.exprJoin(stream, polys)
+    graft.operators.PipJoin.auto(stream, polys)
   }
 
   /**

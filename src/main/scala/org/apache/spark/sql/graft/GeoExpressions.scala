@@ -237,9 +237,8 @@ private[graft] object BroadcastIndex {
  * Fully-codegen PIP match: the polygon index ships once per executor as a
  * broadcast ([[BroadcastIndex]]), the generated code calls
  * `index.matches(x, y)` directly — no join operator, no shuffle, zero
- * allocation on the miss path. This is the engine's fast path up to
- * [[graft.operators.PipJoin.DefaultExprVertexLimit]] polygon vertices; the
- * declarative cell-join paths cover the rest.
+ * allocation on the miss path. This is the engine's one PIP join path
+ * ([[graft.operators.PipJoin.auto]]) at every polygon-side size.
  */
 case class PipMatchesExpr(left: Expression, right: Expression,
                           bc: Broadcast[graft.operators.PipIndex])

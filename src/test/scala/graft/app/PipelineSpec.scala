@@ -38,29 +38,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("enrich scale-path switch: broadcast and salted branches == expr branch") {
-    // force each PipJoin.auto branch via the vertex-limit confs and assert
-    // identical output rows — the entry point must be safe by default when
-    // the polygon side outgrows the plan-reference path
-    val images = spark.read.parquet(imagesDir)
-    def rows(): Set[(String, String, String, Long)] =
-      Pipeline.enrich(images, polys).collect()
-        .map(r => (r.getString(0), r.getString(5), r.getString(6), r.getLong(4))).toSet
-    val expr = rows() // defaults: polys is tiny → expr branch
-    try {
-      spark.conf.set("spark.graft.pipeline.pipExprVertexLimit", "0")
-      val bcast = rows() // expr disabled → broadcast cell-join branch
-      assert(bcast === expr, "broadcast branch must match the expr branch")
-      spark.conf.set("spark.graft.pipeline.pipBroadcastVertexLimit", "0")
-      val salted = rows() // both disabled → salted SMJ branch
-      assert(salted === expr, "salted branch must match the expr branch")
-      assert(expr.nonEmpty)
-    } finally {
-      spark.conf.unset("spark.graft.pipeline.pipExprVertexLimit")
-      spark.conf.unset("spark.graft.pipeline.pipBroadcastVertexLimit")
-    }
-  }
-
   // planted caption duplicates: groups of 3 consecutive ids share an
   // IDENTICAL group caption (banding collision probability 1 — the
   // probabilistic near-dup recall of non-identical pairs is the operators'

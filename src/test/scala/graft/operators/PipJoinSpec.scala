@@ -32,10 +32,9 @@ class PipJoinSpec extends AnyFunSuite {
   def runAndCollect(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
     df.select("image_id", "feature_id").as[(String, String)].collect().toSet
 
-  test("broadcast PIP join matches brute-force oracle (FZK fixture)") {
+  test("PIP join matches brute-force oracle (FZK fixture)") {
     val pts = fzkPoints.toDF("image_id", "x", "y")
-    val polys = spark.createDataset(fzkFps)
-    val got = runAndCollect(PipJoin.broadcastJoin(pts, polys))
+    val got = runAndCollect(PipJoin.auto(pts, fzkFps))
     val want = PipJoin.bruteForce(fzkPoints, fzkFps)
     assert(want.nonEmpty, "oracle should match some points")
     assert(got === want)
@@ -43,58 +42,23 @@ class PipJoinSpec extends AnyFunSuite {
     assert(got.size > 1500)
   }
 
-  test("broadcast PIP join matches brute-force oracle (100-building CityJSON grid)") {
+  test("PIP join matches brute-force oracle (100-building CityJSON grid)") {
     val pts = cjPoints.toDF("image_id", "x", "y")
-    val polys = spark.createDataset(cjFps)
-    val got = runAndCollect(PipJoin.broadcastJoin(pts, polys))
+    val got = runAndCollect(PipJoin.auto(pts, cjFps))
     val want = PipJoin.bruteForce(cjPoints, cjFps)
     assert(want.nonEmpty)
     assert(got === want)
   }
 
-  test("salted shuffle join ≡ broadcast join (row-set preservation under salting)") {
-    val pts = cjPoints.toDF("image_id", "x", "y")
-    val polys = spark.createDataset(cjFps)
-    val b = runAndCollect(PipJoin.broadcastJoin(pts, polys))
-    val s = runAndCollect(PipJoin.saltedJoin(pts, polys, salts = 8))
-    assert(s === b)
-  }
-
   test("codegen expr path (pip_matches) ≡ brute force on both fixtures") {
     val all = fzkFps ++ cjFps
     val pts = (fzkPoints ++ cjPoints).toDF("image_id", "x", "y")
-    val got = runAndCollect(PipJoin.exprJoin(pts, all))
+    val got = runAndCollect(PipJoin.auto(pts, all))
     val want = PipJoin.bruteForce(fzkPoints ++ cjPoints, all)
     assert(got === want)
     // and the generated code actually inlines the index (no join in the plan)
-    val plan = PipJoin.exprJoin(pts, all).queryExecution.executedPlan.toString
+    val plan = PipJoin.auto(pts, all).queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"expr path must be join-free:\n$plan")
-  }
-
-  test("auto path selection: every branch produces the same row set") {
-    val pts = cjPoints.toDF("image_id", "x", "y")
-    val want = PipJoin.bruteForce(cjPoints, cjFps)
-    // default thresholds → expr path (cjFps has ~500 vertices)
-    assert(runAndCollect(PipJoin.auto(pts, cjFps)) === want)
-    // force the broadcast cell-join branch
-    assert(runAndCollect(PipJoin.auto(pts, cjFps, exprLimit = 0)) === want)
-    // force the salted shuffle branch
-    assert(runAndCollect(PipJoin.auto(pts, cjFps, exprLimit = 0, broadcastLimit = 0)) === want)
-  }
-
-  test("physical plan: broadcast path uses BroadcastHashJoin and keeps codegen on the big side") {
-    val dir = "target/tmp/pip_pts"
-    fzkPoints.toDF("image_id", "x", "y").write.mode("overwrite").parquet(dir)
-    val pts = spark.read.parquet(dir)
-    val polys = spark.createDataset(fzkFps)
-    val q = PipJoin.broadcastJoin(pts, polys)
-    q.collect() // execute so AQE finalizes THIS query's plan
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
-    // whole-stage-codegen spans render as "*(n)" prefixes in the final plan
-    assert(plan.contains("*(2) Project [image_id") || plan.contains("WholeStageCodegen"),
-      s"expected the big-side encode inside a codegen span:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), "big side must not shuffle on broadcast path")
   }
 
   test("SQL surface: hex_encode/st_covers registered and usable from spark.sql") {
@@ -116,8 +80,7 @@ class PipJoinSpec extends AnyFunSuite {
 
   test("payload invariant survives the join: caption byte-equal, phash stable, PSNR>=40") {
     val imgs = ImageGen.table(spark, 200, partitions = 4)
-    val polys = spark.createDataset(fzkFps)
-    val joined = PipJoin.broadcastJoin(imgs.toDF(), polys)
+    val joined = PipJoin.auto(imgs.toDF(), fzkFps)
     val src = imgs.collect().map(r => r.image_id -> r).toMap
     val rows = joined.as[ImageRow].collect()
     assert(rows.nonEmpty)

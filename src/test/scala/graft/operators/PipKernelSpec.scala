@@ -5,14 +5,15 @@ import org.apache.spark.sql.DataFrame
 
 import graft.TestSpark
 import graft.core.Geom.{Polygon, Pt}
+import graft.core.HexGrid
 import graft.model._
 
 /**
  * Hermetic PIP kernel spec: synthetic footprints with every ring shape the
  * flat [[PipIndex]] has to reassemble (concave, hole, shared edge, open and
  * closed rings, an empty ring, a duplicated feature id), probed on vertices,
- * edges, the hole boundary, the shared edge and in the far field. Every
- * physical path must equal the brute-force oracle, and `matches` must list
+ * edges, the hole boundary, the shared edge and in the far field. The join
+ * must equal the brute-force oracle, and `matches` must list
  * the covering polygons in ordinal order with duplicate ids kept.
  */
 class PipKernelSpec extends AnyFunSuite {
@@ -25,7 +26,7 @@ class PipKernelSpec extends AnyFunSuite {
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
-  test("exprJoin, broadcastJoin and auto on both sides of exprLimit == brute force") {
+  test("auto (pip_matches) and Pipeline.enrich == brute force multiset") {
     val pts = probes.toDF("image_id", "x", "y")
     val want = PipJoin.bruteForce(probes, fps)
     // every probe kind meets the kernel: vertices, edges, hole and shared edge
@@ -35,14 +36,21 @@ class PipKernelSpec extends AnyFunSuite {
     assert(multiset.toSet === want)
     assert(multiset.size > want.size, "the duplicated feature id must yield duplicate rows")
 
-    assert(rows(PipJoin.exprJoin(pts, fps)) === multiset)
-    assert(rows(PipJoin.broadcastJoin(pts, spark.createDataset(fps))) === multiset)
-    val expr = PipJoin.auto(pts, fps, exprLimit = vertices)
-    assert(plan(expr).contains("pip_matches"), plan(expr))
-    assert(rows(expr) === multiset)
-    val bcast = PipJoin.auto(pts, fps, exprLimit = vertices - 1)
-    assert(!plan(bcast).contains("pip_matches"), plan(bcast))
-    assert(rows(bcast) === multiset)
+    val join = PipJoin.auto(pts, fps)
+    assert(plan(join).contains("pip_matches"), plan(join))
+    assert(rows(join) === multiset)
+    val enriched = graft.app.Pipeline.enrich(pts, fps)
+    assert(plan(enriched).contains("pip_matches"), plan(enriched))
+    assert(rows(enriched) === multiset)
+  }
+
+  test("an out-of-range res fails on the driver, before any action") {
+    val pts = probes.toDF("image_id", "x", "y")
+    Seq(HexGrid.MaxRes + 1, -1).foreach { res =>
+      val e = intercept[IllegalArgumentException](PipJoin.auto(pts, fps, res = res))
+      assert(e.getMessage.contains(s"got $res"), e.getMessage)
+    }
+    PipJoin.auto(pts, fps, res = HexGrid.MaxRes) // the top resolution still builds
   }
 
   test("PipIndex.matches lists covering polygons in ordinal order, duplicates kept") {
@@ -56,33 +64,24 @@ class PipKernelSpec extends AnyFunSuite {
     assert(coveringIds(0.0, 0.0) === Seq("star", "dup", "dup"))
   }
 
-  test("default exprLimit keeps a 112k-vertex city on pip_matches; one below routes to BHJ") {
-    val city = PipKernelSpec.city(7000)
+  test("a 1,000,016-vertex city stays on pip_matches with no join, == brute force") {
+    val city = PipKernelSpec.city(62501)
     val v = city.iterator.map(f => f.ring.size + f.holes.map(_.size).sum).sum
-    assert(v === 112000) // above 100k, the default before 1M
-    val pts = Seq(("p", 5.0, 5.0)).toDF("image_id", "x", "y")
-    assert(plan(PipJoin.auto(pts, city)).contains("pip_matches"))
-    val below = plan(PipJoin.auto(pts, city, exprLimit = v - 1))
-    assert(below.contains("BroadcastHashJoin") && !below.contains("pip_matches"), below)
-  }
-
-  test("spark.graft.pipeline.pipExprVertexLimit still overrides the default in Pipeline.enrich") {
-    val images = probes.toDF("image_id", "x", "y")
-    val key = "spark.graft.pipeline.pipExprVertexLimit"
-    def enrich(): DataFrame = graft.app.Pipeline.enrich(images, fps)
-    def pipRows(df: DataFrame): Seq[(String, String)] = rows(df.select("image_id", "feature_id"))
-    val default = enrich()
-    assert(plan(default).contains("pip_matches"), plan(default))
-    try {
-      spark.conf.set(key, (vertices - 1).toString)
-      val below = enrich()
-      assert(plan(below).contains("BroadcastHashJoin") && !plan(below).contains("pip_matches"),
-        plan(below))
-      assert(pipRows(below) === pipRows(default))
-      spark.conf.set(key, vertices.toString)
-      assert(plan(enrich()).contains("pip_matches"))
-    } finally spark.conf.unset(key)
-    assert(pipRows(default) === ordinalOracle.sorted)
+    assert(v === 1000016) // past the 1M vertices where the old router left the kernel
+    // star centres, tips and notches, gaps between stars, the lone last star
+    val probes = Seq(0, 1, 99, 100, 31250, 31299, 62499, 62500).flatMap { i =>
+      val (cx, cy) = ((i % 100) * 40.0, (i / 100) * 40.0)
+      Seq(("c", 0.0, 0.0), ("tip", 15.0, 0.0), ("notch", 9.0 * math.cos(math.Pi / 8),
+        9.0 * math.sin(math.Pi / 8)), ("in", 0.0, 14.0), ("gap", 20.0, 20.0))
+        .map { case (k, dx, dy) => (s"${k}_$i", cx + dx, cy + dy) }
+    }
+    val df = PipJoin.auto(probes.toDF("image_id", "x", "y"), city)
+    val got = rows(df)
+    val executed = plan(df)
+    assert(executed.contains("pip_matches") && !executed.contains("Join"), executed)
+    val want = PipJoin.bruteForce(probes, city)
+    assert(want.size > probes.size / 2 && want.size < probes.size)
+    assert(got === want.toSeq.sorted)
   }
 }
 

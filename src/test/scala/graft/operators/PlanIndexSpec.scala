@@ -57,7 +57,7 @@ class PlanIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("pip_matches, knn_matches, setback_nearest and tile_matches carry < 2 KB at 7000 features") {
     val pts = points(4)
-    val pip = executed(PipJoin.exprJoin(pts, city)) { case e: PipMatchesExpr => e }
+    val pip = executed(PipJoin.auto(pts, city)) { case e: PipMatchesExpr => e }
     val knn = executed(KnnJoin.broadcastGrid(pts,
       city.map(f => (f.feature_id, f.centroid.x, f.centroid.y)), k = 3)) {
       case e: KnnMatchesExpr => e
@@ -79,7 +79,7 @@ class PlanIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("all 16 tasks of a 16-partition scan share the driver's index instance (local mode)") {
     val pts = points(16)
-    val pip = PipJoin.exprJoin(pts, city)
+    val pip = PipJoin.auto(pts, city)
     val tile = tiles(pts)
     Seq(pip -> executed(pip) { case e: PipMatchesExpr => e.bc },
       tile -> executed(tile) { case e: TileMatchesExpr => e.bc }).foreach { case (df, bcs) =>

@@ -86,7 +86,7 @@ class PlanQualitySpec extends AnyFunSuite {
     (0 until 1000).map(i => (s"p$i", 457842.0 + i % 12, 5439083.0 + i % 10))
       .toDF("image_id", "x", "y").write.mode("overwrite").parquet(dir)
     val pts = spark.read.parquet(dir)
-    val q = PipJoin.exprJoin(pts, benchPolys)
+    val q = PipJoin.auto(pts, benchPolys)
     q.collect()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"expr path must be join-free:\n$plan")
@@ -101,7 +101,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // read it — at 100 TB the payload IS the table, the join keys are ~1%
     val dir = "target/tmp/plan_full_imgs"
     graft.sources.ImageGen.table(spark, 500, 4).write.mode("overwrite").parquet(dir)
-    val q = PipJoin.exprJoin(spark.read.parquet(dir), benchPolys)
+    val q = PipJoin.auto(spark.read.parquet(dir), benchPolys)
       .select("image_id", "feature_id")
     q.collect()
     val scan = q.queryExecution.executedPlan.toString
