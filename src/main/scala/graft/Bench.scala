@@ -18,10 +18,10 @@ object Bench {
   /** FZK building + the 100 CityJSON buildings shifted into the FZK frame. */
   def benchPolygons: Seq[model.Footprint] = {
     val fzk = sources.CityGmlReader.toFootprints(
-      sources.CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"), 0)
+      sources.CityGmlReader.parseFile(Fixtures.fzkV2), 0)
       .filter(_.feature_type == "Building")
     val cj = sources.CityJsonReader.toFootprints(
-      sources.CityJsonReader.parseFile("/root/reference/input/cityjson/lod2_buildings_v2.json"), 1)
+      sources.CityJsonReader.parseFile(Fixtures.cityJson), 1)
       .filter(_.feature_type == "Building")
       .map { f =>
         def sx(p: model.XY) = model.XY(p.x + 457790.0, p.y + 5439030.0)

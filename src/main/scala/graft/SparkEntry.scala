@@ -49,10 +49,10 @@ object SparkEntry {
   // fixture-derived footprints (engine-only queries)
   private lazy val fzkFootprints: Seq[Footprint] =
     CityGmlReader.toFootprints(
-      CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"), 0)
+      CityGmlReader.parseFile(Fixtures.fzkV2), 0)
   private lazy val cjFootprints: Seq[Footprint] =
     CityJsonReader.toFootprints(
-      CityJsonReader.parseFile("/root/reference/input/cityjson/lod2_buildings_v2.json"), 1)
+      CityJsonReader.parseFile(Fixtures.cityJson), 1)
 
   /** Flagship: synthetic geotagged images PIP-joined to the FZK footprint. */
   def entry(spark: SparkSession): DataFrame = {

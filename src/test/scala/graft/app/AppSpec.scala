@@ -42,7 +42,7 @@ class AppSpec extends AnyFunSuite {
   test("directory scan merges multiple files into one partition (S4/W3)") {
     val dir = java.nio.file.Files.createTempDirectory("gmldir")
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"),
+      java.nio.file.Paths.get(graft.Fixtures.fzkV2),
       dir.resolve("a_fzk.gml"))
     java.nio.file.Files.write(dir.resolve("b_v3.gml"), v3Doc.getBytes("UTF-8"))
     val doc = CityGmlReader.parseDirectory(dir.toString)
@@ -77,8 +77,8 @@ class AppSpec extends AnyFunSuite {
     val cfgFile = java.nio.file.Files.createTempFile("run", ".properties")
     java.nio.file.Files.write(cfgFile,
       s"""usecase=map_export
-         |input.citygml=/root/reference/input/citygml/fzk_haus_lod2_v2.gml
-         |input.cityjson=/root/reference/input/cityjson/lod2_buildings_v2.json
+         |input.citygml=${graft.Fixtures.fzkV2}
+         |input.cityjson=${graft.Fixtures.cityJson}
          |output.dir=$out
          |bbox=
          |mapper.exclude.attrs=ConstructionMethod

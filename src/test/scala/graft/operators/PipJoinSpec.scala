@@ -13,10 +13,10 @@ class PipJoinSpec extends AnyFunSuite {
 
   // FZK (partition 0) + 100 CityJSON buildings (partition 1) building footprints
   lazy val fzkFps = CityGmlReader.toFootprints(
-    CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"), 0)
+    CityGmlReader.parseFile(graft.Fixtures.fzkV2), 0)
     .filter(_.feature_type == "Building")
   lazy val cjFps = CityJsonReader.toFootprints(
-    CityJsonReader.parseFile("/root/reference/input/cityjson/lod2_buildings_v2.json"), 1)
+    CityJsonReader.parseFile(graft.Fixtures.cityJson), 1)
     .filter(_.feature_type == "Building")
 
   // probe points around FZK (seeded geotags, incl. 60% in-footprint skew)

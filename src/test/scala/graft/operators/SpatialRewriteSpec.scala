@@ -11,7 +11,7 @@ class SpatialRewriteSpec extends AnyFunSuite {
   import spark.implicits._
 
   lazy val fps = CityGmlReader.toFootprints(
-    CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"), 0)
+    CityGmlReader.parseFile(graft.Fixtures.fzkV2), 0)
     .filter(_.feature_type == "Building")
   lazy val points: Seq[(String, Double, Double)] =
     (0L until 2000L).map { i => val (x, y) = ImageGen.geotag(i); (f"img_$i%010d", x, y) }

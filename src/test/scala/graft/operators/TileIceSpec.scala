@@ -10,7 +10,7 @@ class TileIceSpec extends AnyFunSuite {
   import spark.implicits._
 
   lazy val cjFps = CityJsonReader.toFootprints(
-    CityJsonReader.parseFile("/root/reference/input/cityjson/lod2_buildings_v2.json"), 1)
+    CityJsonReader.parseFile(graft.Fixtures.cityJson), 1)
     .filter(_.feature_type == "Building")
 
   test("featureTiles == brute-force tile cover at zooms 18-21") {

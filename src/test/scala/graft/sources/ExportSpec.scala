@@ -7,9 +7,9 @@ class ExportSpec extends AnyFunSuite {
   import ExportSpec.GroundGml
 
   lazy val fzk = CityGmlReader.toFootprints(
-    CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"), 0)
+    CityGmlReader.parseFile(graft.Fixtures.fzkV2), 0)
   lazy val cj = CityJsonReader.toFootprints(
-    CityJsonReader.parseFile("/root/reference/input/cityjson/lod2_buildings_v2.json"), 1)
+    CityJsonReader.parseFile(graft.Fixtures.cityJson), 1)
 
   test("CityGML round trip: export -> re-ingest preserves ring/env2d/attrs") {
     val out = java.nio.file.Files.createTempDirectory("gml").resolve("fzk.gml").toString
@@ -42,7 +42,7 @@ class ExportSpec extends AnyFunSuite {
   }
 
   test("full-surface CityGML round trip: ALL polygons (walls/roofs) survive exactly") {
-    val doc = CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml")
+    val doc = CityGmlReader.parseFile(graft.Fixtures.fzkV2)
     val surfaces = CityGmlReader.toSurfaces(doc, 0)
     assert(surfaces.size >= 7, s"FZK LoD2 must have >= 7 boundary polygons, got ${surfaces.size}")
     assert(surfaces.map(_.surface_type).toSet ===
@@ -66,7 +66,7 @@ class ExportSpec extends AnyFunSuite {
   test("distributed CityGML export: one file per partition, written in tasks, round-trips") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    val doc = CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml")
+    val doc = CityGmlReader.parseFile(graft.Fixtures.fzkV2)
     val surfaces = CityGmlReader.toSurfaces(doc, 0)
     // two partitions: the FZK building as partition 0 AND (ids suffixed)
     // as partition 7 — forces two cogroups, two task-side files
@@ -140,7 +140,7 @@ class ExportSpec extends AnyFunSuite {
   }
 
   test("full-surface CityJSON round trip: every polygon + semantic type survives") {
-    val doc = CityJsonReader.parseFile("/root/reference/input/cityjson/lod2_buildings_v2.json")
+    val doc = CityJsonReader.parseFile(graft.Fixtures.cityJson)
     val surfaces = CityJsonReader.toSurfaces(doc, 1)
     assert(surfaces.size > 500, s"100 solids should yield >500 faces, got ${surfaces.size}")
     val out = java.nio.file.Files.createTempDirectory("cjfull").resolve("full.json").toString
@@ -169,7 +169,7 @@ class ExportSpec extends AnyFunSuite {
   test("distributed CityJSON export: per-partition files byte-equal to the driver path, round-trips") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    val doc = CityJsonReader.parseFile("/root/reference/input/cityjson/lod2_buildings_v2.json")
+    val doc = CityJsonReader.parseFile(graft.Fixtures.cityJson)
     val surfaces = CityJsonReader.toSurfaces(doc, 1)
     // two partitions (1 = the fixture, 9 = ids suffixed) forces two cogroups
     def retag(fp: Footprint, pid: Int, sfx: String) =

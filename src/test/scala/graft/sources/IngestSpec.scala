@@ -5,9 +5,9 @@ import graft.model._
 
 class IngestSpec extends AnyFunSuite {
 
-  val gmlV2 = "/root/reference/input/citygml/fzk_haus_lod2_v2.gml"
-  val gmlV1 = "/root/reference/input/citygml/fzk_haus_lod2_v1.gml"
-  val cjson = "/root/reference/input/cityjson/lod2_buildings_v2.json"
+  def gmlV2 = graft.Fixtures.fzkV2
+  def gmlV1 = graft.Fixtures.fzkV1
+  def cjson = graft.Fixtures.cityJson
 
   // FIXTURES.md §2 goldens (transcribed from fzk_haus_lod2_v2.gml)
   val FzkId = "UUID_d281adfc-4901-0f52-540b-4cc1a9325f82"

@@ -103,7 +103,7 @@ class StreamSpec extends AnyFunSuite {
 
   test("streaming PIP enrichment == batch join (stateless codegen expression in a stream)") {
     val fps = graft.sources.CityGmlReader.toFootprints(
-      graft.sources.CityGmlReader.parseFile("/root/reference/input/citygml/fzk_haus_lod2_v2.gml"), 0)
+      graft.sources.CityGmlReader.parseFile(graft.Fixtures.fzkV2), 0)
       .filter(_.feature_type == "Building")
     val pts = (0L until 3000L).map { i =>
       val (x, y) = graft.sources.ImageGen.geotag(i); (f"img_$i%010d", x, y)
