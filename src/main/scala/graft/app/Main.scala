@@ -3,7 +3,7 @@ package graft.app
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.model._
 import graft.operators.{Census, XLinkResolve}
@@ -73,40 +73,38 @@ object Main {
   }
 
   /** Distributed ingest: files parse inside Spark tasks (the driver only
-    * lists paths); P1/P2 attribute exclusion applied as a narrow map. */
-  def ingest(spark: SparkSession, cfg: RunConfig)
-      : (org.apache.spark.sql.Dataset[Footprint],
-         org.apache.spark.sql.Dataset[HrefRef],
-         org.apache.spark.sql.Dataset[IdRec],
-         org.apache.spark.sql.Dataset[SurfacePoly]) = {
-    import spark.implicits._
-    val (fps0, hrefs, ids, surfaces) = DistributedIngest.ingest(spark, ingestTasks(cfg))
-    val excl = cfg.excludeAttrs
-    val fps = if (excl.isEmpty) fps0 else fps0.map(f => f.copy(attrs = f.attrs -- excl))
-    (fps, hrefs, ids, surfaces)
-  }
-
+    * lists paths); P1/P2 attribute exclusion applied as a narrow map. The
+    * four outputs below all read the parse, so it is persisted once at the
+    * RDD level and released when the map ends: each file parses once and
+    * nothing outlives the run. */
   def runMap(spark: SparkSession, cfg: RunConfig): Unit = {
-    val (fpDs, hrefDs, idDs, surfDs) = ingest(spark, cfg)
-    val out = cfg.outputDir
-    Files.createDirectories(Paths.get(out))
-    // resumable footprint + full-surface tables with per-partition lineage
-    IceLite.writeResumable(fpDs.toDF(), s"$out/footprints", "partition_id")
-    if (surfDs.head(1).nonEmpty)
-      IceLite.writeResumable(surfDs.toDF(), s"$out/surfaces", "partition_id")
-    // J1 XLink resolution + audit
-    if (hrefDs.head(1).nonEmpty) {
-      val resolved = XLinkResolve.resolve(hrefDs.toDF(), idDs.toDF())
-      resolved.write.mode("overwrite").parquet(s"$out/xlinks")
-      XLinkResolve.audit(resolved).write.mode("overwrite").parquet(s"$out/xlink_audit")
-    }
-    // A2 census + S9 diagnostics (PNG render is a bounded driver-side
-    // diagnostic over building rows only)
-    Census.byType(fpDs).write.mode("overwrite").parquet(s"$out/census")
-    fpDs.filter(_.feature_type == "Building").collect()
-      .groupBy(_.partition_id).foreach { case (pid, pfps) =>
-        PngSink.render(pfps.toSeq, s"$out/footprints_p$pid.png")
+    import spark.implicits._
+    val files = DistributedIngest.parse(spark, ingestTasks(cfg))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (fps0, hrefDs, idDs, surfDs) = DistributedIngest.project(spark, files)
+      val excl = cfg.excludeAttrs
+      val fpDs = if (excl.isEmpty) fps0 else fps0.map(f => f.copy(attrs = f.attrs -- excl))
+      val out = cfg.outputDir
+      Files.createDirectories(Paths.get(out))
+      // resumable footprint + full-surface tables with per-partition lineage
+      IceLite.writeResumable(fpDs.toDF(), s"$out/footprints", "partition_id")
+      if (surfDs.head(1).nonEmpty)
+        IceLite.writeResumable(surfDs.toDF(), s"$out/surfaces", "partition_id")
+      // J1 XLink resolution + audit
+      if (hrefDs.head(1).nonEmpty) {
+        val resolved = XLinkResolve.resolve(hrefDs.toDF(), idDs.toDF())
+        resolved.write.mode("overwrite").parquet(s"$out/xlinks")
+        XLinkResolve.audit(resolved).write.mode("overwrite").parquet(s"$out/xlink_audit")
       }
+      // A2 census + S9 diagnostics (PNG render is a bounded driver-side
+      // diagnostic over building rows only)
+      Census.byType(fpDs).write.mode("overwrite").parquet(s"$out/census")
+      fpDs.filter(_.feature_type == "Building").collect()
+        .groupBy(_.partition_id).foreach { case (pid, pfps) =>
+          PngSink.render(pfps.toSeq, s"$out/footprints_p$pid.png")
+        }
+    } finally files.unpersist(blocking = false)
   }
 
   def runExport(spark: SparkSession, cfg: RunConfig): Unit = {

@@ -22,8 +22,11 @@ import graft.sources.IceLite
  *    which ships once per executor as a Spark broadcast
  *    ([[graft.operators.PlanIndex]]; the plan holds only the handle):
  *    map-only, no join operator, no shuffle on the 10^12-row side;
- *  - the only shuffle is the final write's partitionBy on the deterministic
- *    bucket key — which is also the resume/commit unit;
+ *  - the enrich plan itself is map-only; the final write's partitionBy on
+ *    the deterministic bucket key (also the resume/commit unit) sorts
+ *    within each task and plans no exchange. Without curation, the exchanges
+ *    of a commit are IceLite's: partition discovery's `distinct` and the
+ *    lineage and audit aggregations;
  *  - a re-run after a crash recomputes ONLY the uncommitted buckets
  *    (content-derived data ⇒ byte-stable output, TileIceSpec semantics).
  */
@@ -31,17 +34,19 @@ object Pipeline {
 
   /** Enriched-row plan: cell key, PIP feature, nearest centroid, tile.
     * `keepCols` carries extra upstream columns (e.g. the curation `split`)
-    * through the enrichment untouched.
+    * through the enrichment untouched. kNN is the one nearest centroid: a
+    * `KnnIndex` with k = 1 yields one rank-1 match per row (ties break on
+    * target id), so no rank filter follows it.
     *
     * PIP: [[PipJoin.auto]], the one physical path — the polygon index
     * ships once per executor and `pip_matches` runs inside the scan's codegen
     * span, with no join and no shuffle, at every polygon-side size. */
   def enrich(images: DataFrame, polys: Seq[Footprint],
-             zoom: Int = 20, k: Int = 1, nBuckets: Int = 16,
+             zoom: Int = 20, nBuckets: Int = 16,
              keepCols: Seq[String] = Nil): DataFrame = {
     val centroids = polys.map(f => (f.feature_id, f.centroid.x, f.centroid.y))
     val nn = graft.operators.PlanIndex.broadcast(images,
-      new graft.operators.KnnIndex(centroids, k))
+      new graft.operators.KnnIndex(centroids, 1))
     val enriched = PipJoin.auto(
         images.select((Seq("image_id", "x", "y") ++ keepCols).map(col): _*), polys)
       .withColumn("cell", graft.functions.GeoFunctions.hex_encode(
@@ -50,7 +55,6 @@ object Pipeline {
         col("x"), col("y"), lit(zoom)))
       .withColumn("nn", explode(org.apache.spark.sql.graft.GeoFunctionsImpl.knn_matches(
         col("x"), col("y"), nn)))
-      .where(col("nn.rnk") === 1)
       .select(col("image_id") +: col("x") +: col("y") +: col("cell") +: col("tile_id") +:
         col("feature_id") +: col("nn.target_id").as("nn_id") +: col("nn.d2").as("nn_d2") +:
         keepCols.map(col): _*)

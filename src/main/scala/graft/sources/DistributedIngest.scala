@@ -4,23 +4,27 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.model._
 
 /**
  * Distributed ingest: CityGML/CityJSON files parse INSIDE Spark tasks, one
- * file per row of a task Dataset — the Spark restatement of the reference's
+ * file per element of a task RDD — the Spark restatement of the reference's
  * per-file thread fan-out (`CityKGDB.java:169-177`) plus its chunked
  * in-file parse (`CityGMLV2DB.java:57-110`, which [[CityGmlReader.parse]]
  * keeps via StAX). The driver only LISTS paths; file contents are never
  * read driver-side, so a directory of 10k tiles parses with full cluster
  * parallelism.
  *
- * One parse pass per file (persisted), then three narrow flatMaps project
- * footprints / hrefs / ids — no re-parse per projection, no shuffle at all
- * until a downstream operator asks for one.
+ * One narrow stage: the tasks are `parallelize`d in their given order (no
+ * exchange), each projection is a `flatMap` over the parsed files, and only
+ * the projected case class goes through an encoder. The library persists
+ * nothing. Each projection's action parses its files again, so a caller
+ * that reads several projections owns the cache: persist [[parse]]'s RDD,
+ * build the projections with [[project]], and unpersist it when done (as
+ * `graft.app.Main.runMap` does).
  */
 object DistributedIngest {
 
@@ -67,20 +71,26 @@ object DistributedIngest {
     case other => sys.error(s"unknown ingest format: $other")
   }
 
-  /**
-   * Parse every task distributed; returns (footprints, hrefs, ids, surfaces)
-   * datasets sharing one persisted parse.
-   */
-  def ingest(spark: SparkSession, tasks: Seq[IngestTask])
-      : (Dataset[Footprint], Dataset[HrefRef], Dataset[IdRec], Dataset[SurfacePoly]) = {
-    import spark.implicits._
+  /** One Spark task per file, in the given task order; nothing persisted. */
+  def parse(spark: SparkSession, tasks: Seq[IngestTask]): RDD[ParsedFile] = {
     require(tasks.nonEmpty, "no input files to ingest")
     val slices = math.max(1, math.min(tasks.size, spark.sparkContext.defaultParallelism))
-    val parsed = spark.createDataset(tasks)
-      .repartition(slices)
-      .mapPartitions(_.map(parseTask))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (parsed.flatMap(_.footprints), parsed.flatMap(_.hrefs),
-      parsed.flatMap(_.ids), parsed.flatMap(_.surfaces))
+    spark.sparkContext.parallelize(tasks, slices).map(parseTask)
   }
+
+  /** The (footprints, hrefs, ids, surfaces) projections of `files`. */
+  def project(spark: SparkSession, files: RDD[ParsedFile])
+      : (Dataset[Footprint], Dataset[HrefRef], Dataset[IdRec], Dataset[SurfacePoly]) = {
+    import spark.implicits._
+    (spark.createDataset(files.flatMap(_.footprints)),
+      spark.createDataset(files.flatMap(_.hrefs)),
+      spark.createDataset(files.flatMap(_.ids)),
+      spark.createDataset(files.flatMap(_.surfaces)))
+  }
+
+  /** Parse every task distributed; returns (footprints, hrefs, ids, surfaces).
+    * Each projection parses its files when it runs. */
+  def ingest(spark: SparkSession, tasks: Seq[IngestTask])
+      : (Dataset[Footprint], Dataset[HrefRef], Dataset[IdRec], Dataset[SurfacePoly]) =
+    project(spark, parse(spark, tasks))
 }

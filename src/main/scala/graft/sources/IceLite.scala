@@ -202,9 +202,10 @@ object IceLite {
       .write.mode("overwrite").partitionBy("__pk").parquet(stage)
     // job 2: per-partition lineage in one aggregation over the staged files
     // (reads back what was actually persisted — a stronger audit base than
-    // re-aggregating the upstream plan)
-    val lineage =
-      lineageByPartition(df.sparkSession.read.parquet(stage), df.columns.toSeq, partCol)
+    // re-aggregating the upstream plan); the writer's schema is known, so the
+    // read infers none (no schema-inference job)
+    val lineage = lineageByPartition(
+      df.sparkSession.read.schema(df.schema).parquet(stage), df.columns.toSeq, partCol)
     // commit loop: driver-side only — move staged dir into place, advance
     // the snapshot pointer once per partition (the crash-tolerant unit)
     var current = snap
@@ -276,7 +277,8 @@ object IceLite {
     src.repartition(col(partCol))
       .withColumn("__pk", col(partCol).cast("string"))
       .write.mode("overwrite").partitionBy("__pk").parquet(stage)
-    val got = lineageByPartition(spark.read.parquet(stage), src.columns.toSeq, partCol)
+    val got = lineageByPartition(spark.read.schema(src.schema).parquet(stage),
+      src.columns.toSeq, partCol)
     todo.foreach { pv =>
       val want = byPv(pv)
       val (rows, checksum) = got.getOrElse(pv,

@@ -72,6 +72,19 @@ class AppSpec extends AnyFunSuite {
     assert(ids.collect().map(_.id).toSet.size === 24) // 8 x (building+surface+poly)
   }
 
+  test("map use case releases its parse cache: no cache entry, no persistent RDD remain") {
+    val out = java.nio.file.Files.createTempDirectory("app_map_cache").toString
+    spark.catalog.clearCache()
+    val before = graft.TestSpark.persistentRddIds
+    val cfg = Main.RunConfig(usecase = "map", citygml = Seq(graft.Fixtures.fzkV2),
+      cityjson = Nil, outputDir = out, bbox = None, excludeAttrs = Set.empty, querySql = None)
+    Main.runMap(spark, cfg)
+    assert(graft.sources.IceLite.currentSnapshot(s"$out/footprints").partitions
+      .map(_.partition) === Seq("0"))
+    assert(graft.TestSpark.persistentRddIds === before, "runMap left a persistent RDD")
+    assert(graft.TestSpark.datasetCacheEmpty, "runMap left a Dataset cache entry")
+  }
+
   test("config app: map -> export -> query use cases end to end (go() dispatch)") {
     val out = java.nio.file.Files.createTempDirectory("app_out").toString
     val cfgFile = java.nio.file.Files.createTempFile("run", ".properties")

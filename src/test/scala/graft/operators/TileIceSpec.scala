@@ -251,6 +251,22 @@ class TileIceSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("null"))
   }
 
+  test("IceLite: a fresh writeResumable runs 5 Spark jobs and its lineage equals the input's") {
+    // discovery (2 jobs under AQE), the staging write (1) and the lineage
+    // aggregation (2); the staged files are read back with the writer's
+    // schema, so no schema-inference job runs between them
+    val dir = java.nio.file.Files.createTempDirectory("icelite_jobs").toString
+    val df = spark.range(0, 30)
+      .select((col("id") % 3).cast("string").as("part"), col("id").as("v"))
+    val ((w, s), jobs) = graft.TestSpark.jobsRunBy(IceLite.writeResumable(df, s"$dir/t", "part"))
+    assert(w === Seq("0", "1", "2") && s.isEmpty)
+    assert(jobs === 5, s"one fresh commit ran $jobs Spark jobs")
+    IceLite.currentSnapshot(s"$dir/t").partitions.foreach { p =>
+      assert((p.rows, p.checksum) === IceLite.lineageOf(df.where(col("part") === p.partition)),
+        s"lineage of partition ${p.partition}")
+    }
+  }
+
   test("IceLite: resume via broadcast semi-join path (many pending partitions)") {
     val dir = java.nio.file.Files.createTempDirectory("icelite_semi").toString
     val table = s"$dir/events_semi"

@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.TestSpark
+import graft.TestSpark.jobsRunBy
 import graft.core.Tiles
 import graft.model.{Env6, Footprint, XY}
 
@@ -142,30 +140,5 @@ class TileKernelSpec extends AnyFunSuite {
     val p = plan(q)
     assert(p.contains("tile_matches"), p)
     assert(!p.contains("Exchange") && !p.contains("Join"), s"no join, no exchange:\n$p")
-  }
-
-  /** `body`'s result and the Spark jobs it started. Listener events arrive in
-    * order, so once a marker job run afterwards is seen, every earlier job is. */
-  private def jobsRunBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription("tile-kernel-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      var n = 0
-      var d = seen.poll(60, TimeUnit.SECONDS)
-      while (d != "tile-kernel-marker") {
-        assert(d != null, "marker job not seen")
-        n += 1
-        d = seen.poll(60, TimeUnit.SECONDS)
-      }
-      (out, n)
-    } finally sc.removeSparkListener(listener)
   }
 }

@@ -125,6 +125,37 @@ class IngestSpec extends AnyFunSuite {
     assert(b0.attrs("storeysAboveGround") === "5")
   }
 
+  /** The v2 fixture as partition 0 and the CityJSON grid as partition 1. */
+  def fixtureTasks: Seq[DistributedIngest.IngestTask] =
+    DistributedIngest.tasksFor(0, gmlV2, "citygml") ++ DistributedIngest.tasksFor(1, cjson, "cityjson")
+
+  test("distributed ingest: one narrow stage, rows in task order, equal to the driver-side parse") {
+    val spark = graft.TestSpark.spark
+    val (fps, hrefs, ids, surfaces) = DistributedIngest.ingest(spark, fixtureTasks)
+    Seq(fps.toDF(), hrefs.toDF(), ids.toDF(), surfaces.toDF()).foreach { ds =>
+      val plan = ds.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"ingest must plan no exchange:\n$plan")
+    }
+    val v2 = CityGmlReader.parseFile(gmlV2)
+    val cj = CityJsonReader.parseFile(cjson)
+    assert(fps.collect().toSeq ===
+      CityGmlReader.toFootprints(v2, 0) ++ CityJsonReader.toFootprints(cj, 1))
+    assert(hrefs.collect().toSeq === CityGmlReader.toHrefs(v2, 0))
+    assert(ids.collect().toSeq === CityGmlReader.toIds(v2, 0))
+    assert(surfaces.collect().toSeq ===
+      CityGmlReader.toSurfaces(v2, 0) ++ CityJsonReader.toSurfaces(cj, 1))
+  }
+
+  test("distributed ingest persists nothing: no cache entry, no persistent RDD") {
+    val spark = graft.TestSpark.spark
+    spark.catalog.clearCache()
+    val before = graft.TestSpark.persistentRddIds
+    val fps = DistributedIngest.ingest(spark, fixtureTasks)._1.collect()
+    assert(fps.count(_.feature_type == "Building") === 101)
+    assert(graft.TestSpark.persistentRddIds === before, "ingest left a persistent RDD")
+    assert(graft.TestSpark.datasetCacheEmpty, "ingest left a Dataset cache entry")
+  }
+
   test("ImageGen: determinism, payload invariants (PSNR/caption/phash)") {
     val r1 = ImageGen.row(123)
     val r2 = ImageGen.row(123)
