@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Footprint
-import graft.operators.{KnnJoin, PipJoin}
+import graft.operators.{KnnIndex, PipJoin, PlanIndex}
 import graft.sources.IceLite
 
 /**
@@ -40,13 +40,15 @@ object Pipeline {
     *
     * PIP: [[PipJoin.auto]], the one physical path — the polygon index
     * ships once per executor and `pip_matches` runs inside the scan's codegen
-    * span, with no join and no shuffle, at every polygon-side size. */
+    * span, with no join and no shuffle, at every polygon-side size. Both
+    * indexes are built once per `polys` object ([[PlanIndex.shared]]), so
+    * repeated calls over one city reuse them. */
   def enrich(images: DataFrame, polys: Seq[Footprint],
              zoom: Int = 20, nBuckets: Int = 16,
              keepCols: Seq[String] = Nil): DataFrame = {
-    val centroids = polys.map(f => (f.feature_id, f.centroid.x, f.centroid.y))
-    val nn = graft.operators.PlanIndex.broadcast(images,
-      new graft.operators.KnnIndex(centroids, 1))
+    // keyed on `polys`, not on the centroid Seq, which is new on every call
+    val nn = PlanIndex.shared(images, polys, "centroid-knn")(PlanIndex.broadcast(images,
+      new KnnIndex(polys.map(f => (f.feature_id, f.centroid.x, f.centroid.y)), 1)))
     val enriched = PipJoin.auto(
         images.select((Seq("image_id", "x", "y") ++ keepCols).map(col): _*), polys)
       .withColumn("cell", graft.functions.GeoFunctions.hex_encode(

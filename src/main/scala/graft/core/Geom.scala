@@ -188,95 +188,4 @@ object Geom {
       inside
     }
   }
-
-  /**
-   * Prepared polygon: bounding-box prefilter + a per-y-stripe edge index so the
-   * per-point refine cost is O(edges in stripe) instead of O(all edges). This is
-   * the refine-stage analog of the reference's per-partition R*-tree
-   * (`CityGMLV2DB.java:211-231`) — built once per broadcast, probed per row.
-   */
-  final class PreparedPolygon(val poly: Polygon, stripes: Int = 16) extends Serializable {
-    private val env = poly.env
-    private val sy = env.miny
-    private val step = math.max((env.maxy - env.miny) / stripes, 1e-300)
-    private val allRings: Array[Array[Pt]] = Array(poly.ring) ++ poly.holes
-    // stripe s's edges are [stripeStart(s), stripeStart(s + 1)) of stripeEdges,
-    // each packed (ring << 32 | edge), ring by ring in edge order: a counting
-    // sort over primitive arrays (count, then fill)
-    private val stripeStart = new Array[Int](stripes + 1)
-    private val stripeEdges: Array[Long] = {
-      var out: Array[Long] = null
-      val fill = new Array[Int](stripes)
-      var pass = 0
-      while (pass < 2) {
-        var r = 0
-        while (r < allRings.length) {
-          val ring = allRings(r)
-          val n = effLen(ring)
-          var i = 0
-          while (i < n) {
-            val a = ring(i); val b = ring((i + 1) % n)
-            var s = clamp(((math.min(a.y, b.y) - sy) / step).toInt)
-            val hi = clamp(((math.max(a.y, b.y) - sy) / step).toInt)
-            while (s <= hi) {
-              if (pass == 0) stripeStart(s + 1) += 1
-              else { out(fill(s)) = (r.toLong << 32) | i; fill(s) += 1 }
-              s += 1
-            }
-            i += 1
-          }
-          r += 1
-        }
-        if (pass == 0) {
-          var s = 0
-          while (s < stripes) { stripeStart(s + 1) += stripeStart(s); fill(s) = stripeStart(s); s += 1 }
-          out = new Array[Long](stripeStart(stripes))
-        }
-        pass += 1
-      }
-      out
-    }
-
-    private def clamp(i: Int): Int = if (i < 0) 0 else if (i >= stripes) stripes - 1 else i
-
-    private def effLen(ring: Array[Pt]): Int =
-      if (ring.length > 1 && ring(0) == ring(ring.length - 1)) ring.length - 1 else ring.length
-
-    /** Boundary-inclusive cover test; allocation-free. Even-odd parity per
-      * ring over the point's stripe (a ring's edges are contiguous there):
-      * inside when the exterior's parity is odd and every hole's even, unless
-      * the point lies on any edge. */
-    def covers(x: Double, y: Double): Boolean = {
-      if (!env.contains2D(x, y)) return false
-      val s = clamp(((y - sy) / step).toInt)
-      var inside, inHole, odd = false
-      var cur = 0
-      var k = stripeStart(s)
-      while (k < stripeStart(s + 1)) {
-        val r = (stripeEdges(k) >>> 32).toInt
-        val i = stripeEdges(k).toInt
-        if (r != cur) {
-          if (cur == 0) inside = odd else if (odd) inHole = true
-          cur = r; odd = false
-        }
-        val ring = allRings(r)
-        val a = ring(i); val b = ring((i + 1) % effLen(ring))
-        if (segContains(a, b, x, y)) return true
-        if ((a.y > y) != (b.y > y)) {
-          val xint = a.x + (y - a.y) / (b.y - a.y) * (b.x - a.x)
-          if (x < xint) odd = !odd
-        }
-        k += 1
-      }
-      if (cur == 0) inside = odd else if (odd) inHole = true
-      inside && !inHole
-    }
-
-    private def segContains(a: Pt, b: Pt, x: Double, y: Double): Boolean = {
-      val cross = (b.x - a.x) * (y - a.y) - (b.y - a.y) * (x - a.x)
-      if (math.abs(cross) > 1e-12 * (math.abs(b.x - a.x) + math.abs(b.y - a.y) + 1.0)) return false
-      x >= math.min(a.x, b.x) - 1e-12 && x <= math.max(a.x, b.x) + 1e-12 &&
-        y >= math.min(a.y, b.y) - 1e-12 && y <= math.max(a.y, b.y) + 1e-12
-    }
-  }
 }

@@ -29,18 +29,17 @@ final class KnnIndex(targets: Seq[(String, Double, Double)], val k: Int,
                      res: Int = 12, maxR: Int = 64, linearLimit: Int = 512)
     extends Serializable {
 
-  private val sorted: Array[(String, Double, Double)] =
-    targets.sortBy(_._1).toArray
-  private val n = sorted.length
-  private val txs: Array[Double] = sorted.map(_._2)
-  private val tys: Array[Double] = sorted.map(_._3)
+  // flat arrays only: a memoized index stays resident ([[PlanIndex.shared]])
+  private val (tids, txs, tys) = {
+    val sorted = targets.sortBy(_._1).toArray
+    (sorted.map(t => org.apache.spark.unsafe.types.UTF8String.fromString(t._1)),
+      sorted.map(_._2), sorted.map(_._3))
+  }
+  private val n = tids.length
   private val linear = n <= linearLimit
 
-  @transient private lazy val tids: Array[org.apache.spark.unsafe.types.UTF8String] =
-    sorted.map(t => org.apache.spark.unsafe.types.UTF8String.fromString(t._1))
-
   /** cell → target ordinals (each target in the cell of its centroid). */
-  @transient private lazy val buckets: CellBuckets = CellBuckets.build(
+  @transient private[operators] lazy val buckets: CellBuckets = CellBuckets.build(
     Array.tabulate(n)(i => Array(HexGrid.encode(txs(i), tys(i), res))))
 
   private val EmptyArray =

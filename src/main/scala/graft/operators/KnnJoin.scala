@@ -55,10 +55,12 @@ object KnnJoin {
   def broadcastGrid(probes: DataFrame, targets: Seq[(String, Double, Double)],
                     k: Int, res: Int = 12, maxR: Int = 64,
                     linearLimit: Int = 512): DataFrame = {
-    // the index ships once per executor as a broadcast; the probe scan stays
+    // the index ships once per executor as a broadcast, built once per
+    // targets Seq and parameters (PlanIndex.shared); the probe scan stays
     // one whole-stage-codegen span (scan → knn_matches → explode), no join,
     // no shuffle, no Encoder round-trip (see KnnIndex for the strategy split)
-    val index = PlanIndex.broadcast(probes, new KnnIndex(targets, k, res, maxR, linearLimit))
+    val index = PlanIndex.shared(probes, targets, "knn", k, res, maxR, linearLimit)(
+      PlanIndex.broadcast(probes, new KnnIndex(targets, k, res, maxR, linearLimit)))
     probes
       .select(col("probe_id").cast("string").as("probe_id"),
         explode(org.apache.spark.sql.graft.GeoFunctionsImpl.knn_matches(

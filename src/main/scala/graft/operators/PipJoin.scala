@@ -25,6 +25,10 @@ import graft.model.Footprint
  * bucket probe each rather than one reducer. The index is flat primitive
  * arrays, smaller than the `Seq[Footprint]` the driver already holds, so no
  * polygon-side size needs another path (measured up to 5M vertices).
+ *
+ * The index is built and broadcast once per polygon `Seq` object and `res`
+ * ([[PlanIndex.shared]]): repeated queries against one unchanged city reuse
+ * one handle for as long as the caller holds that `Seq`.
  */
 object PipJoin {
 
@@ -37,7 +41,8 @@ object PipJoin {
    * it on the driver.
    */
   def auto(points: DataFrame, polys: Seq[Footprint], res: Int = DefaultRes): DataFrame = {
-    val index = PlanIndex.broadcast(points, new PipIndex(polys, res))
+    val index = PlanIndex.shared(points, polys, "pip", res)(
+      PlanIndex.broadcast(points, new PipIndex(polys, res)))
     points.withColumn("feature_id",
       explode(org.apache.spark.sql.graft.GeoFunctionsImpl.pip_matches(col("x"), col("y"), index)))
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -38,7 +39,8 @@ import graft.functions.GeoFunctions.hex_cover
  * (`limit(threshold + 1)` — O(threshold) even on a huge ring table, and the
  * collected rows are the index when they fit), conf
  * `spark.graft.setback.broadcastRingLimit`. The threshold caps the driver
- * collect and the broadcast index's size, not per-point work.
+ * collect and the broadcast index's size, not per-point work. For a
+ * `rings` over local rows the decision is made once per input object.
  *
  * Inputs: `points` carries (`idCol`, x, y); `rings` carries
  * (fid: string, xs: array<double>, ys: array<double>). Output: (`idCol`, d2,
@@ -52,12 +54,15 @@ object Setback {
 
   /** Map-only index path: one codegen projection over the point scan. */
   def indexed(points: DataFrame, index: SetbackIndex,
-              idCol: String = "event_id"): DataFrame = {
+              idCol: String = "event_id"): DataFrame =
+    kernel(points, PlanIndex.broadcast(points, index), idCol)
+
+  private def kernel(points: DataFrame, index: Broadcast[SetbackIndex], idCol: String): DataFrame = {
     // no rings → no rows, as under the relational min over an empty cross product
-    val pts = if (index.isEmpty) points.where(lit(false)) else points
+    val pts = if (index.value.isEmpty) points.where(lit(false)) else points
     finish(idCol, pts
       .select(col(idCol), setback_nearest(col("x").cast("double"),
-        col("y").cast("double"), PlanIndex.broadcast(points, index)).as("m"))
+        col("y").cast("double"), index).as("m"))
       .select(col(idCol), col("m.d2").as("d2"), col("m.fid").as("fid")))
   }
 
@@ -106,14 +111,21 @@ object Setback {
   }
 
   /** Route by ring-side size: the index path up to the conf threshold
-    * (default 65536 rings), the distributed ring search above it. */
+    * (default 65536 rings), the distributed ring search above it. The
+    * decision — the broadcast index, or "above the limit" — is memoized per
+    * `rings` object, `res`, `maxR` and threshold when `rings` is a
+    * deterministic plan over local rows ([[PlanIndex.sharedRows]]): repeated
+    * calls then neither collect nor build. A file- or range-backed `rings`
+    * is probed on every call. */
   def auto(points: DataFrame, rings: DataFrame, idCol: String = "event_id",
            res: Int = 12, maxR: Int = 16,
            checkpointDir: Option[String] = None): DataFrame = {
     val limit = graft.core.Confs.intConf(points.sparkSession,
       BroadcastRingLimitConf, DefaultRingLimit, min = 0)
-    graft.core.Regime.collectUpTo(rings.select(col("fid"), col("xs"), col("ys")), limit) match {
-      case Some(probe) => indexed(points, SetbackIndex.fromRows(probe, res, maxR), idCol)
+    PlanIndex.sharedRows(points, rings, "setback", res, maxR, limit)(
+      graft.core.Regime.collectUpTo(rings.select(col("fid"), col("xs"), col("ys")), limit)
+        .map(rows => PlanIndex.broadcast(points, SetbackIndex.fromRows(rows, res, maxR)))) match {
+      case Some(index) => kernel(points, index, idCol)
       case None => ringSearch(points, rings, idCol, res, maxR, checkpointDir = checkpointDir)
     }
   }

@@ -2,10 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.graft.RingKernels
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{CellBuckets, HexGrid}
@@ -22,12 +21,13 @@ import graft.core.{CellBuckets, HexGrid}
  * 2023): rings bucket by their [[HexGrid.cover]] cells at `res` — exactly
  * the buckets [[Setback.ringSearch]] joins on — in an open-addressing
  * primitive table. A point walks hex rings outward from its own cell and
- * scores each newly met ring ONCE with the unchanged
- * [[RingKernels.dist2ToRing]] kernel, so results are bit-identical to the
- * relational paths. The walk is the shared [[KnnJoin.ringWalk]] with k = 1:
- * after ring r, a ring not yet met has every boundary point in a cell at
- * hex distance ≥ r+1, hence at distance ≥ [[KnnJoin.ringLowerBound]](res,
- * r+1); once `sqrt(best)` is STRICTLY below that, no unmet ring can beat or
+ * scores each newly met ring ONCE, over the flat vertex arrays, with
+ * [[RingKernels.dist2ToRing]]'s per-edge kernel ([[RingKernels.edgeDist2]])
+ * in its edge order ([[SetbackIndex.ringDist2]]), so results are
+ * bit-identical to the relational paths. The walk is the shared
+ * [[KnnJoin.ringWalk]] with k = 1: after ring r, a ring not yet met has
+ * every boundary point in a cell at hex distance ≥ r+1, hence at distance
+ * ≥ [[KnnJoin.ringLowerBound]](res, r+1); once `sqrt(best)` is STRICTLY below that, no unmet ring can beat or
  * tie the best. Points still open after `maxR` (far field) fall back to the
  * exact linear scan.
  *
@@ -44,6 +44,14 @@ import graft.core.{CellBuckets, HexGrid}
  *
  * `nearest` returns struct<fid:string, d2:double>, or null when there are
  * no rings.
+ *
+ * A memoized index ([[PlanIndex.sharedRows]]) stays resident, so the lazy
+ * part is only the cell table and the loose-ring list; the rings are scored
+ * straight from the serialized flat arrays, with no per-ring wrapper.
+ * Measured by `graft.operators.IndexCostProbe` on a 7000-ring city (112,000
+ * vertices, 48,848 cover cells at res 12) in one JVM on a shared 4-core
+ * host: 1.86 MB serialized; the lazy build takes ~13 ms and adds 3.6 MB of
+ * settled heap to the 2.2 MB the serialized arrays hold.
  */
 final class SetbackIndex(rings: Seq[(String, Array[Double], Array[Double])],
                          res: Int = 12, maxR: Int = 16) extends Serializable {
@@ -55,7 +63,7 @@ final class SetbackIndex(rings: Seq[(String, Array[Double], Array[Double])],
 
   // flat vertex storage (ring i = [off(i), off(i+1)), cut to the kernel's
   // min(|xs|, |ys|)): the index serializes as a few bulk arrays
-  private val (fidStrings, xsFlat, ysFlat, off) = {
+  private val (fids, xsFlat, ysFlat, off) = {
     val sorted = rings.sortBy(r => Option(r._1).map(UTF8String.fromString))(
       Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)))
     val off = sorted.map(r => math.min(r._2.length, r._3.length)).scanLeft(0)(_ + _).toArray
@@ -64,23 +72,14 @@ final class SetbackIndex(rings: Seq[(String, Array[Double], Array[Double])],
       System.arraycopy(xs, 0, xf, off(i), off(i + 1) - off(i))
       System.arraycopy(ys, 0, yf, off(i), off(i + 1) - off(i))
     }
-    (sorted.map(_._1).toArray, xf, yf, off)
+    (sorted.map(r => UTF8String.fromString(r._1)).toArray, xf, yf, off)
   }
-  private val n = fidStrings.length
+  private val n = fids.length
 
   def isEmpty: Boolean = n == 0
 
-  @transient private lazy val fids: Array[UTF8String] = fidStrings.map(UTF8String.fromString)
-  // the kernel reads ArrayData — wrap once per executor, not per probe
-  @transient private lazy val xsData: Array[ArrayData] = wrap(xsFlat)
-  @transient private lazy val ysData: Array[ArrayData] = wrap(ysFlat)
-  private def wrap(flat: Array[Double]): Array[ArrayData] = Array.tabulate(n) { i =>
-    UnsafeArrayData.fromPrimitiveArray(flat,
-      Platform.DOUBLE_ARRAY_OFFSET + 8 * off(i), off(i + 1) - off(i), 8)
-  }
-
   /** cell → ring ordinals, plus the ordinals scored for every point. */
-  @transient private lazy val buckets: (CellBuckets, Array[Int]) = {
+  @transient private[operators] lazy val buckets: (CellBuckets, Array[Int]) = {
     val loose = Array.newBuilder[Int]
     val cells = Array.tabulate(n) { i =>
       // the ring's env, computed as Geom.Polygon.env does (NaN vertices skipped)
@@ -108,7 +107,7 @@ final class SetbackIndex(rings: Seq[(String, Array[Double], Array[Double])],
 
   private def score(p: SetbackIndex.Probe, i: Int, x: Double, y: Double): Unit =
     if (p.visit(i)) {
-      val d2 = RingKernels.dist2ToRing(xsData(i), ysData(i), x, y)
+      val d2 = SetbackIndex.ringDist2(xsFlat, ysFlat, off(i), off(i + 1), x, y)
       if (p.best < 0) { p.best = i; p.bestD2 = d2 }
       else {
         val c = SQLOrderingUtil.compareDoubles(d2, p.bestD2)
@@ -156,6 +155,23 @@ object SetbackIndex {
       }
       (r.getString(0), coords(1), coords(2))
     }, res, maxR)
+
+  /** [[RingKernels.dist2ToRing]] of the ring at [from, until) of flat
+    * vertex arrays: the same per-edge kernel over the same edges in the same
+    * order, so the same bits (SetbackSpec). */
+  private[operators] def ringDist2(xs: Array[Double], ys: Array[Double], from: Int, until: Int,
+                                   px: Double, py: Double): Double = {
+    if (until == from) return Double.NaN
+    var best = Double.MaxValue
+    var i = from
+    while (i < until) {
+      val j = if (i + 1 == until) from else i + 1
+      val d2 = RingKernels.edgeDist2(xs(i), ys(i), xs(j), ys(j), px, py)
+      if (d2 < best) best = d2
+      i += 1
+    }
+    best
+  }
 
   private[operators] final class Probe(n: Int) {
     private val stamps = new Array[Int](n)

@@ -64,18 +64,27 @@ object TileAssign {
    * join, no exchange, the same rows, columns and duplicates as
    * [[assignShuffle]], which runs otherwise. A local footprint Dataset
    * collects without a job; empty `zooms` runs none and gives no rows.
+   *
+   * The decision — the broadcast index, or "above the limit" — is memoized
+   * per `fps` object, `zooms` and `broadcastLimit` when `fps` is a
+   * deterministic plan over local rows ([[PlanIndex.sharedRows]]): repeated
+   * calls then neither collect nor build. A file- or range-backed `fps` is
+   * probed on every call.
    */
   def auto(points: DataFrame, fps: Dataset[Footprint], zooms: Seq[Int],
            broadcastLimit: Long = 2000000L): DataFrame = {
-    val features = if (zooms.isEmpty) Some(Array.empty[TileIndex.Feature])
-      else graft.core.Regime.collectUpTo(fps.select("feature_id", "partition_id", "env")
-        .as(TileIndex.featureEncoder), broadcastLimit / zooms.size)
-    features.map(new TileIndex(_, zooms)).filter(_.size <= broadcastLimit) match {
+    PlanIndex.sharedRows(points, fps, "tile", zooms, broadcastLimit) {
+      val features = if (zooms.isEmpty) Some(Array.empty[TileIndex.Feature])
+        else graft.core.Regime.collectUpTo(fps.select("feature_id", "partition_id", "env")
+          .as(TileIndex.featureEncoder), broadcastLimit / zooms.size)
+      features.map(new TileIndex(_, zooms)).filter(_.size <= broadcastLimit)
+        .map(PlanIndex.broadcast(points, _))
+    } match {
       case Some(index) =>
         val pts = pointTiles(points, zooms)
         val keys = Seq("zoom", "tile_id")
         val cols = (keys ++ pts.columns.filterNot(keys.contains)).map(c => col(s"`${c.replace("`", "``")}`"))
-        pts.select(cols :+ inline(tile_matches(col("tile_id"), PlanIndex.broadcast(points, index))): _*)
+        pts.select(cols :+ inline(tile_matches(col("tile_id"), index)): _*)
       case None => assignShuffle(points, fps, zooms)
     }
   }

@@ -30,7 +30,7 @@ import graft.model.Env6
  */
 final class TileIndex(features: Seq[TileIndex.Feature], zooms: Seq[Int]) extends Serializable {
 
-  private val fids: Array[String] = features.map(_._1).toArray
+  private val fids: Array[UTF8String] = features.map(f => UTF8String.fromString(f._1)).toArray
   private val pids: Array[Int] = features.map(_._2).toArray
   private val minx = TileIndex.corner(features, _.minx)
   private val miny = TileIndex.corner(features, _.miny)
@@ -42,12 +42,13 @@ final class TileIndex(features: Seq[TileIndex.Feature], zooms: Seq[Int]) extends
   val size: Long = fids.indices.iterator.map(i =>
     zs.iterator.map(z => Tiles.coverCount(minx(i), miny(i), maxx(i), maxy(i), z)).sum).sum
 
-  @transient private lazy val buckets: CellBuckets = CellBuckets.build(Array.tabulate(fids.length)(i =>
-    zs.flatMap(z => Tiles.coverRect(minx(i), miny(i), maxx(i), maxy(i), z).map(Tiles.pack))))
+  @transient private[operators] lazy val buckets: CellBuckets =
+    CellBuckets.build(Array.tabulate(fids.length)(i =>
+      zs.flatMap(z => Tiles.coverRect(minx(i), miny(i), maxx(i), maxy(i), z).map(Tiles.pack))))
 
   @transient private lazy val matched: Array[ArrayData] = {
     val rows = Array.tabulate[Any](fids.length)(i =>
-      new GenericInternalRow(Array[Any](UTF8String.fromString(fids(i)), pids(i))))
+      new GenericInternalRow(Array[Any](fids(i), pids(i))))
     buckets.mapBuckets[ArrayData](b => new GenericArrayData(b.map(rows)))
   }
 

@@ -498,17 +498,23 @@ object RingKernels {
     var i = 0
     while (i < n) {
       val j = if (i + 1 == n) 0 else i + 1
-      val x1 = xs.getDouble(i); val y1 = ys.getDouble(i)
-      val dx = xs.getDouble(j) - x1; val dy = ys.getDouble(j) - y1
-      val l2 = dx * dx + dy * dy
-      val t = if (l2 == 0.0) 0.0
-        else math.max(0.0, math.min(1.0, ((px - x1) * dx + (py - y1) * dy) / l2))
-      val ex = px - (x1 + t * dx); val ey = py - (y1 + t * dy)
-      val d2 = ex * ex + ey * ey
+      val d2 = edgeDist2(xs.getDouble(i), ys.getDouble(i), xs.getDouble(j), ys.getDouble(j), px, py)
       if (d2 < best) best = d2
       i += 1
     }
     best
+  }
+
+  /** Squared distance from (px, py) to the segment (x1, y1)–(x2, y2): the
+    * one per-edge kernel of [[dist2ToRing]] and of the setback index's flat
+    * ring scan (`graft.operators.SetbackIndex.ringDist2`). */
+  def edgeDist2(x1: Double, y1: Double, x2: Double, y2: Double, px: Double, py: Double): Double = {
+    val dx = x2 - x1; val dy = y2 - y1
+    val l2 = dx * dx + dy * dy
+    val t = if (l2 == 0.0) 0.0
+      else math.max(0.0, math.min(1.0, ((px - x1) * dx + (py - y1) * dy) / l2))
+    val ex = px - (x1 + t * dx); val ey = py - (y1 + t * dy)
+    ex * ex + ey * ey
   }
 
   /** Radial-distance vertex thinning (the standard pre-Douglas-Peucker

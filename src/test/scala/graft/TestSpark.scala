@@ -5,9 +5,18 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all Spark-backed suites. */
+/** One shared local session for all Spark-backed suites. A suite that stops
+  * it (PlanIndexSpec's restart case) gets a fresh one on the next call, so
+  * the suites after it run on a live session. */
 object TestSpark {
-  lazy val spark: SparkSession = {
+  private var session: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (session == null || session.sparkContext.isStopped) session = build()
+    session
+  }
+
+  private def build(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

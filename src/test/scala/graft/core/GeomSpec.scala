@@ -136,16 +136,24 @@ class GeomSpec extends AnyFunSuite {
     assert(RingKernels.dist2ToRing(arr(1, 1), arr(2, 2), 4.0, 6.0) === 25.0)
   }
 
-  test("property: PreparedPolygon agrees with Polygon.covers (seeded)") {
+  test("property: PipIndex flat refine agrees with Polygon.covers (seeded)") {
     val ring = Array(Pt(0, 0), Pt(20, 3), Pt(28, 15), Pt(14, 26), Pt(-3, 17), Pt(-6, 5))
     val hole = Array(Pt(5, 5), Pt(12, 6), Pt(11, 13), Pt(6, 12))
     val p = Polygon(ring, Array(hole))
-    val prep = new PreparedPolygon(p)
+    def xy(r: Array[Pt]) = r.toSeq.map(q => graft.model.XY(q.x, q.y))
+    // polygon 1 of the index, behind another, so its rings and edges start
+    // mid-array; the closed copy adds a closing vertex that adds no edge
+    val index = new graft.operators.PipIndex(Seq(
+      graft.operators.PipKernelSpec.fp("other", Seq((100.0, 100.0), (101.0, 100.0), (101.0, 101.0))),
+      graft.model.Footprint("p", "Building", 0, xy(ring), Seq(xy(hole)), null, null, Map.empty),
+      graft.model.Footprint("closed", "Building", 0, xy(ring :+ ring(0)), Seq(xy(hole :+ hole(0))),
+        null, null, Map.empty)), 11)
     val rnd = new scala.util.Random(7)
     for (_ <- 1 to 20000) {
       val x = rnd.nextDouble() * 42 - 10
       val y = rnd.nextDouble() * 35 - 5
-      assert(prep.covers(x, y) === p.covers(x, y), s"prepared mismatch at ($x,$y)")
+      assert(index.covers(1, x, y) === p.covers(x, y), s"flat refine mismatch at ($x,$y)")
+      assert(index.covers(2, x, y) === p.covers(x, y), s"closed-ring refine mismatch at ($x,$y)")
     }
   }
 }

@@ -146,6 +146,45 @@ class SetbackSpec extends AnyFunSuite {
     }
   }
 
+  test("auto over local rings routes a memo hit as its first call (limits 150 / 149 / 8)") {
+    val want = rows(broadcastExact(points, rings))
+    // local rows: the decision is memoized per rings object and limit
+    val local = rings.as[(String, Seq[Double], Seq[Double])].collect().toSeq.toDF("fid", "xs", "ys")
+    def handles(df: DataFrame) = df.queryExecution.executedPlan.collect {
+      case p => p.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.graft.SetbackNearestExpr => e.bc })
+    }.flatten
+    Seq(150 -> true, 149 -> false, 8 -> false).foreach { case (limit, indexed) =>
+      val (first, second) = withRingLimit(limit.toString)(
+        (Setback.auto(points, local), Setback.auto(points, local)))
+      for (df <- Seq(first, second)) {
+        val p = df.queryExecution.executedPlan.toString
+        assert(p.contains("setback_nearest") === indexed, s"limit $limit:\n$p")
+        assert(rows(df) === want)
+      }
+      if (indexed) assert(handles(first).head eq handles(second).head, "one index for both calls")
+    }
+  }
+
+  test("the flat per-edge distance equals RingKernels.dist2ToRing bit for bit") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.graft.RingKernels
+    val ringsXY = edgeRings.as[(String, Seq[Double], Seq[Double])].collect()
+    assert(ringsXY.exists(_._2.isEmpty) && ringsXY.exists(_._2.size == 1), "empty and single-vertex rings")
+    val probes = edgePoints.as[(Long, Option[Double], Option[Double])].collect().toSeq
+      .flatMap { case (_, x, y) => x.zip(y) } ++ Seq((5.0, 0.0), (0.5, 0.5), (-1.0e300, 1.0e300))
+    for ((fid, xs, ys) <- ringsXY; (x, y) <- probes) {
+      // the ring mid-array, as the index stores it
+      val (fx, fy) = ((7.0 +: xs :+ 8.0).toArray, (7.0 +: ys :+ 8.0).toArray)
+      val flat = SetbackIndex.ringDist2(fx, fy, 1, 1 + xs.size, x, y)
+      val kernel = RingKernels.dist2ToRing(UnsafeArrayData.fromPrimitiveArray(xs.toArray),
+        UnsafeArrayData.fromPrimitiveArray(ys.toArray), x, y)
+      assert(java.lang.Double.doubleToRawLongBits(flat) === java.lang.Double.doubleToRawLongBits(kernel),
+        s"ring $fid at ($x, $y): $flat vs $kernel")
+    }
+    assert(SetbackIndex.ringDist2(Array.empty, Array.empty, 0, 0, 1.0, 1.0).isNaN)
+  }
+
   test("broadcastRingLimit: a non-number or negative value fails naming the key; Int.MaxValue keeps the index") {
     Seq("abc", "-1").foreach { bad =>
       val e = withRingLimit(bad)(intercept[IllegalArgumentException](Setback.auto(points, rings)))

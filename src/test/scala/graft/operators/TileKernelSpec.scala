@@ -113,6 +113,25 @@ class TileKernelSpec extends AnyFunSuite {
     assert(kernel.schema.map(f => (f.name, f.dataType)) === shuffle.schema.map(f => (f.name, f.dataType)))
   }
 
+  test("at the limit and at limit - 1 a memo hit routes as the first call") {
+    val want = oracle(pts, fps, zooms)
+    val ds = fps.toDS() // local rows: the decision is memoized per Dataset and limit
+    val limit = pairs(fps, zooms)
+    def handles(df: DataFrame) = df.queryExecution.executedPlan.collect {
+      case p => p.expressions.flatMap(_.collect { case e: org.apache.spark.sql.graft.TileMatchesExpr => e.bc })
+    }.flatten
+    for ((l, kernel) <- Seq(limit -> true, (limit - 1) -> false)) {
+      val first = TileAssign.auto(pointsDf(pts), ds, zooms, broadcastLimit = l)
+      val (second, jobs) = jobsRunBy(TileAssign.auto(pointsDf(pts), ds, zooms, broadcastLimit = l))
+      assert(jobs === 0, "a memo hit plans without a Spark job")
+      for (df <- Seq(first, second)) {
+        assert(plan(df).contains("tile_matches") === kernel, plan(df))
+        assert(rows(df) === want)
+      }
+      if (kernel) assert(handles(first).head eq handles(second).head, "one index for both calls")
+    }
+  }
+
   test("zooms listed twice: each pair repeats as on the exploded join") {
     val zs = Seq(18, 16, 18)
     val ps = pts.take(200)
