@@ -124,37 +124,11 @@ object AnnSearch {
   def ivfTopK(table: DataFrame, probes: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4, iters: Int = 5,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = table.sparkSession
-    import spark.implicits._
     val sample = fitSample(table, idCol, vecCol, math.max(1000, nlist * 100), nlist)
     require(sample.nonEmpty, s"ivfTopK: table has no rows to fit centroids from")
     val centroids = kmeans(sample, nlist, iters)
-    val bc = spark.sparkContext.broadcast(centroids)
-    val ivf = new org.apache.spark.sql.graft.IvfCentroids(
-      centroids.indices.map(_.toLong).toArray, centroids)
-
-    // table-side assignment is a single codegen projection — the centroid
-    // set rides the plan as a reference object, so the 10^12-row pass keeps
-    // whole-stage codegen and column pruning (no Encoder round-trip)
-    val assigned = table.select(col(idCol), col(vecCol))
-      .withColumn("list_id",
-        org.apache.spark.sql.graft.VecFunctionsImpl.ivf_assign(col(vecCol), ivf))
-
-    val probeLists = probes.select(col("probe_id"), col("pvec"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (pid, pv) =>
-        val cs = bc.value
-        cs.indices.map { c =>
-          var d = 0.0; var i = 0
-          while (i < pv.length) { val dx = pv(i) - cs(c)(i); d += dx * dx; i += 1 }
-          (pid, pv, c.toLong, d)
-        }.sortBy(t => (t._4, t._3)).take(nprobe)
-      }.toDF("probe_id", "pvec", "list_id", "cdist")
-
-    val scored = assigned.join(broadcast(probeLists.select("probe_id", "pvec", "list_id")), Seq("list_id"))
-      .withColumn("cos", cosine(col(vecCol), col("pvec")))
-      .select(col("probe_id"), col(idCol), col("cos"))
-    boundedTopK(scored, k, idCol)
+    ivfProbe(table, probes, k, centroids.indices.map(_.toLong).toArray, centroids,
+      nprobe, idCol, vecCol)
   }
 
   /**
@@ -171,31 +145,40 @@ object AnnSearch {
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = table.sparkSession
     import spark.implicits._
-    val centroids: Array[(Long, Array[Double])] = table
+    val centroids = table
       .where(col(idCol) < nlist).select(col(idCol), col(vecCol))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, v) => (id, v.map(_.toDouble)) }
     require(centroids.nonEmpty, s"no centroid rows with $idCol < $nlist")
-    val bc = spark.sparkContext.broadcast(centroids)
-    val ivf = new org.apache.spark.sql.graft.IvfCentroids(
-      centroids.map(_._1), centroids.map(_._2))
+    ivfProbe(table, probes, k, centroids.map(_._1), centroids.map(_._2.map(_.toDouble)),
+      nprobe, idCol, vecCol)
+  }
 
-    def nearestLists(v: Array[Float], cs: Array[(Long, Array[Double])], n: Int): Seq[Long] =
-      cs.map { case (cid, c) =>
-        var d = 0.0; var i = 0
-        while (i < v.length) { val dx = v(i) - c(i); d += dx * dx; i += 1 }
-        (d, cid)
-      }.sortBy(identity).take(n).map(_._2).toSeq
+  /** The IVF probe both quantizers share: the table is assigned to its
+    * nearest centroid, each probe scores only its `nprobe` nearest lists
+    * (ties by centroid id) through a broadcast join, and [[boundedTopK]]
+    * ranks the cosines. */
+  private def ivfProbe(table: DataFrame, probes: DataFrame, k: Int,
+                       ids: Array[Long], centroids: Array[Array[Double]], nprobe: Int,
+                       idCol: String, vecCol: String): DataFrame = {
+    val spark = table.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(ids.zip(centroids))
+    val ivf = new org.apache.spark.sql.graft.IvfCentroids(ids, centroids)
 
-    // table-side assignment = one codegen projection (see ivfTopK)
+    // table-side assignment is a single codegen projection — the centroid
+    // set rides the plan as a reference object, so the 10^12-row pass keeps
+    // whole-stage codegen and column pruning (no Encoder round-trip)
     val assigned = table.select(col(idCol), col(vecCol))
       .withColumn("list_id",
         org.apache.spark.sql.graft.VecFunctionsImpl.ivf_assign(col(vecCol), ivf))
     val probeLists = probes.select(col("probe_id"), col("pvec"))
       .as[(Long, Array[Float])]
       .flatMap { case (pid, pv) =>
-        val cs = bc.value
-        nearestLists(pv, cs, nprobe).map(c => (pid, pv, c))
+        bc.value.map { case (cid, c) =>
+          var d = 0.0; var i = 0
+          while (i < pv.length) { val dx = pv(i) - c(i); d += dx * dx; i += 1 }
+          (d, cid)
+        }.sortBy(identity).take(nprobe).map { case (_, cid) => (pid, pv, cid) }
       }.toDF("probe_id", "pvec", "list_id")
     val scored = assigned.join(broadcast(probeLists), Seq("list_id"))
       .withColumn("cos", cosine(col(vecCol), col("pvec")))

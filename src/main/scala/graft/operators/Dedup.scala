@@ -28,29 +28,20 @@ object Dedup {
       .otherwise(transform(sequence(lit(0), size(toks) - n),
         i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
 
-  /**
-   * MinHash signature columns: per permutation p, min over shingles of
-   * md5(shingle || "_p"). Using the hex-string order statistic keeps the
-   * operator expressible in ANSI SQL (DuckDB-oracle-checkable) while having
-   * the same collision semantics as integer MinHash.
-   */
-  // one md5 per shingle; perm p = 8-hex-char slice (p-1)*8+1..8 of the digest
-  // (4x less hashing than md5(s || "_p") per perm; slices of one digest are
-  // as independent as suffixed digests for banding — recall property-tested)
-  def minhashSig(sh: Column, perms: Int): Seq[Column] = {
-    require(perms >= 1 && perms <= 4,
-      s"perms must be 1..4 (a 32-hex md5 digest yields 4 8-char slices; got $perms)")
-    (1 to perms).map { p =>
-      array_min(transform(sh, s =>
-        substring(md5(s.cast("binary")), (p - 1) * 8 + 1, 8))).as(s"m$p")
-    }
-  }
-
-  /** doc_id + MinHash signature (one row per doc). */
+  /** doc_id + MinHash signature (one row per doc): per permutation p, the
+    * minimum over the doc's word `ngram` shingles of hex chars
+    * (p-1)*8+1..p*8 of md5(shingle), as columns m1..m`perms` — read off the
+    * one-pass [[org.apache.spark.sql.graft.Md5MinHashKernel]]. The hex-string
+    * order statistic keeps the operator expressible in ANSI SQL
+    * (DuckDB-oracle-checkable, q18) with the collision semantics of integer
+    * MinHash. A doc with no shingle (fewer than `ngram` tokens) or a null
+    * doc gets null columns: `get` returns null past the kernel's empty
+    * array, where a bare index would throw under ANSI. */
   def minhash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
               perms: Int = 4, ngram: Int = 3): DataFrame = {
-    val sh = shingles(tokens(col(textCol)), ngram)
-    docs.select(col(idCol) +: minhashSig(sh, perms): _*)
+    val sig = org.apache.spark.sql.graft.TextFunctionsImpl.md5_minhash_sig(
+      col(textCol), lit(ngram), lit(perms))
+    docs.select(col(idCol) +: (1 to perms).map(p => get(sig, lit(p - 1)).as(s"m$p")): _*)
   }
 
   /**
@@ -75,8 +66,9 @@ object Dedup {
       md5SliceBuckets(docs, idCol, textCol, perms, ngram), maxBucket), toks, minJaccard)
   }
 
-  /** The md5-slice minhash band buckets shared by [[lshPairs]] and
-    * [[containmentPairs]]: the one-pass codegen kernel
+  /** The md5-slice minhash band buckets shared by [[lshPairs]],
+    * [[containmentPairs]] and `DedupStream.lshCandidates`: the one-pass
+    * codegen kernel
     * [[org.apache.spark.sql.graft.Md5MinHashKernel]] computes all `perms`
     * per-band minima inside the row loop (one digest per shingle, minima
     * tracked as unsigned ints), so the signature never leaves the scan
@@ -84,8 +76,8 @@ object Dedup {
     * and paid an (id, band) hash-aggregate exchange to rebuild the same
     * minima (guide §2.4). Bit-identical output (kernel doc + DedupAnnSpec
     * pin the equality); (id, band ∈ 0..perms−1, bucket) rows as before. */
-  private def md5SliceBuckets(docs: DataFrame, idCol: String, textCol: String,
-                              perms: Int, ngram: Int): DataFrame = {
+  private[graft] def md5SliceBuckets(docs: DataFrame, idCol: String, textCol: String,
+                                     perms: Int, ngram: Int): DataFrame = {
     // perms outside 1..4 fails analysis of this select (the expression's
     // checkInputDataTypes) for every entry point routed here
     docs.select(col(idCol).as("id"),
@@ -721,7 +713,8 @@ object Dedup {
     * a checkpoint, the convergence checksum), and a near-dup pair graph at
     * bench scale converges in ~4 rounds — ~20 barriers to label a few
     * thousand edges. When the deduped edge set is at most
-    * `spark.graft.cc.smallGraphMaxEdges` (default 2^20; 0 disables), the
+    * `spark.graft.graph.smallGraphMaxEdges` (default 2^20; 0 disables —
+    * the one driver-fit bound GraphPaths' fast paths share), the
     * edges are a BOUNDED driver fit — ≤16 MB of longs, the ivf-centroid /
     * BM25-stats precedent — and one union-find pass labels them exactly;
     * the labels return as a local relation, so downstream joins broadcast
@@ -748,8 +741,7 @@ object Dedup {
     val edges0 = ck(pairs
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct())
-    val smallMax = graft.core.Confs.longConf(spark,
-      "spark.graft.cc.smallGraphMaxEdges", 1L << 20, min = 0L)
+    val smallMax = GraphPaths.smallGraphMaxEdges(spark)
     // LONG ids only: the driver union-find compares with Long ordering, which
     // matches Spark's greatest/least/min there; string-id callers (e.g. the
     // curate pipeline's image keys) keep the distributed path, whose ordering

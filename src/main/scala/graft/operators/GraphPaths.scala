@@ -26,8 +26,10 @@ import org.apache.spark.sql.functions._
  */
 object GraphPaths {
 
-  /** The small-graph fast paths' edge threshold (see [[bfsWithPred]]). */
-  private def smallGraphMaxEdges(spark: SparkSession): Long =
+  /** The small-graph fast paths' edge threshold (see [[bfsWithPred]]; also
+    * `Dedup.connectedComponentsWithRounds`): at most this many edges are a
+    * bounded driver fit. */
+  private[operators] def smallGraphMaxEdges(spark: SparkSession): Long =
     graft.core.Confs.longConf(spark, "spark.graft.graph.smallGraphMaxEdges", 1L << 20, min = 0L)
 
   /**

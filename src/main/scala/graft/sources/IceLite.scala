@@ -111,9 +111,11 @@ object IceLite {
         .as("checksum"))
   }
 
-  /** Order-independent lineage of a DataFrame (dedicated aggregation pass —
-    * the independent recompute used by `verifyLineage`; the write path gets
-    * the same numbers for free via `observe`). */
+  /** Order-independent (rows, checksum) lineage of a whole DataFrame in one
+    * aggregation pass — the same aggregates [[lineageByPartition]] computes
+    * per partition for the write path and `verifyLineage`, so a manifest's
+    * numbers can be checked against an independent recompute of the
+    * partition's rows (TileIceSpec does). */
   def lineageOf(df: DataFrame): (Long, String) = {
     val aggs = lineageAggs(df)
     val row = df.agg(aggs.head, aggs.tail: _*).head()

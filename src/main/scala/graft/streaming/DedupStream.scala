@@ -16,10 +16,10 @@ import org.apache.spark.sql.types._
  * before paying to store/train on them.
  *
  * Scale shape:
- *  - the MinHash signature is computed PER ROW (lower → shingle → per-band
- *    min over one md5 digest's hex slices — identical expressions to
- *    `Dedup.minhashSig`, so streaming and batch bucket identically); no
- *    shuffle before the band explode;
+ *  - the MinHash signature is computed PER ROW by the batch operator's own
+ *    band buckets (`Dedup.md5SliceBuckets`: per-band min over one md5
+ *    digest's hex slices, in one codegen kernel), so streaming and batch
+ *    bucket identically; no shuffle before the band explode;
  *  - state is keyed by (band, bucket) and holds ONLY doc ids, capped at
  *    `maxBucket` ids per bucket (the batch operator's frequent-shingle
  *    premise: a bucket that popular carries no discriminating signal) — so
@@ -52,19 +52,13 @@ object DedupStream {
                     maxBucket: Int = 100,
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    require(perms >= 1 && perms <= 4,
-      s"perms must be 1..4 (a 32-hex md5 digest yields 4 8-char slices; got $perms)")
-    val sh = graft.operators.Dedup.shingles(graft.operators.Dedup.tokens(col("text")), ngram)
     val reader0 = spark.readStream.schema(docSchema)
     val reader = maxFilesPerTrigger.fold(reader0)(n => reader0.option("maxFilesPerTrigger", n))
-    val sigs = reader
-      .parquet(path)
-      .where(size(split(col("text"), " ")) >= ngram)
-      .select(col("doc_id") +: graft.operators.Dedup.minhashSig(sh, perms): _*)
-    // band is 0-BASED, matching the batch operator's posexplode numbering
-    // (Dedup.lshPairs) — stream and batch diagnostics join on band directly
-    val banded = sigs.select(col("doc_id"),
-      posexplode(array((1 to perms).map(p => col(s"m$p")): _*)).as(Seq("band", "bucket")))
+    // the batch operator's (id, band, bucket) rows — band 0-based, so stream
+    // and batch diagnostics join on band directly
+    val banded = graft.operators.Dedup.md5SliceBuckets(
+      reader.parquet(path).where(size(split(col("text"), " ")) >= ngram),
+      "doc_id", "text", perms, ngram)
       .as[(Long, Int, String)]
     banded
       .groupByKey { case (_, band, bucket) => (band, bucket) }

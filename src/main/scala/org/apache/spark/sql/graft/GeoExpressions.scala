@@ -1021,12 +1021,14 @@ object GeoFunctionsImpl {
     column(StPathLengthSphereExpr(expression(lons), expression(lats)))
   def st_convex_hull(xs: Column, ys: Column): Column =
     column(StConvexHullExpr(expression(xs), expression(ys)))
-  /** Bounded top-k aggregate by (d2, id) — map-side combine (see TopKAgg). */
+  /** Bounded top-k by (d2 asc, id asc) — topk_by with a constant score
+    * (see [[TopKByAgg.knnTopK]]). */
   def knn_topk(d2: Column, id: Column, k: Int): Column =
-    column(KnnTopKAgg(expression(d2), expression(id), k).toAggregateExpression())
-  /** Bounded ascending top-k of a long column — map-side combine (TopKAgg). */
+    column(TopKByAgg.knnTopK(expression(d2), expression(id), k))
+  /** Bounded ascending top-k of a long column — topk_by with a constant
+    * score (see [[TopKByAgg.longTopK]]). */
   def long_topk(v: Column, k: Int): Column =
-    column(LongTopKAgg(expression(v), k).toAggregateExpression())
+    column(TopKByAgg.longTopK(expression(v), k))
   /** Bounded top-k by (score desc, key asc) — map-side combine (TopKAgg). */
   def topk_by(score: Column, key: Column, k: Int): Column =
     column(TopKByAgg(expression(score), expression(key), None, k).toAggregateExpression())
@@ -1035,62 +1037,63 @@ object GeoFunctionsImpl {
     column(TopKByAgg(expression(score), expression(key), Some(expression(payload)), k)
       .toAggregateExpression())
 
+  /** Every SQL function of the engine as (name, builder): the one table
+    * both [[register]] and [[GraftExtensions]] install. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "hex_encode" -> (es => HexEncodeExpr(es(0), es(1), es(2))),
+    "z_encode" -> (es => ZEncodeExpr(es(0), es(1), es(2))),
+    "hilbert_encode" -> (es => HilbertEncodeExpr(es(0), es(1), es(2))),
+    "tile_of" -> (es => TileOfExpr(es(0), es(1), es(2))),
+    "st_covers_ring" -> (es => PipContainsExpr(es(0), es(1), es(2))),
+    "st_covers" -> (es => PipCoversExpr(es(0), es(1), es(2), es(3))),
+    "hex_cover" -> (es => HexCoverExpr(es(0), es(1))),
+    "hex_ring" -> (es => HexRingExpr(es(0), es(1), es(2), es(3))),
+    "z_cell_x" -> (es => ZCellXExpr(es(0))),
+    "z_cell_y" -> (es => ZCellYExpr(es(0))),
+    "tile_cover" -> (es => TileCoverExpr(es(0), es(1))),
+    "st_area" -> (es => StAreaExpr(es(0), es(1))),
+    "st_signed_area" -> (es => StSignedAreaExpr(es(0), es(1))),
+    "st_centroid" -> (es => StCentroidExpr(es(0), es(1))),
+    "st_perimeter" -> (es => StPerimeterExpr(es(0), es(1))),
+    "st_path_length" -> (es => StPathLengthExpr(es(0), es(1))),
+    "st_simplify_idx" -> (es => StSimplifyIdxExpr(es(0), es(1), es(2))),
+    "st_simplify_dp" -> (es => StSimplifyDpExpr(es(0), es(1), es(2))),
+    "idw_fold" -> (es => IdwFoldExpr(es(0), es(1))),
+    "st_dist2_ring" -> (es => StDist2RingExpr(es(0), es(1), es(2), es(3))),
+    "st_dist_sphere" -> (es => StDistSphereExpr(es(0), es(1), es(2), es(3))),
+    "st_path_length_sphere" -> (es => StPathLengthSphereExpr(es(0), es(1))),
+    "st_convex_hull" -> (es => StConvexHullExpr(es(0), es(1))),
+    "knn_topk" -> { es =>
+      require(es.length == 3, "knn_topk(d2, id, k) takes 3 arguments")
+      TopKByAgg.knnTopK(es(0), es(1), TopKByAgg.literalK("knn_topk", es(2)))
+    },
+    "long_topk" -> { es =>
+      require(es.length == 2, "long_topk(v, k) takes 2 arguments")
+      TopKByAgg.longTopK(es(0), TopKByAgg.literalK("long_topk", es(1)))
+    },
+    "topk_by" -> TopKByAgg.fromSql,
+    "freq_topk" -> FreqSketchAgg.fromSql,
+    "kll_quantiles" -> QuantileSketchAgg.fromSql,
+    "hll_count" -> HllSketchAgg.fromSql,
+    "bloom_build" -> BloomBuildAgg.fromSql,
+    "bloom_contains" -> (es => BloomContainsExpr(es(0), es(1))),
+    // vector + text kernels on the same SQL surface
+    "vec_dot" -> (es => DotExpr(es(0), es(1))),
+    "vec_cosine" -> (es => CosineExpr(es(0), es(1))),
+    "lang_id" -> (es => LangIdExpr(es(0))),
+    "shingle_make" -> (es => ShingleMakeExpr(es(0), es(1))),
+    "simhash64" -> (es => SimHashExpr(es(0))),
+    "minhash_bands" -> (es => MinHashBandsExpr(es(0), es(1), es(2), es(3))),
+    "minhash_bands_mp" -> (es => MinHashBandsMpExpr(es(0), es(1), es(2), es(3))),
+    "c4_clean" -> (es => C4CleanExpr(es(0), es(1))),
+    "norm_text" -> (es => NormTextExpr(es(0))),
+    "grid_rank" -> (es => GridRankExpr(es(0), es(1))))
+
   /** Register for SQL use (`SELECT hex_encode(x, y, 9) ...`). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("hex_encode", es => HexEncodeExpr(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("z_encode", es => ZEncodeExpr(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("hilbert_encode", es => HilbertEncodeExpr(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("tile_of", es => TileOfExpr(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("st_covers_ring", es => PipContainsExpr(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("st_covers", es => PipCoversExpr(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("hex_cover", es => HexCoverExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_area", es => StAreaExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_signed_area",
-      es => StSignedAreaExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_centroid", es => StCentroidExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_perimeter", es => StPerimeterExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_path_length",
-      es => StPathLengthExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_simplify_idx",
-      es => StSimplifyIdxExpr(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("st_simplify_dp",
-      es => StSimplifyDpExpr(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("idw_fold",
-      es => IdwFoldExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_dist2_ring",
-      es => StDist2RingExpr(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("st_dist_sphere",
-      es => StDistSphereExpr(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("st_path_length_sphere",
-      es => StPathLengthSphereExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_convex_hull",
-      es => StConvexHullExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("hex_ring", es => HexRingExpr(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("knn_topk", KnnTopKAgg.fromSql, "built-in")
-    reg.createOrReplaceTempFunction("long_topk", LongTopKAgg.fromSql, "built-in")
-    reg.createOrReplaceTempFunction("topk_by", TopKByAgg.fromSql, "built-in")
-    reg.createOrReplaceTempFunction("freq_topk", FreqSketchAgg.fromSql, "built-in")
-    reg.createOrReplaceTempFunction("kll_quantiles", QuantileSketchAgg.fromSql, "built-in")
-    reg.createOrReplaceTempFunction("hll_count", HllSketchAgg.fromSql, "built-in")
-    reg.createOrReplaceTempFunction("bloom_build", BloomBuildAgg.fromSql, "built-in")
-    reg.createOrReplaceTempFunction("bloom_contains",
-      es => BloomContainsExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("z_cell_x", es => ZCellXExpr(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("z_cell_y", es => ZCellYExpr(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("tile_cover", es => TileCoverExpr(es(0), es(1)), "built-in")
-    // vector + text kernels on the same SQL surface
-    reg.createOrReplaceTempFunction("vec_dot", es => DotExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_cosine", es => CosineExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("lang_id", es => LangIdExpr(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("shingle_make", es => ShingleMakeExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHashExpr(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      es => MinHashBandsExpr(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands_mp",
-      es => MinHashBandsMpExpr(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("c4_clean", es => C4CleanExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("norm_text", es => NormTextExpr(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("grid_rank", es => GridRankExpr(es(0), es(1)), "built-in")
+    sqlFunctions.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

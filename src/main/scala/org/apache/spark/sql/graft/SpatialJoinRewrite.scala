@@ -28,12 +28,9 @@ import graft.core.HexGrid
 object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   val Res = 11 // default hex resolution of the prejoin key (≈25 m edge)
-  /** Session conf: explicit resolution override for the declarative SQL path
-    * (the programmatic PipJoin API takes `res` directly). */
-  val ResConf = "spark.graft.pip.res"
-  /** Session conf: max estimated cover cells per polygon before the rule
-    * coarsens the resolution (envelope-stats-driven). */
-  val BudgetConf = "spark.graft.pip.coverBudget"
+  /** Max estimated cover cells per polygon before the rule coarsens the
+    * resolution (envelope-stats-driven). */
+  val CoverBudget = 256
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, Inner | Cross, Some(cond), hint)
@@ -58,47 +55,24 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /**
-   * Resolution for the cell prejoin. Priority:
-   *  1. explicit session conf `spark.graft.pip.res`;
-   *  2. envelope stats when the polygon side is statically known (a
-   *     LocalRelation — the common "small dimension of footprints" shape):
-   *     start from the building-scale default and COARSEN until the
-   *     estimated cover is ≤ `spark.graft.pip.coverBudget` cells per
-   *     polygon, so a continent-scale polygon gets a few hundred cover
-   *     cells instead of millions of 25 m cells;
-   *  3. the default (building-footprint scale).
-   * Any res gives correct rows (hex_cover is a superset at every res —
-   * CellGridSpec property); res only moves the filter/refine cost balance.
+   * Resolution for the cell prejoin. When the polygon side is statically
+   * known (a LocalRelation — the common "small dimension of footprints"
+   * shape), envelope stats start from the building-scale default and
+   * COARSEN until the estimated cover is ≤ [[CoverBudget]] cells per
+   * polygon, so a continent-scale polygon gets a few hundred cover cells
+   * instead of millions of 25 m cells; otherwise the default
+   * (building-footprint scale). The programmatic PipJoin API takes `res`
+   * directly. Any res gives correct rows (hex_cover is a superset at every
+   * res — CellGridSpec property); res only moves the filter/refine cost
+   * balance.
    */
   private def pickRes(ringExpr: Expression, polySide: LogicalPlan): Int =
-    conf.getConfString(ResConf, "").trim match {
-      case s if s.nonEmpty =>
-        // validate here with a clear message — a bare toInt would surface a
-        // NumberFormatException from deep inside Catalyst for every query in
-        // the session, and an out-of-range res is an invalid hex resolution
-        val r = try s.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$ResConf must be an integer hex resolution 0..${HexGrid.MaxRes}, got '$s'")
-        }
-        require(r >= 0 && r <= HexGrid.MaxRes,
-          s"$ResConf out of range 0..${HexGrid.MaxRes}: $r")
+    maxEnvelopeSpan(ringExpr, polySide) match {
+      case Some(span) =>
+        var r = Res
+        while (r > 0 && estCoverCells(span, r) > CoverBudget) r -= 1
         r
-      case _ =>
-        // validated like ResConf: a bare toInt would surface an opaque
-        // NumberFormatException from inside the optimizer for every query
-        val budgetStr = conf.getConfString(BudgetConf, "256").trim
-        val budget = try budgetStr.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$BudgetConf must be a positive integer cell budget, got '$budgetStr'")
-        }
-        require(budget > 0, s"$BudgetConf must be positive, got $budget")
-        maxEnvelopeSpan(ringExpr, polySide) match {
-          case Some(span) =>
-            var r = Res
-            while (r > 0 && estCoverCells(span, r) > budget) r -= 1
-            r
-          case None => Res
-        }
+      case None => Res
     }
 
   /** Estimated hex-cover cell count for a polygon with bbox span `s` at `res`
@@ -173,38 +147,13 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-  private def fn(name: String, builder: Seq[Expression] => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      new ExpressionInfo("org.apache.spark.sql.graft", name), builder)
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SpatialJoinRewrite)
-    e.injectFunction(fn("hex_encode", es => HexEncodeExpr(es(0), es(1), es(2))))
-    e.injectFunction(fn("z_encode", es => ZEncodeExpr(es(0), es(1), es(2))))
-    e.injectFunction(fn("tile_of", es => TileOfExpr(es(0), es(1), es(2))))
-    e.injectFunction(fn("st_covers_ring", es => PipContainsExpr(es(0), es(1), es(2))))
-    e.injectFunction(fn("st_covers", es => PipCoversExpr(es(0), es(1), es(2), es(3))))
-    e.injectFunction(fn("hex_cover", es => HexCoverExpr(es(0), es(1))))
-    e.injectFunction(fn("hex_ring", es => HexRingExpr(es(0), es(1), es(2), es(3))))
-    e.injectFunction(fn("knn_topk", KnnTopKAgg.fromSql))
-    e.injectFunction(fn("long_topk", LongTopKAgg.fromSql))
-    e.injectFunction(fn("freq_topk", FreqSketchAgg.fromSql))
-    e.injectFunction(fn("kll_quantiles", QuantileSketchAgg.fromSql))
-    e.injectFunction(fn("hll_count", HllSketchAgg.fromSql))
-    e.injectFunction(fn("bloom_build", BloomBuildAgg.fromSql))
-    e.injectFunction(fn("bloom_contains", es => BloomContainsExpr(es(0), es(1))))
-    e.injectFunction(fn("z_cell_x", es => ZCellXExpr(es(0))))
-    e.injectFunction(fn("z_cell_y", es => ZCellYExpr(es(0))))
-    e.injectFunction(fn("tile_cover", es => TileCoverExpr(es(0), es(1))))
-    e.injectFunction(fn("vec_dot", es => DotExpr(es(0), es(1))))
-    e.injectFunction(fn("vec_cosine", es => CosineExpr(es(0), es(1))))
-    e.injectFunction(fn("lang_id", es => LangIdExpr(es(0))))
-    e.injectFunction(fn("shingle_make", es => ShingleMakeExpr(es(0), es(1))))
-    e.injectFunction(fn("simhash64", es => SimHashExpr(es(0))))
-    e.injectFunction(fn("minhash_bands", es => MinHashBandsExpr(es(0), es(1), es(2), es(3))))
+    GeoFunctionsImpl.sqlFunctions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("org.apache.spark.sql.graft", name), builder))
+    }
   }
 }
 

@@ -284,7 +284,7 @@ case class SimHashExpr(child: Expression) extends UnaryExpression with ExpectsIn
 
 /**
  * Generalized banded MinHash kernel: b bands × r rows over seeded 64-bit
- * hashes, one pass over the shingles. The md5-slice form (Dedup.minhashSig)
+ * hashes, one pass over the shingles. The md5-slice form (md5_minhash_sig)
  * is capped at 4 single-permutation bands — too coarse a recall knob for
  * real corpora (the collision probability curve 1-(1-j^r)^b needs tunable
  * (b, r)); it stays as the ANSI-SQL/DuckDB-oracle-parity mode while this is

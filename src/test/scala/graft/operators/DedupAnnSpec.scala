@@ -32,6 +32,48 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(sig(lit(4)).head().getSeq[String](0).length === 4)
   }
 
+  /** Relational md5-slice MinHash signature — the oracle of the one-pass
+    * `md5_minhash_sig` kernel: per permutation p, the minimum over the
+    * shingles of hex chars (p-1)*8+1..p*8 of md5(shingle), as columns m1..mp
+    * (null when the doc has no shingle). */
+  private def minhashSig(sh: org.apache.spark.sql.Column, perms: Int): Seq[org.apache.spark.sql.Column] =
+    (1 to perms).map { p =>
+      array_min(transform(sh, s =>
+        substring(md5(s.cast("binary")), (p - 1) * 8 + 1, 8))).as(s"m$p")
+    }
+
+  test("md5_minhash_sig == relational minhashSig bit for bit (short, spaced, upper-case, non-ASCII, null docs)") {
+    import org.apache.spark.sql.graft.TextFunctionsImpl.md5_minhash_sig
+    val rnd = new scala.util.Random(20261019L)
+    val words = Array("alpha", "Bravo", "CHARLIE", "delta", "Échelle", "straße", "ÅNGSTRÖM",
+      "日本語", "Ωμέγα", "ΣΟΦΟΣ", "naïve", "x", "Zulu", "el", "niño", "Ünïcödé", "kat")
+    val docs = (0 until 1200).map { i =>
+      val text =
+        if (i % 101 == 0) null
+        else {
+          val n = rnd.nextInt(9) // 0..8 tokens: a quarter or so have fewer than 3
+          val sep = if (rnd.nextInt(6) == 0) "  " else " "
+          (0 until n).map(_ => words(rnd.nextInt(words.length))).mkString(sep)
+        }
+      (i.toLong, text)
+    }.toDF("doc_id", "text").repartition(4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Option[String], Option[String], Option[String], Option[String])]
+        .collect().toSeq.sortBy(_._1)
+    val oracle = rows(docs.select(
+      col("doc_id") +: minhashSig(Dedup.shingles(Dedup.tokens(col("text")), 3), 4): _*))
+    // both cases the kernel must keep: docs with no shingle and null docs
+    assert(oracle.count(r => r._2.isEmpty) > 100 && oracle.count(_._2.nonEmpty) > 700)
+    val kernel = docs.select(col("doc_id"), md5_minhash_sig(col("text"), lit(3), lit(4)).as("sig"))
+      .as[(Long, Option[Seq[String]])].collect().toSeq.sortBy(_._1)
+      .map { case (id, sig) =>
+        val s = sig.getOrElse(Nil).lift
+        (id, s(0), s(1), s(2), s(3))
+      }
+    assert(kernel === oracle)
+    assert(rows(Dedup.minhash(docs, perms = 4)) === oracle)
+  }
+
   test("crossSourceDupMatrix: unordered source pairs, diagonal = within-source, totals match") {
     val d = Seq(
       (1L, "alpha bravo charlie delta echo", "beta"),
@@ -554,10 +596,10 @@ class DedupAnnSpec extends AnyFunSuite {
     // force the DISTRIBUTED star path (test graphs sit far below the
     // small-graph driver-fallback threshold) so the round bounds below
     // exercise the star iteration, not the union-find fast path
-    spark.conf.set("spark.graft.cc.smallGraphMaxEdges", "0")
+    spark.conf.set("spark.graft.graph.smallGraphMaxEdges", "0")
     val (labels, rounds) = try
       Dedup.connectedComponentsWithRounds(pairs.toDF("a", "b"))
-    finally spark.conf.unset("spark.graft.cc.smallGraphMaxEdges")
+    finally spark.conf.unset("spark.graft.graph.smallGraphMaxEdges")
     val got = labels.as[(Long, Long)].collect().toMap
     val want = Dedup.bruteComponents(pairs)
     assert(got === want)
@@ -581,14 +623,14 @@ class DedupAnnSpec extends AnyFunSuite {
     // the default run above took the skip path (test graphs are far below
     // 2^22 edges); threshold 0 forces the always-distinct path
     spark.conf.set("spark.graft.cc.interDistinctMinEdges", "0")
-    spark.conf.set("spark.graft.cc.smallGraphMaxEdges", "0")
+    spark.conf.set("spark.graft.graph.smallGraphMaxEdges", "0")
     try {
       val (labels2, rounds2) = Dedup.connectedComponentsWithRounds(pairs.toDF("a", "b"))
       assert(labels2.as[(Long, Long)].collect().toMap === want)
       assert(rounds2 <= 12, s"always-distinct star CC took $rounds2 rounds")
     } finally {
       spark.conf.unset("spark.graft.cc.interDistinctMinEdges")
-      spark.conf.unset("spark.graft.cc.smallGraphMaxEdges")
+      spark.conf.unset("spark.graft.graph.smallGraphMaxEdges")
     }
   }
 

@@ -215,9 +215,9 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("tile top-k (q13) is a bounded aggregate — no Window, no per-tile Sort") {
     // "top-k images per tile" is the north-star tiling stage; the bounded
-    // long_topk aggregate ships 2-entry buffers (map-side combine), where
-    // the row_number() window form (kept as the DuckDB oracle twin) must
-    // shuffle + sort every point row
+    // long_topk aggregate (topk_by with a constant score) ships 2-entry
+    // buffers (map-side combine), where the row_number() window form (kept
+    // as the DuckDB oracle twin) must shuffle + sort every point row
     val q = graft.SparkEntry.queries("q13_tile_topk")(spark, sf)
     q.collect()
     val plan = q.queryExecution.executedPlan.toString
@@ -226,8 +226,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // prefix ("+- Sort ["), or inside a codegen span ("*(2) Sort [")
     assert(!plan.linesIterator.exists(_.matches(""".*(\+- |\*\(\d+\) |^)Sort \[.*""")),
       s"q13 must not sort point rows:\n$plan")
-    assert(plan.contains("ObjectHashAggregate") && plan.contains("partial_long_topk"),
-      s"q13 should partial-aggregate long_topk buffers map-side:\n$plan")
+    assert(plan.contains("ObjectHashAggregate") && plan.contains("partial_topk_by"),
+      s"q13 should partial-aggregate long_topk's topk_by buffers map-side:\n$plan")
   }
 
   test("keep-best-per-cluster (q37) and tfidf (g8) are bounded aggregates — no Window, no Sort") {

@@ -126,19 +126,6 @@ class SpatialRewriteSpec extends AnyFunSuite {
       Set(("in1", "country"), ("in2", "country")))
   }
 
-  test("spark.graft.pip.res conf overrides the rewrite resolution") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
-    spark.conf.set("spark.graft.pip.res", "9")
-    try {
-      val q = naiveJoin
-      val opt = q.queryExecution.optimizedPlan.toString
-      assert("hex_cover\\([^,]+, (\\d+)\\)".r.findFirstMatchIn(opt)
-        .exists(_.group(1).toInt == 9), s"conf res must win:\n$opt")
-      assert(q.as[(String, String)].collect().toSet ===
-        PipJoin.bruteForce(points, fps))
-    } finally spark.conf.unset("spark.graft.pip.res")
-  }
-
   test("vector/text/tile kernels are callable from the SQL surface") {
     graft.functions.GeoFunctions.register(spark)
     val r = spark.sql(
@@ -188,6 +175,34 @@ class SpatialRewriteSpec extends AnyFunSuite {
         s"injected optimizer rule must fire:\n$opt")
       assert(q.as[(String, String)].collect().toSet ===
         PipJoin.bruteForce(points.take(200), fps))
+    } finally {
+      old.foreach { s => SparkSession.setActiveSession(s); SparkSession.setDefaultSession(s) }
+    }
+  }
+
+  test("extension-only session resolves every function of the SQL table") {
+    import org.apache.spark.sql.SparkSession
+    val names = org.apache.spark.sql.graft.GeoFunctionsImpl.sqlFunctions.map(_._1)
+    assert(names.size === 41 && names.distinct.size === names.size)
+    val old = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .master("local[4]")
+        .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
+        .getOrCreate()
+      val missing = names.filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty, s"functions the extension did not inject: $missing")
+      // aggregates built through the table resolve in SQL too
+      val r = s2.sql(
+        """SELECT long_topk(v, 2) AS l, knn_topk(CAST(v AS DOUBLE), CAST(v AS STRING), 1) AS n,
+          |       topk_by(CAST(v AS DOUBLE), v, 1) AS t, st_area(array(0D, 2D, 2D), array(0D, 0D, 2D)) AS a
+          |FROM VALUES (3L), (1L), (2L) AS t(v)""".stripMargin).head()
+      assert(r.getSeq[org.apache.spark.sql.Row](0).map(_.getLong(0)) === Seq(1L, 2L))
+      assert(r.getSeq[org.apache.spark.sql.Row](1).map(_.getString(0)) === Seq("1"))
+      assert(r.getSeq[org.apache.spark.sql.Row](2).map(_.getLong(0)) === Seq(3L))
+      assert(r.getDouble(3) === 2.0)
     } finally {
       old.foreach { s => SparkSession.setActiveSession(s); SparkSession.setDefaultSession(s) }
     }

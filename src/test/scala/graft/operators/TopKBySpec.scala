@@ -156,6 +156,67 @@ class TopKBySpec extends AnyFunSuite {
     assert(got === Set((1L, "a", 1), (2L, "z", 1)))
   }
 
+  test("long_topk == row_number window over non-null v (duplicates, nulls, k > group), Column and SQL") {
+    // 30 groups of 1..30 rows: values repeat inside a group, every 9th is
+    // null, and k = 12 exceeds the smaller groups
+    val rows = spark.range(465).select(
+      (col("id") % 30).as("grp"),
+      when(col("id") % 9 === 4, lit(null).cast("long"))
+        .otherwise((col("id") * 7) % 11).as("v"))
+      .where(col("id") < (col("id") % 30 + 1) * 15)
+      .repartition(6)
+    val w = Window.partitionBy("grp").orderBy(col("v"))
+    def want(k: Int) = rows.where(col("v").isNotNull)
+      .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+      .as[(Long, Long, Int)].collect().toSeq.sorted
+    for (k <- Seq(1, 3, 12)) {
+      val got = rows.groupBy("grp")
+        .agg(GeoFunctionsImpl.long_topk(col("v"), k).as("top"))
+        .select(col("grp"), explode(col("top")).as("e"))
+        .select(col("grp"), col("e.v"), col("e.rn"))
+        .as[(Long, Long, Int)].collect().toSeq.sorted
+      assert(got === want(k), s"k=$k")
+    }
+    val sizes = rows.where(col("v").isNotNull).groupBy("grp").count()
+      .as[(Long, Long)].collect().map(_._2)
+    assert(sizes.exists(_ < 12) && sizes.exists(_ > 12), "k must straddle the group sizes")
+    GeoFunctionsImpl.register(spark)
+    rows.createOrReplaceTempView("long_topk_in")
+    val sqlGot = spark.sql(
+      """SELECT grp, e.v, e.rn
+        |FROM (SELECT grp, long_topk(v, 12) AS top FROM long_topk_in GROUP BY grp)
+        |LATERAL VIEW explode(top) t AS e""".stripMargin)
+      .as[(Long, Long, Int)].collect().toSeq.sorted
+    assert(sqlGot === want(12))
+  }
+
+  test("knn_topk skips null d2/id rows and keeps target_id: string, d2: double, rnk: int") {
+    import org.apache.spark.sql.types._
+    val rows = Seq(
+      (1L, Some("a"), Some(3.0)), (1L, Some("b"), None), (1L, None, Some(0.5)),
+      (1L, Some("c"), Some(1.0)), (2L, None, None), (3L, Some("z"), Some(2.0)))
+      .toDF("probe", "tid", "d2").repartition(3)
+    val out = rows.groupBy("probe")
+      .agg(GeoFunctionsImpl.knn_topk(col("d2"), col("tid"), 5).as("nn"))
+    def fields(t: DataType) = t match {
+      case ArrayType(s: StructType, _) => s.fields.map(f => (f.name, f.dataType)).toSeq
+      case other => fail(s"knn_topk must return an array of structs, got $other")
+    }
+    val schema = Seq(("target_id", StringType), ("d2", DoubleType), ("rnk", IntegerType))
+    assert(fields(out.schema("nn").dataType) === schema)
+    val got = out.select(col("probe"), explode(col("nn")).as("m"))
+      .select(col("probe"), col("m.target_id"), col("m.d2"), col("m.rnk"))
+      .as[(Long, String, Double, Int)].collect().toSet
+    assert(got === Set((1L, "c", 1.0, 1), (1L, "a", 3.0, 2), (3L, "z", 2.0, 1)))
+    // a probe whose rows all carry a null d2 or id keeps an empty array
+    assert(out.where(col("probe") === 2L).select(size(col("nn"))).as[Int].head() === 0)
+    GeoFunctionsImpl.register(spark)
+    rows.createOrReplaceTempView("knn_topk_null_in")
+    val sql = spark.sql(
+      "SELECT probe, knn_topk(d2, tid, 5) AS nn FROM knn_topk_null_in GROUP BY probe")
+    assert(fields(sql.schema("nn").dataType) === schema)
+  }
+
   private implicit class MapOps(rows: Array[(Long, String, Double)]) {
     def toMap2: Map[Long, (String, Double)] = rows.map(r => r._1 -> (r._2, r._3)).toMap
   }
