@@ -39,6 +39,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
  * calls ([[sharedRows]]): a deterministic plan over in-memory
  * `LocalRelation`s. A file- or range-backed Dataset is collected afresh on
  * every call.
+ *
+ * The SQL `st_covers` join over a local polygon side
+ * (`org.apache.spark.sql.graft.SpatialJoinRewrite`) is not memoized: the
+ * optimizer re-materializes the view's rows on every query, so no input
+ * object outlives the query to bound an entry, and it builds and
+ * broadcasts a [[PipIndex]] per query.
  */
 private[graft] object PlanIndex {
 

@@ -3,8 +3,14 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.OptionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * IceLite — a minimal Iceberg-shaped table format (SURVEY.md §7.1 `tables/`):
@@ -346,15 +352,38 @@ object IceLite {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Read the committed table back (partition col lives in the data files).
-    * Runs [[compactRecover]] first, so a compaction that crashed inside its
-    * swap window (live dir parked, rewrite not yet moved in) is healed
-    * before any rows are served — without this, the hidden parked dir would
-    * make the table silently MISSING that partition for every reader. */
+  /** Read the committed table back (partition col lives in the data files):
+    * [[readVersion]] of the current snapshot, so a partition dir that a
+    * crashed [[writeResumable]] moved into `data/` but never committed is not
+    * served. Runs [[compactRecover]] first, so a compaction that crashed
+    * inside its swap window (live dir parked, rewrite not yet moved in) is
+    * healed before any rows are served — without this, the hidden parked dir
+    * would make the table silently MISSING that partition for every reader.
+    * Fails, naming the table, when it has no commit. */
   def read(spark: SparkSession, table: String): DataFrame = {
-    compactRecover(table)
-    spark.read.option("recursiveFileLookup", "true").parquet(s"$table/data")
+    val version = currentSnapshot(table).version
+    require(version >= 1, s"IceLite: table '$table' has no committed snapshot")
+    readVersion(spark, table, version)
   }
+
+  /** The schema Spark wrote into the footer of the first data file under
+    * `dirs` (the `org.apache.spark.sql.parquet.row.metadata` key), read on
+    * the driver; None when no file carries it. */
+  private def footerSchema(spark: SparkSession, dirs: Seq[String]): Option[StructType] = {
+    val file = dirs.iterator.flatMap { d =>
+      val s = Files.list(Paths.get(d))
+      try s.filter(_.getFileName.toString.endsWith(".parquet")).sorted().findFirst().toScala
+      finally s.close()
+    }.nextOption()
+    file.flatMap { f =>
+      val in = HadoopInputFile.fromPath(new HPath(f.toUri), spark.sparkContext.hadoopConfiguration)
+      val reader = ParquetFileReader.open(in)
+      try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      finally reader.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /**
    * Time travel: read the table AS OF snapshot `version`. Valid because
@@ -373,7 +402,8 @@ object IceLite {
         s"(current version: ${currentSnapshot(table).version}; see expireVersions)")
     val snap = readSnapshot(table, version)
     val dirs = snap.partitions.map(p => s"$table/data/${escapePart(p.partition)}")
-    spark.read.parquet(dirs: _*)
+    // the writer's schema from a footer: no schema-inference job
+    footerSchema(spark, dirs).fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
   }
 
   /**

@@ -237,14 +237,18 @@ private[graft] object BroadcastIndex {
  * Fully-codegen PIP match: the polygon index ships once per executor as a
  * broadcast ([[BroadcastIndex]]), the generated code calls
  * `index.matches(x, y)` directly — no join operator, no shuffle, zero
- * allocation on the miss path. This is the engine's one PIP join path
- * ([[graft.operators.PipJoin.auto]]) at every polygon-side size.
+ * allocation on the miss path. This is the engine's one PIP kernel: the
+ * PIP join ([[graft.operators.PipJoin.auto]]) at every polygon-side size,
+ * and the SQL `st_covers` join over a local polygon side
+ * ([[SpatialJoinRewrite]]). Its elements are the covering polygons'
+ * payloads: feature ids, or the SQL plan's polygon columns as a struct
+ * ([[graft.operators.PipIndex.payloadType]]).
  */
 case class PipMatchesExpr(left: Expression, right: Expression,
                           bc: Broadcast[graft.operators.PipIndex])
     extends BinaryExpression with ExpectsInputTypes {
   @transient private lazy val index = bc.value
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(index.payloadType, containsNull = false)
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType)
   override def nullSafeEval(x: Any, y: Any): Any =
     index.matches(x.asInstanceOf[Double], y.asInstanceOf[Double])

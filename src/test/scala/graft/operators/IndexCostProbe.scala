@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.{GraftExtensions, SpatialJoinRewrite}
 
 import graft.TestSpark
 import graft.core.Tiles
+import graft.model.Footprint
 
 /**
  * Layer-by-layer cost of the four plan indexes on PlanIndexSpec's
@@ -31,7 +35,12 @@ import graft.core.Tiles
  * live, divided by five; the index inputs are collected before the first
  * reading. The broadcast
  * counts include one task-binary broadcast per Spark stage: a kernel under
- * `explode`/`inline` runs one job even on a local probe side.
+ * `explode`/`inline` runs one job on a local probe side in this session,
+ * which has no `LocalKernelFold`.
+ *
+ * A last line times the SQL `st_covers` join over a local polygon view in
+ * an extension session (`SpatialJoinRewrite`'s kernel route), which builds
+ * and broadcasts a new index on every query.
  */
 object IndexCostProbe {
 
@@ -117,7 +126,48 @@ object IndexCostProbe {
       println(f"[index-cost] ${k.name}%-15s fresh_p50_ms=${fresh._1}%.1f hit_p50_ms=${hit._1}%.1f " +
         s"bc_fresh=${fresh._2} bc_hit=${hit._2} $size")
     }
+    println(sqlRewrite(spark, city, () => probes().collect().map(r => (r.getString(0), r.getDouble(1),
+      r.getDouble(2))).toSeq, reps))
     spark.stop()
+  }
+
+  /** The SQL `st_covers` join over a local polygon view: the rewrite builds
+    * and broadcasts a new index on every query (no memo), which its
+    * kernel then probes on the driver. Medians of `reps` of each step:
+    * `build_ms` (`SpatialJoinRewrite.polygonIndex` from the view's rows),
+    * `bc_ms` and `bc_mb` (`SparkContext.broadcast` of it and its
+    * Java-serialized size), `lazy_ms` (its first probe), and `query_p50_ms`
+    * with the Spark `jobs` of one whole 1000-probe query. */
+  private def sqlRewrite(spark: SparkSession, city: Seq[Footprint],
+                         probes: () => Seq[(String, Double, Double)], reps: Int): String = {
+    val ext = spark.newSession()
+    GraftExtensions.enable(ext)
+    import ext.implicits._
+    ext.createDataset(city).select(col("feature_id").as("fid"), col("ring"), col("holes"))
+      .createOrReplaceTempView("cost_bldg")
+    val lr = ext.table("cost_bldg").queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
+    val Seq(fid, ring, holes) = lr.output
+    def build() = SpatialJoinRewrite.polygonIndex(ring, holes, lr, Seq(fid))
+    def median(ms: Seq[Double]) = ms.sorted.apply(ms.size / 2)
+    def timed[T](f: => T): (T, Double) = { val t0 = System.nanoTime(); val v = f; (v, (System.nanoTime() - t0) / 1e6) }
+    val steps = (0 until reps + 3).map { _ =>
+      val (index, buildMs) = timed(build())
+      val (bc, bcMs) = timed(ext.sparkContext.broadcast(index))
+      val (_, lazyMs) = timed(index.matches(0.0, 0.0))
+      bc.destroy()
+      (buildMs, bcMs, lazyMs)
+    }.drop(3)
+    val queries = (0 until reps + 3).map { _ =>
+      probes().toDF("probe_id", "x", "y").createOrReplaceTempView("cost_probes")
+      val q = ext.sql("SELECT p.probe_id, b.fid FROM cost_probes p, cost_bldg b " +
+        "WHERE st_covers(b.ring, b.holes, p.x, p.y)")
+      val ((_, jobs), ms) = timed(TestSpark.jobsRunBy(q.collect()))
+      (ms, jobs)
+    }.drop(3)
+    f"[index-cost] ${"sql st_covers"}%-15s query_p50_ms=${median(queries.map(_._1))}%.1f " +
+      f"jobs=${queries.map(_._2).max} build_ms=${median(steps.map(_._1))}%.1f " +
+      f"bc_ms=${median(steps.map(_._2))}%.1f bc_mb=${serializedMb(build())}%.2f " +
+      f"lazy_ms=${median(steps.map(_._3))}%.1f"
   }
 
   private def usedMb(): Double = {

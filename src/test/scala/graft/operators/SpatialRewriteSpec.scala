@@ -1,13 +1,28 @@
 package graft.operators
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.functions.GeoFunctions
 import graft.sources.{CityGmlReader, ImageGen}
 
+/**
+ * The SQL `st_covers` join on its two routes: the cell equi-join over a
+ * file-backed (here parquet) polygon side, and the `pip_matches` kernel over
+ * a local one, which [[org.apache.spark.sql.graft.LocalKernelFold]] then
+ * evaluates on the driver when the points are local too. The rules run in
+ * a session of their own, so they never reach the shared test session.
+ */
 class SpatialRewriteSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+  lazy val spark = {
+    val s = TestSpark.spark.newSession()
+    org.apache.spark.sql.graft.GraftExtensions.enable(s)
+    s
+  }
   import spark.implicits._
 
   lazy val fps = CityGmlReader.toFootprints(
@@ -16,17 +31,35 @@ class SpatialRewriteSpec extends AnyFunSuite {
   lazy val points: Seq[(String, Double, Double)] =
     (0L until 2000L).map { i => val (x, y) = ImageGen.geotag(i); (f"img_$i%010d", x, y) }
 
-  def naiveJoin = {
-    val pts = points.toDF("image_id", "x", "y")
-    val polys = spark.createDataset(fps).select("feature_id", "ring", "holes")
+  private def parquet(df: DataFrame, name: String): DataFrame = {
+    val dir = Files.createTempDirectory("rewrite").resolve(name).toString
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** The polygons as driver rows: a LocalRelation after optimization. */
+  def localPolys: DataFrame = spark.createDataset(fps).select("feature_id", "ring", "holes")
+  /** The same polygons read from parquet. */
+  lazy val filePolys: DataFrame = parquet(localPolys, "polys")
+  def localPts: DataFrame = points.toDF("image_id", "x", "y")
+  lazy val filePts: DataFrame = parquet(localPts, "pts")
+
+  def naiveJoin(pts: DataFrame, polys: DataFrame): DataFrame =
     pts.crossJoin(polys)
       .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y")))
       .select("image_id", "feature_id")
+
+  private def optimized(q: DataFrame): String = q.queryExecution.optimizedPlan.toString
+
+  /** The kernel route: pip_matches over the points, no join and no cover explode. */
+  private def assertKernel(q: DataFrame): Unit = {
+    val opt = optimized(q)
+    assert(opt.contains("pip_matches") && !opt.contains("Join") && !opt.contains("hex_cover"),
+      s"expected the pip_matches kernel:\n$opt")
   }
 
   test("SpatialJoinRewrite: naive cross join + st_covers becomes a cell equi-join") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
-    val q = naiveJoin
+    val q = naiveJoin(localPts, filePolys)
     val optimized = q.queryExecution.optimizedPlan.toString
     assert(optimized.contains("hex_encode"), s"expected cell prejoin:\n$optimized")
     assert(optimized.contains("hex_cover"), s"expected polygon cover explode:\n$optimized")
@@ -41,23 +74,32 @@ class SpatialRewriteSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
+  test("over a local polygon side the join is the pip_matches kernel; local points run no job") {
+    val want = PipJoin.bruteForce(points, fps)
+    val onFile = naiveJoin(filePts, localPolys)
+    assertKernel(onFile)
+    assert(onFile.as[(String, String)].collect().toSet === want)
+    val local = naiveJoin(localPts, localPolys)
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], optimized(local))
+    val (rows, jobs) = TestSpark.jobsRunBy(local.as[(String, String)].collect())
+    assert(jobs === 0 && rows.toSet === want)
+  }
+
   test("rewrite fires regardless of which side is the point side") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
-    val pts = points.toDF("image_id", "x", "y")
-    val polys = spark.createDataset(fps).select("feature_id", "ring", "holes")
-    val q = polys.crossJoin(pts) // polygons LEFT, points RIGHT
-      .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y")))
-      .select("image_id", "feature_id")
-    assert(q.queryExecution.optimizedPlan.toString.contains("hex_encode"))
-    val got = q.as[(String, String)].collect().toSet
-    assert(got === PipJoin.bruteForce(points, fps))
+    Seq(filePolys -> "hex_encode", localPolys -> "pip_matches").foreach { case (polys, route) =>
+      val q = polys.crossJoin(filePts) // polygons LEFT, points RIGHT
+        .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y")))
+        .select("image_id", "feature_id")
+      assert(optimized(q).contains(route), optimized(q))
+      val got = q.as[(String, String)].collect().toSet
+      assert(got === PipJoin.bruteForce(points, fps))
+    }
   }
 
   test("pure SQL surface: JOIN ... ON st_covers(...) gets the filter-refine plan") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
-    points.toDF("image_id", "x", "y").createOrReplaceTempView("sql_pts")
-    spark.createDataset(fps).select("feature_id", "ring", "holes")
-      .createOrReplaceTempView("sql_polys")
+    localPts.createOrReplaceTempView("sql_pts")
+    filePolys.createOrReplaceTempView("sql_polys")
+    localPolys.createOrReplaceTempView("sql_local_polys")
     val q = spark.sql(
       """SELECT image_id, feature_id
          FROM sql_pts JOIN sql_polys ON st_covers(ring, holes, x, y)""")
@@ -65,63 +107,67 @@ class SpatialRewriteSpec extends AnyFunSuite {
       "rewrite must fire on SQL-authored joins too")
     val got = q.as[(String, String)].collect().toSet
     assert(got === PipJoin.bruteForce(points, fps))
+    val local = spark.sql(
+      """SELECT image_id, feature_id
+         FROM sql_pts JOIN sql_local_polys ON st_covers(ring, holes, x, y)""")
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], optimized(local))
+    assert(local.as[(String, String)].collect().toSet === got)
   }
 
   test("st_covers under OR is NOT rewritten and keeps rows from the other disjunct") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
-    val pts = points.toDF("image_id", "x", "y")
-    val polys = spark.createDataset(fps).select("feature_id", "ring", "holes")
     // every pair satisfies the second disjunct for image ids ending in "7";
     // conjoining the cell equi-join onto the whole condition would drop them
-    val q = pts.crossJoin(polys)
-      .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y"))
-        || col("image_id").endsWith("7"))
-      .select("image_id", "feature_id")
-    assert(!q.queryExecution.optimizedPlan.toString.contains("hex_encode"),
-      "a PipCoversExpr under OR must not trigger the conjunctive rewrite")
-    val got = q.as[(String, String)].collect().toSet
-    val pip = PipJoin.bruteForce(points, fps)
-    val byOther = for {
-      (id, _, _) <- points.toSet if id.endsWith("7"); f <- fps
-    } yield (id, f.feature_id)
-    assert(got === (pip ++ byOther))
+    Seq(filePolys, localPolys).foreach { polys =>
+      val q = filePts.crossJoin(polys)
+        .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y"))
+          || col("image_id").endsWith("7"))
+        .select("image_id", "feature_id")
+      assert(!optimized(q).contains("hex_encode") && !optimized(q).contains("pip_matches"),
+        "a PipCoversExpr under OR must not trigger the conjunctive rewrite")
+      val got = q.as[(String, String)].collect().toSet
+      val pip = PipJoin.bruteForce(points, fps)
+      val byOther = for {
+        (id, _, _) <- points.toSet if id.endsWith("7"); f <- fps
+      } yield (id, f.feature_id)
+      assert(got === (pip ++ byOther))
+    }
   }
 
   test("st_covers as one of several AND conjuncts still rewrites") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
-    val pts = points.toDF("image_id", "x", "y")
-    val polys = spark.createDataset(fps).select("feature_id", "ring", "holes")
-    val q = pts.crossJoin(polys)
-      .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y"))
-        && col("image_id").endsWith("0"))
-      .select("image_id", "feature_id")
-    assert(q.queryExecution.optimizedPlan.toString.contains("hex_encode"),
-      "a top-level AND conjunct must still trigger the rewrite")
-    val got = q.as[(String, String)].collect().toSet
-    assert(got === PipJoin.bruteForce(points, fps).filter(_._1.endsWith("0")))
+    Seq(filePolys -> "hex_encode", localPolys -> "pip_matches").foreach { case (polys, route) =>
+      val q = filePts.crossJoin(polys)
+        .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y"))
+          && col("image_id").endsWith("0"))
+        .select("image_id", "feature_id")
+      assert(optimized(q).contains(route),
+        "a top-level AND conjunct must still trigger the rewrite")
+      val got = q.as[(String, String)].collect().toSet
+      assert(got === PipJoin.bruteForce(points, fps).filter(_._1.endsWith("0")))
+    }
   }
 
   test("continent-scale polygon: stats-driven res coarsens; rows still match brute force") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
     // ~400 km square polygon + a handful of points inside/outside; at the
-    // building-scale default (res 11, ~25 m edge) the cover explode would be
-    // hundreds of millions of cells — the rule must coarsen from envelope stats
+    // building-scale default (res 11, ~25 m edge) its cover would be
+    // hundreds of millions of cells — the rule must coarsen the index's res
+    // from the local polygon side's envelope stats
     val big = graft.model.Footprint("country", "Query", 0,
       Seq(graft.model.XY(0, 0), graft.model.XY(400000, 0),
         graft.model.XY(400000, 400000), graft.model.XY(0, 400000)),
       Seq.empty, graft.model.Env6(0, 0, 0, 400000, 400000, 0),
       graft.model.XY(200000, 200000), Map.empty)
-    val pts = Seq(("in1", 1000.0, 1000.0), ("in2", 399000.0, 350000.0),
-      ("out1", 500000.0, 10.0), ("out2", -5.0, 3.0)).toDF("image_id", "x", "y")
+    val pts = parquet(Seq(("in1", 1000.0, 1000.0), ("in2", 399000.0, 350000.0),
+      ("out1", 500000.0, 10.0), ("out2", -5.0, 3.0)).toDF("image_id", "x", "y"), "continent")
     val polys = spark.createDataset(Seq(big)).select("feature_id", "ring", "holes")
     val q = pts.crossJoin(polys)
       .where(GeoFunctions.st_covers(col("ring"), col("holes"), col("x"), col("y")))
       .select("image_id", "feature_id")
-    val opt = q.queryExecution.optimizedPlan.toString
-    val resUsed = "hex_cover\\([^,]+, (\\d+)\\)".r.findFirstMatchIn(opt)
-      .map(_.group(1).toInt)
-    assert(resUsed.exists(_ < org.apache.spark.sql.graft.SpatialJoinRewrite.Res),
-      s"a 400 km polygon must pick a coarser res than the default:\n$opt")
+    assertKernel(q)
+    val resUsed = q.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: org.apache.spark.sql.graft.PipMatchesExpr => e.bc.value.res
+    }))
+    assert(resUsed.size === 1 && resUsed.head < org.apache.spark.sql.graft.SpatialJoinRewrite.Res,
+      s"a 400 km polygon must pick a coarser res than the default: $resUsed")
     assert(q.as[(String, String)].collect().toSet ===
       Set(("in1", "country"), ("in2", "country")))
   }
@@ -161,20 +207,19 @@ class SpatialRewriteSpec extends AnyFunSuite {
         "SELECT hex_encode(1.0D, 2.0D, 9) AS c, vec_cosine(array(1.0D), array(1.0D)) AS v").head()
       assert(r.getLong(0) === graft.core.HexGrid.encode(1.0, 2.0, 9))
       assert(r.getDouble(1) === 1.0)
-      // the spatial-join rewrite is active in SQL too
+      // the spatial-join rewrite and the kernel fold are active in SQL too:
+      // over local points and polygons the query is one LocalRelation and
+      // runs no job
       import s2.implicits._
       points.take(200).toDF("image_id", "x", "y").createOrReplaceTempView("ext_pts")
       s2.createDataset(fps).select("feature_id", "ring", "holes")
         .createOrReplaceTempView("ext_polys")
       val q = s2.sql(
         "SELECT image_id, feature_id FROM ext_pts JOIN ext_polys ON st_covers(ring, holes, x, y)")
-      // (hex_encode over the literal local relation constant-folds away;
-      // the injected cell prejoin attributes prove the rule fired)
-      val opt = q.queryExecution.optimizedPlan.toString
-      assert(opt.contains("__cell_pt") && opt.contains("hex_cover"),
-        s"injected optimizer rule must fire:\n$opt")
-      assert(q.as[(String, String)].collect().toSet ===
-        PipJoin.bruteForce(points.take(200), fps))
+      val opt = q.queryExecution.optimizedPlan
+      assert(opt.isInstanceOf[LocalRelation], s"injected optimizer rules must fire:\n$opt")
+      val (rows, jobs) = TestSpark.jobsRunBy(q.as[(String, String)].collect())
+      assert(jobs === 0 && rows.toSet === PipJoin.bruteForce(points.take(200), fps))
     } finally {
       old.foreach { s => SparkSession.setActiveSession(s); SparkSession.setDefaultSession(s) }
     }
@@ -209,7 +254,6 @@ class SpatialRewriteSpec extends AnyFunSuite {
   }
 
   test("rewrite leaves non-spatial joins untouched") {
-    org.apache.spark.sql.graft.GraftExtensions.enable(spark)
     val a = Seq((1, "x"), (2, "y")).toDF("id", "v")
     val b = Seq((1, "z")).toDF("id2", "w")
     val q = a.join(b, col("id") === col("id2"))
