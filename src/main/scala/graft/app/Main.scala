@@ -94,12 +94,14 @@ object Main {
       // J1 XLink resolution + audit
       if (hrefDs.head(1).nonEmpty) {
         val resolved = XLinkResolve.resolve(hrefDs.toDF(), idDs.toDF())
-        resolved.write.mode("overwrite").parquet(s"$out/xlinks")
-        XLinkResolve.audit(resolved).write.mode("overwrite").parquet(s"$out/xlink_audit")
+        resolved.write.mode("overwrite").options(LocalFs.writeOptions).parquet(s"$out/xlinks")
+        XLinkResolve.audit(resolved).write.mode("overwrite").options(LocalFs.writeOptions)
+          .parquet(s"$out/xlink_audit")
       }
       // A2 census + S9 diagnostics (PNG render is a bounded driver-side
       // diagnostic over building rows only)
-      Census.byType(fpDs).write.mode("overwrite").parquet(s"$out/census")
+      Census.byType(fpDs).write.mode("overwrite").options(LocalFs.writeOptions)
+        .parquet(s"$out/census")
       fpDs.filter(_.feature_type == "Building").collect()
         .groupBy(_.partition_id).foreach { case (pid, pfps) =>
           PngSink.render(pfps.toSeq, s"$out/footprints_p$pid.png")
@@ -155,7 +157,8 @@ object Main {
       IceLite.read(spark, s"${cfg.outputDir}/surfaces").as[SurfacePoly].toDF()
         .createOrReplaceTempView("surfaces")
     val sql = cfg.querySql.getOrElse("SELECT feature_type, count(*) AS cnt FROM footprints GROUP BY 1")
-    spark.sql(sql).write.mode("overwrite").parquet(s"${cfg.outputDir}/query_result")
+    spark.sql(sql).write.mode("overwrite").options(LocalFs.writeOptions)
+      .parquet(s"${cfg.outputDir}/query_result")
   }
 
   def main(args: Array[String]): Unit = {

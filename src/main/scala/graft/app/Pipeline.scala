@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Footprint
 import graft.operators.{KnnIndex, PipJoin, PlanIndex}
-import graft.sources.IceLite
+import graft.sources.{IceLite, LocalFs}
 
 /**
  * The north-star pipeline as one spark-submit-able job (BASELINE.json
@@ -300,7 +300,7 @@ object Pipeline {
     spark.sparkContext.setLogLevel("WARN")
     if (!new java.io.File(s"$imagesDir/_SUCCESS").exists()) {
       graft.sources.ImageGen.table(spark, 200000, 32)
-        .write.mode("overwrite").parquet(imagesDir)
+        .write.mode("overwrite").options(LocalFs.writeOptions).parquet(imagesDir)
     }
     val (w, s, ok) = run(spark, imagesDir, graft.Bench.benchPolygons, outTable)
     println(s"""{"pipeline":"pip+knn+tiles->icelite","written":$w,"skipped":$s,"audit_ok":$ok}""")

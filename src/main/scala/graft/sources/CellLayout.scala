@@ -27,5 +27,5 @@ object CellLayout {
     df.withColumn(cellName, cellCol)
       .repartitionByRange(files, col(cellName))
       .sortWithinPartitions(cellName)
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").options(LocalFs.writeOptions).parquet(dir)
 }

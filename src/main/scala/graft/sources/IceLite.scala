@@ -36,6 +36,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *
  * Metadata I/O is driver-side JSON (tiny); data I/O is ordinary distributed
  * parquet. At 100 TB the manifest holds O(#partitions) entries, not O(rows).
+ *
+ * Tables are local (`Paths.get`, `Files.move`), and both Spark writes (the
+ * [[writeResumable]] stage and the [[compact]] rewrite) go through
+ * [[LocalFs]]: without `libhadoop` Hadoop's local file system forks a
+ * `chmod` process for every `setPermission`, three per output file (the
+ * partition dir, the data file, its `.crc`); `LocalFs` makes each one a
+ * syscall. With `libhadoop` Hadoop's `NativeIO.chmod` already does so. The
+ * files, their `.crc` sidecars and their permissions are the same.
  */
 object IceLite {
 
@@ -207,7 +215,7 @@ object IceLite {
       }
     // job 1: stage all pending partitions in one distributed write
     pending.withColumn("__pk", col(partCol).cast("string"))
-      .write.mode("overwrite").partitionBy("__pk").parquet(stage)
+      .write.mode("overwrite").options(LocalFs.writeOptions).partitionBy("__pk").parquet(stage)
     // job 2: per-partition lineage in one aggregation over the staged files
     // (reads back what was actually persisted — a stronger audit base than
     // re-aggregating the upstream plan); the writer's schema is known, so the
@@ -284,7 +292,7 @@ object IceLite {
     val src = spark.read.parquet(dirs: _*)
     src.repartition(col(partCol))
       .withColumn("__pk", col(partCol).cast("string"))
-      .write.mode("overwrite").partitionBy("__pk").parquet(stage)
+      .write.mode("overwrite").options(LocalFs.writeOptions).partitionBy("__pk").parquet(stage)
     val got = lineageByPartition(spark.read.schema(src.schema).parquet(stage),
       src.columns.toSeq, partCol)
     todo.foreach { pv =>
