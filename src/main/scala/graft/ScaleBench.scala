@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /**
  * Two-parallelism scaling evidence (BASELINE.json north_rule, sandbox
  * protocol per BASELINE.md): the identical PIP join on the identical staged
- * input at local[8] and local[32] (1:4 core ratio standing in for N vs 4N
- * executors). Throughput per level = points / MIN wall time over interleaved
+ * input at local[N] and local[4N], N = `SPARK_GRAFT_SCALE_N` (default 4, so
+ * local[4] → local[16]; 1:4 core ratio standing in for N vs 4N executors).
+ * Throughput per level = points / MIN wall time over interleaved
  * repetitions — the minimum-time estimator because this sandbox shares CPUs
  * with other tenants (bursty external load was measured at up to 10 runnable
  * threads); the interleaving ensures neither level systematically benefits.

@@ -117,35 +117,17 @@ object Main {
     val surfDs: org.apache.spark.sql.Dataset[SurfacePoly] =
       if (haveSurfaces) IceLite.read(spark, s"${cfg.outputDir}/surfaces").as[SurfacePoly]
       else spark.emptyDataset[SurfacePoly]
-    // cache across the two consumers below — without it the GML export job
-    // and the CityJSON collect() each re-scan both IceLite tables in full
+    // cache across the two distributed export jobs below — without it each
+    // job re-scans both IceLite tables in full
     fpDs.persist(); surfDs.persist()
     try {
-      // CityGML: distributed — one file per partition_id written by the task
+      // one file per partition_id in each format, written by the task
       // holding that partition's rows (never the whole model on the driver)
       Exporters.exportCityGmlDistributed(fpDs, surfDs, cfg.outputDir, cfg.bbox,
         filePrefix = "export_p")
-      runExportJson(cfg, fpDs, surfDs)
+      Exporters.exportCityJsonDistributed(fpDs, surfDs, cfg.outputDir, cfg.bbox,
+        filePrefix = "export_p")
     } finally { fpDs.unpersist(blocking = false); surfDs.unpersist(blocking = false) }
-  }
-
-  /** CityJSON: driver-side per partition (reference-parity path; the JSON
-    * sink shares the same Seq-based writers). */
-  private def runExportJson(cfg: RunConfig,
-                            fpDs: org.apache.spark.sql.Dataset[Footprint],
-                            surfDs: org.apache.spark.sql.Dataset[SurfacePoly]): Unit = {
-    val fps = fpDs.collect().toSeq
-    val surfByPart = surfDs.collect().toSeq.groupBy(_.partition_id)
-    fps.groupBy(_.partition_id).foreach { case (pid, pfps) =>
-      surfByPart.get(pid) match {
-        case Some(ss) =>
-          Exporters.exportCityJsonFull(Exporters.bboxFilter(pfps, cfg.bbox), ss,
-            s"${cfg.outputDir}/export_p$pid.json")
-        case None =>
-          Exporters.exportCityJson(Exporters.bboxFilter(pfps, cfg.bbox),
-            s"${cfg.outputDir}/export_p$pid.json")
-      }
-    }
   }
 
   def runQuery(spark: SparkSession, cfg: RunConfig): Unit = {

@@ -53,28 +53,4 @@ object Hashing {
   /** Uniform double in [0,1) from a seed+stream pair. */
   def uniform(seed: Long, stream: Long): Double =
     ((mix64(seed * 0x9e3779b97f4a7c15L + stream) >>> 11).toDouble) / (1L << 53).toDouble
-
-  /** Rolling polynomial hash (document fingerprinting). */
-  def rollingHash(s: String, base: Long = 257L, mod: Long = (1L << 61) - 1): Long = {
-    var h = 0L
-    var i = 0
-    while (i < s.length) {
-      // mulmod via Math.multiplyHigh-free path: mod is < 2^61, operands < 2^61
-      h = mulMod(h, base, mod)
-      h = (h + s.charAt(i)) % mod
-      i += 1
-    }
-    h
-  }
-
-  private def mulMod(a: Long, b: Long, m: Long): Long = {
-    val hi = Math.multiplyHigh(a, b)
-    val lo = a * b
-    // 128-bit mod via BigInteger-free double-word reduction is overkill here;
-    // m = 2^61-1 allows the classic Mersenne fold.
-    val lo61 = lo & ((1L << 61) - 1)
-    val rest = (lo >>> 61) | (hi << 3)
-    val r = lo61 + rest
-    if (r >= m) r - m else r
-  }
 }

@@ -62,16 +62,6 @@ object HexGrid {
     Pt(size * 1.5 * q, size * (Sqrt3 / 2.0 * q + Sqrt3 * r))
   }
 
-  /** The 6 corners of a cell (flat-top: corners at 0°,60°,...). */
-  def corners(cell: Long): Array[Pt] = {
-    val c = center(cell)
-    val size = edge(resOf(cell))
-    Array.tabulate(6) { i =>
-      val ang = math.Pi / 3.0 * i
-      Pt(c.x + size * math.cos(ang), c.y + size * math.sin(ang))
-    }
-  }
-
   private def cubeRound(q: Double, r: Double): (Int, Int) = {
     val s = -q - r
     var qi = math.round(q).toInt

@@ -94,28 +94,6 @@ object ZGrid {
     out
   }
 
-  /** The 8 edge/corner neighbours (clipped at domain border). */
-  def neighbors(cell: Long): Array[Long] = {
-    val l = levelOf(cell)
-    val n = 1L << l
-    val cx = ix(cell); val cy = iy(cell)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var dx = -1
-    while (dx <= 1) {
-      var dy = -1
-      while (dy <= 1) {
-        if (dx != 0 || dy != 0) {
-          val nx = cx + dx; val ny = cy + dy
-          if (nx >= 0 && nx < n && ny >= 0 && ny < n)
-            buf += pack(l, interleave(nx, ny))
-        }
-        dy += 1
-      }
-      dx += 1
-    }
-    buf.toArray
-  }
-
   // ---- Morton bit tricks ----
   private[core] def interleave(xi: Long, yi: Long): Long =
     spread(xi) | (spread(yi) << 1)

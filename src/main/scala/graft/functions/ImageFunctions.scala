@@ -5,14 +5,11 @@ import java.awt.image.BufferedImage
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.core.Hashing
 import graft.sources.ImageGen
 
 /**
- * Multimodal (binary-column) operators. Images are REAL (javax.imageio ships
- * with the JDK: PNG/JPEG/BMP decode+encode); audio/video feature extraction is
- * STUBBED with a clearly-marked deterministic fake — the Spark-side plumbing
- * (schema, partitioning, batch shape) is identical either way.
+ * Image (binary-column) operators over real decodes (javax.imageio ships
+ * with the JDK: PNG/JPEG/BMP decode+encode).
  *
  * All operators run inside `mapPartitions`-style typed maps: one decode per
  * row, no driver collect, no shuffle — the 100 TB shape is map-only over the
@@ -22,7 +19,6 @@ object ImageFunctions {
 
   final case class ImageMeta(image_id: String, ok: Boolean, w: Int, h: Int,
                              fmt_sniffed: String, phash: Long)
-  final case class Thumb(image_id: String, bytes: Array[Byte], w: Int, h: Int)
   final case class ImageFeature(image_id: String, mean_r: Double, mean_g: Double,
                                 mean_b: Double, dhash: Long)
   final case class PayloadCheck(image_id: String, psnr: Double, caption_ok: Boolean,
@@ -67,18 +63,6 @@ object ImageFunctions {
       y += 1
     }
     out
-  }
-
-  def thumbnails(imgs: DataFrame, tw: Int = 8, th: Int = 8): Dataset[Thumb] = {
-    val spark = imgs.sparkSession
-    import spark.implicits._
-    imgs.select("image_id", "bytes").as[(String, Array[Byte])].mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { case (id, bytes) =>
-        val t = resizeImage(ImageGen.decode(bytes), tw, th)
-        Thumb(id, ImageGen.encode(t, "png"), tw, th)
-      }
-    }
   }
 
   /** Mean-RGB + 8×8 luminance difference hash (real feature extraction). */
@@ -228,105 +212,6 @@ object ImageFunctions {
           PayloadCheck(id, psnr, cap, ph, psnr >= 40.0 && cap && ph)
         }
       }
-  }
-
-  // ---------------------------------------------------------------------
-  // Audio/video decode SEAM. No codec libraries exist in this container, so
-  // the default decoder is an honestly-flagged deterministic fake — but the
-  // production boundary is now an explicit trait: deployments implement
-  // FrameDecoder over their codec stack (JavaCV/ffmpeg/…) and every job
-  // shape below (schema, 1→N fan-out, mapPartitions batching, partitioning)
-  // is unchanged. Rows carry `stubbed` so fabricated content can never be
-  // mistaken for decoded content downstream.
-  // ---------------------------------------------------------------------
-
-  /** Container-level probe result: what one pass over the media bytes must
-    * yield before frames can be sampled. */
-  final case class AvProbe(durationS: Double, loudness: Double, fingerprint: Long)
-
-  /**
-   * The production decode seam. Implementations MUST be serializable (they
-   * ship to executors inside mapPartitions closures) and stateless or
-   * cheaply re-initializable per partition.
-   */
-  trait FrameDecoder extends Serializable {
-    /** One pass over the container bytes: duration, loudness, fingerprint. */
-    def probe(id: String, bytes: Array[Byte]): AvProbe
-    /** Decoded frame payload for frame `idx` at timestamp `tsS`. */
-    def frameAt(p: AvProbe, bytes: Array[Byte], idx: Int, tsS: Double): Array[Byte]
-    /** True when this decoder fabricates content (sandbox default). */
-    def stubbed: Boolean
-  }
-
-  /** STUB decoder — a pure deterministic function of the bytes, so the
-    * distributed plumbing stays real and testable without codec libs. */
-  object StubFrameDecoder extends FrameDecoder {
-    override def stubbed: Boolean = true
-    override def probe(id: String, bytes: Array[Byte]): AvProbe = {
-      val fp = Hashing.fnv1a(bytes)
-      AvProbe(
-        durationS = (math.abs(fp) % 30000).toDouble / 1000.0,
-        loudness = -60.0 + (Hashing.mix64(fp) >>> 11).toDouble / (1L << 53).toDouble * 60.0,
-        fingerprint = fp)
-    }
-    override def frameAt(p: AvProbe, bytes: Array[Byte], idx: Int, tsS: Double): Array[Byte] = {
-      val h = Hashing.mix64(p.fingerprint ^ (idx.toLong * 0x9E3779B97F4A7C15L))
-      val out = new Array[Byte](16)
-      var i = 0
-      while (i < 16) { out(i) = ((h >>> ((i % 8) * 8)) & 0xFF).toByte; i += 1 }
-      out
-    }
-  }
-
-  final case class AvFeature(media_id: String, duration_s: Double, loudness: Double,
-                             fingerprint: Long, stubbed: Boolean)
-
-  def extractAvFeatures(media: DataFrame, idCol: String = "image_id",
-                        bytesCol: String = "bytes",
-                        decoder: FrameDecoder = StubFrameDecoder): Dataset[AvFeature] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol), col(bytesCol)).as[(String, Array[Byte])].mapPartitions { it =>
-      it.map { case (id, bytes) =>
-        val p = decoder.probe(id, bytes)
-        AvFeature(id, p.durationS, p.loudness, p.fingerprint, decoder.stubbed)
-      }
-    }
-  }
-
-  final case class SampledFrame(media_id: String, frame_idx: Int, ts_s: Double,
-                                frame: Array[Byte], stubbed: Boolean)
-
-  /**
-   * Frame sampling behind the [[FrameDecoder]] seam: video bytes → one row
-   * per sampled frame at `fps` frames/second — the 1→N generator shape a
-   * multimodal training pipeline needs (sample frames, then run the image
-   * ops on each). With the sandbox default [[StubFrameDecoder]] the decode
-   * is the deterministic fake (duration from the byte fingerprint; frame
-   * payload = 16 content-derived bytes, rows flagged `stubbed`); the
-   * distributed plumbing is the real thing and is what the test pins:
-   * flatMap inside mapPartitions (no driver materialization, no
-   * row-per-frame shuffle — sampling happens where the bytes already are),
-   * scan pruned to (id, bytes), output fans out 1→N with deterministic
-   * frame content. A production decoder changes NOTHING about the job
-   * shape — only the `decoder` argument.
-   */
-  def sampleFrames(media: DataFrame, fps: Double = 1.0,
-                   idCol: String = "image_id", bytesCol: String = "bytes",
-                   maxFrames: Int = 64,
-                   decoder: FrameDecoder = StubFrameDecoder): Dataset[SampledFrame] = {
-    require(fps > 0 && maxFrames > 0, "fps and maxFrames must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol), col(bytesCol)).as[(String, Array[Byte])].mapPartitions { it =>
-      it.flatMap { case (id, bytes) =>
-        val p = decoder.probe(id, bytes)
-        val n = math.min(maxFrames, math.max(1, math.floor(p.durationS * fps).toInt))
-        (0 until n).iterator.map { i =>
-          SampledFrame(id, i, i / fps, decoder.frameAt(p, bytes, i, i / fps), decoder.stubbed)
-        }
-      }
-    }
   }
 
   /**

@@ -18,34 +18,16 @@ object TextFunctions {
     "es" -> Seq("el", "la", "los", "de", "que", "es", "una", "por", "con", "para"),
     "zh" -> Seq("的", "是", "了", "在", "我", "有", "和", "不", "人", "这"))
 
-  /** Fraction of a language's stopwords present among the doc's tokens. */
-  def stopwordHits(toks: Column, lang: String): Column = {
-    val hits = stopwords(lang).map(w => when(array_contains(toks, w), 1).otherwise(0))
-    hits.reduce[Column](_ + _).cast("double") / lit(stopwords(lang).size.toDouble)
-  }
-
   /**
    * Heuristic language ID: CJK-character ratio decides zh; otherwise the
    * language whose stopword profile scores highest (no hits → 'und').
    * Native single-pass codegen kernel ([[org.apache.spark.sql.graft
-   * .LangIdKernel]]); [[langIdDeclarative]] is the equivalent pure-column
-   * formulation it replaces (regexp + 40 array_contains scans re-walked the
-   * text ~41x per row) — kept as the semantics oracle in tests.
+   * .LangIdKernel]]); the pure-column formulation it replaces (regexp + 40
+   * array_contains scans re-walked the text ~41x per row) is the semantics
+   * oracle in the tests.
    */
   def langId(textCol: Column): Column =
     org.apache.spark.sql.graft.TextFunctionsImpl.lang_id(textCol)
-
-  /** Declarative reference formulation of [[langId]] (see its scaladoc). */
-  def langIdDeclarative(textCol: Column): Column = {
-    val toks = split(lower(textCol), "\\s+")
-    val cjk = length(regexp_replace(textCol, "[^\\u4e00-\\u9fff]", "")).cast("double") /
-      greatest(length(textCol).cast("double"), lit(1.0))
-    val scored = Seq("en", "de", "fr", "es").map(l => struct(stopwordHits(toks, l).as("s"), lit(l).as("l")))
-    val best = array_max(array(scored: _*))
-    when(cjk > 0.2, lit("zh"))
-      .when(best.getField("s") > 0.0, best.getField("l"))
-      .otherwise(lit("und"))
-  }
 
   /**
    * Quality score ∈ [0,1]: length, lexical diversity, mean word length.
@@ -61,38 +43,6 @@ object TextFunctions {
       lit(0.2) * least(lit(1.0), meanWordLen / lit(8.0))
     Seq(nTok.cast("int").as("n_tokens"), distinctRatio.as("distinct_ratio"),
       meanWordLen.as("mean_word_len"), score.as("quality"))
-  }
-
-  /**
-   * F2 string→type sniffing cascade (reference `ClazzUtils.castPrintableObject`
-   * regex rules, ClazzUtils.java:88-142): boolean → char → integer (narrowest
-   * of byte/short/int/long by range) → float/double ([0-9]+[.,][0-9]+) →
-   * timestamp → string. Returns struct<kind, bool_v, long_v, double_v, ts_v>.
-   * Only needed at the GML ingest boundary — the engine itself keeps native
-   * Catalyst types (SURVEY §1.4).
-   */
-  def typedParse(c: Column): Column = {
-    val trimmed = trim(c)
-    val isBool = trimmed.rlike("^(?i)(true|false)$")
-    val isInt = trimmed.rlike("^-?[0-9]+$")
-    val isDec = trimmed.rlike("^-?[0-9]+[.,][0-9]+$")
-    val longV = trimmed.cast("long")
-    val intKind = when(longV.between(-128, 127), "byte")
-      .when(longV.between(-32768, 32767), "short")
-      .when(longV.between(Int.MinValue.toLong, Int.MaxValue.toLong), "int")
-      .otherwise("long")
-    val tsV = try_to_timestamp(trimmed)
-    struct(
-      when(isBool, lit("boolean"))
-        .when(length(trimmed) === 1 && !trimmed.rlike("^[0-9]$"), lit("char"))
-        .when(isInt && longV.isNotNull, intKind)
-        .when(isDec, lit("double"))
-        .when(tsV.isNotNull, lit("timestamp"))
-        .otherwise(lit("string")).as("kind"),
-      when(isBool, lower(trimmed) === "true").as("bool_v"),
-      when(isInt, longV).as("long_v"),
-      when(isDec, regexp_replace(trimmed, ",", ".").cast("double")).as("double_v"),
-      tsV.as("ts_v"))
   }
 
   /**
@@ -576,16 +526,6 @@ object TextFunctions {
       regexp_count(t, lit("[.!?]")) < lit(minSentences)
   }
 
-  /** Declarative reference twin of the `c4_clean` kernel (HOF filter +
-    * regexes) — kept as the semantics oracle in tests, not for the scan. */
-  def c4CleanDeclarative(textCol: Column, minWords: Int = 3): Column = {
-    val lines = split(coalesce(textCol, lit("")), "\n")
-    val wordsOf = (l: Column) => size(filter(split(l, " "), w => w =!= ""))
-    array_join(filter(lines, l =>
-      l.rlike("[.!?\"]$") && wordsOf(l) >= minWords &&
-        !contains(lower(l), lit("javascript"))), "\n")
-  }
-
   /**
    * One-pass per-source corpus report — the curation dashboard every
    * pretraining run starts from: document/token totals, near-exact distinct
@@ -690,8 +630,4 @@ object TextFunctions {
         org.apache.spark.sql.graft.TextFunctionsImpl
           .grid_rank(col(scoreCol), col("grid")).as("qnorm_est"))
   }
-
-  def withTextStats(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("*") +: (langId(col(textCol)).as("lang_pred") +:
-      fingerprint(col(textCol)).as("fp16") +: qualityColumns(col(textCol))): _*)
 }

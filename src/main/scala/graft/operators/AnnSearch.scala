@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
  * to the left-fold HOF, so results (and the DuckDB oracles) are unchanged
  * bit-for-bit.
  *
- * Scale path: LSH-bucketed search — random-hyperplane sign bits bucket the
- * table; probes only score their own bucket (+ optionally multiprobe
- * neighbouring buckets by flipping one bit). At 10^12 rows the bucket column
- * is also the table's cluster key, so a probe touches one partition range.
+ * Scale path: IVF — k-means centroids partition the table into inverted
+ * lists (optionally product-quantized); probes only score their `nprobe`
+ * nearest lists. At 10^12 rows the list id is also the table's cluster key,
+ * so a probe touches `nprobe` partition ranges.
  */
 object AnnSearch {
 
@@ -77,39 +77,6 @@ object AnnSearch {
     val scored = table.select(col(idCol), col(vecCol))
       .crossJoin(broadcast(probes.select(col("probe_id"), col("pvec"))))
       .withColumn("cos", cosine(col(vecCol), col("pvec")))
-    boundedTopK(scored, k, idCol)
-  }
-
-  /**
-   * LSH-bucketed top-k: banded sign-bit buckets (see [[Dedup.lshBuckets]]);
-   * a probe scores the union of its band buckets — ~bands/2^planes of the
-   * brute-force candidate volume, recall governed by the band-collision bound.
-   */
-  def lshTopK(table: DataFrame, probes: DataFrame, k: Int,
-              dim: Int = 64, planes: Int = 8, bands: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              multiprobe: Boolean = false): DataFrame = {
-    val t = table.select(col(idCol), col(vecCol),
-      posexplode(Dedup.lshBuckets(col(vecCol), dim, planes, bands)).as(Seq("band", "bucket")))
-    val p0 = probes.select(col("probe_id"), col("pvec"),
-      posexplode(Dedup.lshBuckets(col("pvec"), dim, planes, bands)).as(Seq("band", "bucket")))
-    // multiprobe: also visit every bucket at Hamming distance 1 in each band
-    // (one sign bit flipped) — candidates x(planes+1) on the PROBE side only
-    // (the table stays single-bucketed, so the 10^12-row side is untouched);
-    // recall rises because a near neighbour differing in one hyperplane sign
-    // still collides. Standard multiprobe LSH (Lv et al., VLDB'07) shape.
-    val p = if (!multiprobe) p0
-      else p0.withColumn("bucket",
-        explode(array((col("bucket") +: (0 until planes).map(b =>
-          col("bucket").bitwiseXOR(lit(1L << b)))): _*)))
-    // score map-side BEFORE deduplicating band collisions: the dedup then
-    // shuffles (probe_id, id, cos) scalars instead of two 64-float vectors
-    // (~50x less shuffle volume), with map-side partial agg on top; the cos
-    // of a duplicate pair is identical, so max() == any()
-    val scored = t.join(broadcast(p), Seq("band", "bucket"))
-      .withColumn("cos", cosine(col(vecCol), col("pvec")))
-      .groupBy(col("probe_id"), col(idCol))
-      .agg(max(col("cos")).as("cos"))
     boundedTopK(scored, k, idCol)
   }
 
@@ -409,27 +376,5 @@ object AnnSearch {
         else sums(c).map(_ / counts(c)))
     }
     centroids
-  }
-
-  /** Driver-side oracle. */
-  def bruteForce(table: Seq[(Long, Array[Float])], probes: Seq[(Long, Array[Float])],
-                 k: Int): Set[(Long, Long, Int)] = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) {
-        d += a(i).toDouble * b(i).toDouble
-        na += a(i).toDouble * a(i).toDouble
-        nb += b(i).toDouble * b(i).toDouble
-        i += 1
-      }
-      val n = math.sqrt(na) * math.sqrt(nb)
-      if (n == 0.0) 0.0 else d / n
-    }
-    probes.flatMap { case (pid, pv) =>
-      table.map { case (vid, v) => (vid, cos(v, pv)) }
-        .sortBy { case (vid, c) => (-c, vid) }.take(k).zipWithIndex
-        .map { case ((vid, _), i) => (pid, vid, i + 1) }
-    }.toSet
   }
 }

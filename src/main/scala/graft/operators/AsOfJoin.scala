@@ -81,13 +81,4 @@ object AsOfJoin {
       .select(keys.map(col) ++ lPayload.map(col) ++
         rPayload.map(c => lit(null).cast(right0.schema(c).dataType).as(rightPrefix + c)): _*))
   }
-
-  /** Driver-side brute-force oracle for tests. */
-  def bruteForce[K](left: Seq[(K, Long, String)], right: Seq[(K, Long, Double)]):
-      Seq[(K, Long, String, Option[(Long, Double)])] =
-    left.map { case (k, ts, tag) =>
-      val m = right.filter(r => r._1 == k && r._2 <= ts)
-        .sortBy(_._2).lastOption.map(r => (r._2, r._3))
-      (k, ts, tag, m)
-    }
 }

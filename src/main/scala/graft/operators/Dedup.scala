@@ -66,9 +66,8 @@ object Dedup {
       md5SliceBuckets(docs, idCol, textCol, perms, ngram), maxBucket), toks, minJaccard)
   }
 
-  /** The md5-slice minhash band buckets shared by [[lshPairs]],
-    * [[containmentPairs]] and `DedupStream.lshCandidates`: the one-pass
-    * codegen kernel
+  /** The md5-slice minhash band buckets shared by [[lshPairs]] and
+    * [[containmentPairs]]: the one-pass codegen kernel
     * [[org.apache.spark.sql.graft.Md5MinHashKernel]] computes all `perms`
     * per-band minima inside the row loop (one digest per shingle, minima
     * tracked as unsigned ints), so the signature never leaves the scan
@@ -489,16 +488,6 @@ object Dedup {
       .select(col("doc_id").as(idCol), coalesce(col("text"), lit("")).as(textCol),
         col("n_tokens"),
         (col("n_tokens").cast("long") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
-  }
-
-  /** Exact all-pairs n-gram Jaccard (test oracle; O(n²), small scale only). */
-  def bruteForceJaccard(docs: Seq[(Long, String)], minJaccard: Double): Set[(Long, Long, Double)] = {
-    val tok = docs.map { case (id, t) => id -> t.toLowerCase.split(" ").distinct.toSet }
-    (for {
-      (ia, sa) <- tok; (ib, sb) <- tok if ia < ib
-      jac = sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
-      if jac >= minJaccard
-    } yield (ia, ib, jac)).toSet
   }
 
   /** 64-bit SimHash over word tokens. Per-word hash = the top 64 bits of

@@ -113,13 +113,6 @@ object GraphPaths {
                 checkpointDir: Option[String] = None): DataFrame =
     bfsWithPred(edges, source, maxDepth, checkpointDir).select("node", "dist")
 
-  /** Shortest-path length from src to dst (hops), if within maxDepth. */
-  def shortestPathLength(edges: DataFrame, source: Long, target: Long,
-                         maxDepth: Int): Option[Int] =
-    bfsLevels(edges, source, maxDepth)
-      .where(col("node") === target)
-      .collect().headOption.map(_.getInt(1))
-
   /**
    * Shortest path WITH node-sequence reconstruction — parity with the
    * reference's `findShortestPath` (`GraphUtils.java:280-344`), which returns
@@ -266,51 +259,5 @@ object GraphPaths {
       r += 1
     }
     dist
-  }
-
-  /** Driver-side Dijkstra oracle (tests). */
-  def bruteSssp(edges: Seq[(Long, Long, Long)], source: Long): Map[Long, Long] = {
-    val adj = edges.groupBy(_._1).map { case (s, xs) => s -> xs.map(t => (t._2, t._3)) }
-    val dist = scala.collection.mutable.Map(source -> 0L)
-    val pq = scala.collection.mutable.PriorityQueue((0L, source))(
-      Ordering.by[(Long, Long), Long](_._1).reverse)
-    while (pq.nonEmpty) {
-      val (d, n) = pq.dequeue()
-      if (dist(n) == d)
-        adj.getOrElse(n, Seq.empty).foreach { case (m, w) =>
-          if (dist.get(m).forall(_ > d + w)) { dist(m) = d + w; pq.enqueue((d + w, m)) }
-        }
-    }
-    dist.toMap
-  }
-
-  /** Driver-side brute-force oracle (tests). */
-  def bruteBfs(edges: Seq[(Long, Long)], source: Long, maxDepth: Int): Map[Long, Int] = {
-    val adj = edges.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-    var dist = Map(source -> 0)
-    var frontier = Set(source)
-    var d = 0
-    while (d < maxDepth && frontier.nonEmpty) {
-      val next = frontier.flatMap(n => adj.getOrElse(n, Seq.empty))
-        .filterNot(dist.contains)
-      next.foreach(n => dist += n -> (d + 1))
-      frontier = next
-      d += 1
-    }
-    dist
-  }
-
-  /** Driver-side min-parent shortest-path oracle (tests): the unique path the
-    * min-parent tree induces, or empty if unreachable within maxDepth. */
-  def bruteShortestPath(edges: Seq[(Long, Long)], source: Long, target: Long,
-                        maxDepth: Int): Seq[Long] = {
-    val dist = bruteBfs(edges, source, maxDepth)
-    if (!dist.contains(target)) return Seq.empty
-    val preds = edges.filter(e => dist.contains(e._2)).groupBy(_._2).map { case (dst, xs) =>
-      dst -> xs.map(_._1).filter(s => dist.get(s).contains(dist(dst) - 1))
-    }
-    var path = List(target)
-    while (path.head != source) path ::= preds(path.head).min
-    path
   }
 }

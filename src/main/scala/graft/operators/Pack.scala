@@ -61,17 +61,4 @@ object Pack {
         }
       }
   }
-
-  /** Driver-side oracle for tests: greedy pack per shard in doc-id order. */
-  def brutePack(docs: Seq[(Long, Long)], budget: Long, shards: Int): Seq[PackedDoc] =
-    docs.map { case (id, n) => (math.floorMod(id, shards.toLong), id, n) }
-      .groupBy(_._1).toSeq.flatMap { case (shard, rows) =>
-        var run = 0L; var seq = 0L; var first = true
-        rows.sortBy(_._2).map { case (_, id, n) =>
-          if (first) { first = false; run = n }
-          else if (run + n > budget) { seq += 1; run = n }
-          else run += n
-          PackedDoc(shard, id, n, seq)
-        }
-      }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.GeoFunctionsImpl.tile_matches
@@ -20,8 +19,7 @@ import graft.model.Footprint
  *  - tile contents = the features whose cover holds the point's tile: a
  *    map-only probe of the broadcast [[TileIndex]] while the exploded
  *    feature-tile side fits the broadcast budget, else an equi-join on
- *    (zoom, tile_id) with both sides shuffled;
- *  - top-k images per tile = row_number window (deterministic tie-break).
+ *    (zoom, tile_id) with both sides shuffled.
  */
 object TileAssign {
 
@@ -87,12 +85,6 @@ object TileAssign {
         pts.select(cols :+ inline(tile_matches(col("tile_id"), index)): _*)
       case None => assignShuffle(points, fps, zooms)
     }
-  }
-
-  /** Deterministic top-k rows per (zoom, tile). */
-  def topKPerTile(pointTiles: DataFrame, k: Int, orderCol: String): DataFrame = {
-    val w = Window.partitionBy("zoom", "tile_id").orderBy(col(orderCol))
-    pointTiles.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
   }
 
   /** Driver-side oracle for featureTiles. */

@@ -155,17 +155,19 @@ object Exporters {
    * `part_<pid>.city.json` per partition through the same cogroup +
    * task-commit writer, byte-deterministic (features/surfaces sorted) and
    * individually re-ingestable; vertex indices are per-file, which is what
-   * CityJSON requires anyway.
+   * CityJSON requires anyway. `bbox` is the GML writer's P6 filter, applied
+   * to each partition's buildings inside the task.
    */
   def exportCityJsonDistributed(
       buildings: org.apache.spark.sql.Dataset[Footprint],
       surfaces: org.apache.spark.sql.Dataset[SurfacePoly],
-      outDir: String, srs: String = "",
+      outDir: String, bbox: Option[Env6] = None, srs: String = "",
       filePrefix: String = "part_"): Seq[(Int, String)] =
     exportDistributed(buildings, surfaces, outDir, filePrefix, ".city.json") {
       (bSorted, sSorted, tmp) =>
-        if (sSorted.nonEmpty) exportCityJsonFull(bSorted, sSorted, tmp, srs)
-        else exportCityJson(bSorted, tmp, srs)
+        val sel = bboxFilter(bSorted, bbox)
+        if (sSorted.nonEmpty) exportCityJsonFull(sel, sSorted, tmp, srs)
+        else exportCityJson(sel, tmp, srs)
     }
 
   /** LOD0 ground polygons synthesized from footprints (fallback geometry):

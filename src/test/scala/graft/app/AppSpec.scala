@@ -117,8 +117,33 @@ class AppSpec extends AnyFunSuite {
     // export round trip: both partitions re-ingestable
     val re0 = CityGmlReader.parseFile(s"$out/export_p0.gml")
     assert(re0.buildings.size === 1)
-    val re1 = graft.sources.CityJsonReader.parseFile(s"$out/export_p1.json")
+    val re1 = graft.sources.CityJsonReader.parseFile(s"$out/export_p1.city.json")
     assert(re1.buildings.size === 100)
+
+    // a finite bbox cuts both formats alike: per partition, the Building ids
+    // re-ingested from the GML and the CityJSON file equal the P6 filter over
+    // the mapped footprints. The box touches the FZK house's west edge and
+    // the CityJSON grid's column-4 / row-4 far edges (touching is kept).
+    val cut = graft.model.Env6(46, 48, 0, 457842, 5439083, 0)
+    val outCut = java.nio.file.Files.createTempDirectory("app_out_bbox").toString
+    val cutCfg = cfg.copy(outputDir = outCut, bbox = Some(cut))
+    Main.runMap(spark, cutCfg)
+    Main.runExport(spark, cutCfg)
+    val mapped = graft.sources.IceLite.read(spark, s"$outCut/footprints")
+      .as[graft.model.Footprint].collect().toSeq
+    val wantCut = graft.sources.Exporters.bboxFilter(mapped, Some(cut))
+      .filter(_.feature_type == "Building").groupBy(_.partition_id)
+      .map { case (pid, fs) => pid -> fs.map(_.feature_id).toSet }
+    assert(wantCut.keySet === Set(0, 1))
+    assert(wantCut(0).size === 1, "the FZK house touches the box")
+    assert(wantCut(1).size === 36, "CityJSON grid columns and rows 4-9 are kept")
+    Seq(0, 1).foreach { pid =>
+      val gml = CityGmlReader.parseFile(s"$outCut/export_p$pid.gml").buildings.map(_.id).toSet
+      val json = graft.sources.CityJsonReader.parseFile(s"$outCut/export_p$pid.city.json")
+        .buildings.map(_.id).toSet
+      assert(gml === json, s"partition $pid: GML and CityJSON exports disagree")
+      assert(json === wantCut(pid), s"partition $pid: export != bboxFilter")
+    }
 
     // query use case over the mapped table
     val qcfg = cfg.copy(usecase = "query",

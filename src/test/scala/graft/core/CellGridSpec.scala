@@ -185,7 +185,5 @@ class CellGridSpec extends AnyFunSuite {
     val u = (1 to 10000).map(i => Hashing.uniform(42, i))
     assert(u.forall(v => v >= 0.0 && v < 1.0))
     assert(math.abs(u.sum / u.size - 0.5) < 0.02)
-    assert(Hashing.rollingHash("hello world") === Hashing.rollingHash("hello world"))
-    assert(Hashing.rollingHash("hello world") !== Hashing.rollingHash("hello worle"))
   }
 }

@@ -139,7 +139,7 @@ class TextStatsSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val both = docs.select(col("doc_id"),
       graft.functions.TextFunctions.c4CleanText(col("text")).as("kernel"),
-      graft.functions.TextFunctions.c4CleanDeclarative(col("text")).as("twin"))
+      graft.Oracles.c4CleanDeclarative(col("text")).as("twin"))
       .collect()
     both.foreach(r => assert(r.getString(1) === r.getString(2),
       s"doc ${r.getLong(0)}: kernel=${r.getString(1)} twin=${r.getString(2)}"))

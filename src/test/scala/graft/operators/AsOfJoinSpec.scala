@@ -17,7 +17,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     val got = AsOfJoin.backward(lDf, rDf, Seq("k"), "ts")
       .select("k", "ts", "tag", "r_ts", "r_value")
       .as[(Long, Long, String, Long, Double)].collect().toSet
-    val want = AsOfJoin.bruteForce(left, right).collect {
+    val want = graft.Oracles.asOfBruteForce(left, right).collect {
       case (k, ts, tag, Some((rts, v))) => (k, ts, tag, rts, v)
     }.toSet
     assert(got === want)

@@ -32,7 +32,7 @@ class GraphPathsSpec extends AnyFunSuite {
         GraphPaths.bfsLevels(e, source = 0L, maxDepth = depth)
           .as[(Long, Int)].collect().toMap
       }
-      val want = GraphPaths.bruteBfs(edges, 0L, depth)
+      val want = graft.Oracles.bruteBfs(edges, 0L, depth)
       assert(got === want, s"depth=$depth")
       assert(gotDist === want, s"depth=$depth (distributed)")
       assert(want.size > 1)
@@ -46,7 +46,7 @@ class GraphPathsSpec extends AnyFunSuite {
     val e = Seq((Some(0L), Some(1L)), (Some(1L), Some(2L)),
       (None: Option[Long], Some(9L)), (Some(9L), None: Option[Long]))
       .toDF("src", "dst")
-    val want = GraphPaths.bruteBfs(Seq((0L, 1L), (1L, 2L)), 0L, 8)
+    val want = graft.Oracles.bruteBfs(Seq((0L, 1L), (1L, 2L)), 0L, 8)
     val got = GraphPaths.bfsLevels(e, 0L, 8).as[(Long, Int)].collect().toMap
     assert(got === want)
     val gotDist = forceDistributed {
@@ -62,10 +62,12 @@ class GraphPathsSpec extends AnyFunSuite {
 
   test("shortestPathLength: found within budget, None beyond it / unreachable") {
     val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
-    assert(GraphPaths.shortestPathLength(e, 0L, 3L, maxDepth = 8) === Some(3))
-    assert(GraphPaths.shortestPathLength(e, 0L, 3L, maxDepth = 2) === None)
-    assert(GraphPaths.shortestPathLength(e, 0L, 8L, maxDepth = 8) === None)
-    assert(GraphPaths.shortestPathLength(e, 0L, 0L, maxDepth = 8) === Some(0))
+    def hops(target: Long, maxDepth: Int): Option[Int] =
+      GraphPaths.bfsLevels(e, 0L, maxDepth).as[(Long, Int)].collect().toMap.get(target)
+    assert(hops(3L, maxDepth = 8) === Some(3))
+    assert(hops(3L, maxDepth = 2) === None)
+    assert(hops(8L, maxDepth = 8) === None)
+    assert(hops(0L, maxDepth = 8) === Some(0))
   }
 
   test("min-dist semantics: a node reachable by two paths keeps the shorter") {
@@ -77,7 +79,7 @@ class GraphPathsSpec extends AnyFunSuite {
 
   test("shortestPath reconstructs the min-parent node sequence (== brute oracle)") {
     val e = edges.toDF("src", "dst")
-    val dist = GraphPaths.bruteBfs(edges, 0L, 8)
+    val dist = graft.Oracles.bruteBfs(edges, 0L, 8)
     // a handful of reachable targets across distances + one unreachable
     val targets = dist.groupBy(_._2).values.map(_.keys.min).toSeq.sorted
     for (t <- targets) {
@@ -87,7 +89,7 @@ class GraphPathsSpec extends AnyFunSuite {
         GraphPaths.shortestPath(e, 0L, t, maxDepth = 8)
           .as[(Int, Long)].collect().sortBy(_._1).map(_._2).toSeq
       }
-      val want = GraphPaths.bruteShortestPath(edges, 0L, t, 8)
+      val want = graft.Oracles.bruteShortestPath(edges, 0L, t, 8)
       assert(got === want, s"target=$t")
       assert(gotDist === want, s"target=$t (distributed)")
       assert(got.head === 0L && got.last === t && got.size === dist(t) + 1)
@@ -107,7 +109,7 @@ class GraphPathsSpec extends AnyFunSuite {
       GraphPaths.weightedSssp(e, source = 0L, maxRounds = 250)
         .as[(Long, Long)].collect().toMap
     }
-    val want = GraphPaths.bruteSssp(wEdges, 0L)
+    val want = graft.Oracles.bruteSssp(wEdges, 0L)
     assert(got === want)
     assert(gotDist === want, "(distributed)")
     assert(want.size > 10, "fixture should reach a nontrivial component")
@@ -120,7 +122,7 @@ class GraphPathsSpec extends AnyFunSuite {
     val ones = edges.map { case (s, d) => (s, d, 1L) }.toDF("src", "dst", "w")
     val wd = GraphPaths.weightedSssp(ones, 0L, maxRounds = 250)
       .as[(Long, Long)].collect().toMap
-    val hops = GraphPaths.bruteBfs(edges, 0L, 250).map { case (k, v) => k -> v.toLong }
+    val hops = graft.Oracles.bruteBfs(edges, 0L, 250).map { case (k, v) => k -> v.toLong }
     assert(wd === hops)
   }
 

@@ -13,7 +13,7 @@ class PackSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sizes = docs.select(col("doc_id").cast("long"),
       size(split(col("text"), " ")).cast("long")).as[(Long, Long)].collect()
-    val want = Pack.brutePack(sizes.toSeq, budget = 200L, shards = 8)
+    val want = graft.Oracles.brutePack(sizes.toSeq, budget = 200L, shards = 8)
       .map(p => (p.shard, p.doc_id, p.n_tokens, p.seq_id)).toSet
     for (parts <- Seq(1, 7)) {
       val got = Pack.sequences(docs.repartition(parts), budget = 200L)

