@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -648,9 +648,9 @@ object SparkEntry {
     }),
 
     "q47_z_encode" -> ((s, dir) => {
-      // Morton (Z-order) cell key — the engine's exact-nesting S2-analog and
-      // the CellLayout clustering key — under the hard gate: power-of-two
-      // span and cell counts make floor((x-X0)/Span*n) exact double scaling,
+      // Morton (Z-order) cell key — the engine's exact-nesting S2-analog —
+      // under the hard gate: power-of-two span and cell counts make
+      // floor((x-X0)/Span*n) exact double scaling,
       // and the bit interleave + (morton<<6)|level packing replays in SQL
       // with shift/mask comprehensions. Bit-for-bit id parity here is what
       // makes cross-engine cell-key joins and layout reuse possible at all.
@@ -1437,7 +1437,6 @@ object SparkEntry {
       // multi-candidate-per-cell refine path is DuckDB-checked, not just the
       // 2-polygon q11. Corner offsets (0.205/0.105) keep every point off the
       // ring boundary, so inclusive-vs-exclusive semantics cannot flake.
-      import s.implicits._
       val pts = withXY(t(s, dir, "events"), "event_id")
         .select(col("event_id"), col("x"), col("y"))
       val ids = t(s, dir, "part").where(col("p_partkey") < 100)

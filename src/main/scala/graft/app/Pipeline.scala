@@ -22,11 +22,11 @@ import graft.sources.{IceLite, LocalFs}
  *    which ships once per executor as a Spark broadcast
  *    ([[graft.operators.PlanIndex]]; the plan holds only the handle):
  *    map-only, no join operator, no shuffle on the 10^12-row side;
- *  - the enrich plan itself is map-only; the final write's partitionBy on
- *    the deterministic bucket key (also the resume/commit unit) sorts
- *    within each task and plans no exchange. Without curation, the exchanges
- *    of a commit are IceLite's: partition discovery's `distinct` and the
- *    lineage and audit aggregations;
+ *  - the enrich plan itself is map-only. Without curation, the exchanges of
+ *    a commit are IceLite's: partition discovery's `distinct`, the staging
+ *    write's hash repartition on the deterministic bucket key (also the
+ *    resume/commit unit), which makes each committed bucket one data file,
+ *    and the lineage and audit aggregations;
  *  - a re-run after a crash recomputes ONLY the uncommitted buckets
  *    (content-derived data ⇒ byte-stable output, TileIceSpec semantics).
  */

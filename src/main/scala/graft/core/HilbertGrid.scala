@@ -4,9 +4,9 @@ package graft.core
  * Hilbert-curve cell index over the same planar domain and packing as
  * [[ZGrid]] — the clustering-order upgrade: consecutive Hilbert ids are
  * ALWAYS spatially adjacent cells (unit step), where Z-order jumps across
- * the plane at every power-of-two boundary. For the cell-clustered table
- * layout ([[graft.sources.CellLayout]]) that means a square query window
- * touches fewer contiguous id ranges → fewer row-group fragments to scan
+ * the plane at every power-of-two boundary. For a table clustered on the
+ * cell key that means a square query window touches fewer contiguous id
+ * ranges → fewer row-group fragments to scan
  * (HilbertSpec measures the fragment-count win vs Z-order on seeded random
  * windows; the classic Moon et al. 2001 result).
  *

@@ -32,18 +32,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *    order-independent, so it is stable under shuffle/parallelism changes;
  *  - lineage comes from ONE grouped aggregation over the freshly staged
  *    files (all pending partitions staged in a single distributed write);
- *    `verifyLineage` recomputes it independently for audit.
+ *    `verifyLineage` recomputes it independently for audit;
+ *  - one data file per committed partition: the staging write hash-
+ *    repartitions the pending rows on the partition key (one shuffle ahead
+ *    of the write), so each value's rows are written by one task; a
+ *    committed partition is never appended to, so the file count stays one.
  *
  * Metadata I/O is driver-side JSON (tiny); data I/O is ordinary distributed
  * parquet. At 100 TB the manifest holds O(#partitions) entries, not O(rows).
  *
- * Tables are local (`Paths.get`, `Files.move`), and both Spark writes (the
- * [[writeResumable]] stage and the [[compact]] rewrite) go through
- * [[LocalFs]]: without `libhadoop` Hadoop's local file system forks a
- * `chmod` process for every `setPermission`, three per output file (the
- * partition dir, the data file, its `.crc`); `LocalFs` makes each one a
- * syscall. With `libhadoop` Hadoop's `NativeIO.chmod` already does so. The
- * files, their `.crc` sidecars and their permissions are the same.
+ * Tables are local (`Paths.get`, `Files.move`), and the [[writeResumable]]
+ * stage writes through [[LocalFs]]: without `libhadoop` Hadoop's local file
+ * system forks a `chmod` process for every `setPermission`, three per
+ * output file (the partition dir, the data file, its `.crc`); `LocalFs`
+ * makes each one a syscall. With `libhadoop` Hadoop's `NativeIO.chmod`
+ * already does so. The files, their `.crc` sidecars and their permissions
+ * are the same.
  */
 object IceLite {
 
@@ -175,10 +179,11 @@ object IceLite {
    * from the current snapshot; commit each partition with its lineage, then
    * atomically advance the snapshot pointer. Returns (written, skipped).
    *
-   * Scale shape: ONE distributed write job stages every pending partition
-   * (`partitionBy` on a duplicate key column, so the data files keep
-   * `partCol` itself), ONE aggregation job over the staged output computes
-   * per-partition lineage, and the per-partition COMMIT loop is pure
+   * Scale shape: ONE distributed write stages every pending partition
+   * (a hash exchange on a duplicate key column, then `partitionBy` on it, so
+   * each partition is one file and the data files keep `partCol` itself),
+   * ONE aggregation over the staged output computes per-partition lineage,
+   * and the per-partition COMMIT loop is pure
    * driver-side metadata (dir rename + manifest write). The previous design
    * ran one write job + one full upstream scan per pending partition — O(P)
    * scans of the input; this is O(1) scans regardless of partition count,
@@ -188,7 +193,6 @@ object IceLite {
   def writeResumable(df: DataFrame, table: String, partCol: String,
                      inListLimit: Int = 1000): (Seq[String], Seq[String]) = {
     Files.createDirectories(metaDir(table))
-    compactRecover(table) // heal a crashed compaction swap before appending
     val snap = currentSnapshot(table)
     val allRaw = df.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0))
@@ -213,10 +217,13 @@ object IceLite {
         df.join(org.apache.spark.sql.functions.broadcast(todoDf),
           col(partCol).cast("string") === col("__todo_pv"), "left_semi")
       }
-    // job 1: stage all pending partitions in one distributed write
+    // stage all pending partitions in one distributed write; the hash
+    // exchange on the key puts each value's rows in one task, so each
+    // partition is staged (and committed) as exactly one data file
     pending.withColumn("__pk", col(partCol).cast("string"))
+      .repartition(col("__pk"))
       .write.mode("overwrite").options(LocalFs.writeOptions).partitionBy("__pk").parquet(stage)
-    // job 2: per-partition lineage in one aggregation over the staged files
+    // per-partition lineage in one aggregation over the staged files
     // (reads back what was actually persisted — a stronger audit base than
     // re-aggregating the upstream plan); the writer's schema is known, so the
     // read infers none (no schema-inference job)
@@ -238,105 +245,6 @@ object IceLite {
     }
     deleteRecursive(Paths.get(stage))
     (todo, skipped)
-  }
-
-  /**
-   * Small-file compaction: rewrite each multi-file committed partition into
-   * ONE parquet file — the standard operational job after many incremental
-   * commits (10^4 partitions × dozens of small files kills scan throughput
-   * long before data volume does; a partition large enough to WANT several
-   * files belongs in a finer partitioning, not in compaction policy).
-   * Identity is PROVEN, not
-   * assumed: the rewritten partition's order-independent lineage (rows +
-   * checksum) must equal the manifest entry before the swap happens, so a
-   * buggy rewrite can never replace good data.
-   *
-   * Crash safety per partition (the same commit unit as writeResumable):
-   * the old dir is parked under the reserved `_icelite_parked/` sibling of
-   * `data/` (outside the reader's scan, and immune to collisions with
-   * legally dot-prefixed partition values), the rewrite moves in atomically,
-   * then the parked dir is deleted. [[compactRecover]] (run automatically at
-   * the start of compact AND by read/readVersion/writeResumable) finishes
-   * either direction after a crash: live dir missing → restore the parked
-   * original; both present → drop the parked copy.
-   *
-   * Data is unchanged by construction, so the manifest lineage stays valid;
-   * a new snapshot version is still committed to record the rewrite.
-   * Returns (compacted, skipped-already-small) partition values.
-   */
-  def compact(spark: SparkSession, table: String, partCol: String): (Seq[String], Seq[String]) = {
-    compactRecover(table)
-    val snap = currentSnapshot(table)
-    if (snap.partitions.isEmpty) return (Seq.empty, Seq.empty)
-    val byPv = snap.partitions.map(p => p.partition -> p).toMap
-    // driver-side fs listing picks the oversized partitions — O(P) cheap
-    // metadata ops, NOT O(P) Spark jobs
-    val (todo, skipped) = snap.partitions.map(_.partition).sorted.partition { pv =>
-      val dir = Paths.get(table, "data", escapePart(pv))
-      val s = Files.list(dir)
-      val n = try s.filter(f => f.getFileName.toString.endsWith(".parquet")).count()
-        finally s.close()
-      n > 1
-    }
-    if (todo.isEmpty) return (Seq.empty, skipped)
-
-    // ONE distributed job rewrites every oversized partition (repartition by
-    // the key puts each partition's rows in a single task → one output file
-    // per partition under partitionBy), then ONE grouped aggregation proves
-    // per-partition identity against the manifest — the same O(1)-jobs shape
-    // as writeResumable; only the swap loop is per-partition, and it is pure
-    // driver-side metadata
-    val stage = s"$table/_icelite_compact_stage"
-    deleteRecursive(Paths.get(stage))
-    val dirs = todo.map(pv => s"$table/data/${escapePart(pv)}")
-    val src = spark.read.parquet(dirs: _*)
-    src.repartition(col(partCol))
-      .withColumn("__pk", col(partCol).cast("string"))
-      .write.mode("overwrite").options(LocalFs.writeOptions).partitionBy("__pk").parquet(stage)
-    val got = lineageByPartition(spark.read.schema(src.schema).parquet(stage),
-      src.columns.toSeq, partCol)
-    todo.foreach { pv =>
-      val want = byPv(pv)
-      val (rows, checksum) = got.getOrElse(pv,
-        throw new IllegalStateException(s"IceLite.compact: partition '$pv' missing from rewrite"))
-      require(rows == want.rows && checksum == want.checksum,
-        s"IceLite.compact: rewrite of '$pv' does not match manifest " +
-          s"(rows $rows vs ${want.rows}, checksum $checksum vs ${want.checksum}) — aborting before swap")
-    }
-    todo.foreach { pv =>
-      val from = stagedDir(stage, pv)
-      val live = Paths.get(table, "data", escapePart(pv))
-      val parked = parkedDir(table).resolve(escapePart(pv))
-      Files.createDirectories(parked.getParent)
-      deleteRecursive(parked)
-      Files.move(live, parked, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(from, live, StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursive(parked)
-    }
-    deleteRecursive(Paths.get(stage))
-    commitSnapshot(table, Snapshot(snap.version + 1, snap.partitions))
-    (todo, skipped)
-  }
-
-  /** Parked-original dirs live OUTSIDE `data/` in a reserved sibling — a
-    * partition VALUE can legally escape to any name (leading dots included),
-    * so an in-`data/` park prefix could collide with real partition dirs. */
-  private def parkedDir(table: String): Path = Paths.get(table, "_icelite_parked")
-
-  /** Finish an interrupted compaction swap (see [[compact]]): for each parked
-    * dir, restore it if the live dir is missing (crash between the two
-    * moves), otherwise the rewrite landed — drop the parked copy. Idempotent;
-    * safe to run on a healthy table. */
-  def compactRecover(table: String): Unit = {
-    val park = parkedDir(table)
-    if (!Files.isDirectory(park)) return
-    val s = Files.list(park)
-    val parked = try s.toArray.toSeq.map(_.asInstanceOf[Path]) finally s.close()
-    parked.foreach { old =>
-      val live = Paths.get(table, "data", old.getFileName.toString)
-      if (!Files.exists(live)) Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
-      else deleteRecursive(old)
-    }
   }
 
   private def deleteRecursive(p: Path): Unit = {
@@ -363,11 +271,7 @@ object IceLite {
   /** Read the committed table back (partition col lives in the data files):
     * [[readVersion]] of the current snapshot, so a partition dir that a
     * crashed [[writeResumable]] moved into `data/` but never committed is not
-    * served. Runs [[compactRecover]] first, so a compaction that crashed
-    * inside its swap window (live dir parked, rewrite not yet moved in) is
-    * healed before any rows are served — without this, the hidden parked dir
-    * would make the table silently MISSING that partition for every reader.
-    * Fails, naming the table, when it has no commit. */
+    * served. Fails, naming the table, when it has no commit. */
   def read(spark: SparkSession, table: String): DataFrame = {
     val version = currentSnapshot(table).version
     require(version >= 1, s"IceLite: table '$table' has no committed snapshot")
@@ -396,15 +300,13 @@ object IceLite {
   /**
    * Time travel: read the table AS OF snapshot `version`. Valid because
    * commits are append-only at partition granularity — a partition, once in
-   * a manifest, is never rewritten with different content (resume skips it;
-   * compaction must prove identical lineage before swapping) — so the data
+   * a manifest, is never rewritten (resume skips it) — so the data
    * dirs named by manifest vN still hold exactly vN's rows. Old manifests
    * are retained (`_icelite/vN.json`), making every historical version
    * addressable at zero storage cost beyond the tiny JSON.
    */
   def readVersion(spark: SparkSession, table: String, version: Int): DataFrame = {
     require(version >= 1, s"version must be >= 1, got $version")
-    compactRecover(table) // heal a crashed compaction swap before serving
     require(Files.exists(metaDir(table).resolve(s"v$version.json")),
       s"IceLite: snapshot v$version of '$table' does not exist or was expired " +
         s"(current version: ${currentSnapshot(table).version}; see expireVersions)")
@@ -418,20 +320,18 @@ object IceLite {
    * Snapshot expiration — the retention companion to time travel: retained
    * manifests otherwise grow one vN.json per commit forever. Keeps the
    * newest `keepN` manifests (the current version always survives) and
-   * deletes older ones (parked dirs are healed by [[compactRecover]]
-   * first). Commits are append-only at partition granularity and compaction
-   * must prove identical lineage before swapping, so every data dir
+   * deletes older ones. Commits are append-only at partition granularity,
+   * so every data dir
    * referenced by an expired manifest is still referenced by every retained
    * one — expiration is pure metadata deletion, never touches `data/` or
    * any stage dir (a stage dir may be another writer's LIVE working set;
-   * writeResumable/compact each clear their OWN stage at entry), and the
+   * writeResumable overwrites only its OWN stage), and the
    * oldest RETAINED version stays byte-identical readable. Reading an
    * expired version fails loudly in [[readVersion]]. Returns the expired
    * version numbers.
    */
   def expireVersions(table: String, keepN: Int): Seq[Int] = {
     require(keepN >= 1, s"IceLite.expireVersions: keepN must be >= 1, got $keepN")
-    compactRecover(table)
     val cur = currentSnapshot(table).version
     if (cur == 0) return Seq.empty
     val horizon = math.max(1, cur - keepN + 1) // oldest retained version

@@ -196,7 +196,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("multimodal curate: identical captions with far signatures stay separate") {
-    import org.apache.spark.sql.functions._
     val cap = (1 to 12).map(i => s"cap${i}tok").mkString(" ")
     val rows = Seq(
       ("img_a", cap, 0L),            // same caption, sig hamming 2 → dup of b
@@ -241,7 +240,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("metadataGate: drops exactly the aspect-violating fixture shapes, keeps the rest") {
-    import org.apache.spark.sql.functions._
     val imgs = graft.sources.ImageGen.table(spark, 200, 4).toDF()
     val kept = Pipeline.metadataGate(imgs).select("image_id").as[String].collect().toSet
     // fixture dims are {16,32,64}: with minSide=16 / maxAspect=3 the only
@@ -255,7 +253,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("normalizeForDedup: accented mirror clusters with its original only when on") {
-    import org.apache.spark.sql.functions._
     // one doc plus a mirrored copy differing ONLY by Latin accents and
     // whitespace runs (every token carries an accent → raw shingle sets are
     // disjoint), plus an unrelated doc

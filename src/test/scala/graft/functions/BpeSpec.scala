@@ -2,7 +2,6 @@ package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.functions.BpeTokenizer.BpeModel
 
 /**
  * BPE trainer/encoder oracles. The merge loop is not ANSI-expressible, so

@@ -163,7 +163,6 @@ class TextStatsSpec extends AnyFunSuite {
   }
 
   test("lmCoverage: known fractions, gramless docs, top-k tie boundary") {
-    import org.apache.spark.sql.functions._
     // reference: "a b" x3, "b c" x2, "c d" x1 — top-2 = {a b, b c}
     val ref = Seq((1L, "a b"), (2L, "a b"), (3L, "a b"),
       (4L, "b c"), (5L, "b c"), (6L, "c d")).toDF("doc_id", "text")
@@ -260,7 +259,6 @@ class TextStatsSpec extends AnyFunSuite {
   }
 
   test("chunkDocs: sliding windows with overlap, short tail, empty/null docs, scan-local") {
-    import org.apache.spark.sql.functions._
     val docs = Seq(
       (1L, (1 to 10).map(i => s"t$i").mkString(" ")),   // 10 tokens
       (2L, "solo"),

@@ -599,7 +599,6 @@ class DedupAnnSpec extends AnyFunSuite {
   }
 
   test("langId kernel == declarative column formulation on the full documents table") {
-    import spark.implicits._
     val both = docs.select(
       graft.functions.TextFunctions.langId(col("text")).as("fast"),
       graft.Oracles.langIdDeclarative(col("text")).as("ref"))

@@ -712,7 +712,6 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(rows.forall(r => r.getString(2).split(",").length == r.getInt(1)),
       "n_kept must count the projected index string")
     // direct kernel edge cases via SQL registration
-    import org.apache.spark.sql.functions._
     graft.functions.GeoFunctions.register(spark)
     val edge = spark.sql(
       """SELECT st_simplify_idx(array(0.0d), array(0.0d), 1.0d) AS one,
@@ -766,41 +765,6 @@ class PlanQualitySpec extends AnyFunSuite {
     // expansion) — the table side must have none
     assert(plan.linesIterator.count(_.contains("DeserializeToObject")) <= 1,
       s"table-side IVF assignment must not round-trip through Encoders:\n$plan")
-  }
-
-  test("cell-clustered layout: parquet row-group stats skip rows outside the cell window") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val n = 200000L
-    val pts = spark.range(n).selectExpr("id",
-      "457398.0D + CAST(id % 1000 AS DOUBLE) * 0.9D AS x",
-      "5438638.0D + CAST(CAST(id / 1000 AS BIGINT) AS DOUBLE) * 4.5D AS y")
-      .withColumn("cell", graft.functions.GeoFunctions.hex_encode(col("x"), col("y"), lit(9)))
-    val dirC = "target/tmp/cells_clustered"
-    val dirU = "target/tmp/cells_unclustered"
-    graft.sources.CellLayout.writeClustered(pts.drop("cell"),
-      graft.functions.GeoFunctions.hex_encode(col("x"), col("y"), lit(9)), "cell", dirC)
-    // unclustered control: same rows, shuffled so every row group spans the key space
-    pts.repartition(16, pmod(xxhash64(col("id")), lit(16)))
-      .write.mode("overwrite").parquet(dirU)
-
-    def scannedRows(dir: String, lo: Long, hi: Long): (Long, Long) = {
-      val q = spark.read.parquet(dir).where(col("cell") >= lo && col("cell") <= hi)
-      // metrics live on THIS queryExecution — count() would build another
-      val out = q.collect().length.toLong
-      val scan = q.queryExecution.executedPlan.collectLeaves()
-        .collectFirst { case s: FileSourceScanExec => s }.get
-      (scan.metrics("numOutputRows").value, out)
-    }
-    // a narrow cell window around the median key
-    val cells = spark.read.parquet(dirC).select("cell").orderBy("cell")
-      .collect().map(_.getLong(0))
-    val (lo, hi) = (cells(cells.length / 2), cells(cells.length / 2 + cells.length / 100))
-    val (scanC, outC) = scannedRows(dirC, lo, hi)
-    val (scanU, outU) = scannedRows(dirU, lo, hi)
-    assert(outC === outU && outC > 0)
-    assert(scanU > n / 2, s"unclustered control should read most rows, read $scanU")
-    assert(scanC < scanU / 4,
-      s"clustered layout must row-group-skip: scanned $scanC vs unclustered $scanU")
   }
 
   test("salted join splits the hot cell key across salts (skew mitigation)") {

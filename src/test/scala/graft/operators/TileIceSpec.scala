@@ -83,66 +83,36 @@ class TileIceSpec extends AnyFunSuite {
     assert(a.toString === b.toString, "content checksum differs after resume")
   }
 
-  test("IceLite: compaction shrinks files, proves identity, survives a mid-swap crash") {
-    val dir = java.nio.file.Files.createTempDirectory("icelite_compact").toString
-    val table = s"$dir/events_by_type"
-    // many small files per partition: repartition high before the write
+  test("IceLite: one file per committed partition, on a fresh commit and on resume") {
+    val dir = java.nio.file.Files.createTempDirectory("icelite_files").toString
+    // every partition value spread over many input tasks: repartition high
+    // before the write
     val df = spark.read.parquet("/root/testdata/sf0.001/events.parquet").repartition(24)
-    IceLite.writeResumable(df, table, "event_type")
-    def files(pv: String) = {
+    def files(table: String, pv: String) = {
       val d = java.nio.file.Paths.get(table, "data", IceLite.escapePart(pv))
       val s = java.nio.file.Files.list(d)
       try s.filter(_.getFileName.toString.endsWith(".parquet")).count()
       finally s.close()
     }
-    val before = files("click")
-    assert(before > 1, s"fixture should start with many files, got $before")
-    val v0 = IceLite.currentSnapshot(table).version
+    def oneFileEach(table: String): Unit = {
+      val parts = IceLite.currentSnapshot(table).partitions.map(_.partition)
+      assert(parts.map(pv => pv -> files(table, pv)).toMap === parts.map(_ -> 1L).toMap)
+      assert(IceLite.verifyLineage(spark, table, "event_type").forall(_._2))
+      assert(IceLite.read(spark, table).count() === df.count())
+    }
 
-    val (compacted, skipped) = IceLite.compact(spark, table, "event_type")
-    assert(compacted.nonEmpty && skipped.isEmpty)
-    assert(files("click") === 1, "compaction must leave one file per partition")
-    // identity: audit green, content multiset unchanged, snapshot advanced
-    assert(IceLite.verifyLineage(spark, table, "event_type").forall(_._2))
-    assert(IceLite.read(spark, table).count() === df.count())
-    assert(IceLite.currentSnapshot(table).version === v0 + 1)
+    val fresh = s"$dir/fresh"
+    val (all, _) = IceLite.writeResumable(df, fresh, "event_type")
+    assert(all.size >= 4)
+    oneFileEach(fresh)
 
-    // second compact: nothing left to do, no version churn
-    val (c2, s2) = IceLite.compact(spark, table, "event_type")
-    assert(c2.isEmpty && s2.toSet === compacted.toSet)
-    assert(IceLite.currentSnapshot(table).version === v0 + 1)
-
-    // crash window 1: old parked, rewrite never moved in (live dir missing)
-    val live = java.nio.file.Paths.get(table, "data", "click")
-    val parked = java.nio.file.Paths.get(table, "_icelite_parked", "click")
-    java.nio.file.Files.createDirectories(parked.getParent)
-    java.nio.file.Files.move(live, parked)
-    assert(!java.nio.file.Files.exists(live))
-    IceLite.compactRecover(table)
-    assert(java.nio.file.Files.exists(live) && !java.nio.file.Files.exists(parked),
-      "recovery must restore the parked original when the live dir is missing")
-    assert(IceLite.verifyLineage(spark, table, "event_type").forall(_._2))
-
-    // crash window 2: rewrite moved in, parked copy left behind
-    val parkedCopy = java.nio.file.Paths.get(table, "_icelite_parked", "error_stale")
-    java.nio.file.Files.createDirectories(parkedCopy)
-    java.nio.file.Files.write(parkedCopy.resolve("stale.parquet"), Array[Byte](1, 2, 3))
-    // live "error_stale" does not exist → recover must RESTORE it (treats the
-    // parked dir as the only copy); then clean it up for the read check
-    IceLite.compactRecover(table)
-    assert(!java.nio.file.Files.exists(parkedCopy) &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(table, "data", "error_stale")),
-      "recovery restores a parked dir whose live counterpart is missing")
-    // and when BOTH exist, the parked copy is dropped
-    java.nio.file.Files.createDirectories(parkedCopy)
-    IceLite.compactRecover(table)
-    assert(!java.nio.file.Files.exists(parkedCopy),
-      "recovery must drop the parked copy when the live dir exists")
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(table, "data", "error_stale").resolve("stale.parquet"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(table, "data", "error_stale"))
-    // parked dirs live outside data/ and never leak into reads
-    assert(IceLite.read(spark, table).count() === df.count())
+    // half committed first, then the full input resumes the rest
+    val resumed = s"$dir/resumed"
+    val half = all.take(all.size / 2)
+    IceLite.writeResumable(df.where(col("event_type").isin(half: _*)), resumed, "event_type")
+    val (written, skipped) = IceLite.writeResumable(df, resumed, "event_type")
+    assert(skipped === half && written === all.drop(half.size))
+    oneFileEach(resumed)
   }
 
   test("IceLite: time travel reads exactly the partitions of a historical snapshot") {
@@ -162,8 +132,7 @@ class TileIceSpec extends AnyFunSuite {
     assert(asOfMid.count() === df.where(col("event_type").isin("click", "error")).count())
     // head version == full table == plain read
     assert(IceLite.readVersion(spark, table, vHead).count() === df.count())
-    // time travel still works after compaction (content-preserving rewrite)
-    IceLite.compact(spark, table, "event_type")
+    // the historical version still reads the same after the head read
     assert(IceLite.readVersion(spark, table, vMid).count()
       === df.where(col("event_type").isin("click", "error")).count())
   }
@@ -173,10 +142,9 @@ class TileIceSpec extends AnyFunSuite {
     val table = s"$dir/events_by_type"
     val df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     // build a multi-version history: 2 partitions, then the rest (one
-    // snapshot version per committed partition), then a compaction version
+    // snapshot version per committed partition)
     IceLite.writeResumable(df.where(col("event_type").isin("click", "error")), table, "event_type")
     IceLite.writeResumable(df, table, "event_type")
-    IceLite.compact(spark, table, "event_type")
     val head = IceLite.currentSnapshot(table).version
     assert(head >= 4)
     val keepN = 2
@@ -197,9 +165,6 @@ class TileIceSpec extends AnyFunSuite {
     assert(IceLite.readVersion(spark, table, head).count() === df.count())
     assert(IceLite.read(spark, table).count() === df.count())
     assert(IceLite.verifyLineage(spark, table, "event_type").forall(_._2))
-    // compaction interop after expiration: still safe, still provable
-    val (c2, _) = IceLite.compact(spark, table, "event_type")
-    assert(c2.isEmpty) // already compacted — no version churn
     // idempotent; expiring again with the same horizon is a no-op
     assert(IceLite.expireVersions(table, keepN).isEmpty)
   }
@@ -253,16 +218,17 @@ class TileIceSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("null"))
   }
 
-  test("IceLite: a fresh writeResumable runs 5 Spark jobs and its lineage equals the input's") {
-    // discovery (2 jobs under AQE), the staging write (1) and the lineage
-    // aggregation (2); the staged files are read back with the writer's
-    // schema, so no schema-inference job runs between them
+  test("IceLite: a fresh writeResumable runs 6 Spark jobs and its lineage equals the input's") {
+    // discovery (2 jobs under AQE), the staging write (2: the map stage of
+    // its hash exchange on the partition key, then the write) and the
+    // lineage aggregation (2); the staged files are read back with the
+    // writer's schema, so no schema-inference job runs between them
     val dir = java.nio.file.Files.createTempDirectory("icelite_jobs").toString
     val df = spark.range(0, 30)
       .select((col("id") % 3).cast("string").as("part"), col("id").as("v"))
     val ((w, s), jobs) = graft.TestSpark.jobsRunBy(IceLite.writeResumable(df, s"$dir/t", "part"))
     assert(w === Seq("0", "1", "2") && s.isEmpty)
-    assert(jobs === 5, s"one fresh commit ran $jobs Spark jobs")
+    assert(jobs === 6, s"one fresh commit ran $jobs Spark jobs")
     IceLite.currentSnapshot(s"$dir/t").partitions.foreach { p =>
       assert((p.rows, p.checksum) === IceLite.lineageOf(df.where(col("part") === p.partition)),
         s"lineage of partition ${p.partition}")

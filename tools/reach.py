@@ -28,7 +28,6 @@ ALLOW = {
     "intersects3D": "reference AABB predicate (Neo4jDB.java:378-380) that GeomSpec pins",
     "matchBbox": "reference volume-overlap bbox match (CityGMLV2DB.java:339-381) that GeomSpec pins",
     "unpack": "inverse of Tiles.pack for readers of tile_id columns; CellGridSpec pins the round trip",
-    "writeClustered": "CellLayout stays until it folds into IceLite (ROADMAP item 3)",
     "enable": "attaches the SQL rules to an already-built session; workloads pass the "
               "GraftExtensions class to the session builder instead",
 }
