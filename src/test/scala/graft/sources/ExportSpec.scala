@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model._
 
 class ExportSpec extends AnyFunSuite {
-  import ExportSpec.GroundGml
+  import ExportSpec.{GroundGml, GroundGmlV3}
 
   lazy val fzk = CityGmlReader.toFootprints(
     CityGmlReader.parseFile(graft.Fixtures.fzkV2), 0)
@@ -272,6 +272,18 @@ class ExportSpec extends AnyFunSuite {
     }
   }
 
+  test("footprint-only distributed CityGML export writes the ground-ring documents byte for byte (v2 and v3)") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    for ((version, golden) <- Seq("v2" -> GroundGml, "v3" -> GroundGmlV3)) {
+      val outDir = java.nio.file.Files.createTempDirectory("gmlgolden").toString
+      Exporters.exportCityGmlDistributed(groundFps.toDS(),
+        spark.emptyDataset[SurfacePoly], outDir, groundBox, version = version)
+      assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$outDir/part_3.gml")), "UTF-8") === golden, version)
+    }
+  }
+
   private def closedSet(r: Seq[XY]): Set[(Double, Double)] =
     r.map(p => (p.x, p.y)).toSet
 }
@@ -304,5 +316,36 @@ object ExportSpec {
     """<gml:posList>457810.0 5439000.0 0.0 457812.0 5439000.0 0.0 457812.0 5439002.0 0.0 457810.0 5439000.0 0.0</gml:posList>""" +
     """</gml:LinearRing></gml:exterior></gml:Polygon></gml:surfaceMember></gml:MultiSurface>""" +
     """</bldg:lod2MultiSurface></bldg:GroundSurface></bldg:boundedBy></bldg:Building>""" +
+    """</core:cityObjectMember></core:CityModel>"""
+
+  /** The CityGML 3.0 twin of [[GroundGml]]: the same buildings, envelope and
+    * rings under the v3 namespaces, `core:boundary` > `con:GroundSurface`,
+    * `core:lod2MultiSurface` and child-element generic attributes. */
+  val GroundGmlV3: String =
+    """<?xml version='1.0' encoding='UTF-8'?>""" +
+    """<core:CityModel xmlns:core="http://www.opengis.net/citygml/3.0" xmlns:bldg="http://www.opengis.net/citygml/building/3.0" xmlns:con="http://www.opengis.net/citygml/construction/3.0" xmlns:gen="http://www.opengis.net/citygml/generics/3.0" xmlns:gml="http://www.opengis.net/gml/3.2">""" +
+    """<gml:boundedBy>""" +
+    """<gml:Envelope srsName="urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH" srsDimension="3">""" +
+    """<gml:lowerCorner>457800.5 5439000.0 0.0</gml:lowerCorner>""" +
+    """<gml:upperCorner>457812.0 5439003.0 12.0</gml:upperCorner></gml:Envelope>""" +
+    """</gml:boundedBy>""" +
+    """<core:cityObjectMember><bldg:Building gml:id="b1"><core:genericAttribute><gen:StringAttribute>""" +
+    """<gen:name>height</gen:name><gen:value>10.5</gen:value></gen:StringAttribute></core:genericAttribute>""" +
+    """<core:genericAttribute><gen:StringAttribute><gen:name>name</gen:name>""" +
+    """<gen:value>A &amp; &lt;b></gen:value></gen:StringAttribute></core:genericAttribute><core:boundary>""" +
+    """<con:GroundSurface gml:id="b1_ground"><core:lod2MultiSurface><gml:MultiSurface>""" +
+    """<gml:surfaceMember><gml:Polygon gml:id="b1_ground_poly"><gml:exterior><gml:LinearRing>""" +
+    """<gml:posList>457800.5 5439000.25 1.5 457804.0 5439000.25 1.5 457804.0 5439003.0 1.5 457800.5 5439003.0 1.5 457800.5 5439000.25 1.5</gml:posList>""" +
+    """</gml:LinearRing></gml:exterior><gml:interior><gml:LinearRing>""" +
+    """<gml:posList>457801.0 5439001.0 1.5 457802.0 5439001.0 1.5 457802.0 5439002.0 1.5 457801.0 5439001.0 1.5</gml:posList>""" +
+    """</gml:LinearRing></gml:interior></gml:Polygon></gml:surfaceMember></gml:MultiSurface>""" +
+    """</core:lod2MultiSurface></con:GroundSurface></core:boundary></bldg:Building>""" +
+    """</core:cityObjectMember>""" +
+    """<core:cityObjectMember><bldg:Building gml:id="b2"><core:boundary>""" +
+    """<con:GroundSurface gml:id="b2_ground"><core:lod2MultiSurface><gml:MultiSurface>""" +
+    """<gml:surfaceMember><gml:Polygon gml:id="b2_ground_poly"><gml:exterior><gml:LinearRing>""" +
+    """<gml:posList>457810.0 5439000.0 0.0 457812.0 5439000.0 0.0 457812.0 5439002.0 0.0 457810.0 5439000.0 0.0</gml:posList>""" +
+    """</gml:LinearRing></gml:exterior></gml:Polygon></gml:surfaceMember></gml:MultiSurface>""" +
+    """</core:lod2MultiSurface></con:GroundSurface></core:boundary></bldg:Building>""" +
     """</core:cityObjectMember></core:CityModel>"""
 }
