@@ -245,39 +245,16 @@ object Pipeline {
 
   /** Run end to end; returns (written, skipped, audit ok-count). With
     * `curate = true` the caption near-dup curation (dedup → keep-best →
-    * split) runs before enrichment, so the whole LLM-data path is one
-    * resumable job: a crash/rerun recomputes only uncommitted buckets and
-    * the curated content (keepers AND split values) is byte-stable. */
-  /** Scan-local image metadata gate (the q83 pack over the pipeline's own
-    * input columns — byte length stands in for a stored size column).
-    * Applied FIRST in `run`: broken/thumbnail payloads drop before any
-    * curation or decode stage spends cycles on them. */
-  def metadataGate(images: DataFrame, minSide: Int = 16,
-                   maxAspect: Double = 3.0): DataFrame =
-    images.where(graft.functions.ImageFunctions.imageGateColumns(
-      col("w"), col("h"), col("fmt"), length(col("bytes")), col("caption"),
-      minSide = minSide, maxAspect = maxAspect).last)
-
+    * split, [[curate]] with its defaults) runs before enrichment, so the
+    * whole LLM-data path is one resumable job: a crash/rerun recomputes only
+    * uncommitted buckets and the curated content (keepers AND split values)
+    * is byte-stable. */
   def run(spark: SparkSession, imagesDir: String, polys: Seq[Footprint],
           outTable: String, zoom: Int = 20, nBuckets: Int = 16,
-          curate: Boolean = false,
-          scrubPii: Boolean = false, maxRepetition: Double = 1.0,
-          maxDupLineFrac: Option[Double] = None,
-          maxSymbolRatio: Option[Double] = None,
-          evalDocs: Option[DataFrame] = None,
-          maxContamination: Double = 0.2,
-          exactDecontamination: Boolean = false,
-          metadataGates: Boolean = false,
-          gateMinSide: Int = 16): (Int, Int, Int) = {
-    val raw = spark.read.parquet(imagesDir)
-    val images = if (metadataGates) metadataGate(raw, minSide = gateMinSide) else raw
+          curate: Boolean = false): (Int, Int, Int) = {
+    val images = spark.read.parquet(imagesDir)
     val (input, keep) =
-      if (curate)
-        (this.curate(images, scrubPii = scrubPii, maxRepetition = maxRepetition,
-          maxDupLineFrac = maxDupLineFrac, maxSymbolRatio = maxSymbolRatio,
-          evalDocs = evalDocs, maxContamination = maxContamination,
-          exactDecontamination = exactDecontamination), Seq("split"))
-      else (images, Nil)
+      if (curate) (this.curate(images), Seq("split")) else (images, Nil)
     val enriched = enrich(input, polys, zoom = zoom, nBuckets = nBuckets, keepCols = keep)
     val (written, skipped) = IceLite.writeResumable(enriched, outTable, "bucket")
     val audit = IceLite.verifyLineage(spark, outTable, "bucket")

@@ -1,27 +1,91 @@
 package graft.sources
 
 import java.io.{BufferedWriter, FileWriter}
-import javax.xml.stream.XMLOutputFactory
+import javax.xml.stream.{XMLOutputFactory, XMLStreamWriter}
 
 import graft.model._
 
 /**
- * File sinks mirroring the reference's export use case (`CityKGDB.java:65-69`):
+ * File sinks mirroring the reference's export use case (`CityKGDB.java:65-69`),
+ * one serializer per format:
  *
- *  - CityGML 2.0 writer (S6 semantics, `CityGMLV2DB.java:283-337`): one
- *    CityModel per partition, optional 2D bbox filter with the reference's
- *    touching-inclusive intersection test (`Neo4jDB.java:373-385`), UTF-8,
- *    indented;
+ *  - CityGML writer (S6/S7 semantics, `CityGMLV2DB.java:283-337`,
+ *    `CityGMLV3DB.java:56-126`): one StAX writer for 2.0 and 3.0, the
+ *    version a [[GmlDialect]] value; optional 2D bbox filter with the
+ *    reference's touching-inclusive intersection test (`Neo4jDB.java:373-385`),
+ *    UTF-8;
  *  - CityJSON writer (S8 semantics, `CityJSONDB.java:106-142`): vertex
  *    precision 3 — coordinates quantized to ints with transform scale 0.001
  *    (`round(x*1000)` — the reference's applyTransformation(true) behaviour).
  *
  * The exported model is this engine's footprint feature model (ground ring +
- * envelope + attributes). Exports are driver-side like the reference (the
- * feature side is the small side of the engine; images never flow through
- * here). Round-trip fidelity is proven by re-ingesting with the readers.
+ * envelope + attributes) plus its boundary-surface polygons. Both writers emit
+ * the polygons they are given; the ground-only exports ([[exportCityGml]],
+ * [[exportCityJson]]) pass the LOD0 ground polygons synthesized from the
+ * footprints. `Main` exports through the distributed sinks, which run the same
+ * writers inside the task that holds each partition; the single-file calls
+ * serve small exports. Round-trip fidelity is proven by re-ingesting with the
+ * readers.
  */
 object Exporters {
+
+  /** What separates the CityGML 2.0 and 3.0 documents the writer emits: the
+    * namespace declarations (prefix -> URI, in document order), the
+    * boundary-surface wrapper (prefix, element), the prefix of the
+    * surface-type element and of `lod2MultiSurface`, and the
+    * generic-attribute shape. */
+  sealed abstract class GmlDialect(val namespaces: Seq[(String, String)],
+                                   boundary: (String, String), surfacePrefix: String,
+                                   lod2Prefix: String) extends Serializable {
+    private val ns = namespaces.toMap
+    val core: String = ns("core")
+    val bldg: String = ns("bldg")
+    val gml: String = ns("gml")
+    val gen: String = ns("gen")
+    val boundaryNs: String = ns(boundary._1)
+    val boundaryName: String = boundary._2
+    val surfaceNs: String = ns(surfacePrefix)
+    val lod2Ns: String = ns(lod2Prefix)
+    private[Exporters] def attribute(x: XMLStreamWriter, k: String, v: String): Unit
+  }
+
+  /** CityGML 2.0: `bldg:boundedBy` > `bldg:<type>`, `bldg:lod2MultiSurface`,
+    * `gen:stringAttribute name=` > `gen:value`, GML 3.1. */
+  case object GmlV2 extends GmlDialect(Seq(
+      "core" -> "http://www.opengis.net/citygml/2.0",
+      "bldg" -> "http://www.opengis.net/citygml/building/2.0",
+      "gml" -> "http://www.opengis.net/gml",
+      "gen" -> "http://www.opengis.net/citygml/generics/2.0"),
+    boundary = "bldg" -> "boundedBy", surfacePrefix = "bldg", lod2Prefix = "bldg") {
+    private[Exporters] def attribute(x: XMLStreamWriter, k: String, v: String): Unit = {
+      x.writeStartElement(gen, "stringAttribute")
+      x.writeAttribute("name", k)
+      el(x, gen, "value", v)
+      x.writeEndElement()
+    }
+  }
+
+  /** CityGML 3.0 (the restructurings the reference handles through the
+    * citygml4j v3 API, `CityGMLV3DB.java:56-126`): boundary surfaces live
+    * under `core:boundary` in the construction namespace, `lod2MultiSurface`
+    * moves to the core namespace, GML is 3.2, and generic attributes are
+    * `core:genericAttribute` > `gen:StringAttribute` with `gen:name` /
+    * `gen:value` child elements. */
+  case object GmlV3 extends GmlDialect(Seq(
+      "core" -> "http://www.opengis.net/citygml/3.0",
+      "bldg" -> "http://www.opengis.net/citygml/building/3.0",
+      "con" -> "http://www.opengis.net/citygml/construction/3.0",
+      "gen" -> "http://www.opengis.net/citygml/generics/3.0",
+      "gml" -> "http://www.opengis.net/gml/3.2"),
+    boundary = "core" -> "boundary", surfacePrefix = "con", lod2Prefix = "core") {
+    private[Exporters] def attribute(x: XMLStreamWriter, k: String, v: String): Unit = {
+      x.writeStartElement(core, "genericAttribute")
+      x.writeStartElement(gen, "StringAttribute")
+      el(x, gen, "name", k)
+      el(x, gen, "value", v)
+      x.writeEndElement(); x.writeEndElement()
+    }
+  }
 
   /** P6 bbox filter: touching boxes are kept; None = infinite box. */
   def bboxFilter(fps: Seq[Footprint], bbox: Option[Env6]): Seq[Footprint] = bbox match {
@@ -39,49 +103,50 @@ object Exporters {
     exportCityGmlFull(fps, groundPolys(fps), path, bbox, srs)
 
   /**
-   * Full-surface CityGML 2.0 export: re-emits EVERY boundary-surface polygon
-   * (ground/walls/roofs/…) with its original 3D coordinates, ids and surface
-   * types — the reference's whole-tree export fidelity
-   * (`CityGMLV2DB.java:283-337`) — where [[exportCityGml]] writes only the
-   * ground projection. `buildings` provides attrs + envelopes; `surfaces`
-   * provides the geometry (grouped per building, input order preserved).
+   * Full-surface CityGML export, 2.0 or 3.0 by `dialect`: re-emits EVERY
+   * boundary-surface polygon (ground/walls/roofs/…) with its original 3D
+   * coordinates, ids and surface types — the reference's whole-tree export
+   * fidelity (`CityGMLV2DB.java:283-337`) — where [[exportCityGml]] writes
+   * only the ground projection. `buildings` provides attrs + envelopes;
+   * `surfaces` provides the geometry (grouped per building, input order
+   * preserved).
    */
   def exportCityGmlFull(buildings: Seq[Footprint], surfaces: Seq[SurfacePoly],
                         path: String, bbox: Option[Env6] = None,
-                        srs: String = "urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH"): Unit = {
+                        srs: String = "urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH",
+                        dialect: GmlDialect = GmlV2): Unit = {
+    import dialect.{core, bldg, gml}
     val sel = bboxFilter(buildings.filter(_.feature_type == "Building"), bbox)
     val byBldg = surfaces.groupBy(_.feature_id)
     val w = new BufferedWriter(new FileWriter(path))
     val x = XMLOutputFactory.newInstance().createXMLStreamWriter(w)
+    def ring(kind: String, pts: Seq[XYZ]): Unit = {
+      x.writeStartElement(gml, kind)
+      x.writeStartElement(gml, "LinearRing")
+      el(x, gml, "posList", pts.map(p => s"${p.x} ${p.y} ${p.z}").mkString(" "))
+      x.writeEndElement(); x.writeEndElement()
+    }
     try {
       x.writeStartDocument("UTF-8", "1.0")
-      x.writeStartElement("core", "CityModel", NsCore)
-      x.writeNamespace("core", NsCore)
-      x.writeNamespace("bldg", NsBldg)
-      x.writeNamespace("gml", NsGml)
-      x.writeNamespace("gen", NsGen)
+      x.writeStartElement("core", "CityModel", core)
+      dialect.namespaces.foreach { case (prefix, ns) => x.writeNamespace(prefix, ns) }
       if (sel.nonEmpty) {
         val env = sel.map(_.env).reduce((a, b) => Env6(
           math.min(a.minx, b.minx), math.min(a.miny, b.miny), math.min(a.minz, b.minz),
           math.max(a.maxx, b.maxx), math.max(a.maxy, b.maxy), math.max(a.maxz, b.maxz)))
-        x.writeStartElement(NsGml, "boundedBy")
-        x.writeStartElement(NsGml, "Envelope")
+        x.writeStartElement(gml, "boundedBy")
+        x.writeStartElement(gml, "Envelope")
         x.writeAttribute("srsName", srs)
         x.writeAttribute("srsDimension", "3")
-        el(x, NsGml, "lowerCorner", s"${env.minx} ${env.miny} ${env.minz}")
-        el(x, NsGml, "upperCorner", s"${env.maxx} ${env.maxy} ${env.maxz}")
+        el(x, gml, "lowerCorner", s"${env.minx} ${env.miny} ${env.minz}")
+        el(x, gml, "upperCorner", s"${env.maxx} ${env.maxy} ${env.maxz}")
         x.writeEndElement(); x.writeEndElement()
       }
       sel.foreach { f =>
-        x.writeStartElement(NsCore, "cityObjectMember")
-        x.writeStartElement(NsBldg, "Building")
-        x.writeAttribute(NsGml, "id", f.feature_id)
-        f.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          x.writeStartElement(NsGen, "stringAttribute")
-          x.writeAttribute("name", k)
-          el(x, NsGen, "value", v)
-          x.writeEndElement()
-        }
+        x.writeStartElement(core, "cityObjectMember")
+        x.writeStartElement(bldg, "Building")
+        x.writeAttribute(gml, "id", f.feature_id)
+        f.attrs.toSeq.sortBy(_._1).foreach { case (k, v) => dialect.attribute(x, k, v) }
         val polys = byBldg.getOrElse(f.feature_id, Seq.empty)
         // stable group per boundary surface, first-appearance order
         val grouped = polys.groupBy(p => (p.surface_id, p.surface_type)).toSeq
@@ -89,18 +154,18 @@ object Exporters {
         grouped.foreach { case ((sid, stype), ps) =>
           val wrapped = CityGmlReader.SurfaceTypes(stype)
           if (wrapped) {
-            x.writeStartElement(NsBldg, "boundedBy")
-            x.writeStartElement(NsBldg, stype)
-            x.writeAttribute(NsGml, "id", sid)
+            x.writeStartElement(dialect.boundaryNs, dialect.boundaryName)
+            x.writeStartElement(dialect.surfaceNs, stype)
+            x.writeAttribute(gml, "id", sid)
           }
-          x.writeStartElement(NsBldg, "lod2MultiSurface")
-          x.writeStartElement(NsGml, "MultiSurface")
+          x.writeStartElement(dialect.lod2Ns, "lod2MultiSurface")
+          x.writeStartElement(gml, "MultiSurface")
           ps.foreach { p =>
-            x.writeStartElement(NsGml, "surfaceMember")
-            x.writeStartElement(NsGml, "Polygon")
-            if (p.poly_id.nonEmpty) x.writeAttribute(NsGml, "id", p.poly_id)
-            ring3d(x, "exterior", p.exterior)
-            p.interiors.foreach(h => ring3d(x, "interior", h))
+            x.writeStartElement(gml, "surfaceMember")
+            x.writeStartElement(gml, "Polygon")
+            if (p.poly_id.nonEmpty) x.writeAttribute(gml, "id", p.poly_id)
+            ring("exterior", p.exterior)
+            p.interiors.foreach(h => ring("interior", h))
             x.writeEndElement(); x.writeEndElement()
           }
           x.writeEndElement(); x.writeEndElement()
@@ -114,18 +179,18 @@ object Exporters {
   }
 
   /**
-   * DISTRIBUTED CityGML 2.0 export: one file per `partition_id`, written by
-   * the Spark task that holds the partition's rows — the scale-safe form of
-   * the driver-side exporters above. The driver path is exact reference
-   * parity (the reference builds the whole CityModel in driver memory,
-   * `CityGMLV2DB.java:283-337`, with an 8–16 GB JVM sized for it,
-   * `build.gradle:96-97`) and stays for single-file use; at 100× the
-   * feature count the export must stream from executors. Mechanics:
-   * cogroup footprints and surfaces on `partition_id` (ONE shuffle keyed by
-   * the table's own commit unit — the same unit W3's merge semantics
-   * invert), each group materializes only ITS partition in task memory and
-   * writes `part_<pid>.gml` with the identical StAX writer, so every file
-   * is byte-deterministic (features sorted by id) and individually
+   * DISTRIBUTED CityGML export (2.0 or 3.0 by `dialect`): one file per
+   * `partition_id`, written by the Spark task that holds the partition's
+   * rows — the scale-safe form of the single-file writers above. The
+   * single-file path is exact reference parity (the reference builds the
+   * whole CityModel in driver memory, `CityGMLV2DB.java:283-337`, with an
+   * 8–16 GB JVM sized for it, `build.gradle:96-97`); at 100× the feature
+   * count the export must stream from executors. Mechanics: cogroup
+   * footprints and surfaces on `partition_id` (ONE shuffle keyed by the
+   * table's own commit unit — the same unit W3's merge semantics invert),
+   * each group materializes only ITS partition in task memory and writes
+   * `part_<pid>.gml` with the identical StAX writer, so every file is
+   * byte-deterministic (features sorted by id) and individually
    * re-ingestable; the union of re-ingests equals the input (ExportSpec).
    * `outDir` must be shared storage on a real cluster (the usual contract
    * for file-format sinks).
@@ -135,19 +200,10 @@ object Exporters {
       surfaces: org.apache.spark.sql.Dataset[SurfacePoly],
       outDir: String, bbox: Option[Env6] = None,
       srs: String = "urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH",
-      filePrefix: String = "part_", version: String = "v2"): Seq[(Int, String)] = {
-    require(version == "v2" || version == "v3",
-      s"exportCityGmlDistributed: version must be v2 or v3, got '$version'")
-    exportDistributed(buildings, surfaces, outDir, filePrefix, ".gml") {
-      (bSorted, sSorted, tmp) =>
-        // partitions with no surface rows still carry geometry: synthesize
-        // the LOD0 ground polygons from the footprints so neither version
-        // ever emits a Building with attributes and zero geometry
-        val sFor = if (sSorted.nonEmpty) sSorted else groundPolys(bSorted)
-        if (version == "v3") exportCityGmlV3Full(bSorted, sFor, tmp, bbox, srs)
-        else exportCityGmlFull(bSorted, sFor, tmp, bbox, srs)
+      filePrefix: String = "part_", dialect: GmlDialect = GmlV2): Seq[(Int, String)] =
+    exportDistributed(buildings, surfaces, outDir, bbox, filePrefix, ".gml") {
+      (sel, polys, tmp) => exportCityGmlFull(sel, polys, tmp, srs = srs, dialect = dialect)
     }
-  }
 
   /**
    * Distributed CityJSON sink — the S8 (precision-3 quantization,
@@ -155,19 +211,15 @@ object Exporters {
    * `part_<pid>.city.json` per partition through the same cogroup +
    * task-commit writer, byte-deterministic (features/surfaces sorted) and
    * individually re-ingestable; vertex indices are per-file, which is what
-   * CityJSON requires anyway. `bbox` is the GML writer's P6 filter, applied
-   * to each partition's buildings inside the task.
+   * CityJSON requires anyway.
    */
   def exportCityJsonDistributed(
       buildings: org.apache.spark.sql.Dataset[Footprint],
       surfaces: org.apache.spark.sql.Dataset[SurfacePoly],
       outDir: String, bbox: Option[Env6] = None, srs: String = "",
       filePrefix: String = "part_"): Seq[(Int, String)] =
-    exportDistributed(buildings, surfaces, outDir, filePrefix, ".city.json") {
-      (bSorted, sSorted, tmp) =>
-        val sel = bboxFilter(bSorted, bbox)
-        if (sSorted.nonEmpty) exportCityJsonFull(sel, sSorted, tmp, srs)
-        else exportCityJson(sel, tmp, srs)
+    exportDistributed(buildings, surfaces, outDir, bbox, filePrefix, ".city.json") {
+      (sel, polys, tmp) => exportCityJsonFull(sel, polys, tmp, srs)
     }
 
   /** LOD0 ground polygons synthesized from footprints (fallback geometry):
@@ -185,7 +237,10 @@ object Exporters {
   /** Shared cogroup-per-partition task-commit writer behind the distributed
     * CityGML/CityJSON sinks: sorts features by id and surfaces by (feature,
     * surface, poly) for byte determinism (cogroup iterator order is not
-    * stable), writes through `writeFile` to an attempt-private temp under
+    * stable), keeps the features `bbox` selects, and passes them with their
+    * surfaces — or, in a partition with no surface rows, their synthesized
+    * ground polygons, so no format ever emits a Building with attributes and
+    * zero geometry — through `writeFile` to an attempt-private temp under
     * `outDir/_tmp`, atomic-renames into place, and sweeps leftover temps.
     * The temp+rename is the task-commit protocol: a speculative/retried
     * attempt would otherwise interleave buffered writes with a zombie first
@@ -196,14 +251,14 @@ object Exporters {
   private def exportDistributed(
       buildings: org.apache.spark.sql.Dataset[Footprint],
       surfaces: org.apache.spark.sql.Dataset[SurfacePoly],
-      outDir: String, filePrefix: String, ext: String)(
+      outDir: String, bbox: Option[Env6], filePrefix: String, ext: String)(
       writeFile: (Seq[Footprint], Seq[SurfacePoly], String) => Unit): Seq[(Int, String)] = {
     val spark = buildings.sparkSession
     import spark.implicits._
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val manifest = buildings.groupByKey(_.partition_id)
       .cogroup(surfaces.groupByKey(_.partition_id)) { (pid, bs, ss) =>
-        val bSorted = bs.toSeq.sortBy(_.feature_id)
+        val sel = bboxFilter(bs.toSeq.sortBy(_.feature_id), bbox)
         val sSorted = ss.toSeq.sortBy(p => (p.feature_id, p.surface_id, p.poly_id))
         val path = s"$outDir/$filePrefix$pid$ext"
         val attempt = Option(org.apache.spark.TaskContext.get())
@@ -213,7 +268,7 @@ object Exporters {
         // file in the output directory; the driver sweeps _tmp after the job
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outDir/_tmp"))
         val tmp = s"$outDir/_tmp/$filePrefix$pid$ext.inprogress_$attempt"
-        writeFile(bSorted, sSorted, tmp)
+        writeFile(sel, if (sSorted.nonEmpty) sSorted else groundPolys(sel), tmp)
         java.nio.file.Files.move(java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(path),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -239,146 +294,23 @@ object Exporters {
     manifest
   }
 
-  /**
-   * Full-surface CityGML **3.0** export — the v3 restatement of
-   * [[exportCityGmlFull]] with the v3 document restructurings the reference
-   * handles through the citygml4j v3 API (`CityGMLV3DB.java:56-126`):
-   * boundary surfaces live under `core:boundary` in the CONSTRUCTION
-   * namespace, `lod2MultiSurface` moves to the core namespace, GML is 3.2,
-   * and generic attributes are capitalized elements with `gen:name` /
-   * `gen:value` CHILD elements. Round-trip-tested against the v2 fixture
-   * (same footprints and surfaces from either version).
-   */
-  def exportCityGmlV3Full(buildings: Seq[Footprint], surfaces: Seq[SurfacePoly],
-                          path: String, bbox: Option[Env6] = None,
-                          srs: String = "urn:adv:crs:ETRS89_UTM32*DE_DHHN92_NH"): Unit = {
-    val NsCore3 = "http://www.opengis.net/citygml/3.0"
-    val NsBldg3 = "http://www.opengis.net/citygml/building/3.0"
-    val NsCon3 = "http://www.opengis.net/citygml/construction/3.0"
-    val NsGen3 = "http://www.opengis.net/citygml/generics/3.0"
-    val NsGml32 = "http://www.opengis.net/gml/3.2"
-    val sel = bboxFilter(buildings.filter(_.feature_type == "Building"), bbox)
-    val byBldg = surfaces.groupBy(_.feature_id)
-    val w = new BufferedWriter(new FileWriter(path))
-    val x = XMLOutputFactory.newInstance().createXMLStreamWriter(w)
-    def ring3(kind: String, pts: Seq[XYZ]): Unit = {
-      x.writeStartElement(NsGml32, kind)
-      x.writeStartElement(NsGml32, "LinearRing")
-      el(x, NsGml32, "posList", pts.map(p => s"${p.x} ${p.y} ${p.z}").mkString(" "))
-      x.writeEndElement(); x.writeEndElement()
-    }
-    try {
-      x.writeStartDocument("UTF-8", "1.0")
-      x.writeStartElement("core", "CityModel", NsCore3)
-      x.writeNamespace("core", NsCore3)
-      x.writeNamespace("bldg", NsBldg3)
-      x.writeNamespace("con", NsCon3)
-      x.writeNamespace("gen", NsGen3)
-      x.writeNamespace("gml", NsGml32)
-      if (sel.nonEmpty) {
-        val env = sel.map(_.env).reduce((a, b) => Env6(
-          math.min(a.minx, b.minx), math.min(a.miny, b.miny), math.min(a.minz, b.minz),
-          math.max(a.maxx, b.maxx), math.max(a.maxy, b.maxy), math.max(a.maxz, b.maxz)))
-        x.writeStartElement(NsGml32, "boundedBy")
-        x.writeStartElement(NsGml32, "Envelope")
-        x.writeAttribute("srsName", srs)
-        x.writeAttribute("srsDimension", "3")
-        el(x, NsGml32, "lowerCorner", s"${env.minx} ${env.miny} ${env.minz}")
-        el(x, NsGml32, "upperCorner", s"${env.maxx} ${env.maxy} ${env.maxz}")
-        x.writeEndElement(); x.writeEndElement()
-      }
-      sel.foreach { f =>
-        x.writeStartElement(NsCore3, "cityObjectMember")
-        x.writeStartElement(NsBldg3, "Building")
-        x.writeAttribute(NsGml32, "id", f.feature_id)
-        f.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          x.writeStartElement(NsCore3, "genericAttribute")
-          x.writeStartElement(NsGen3, "StringAttribute")
-          el(x, NsGen3, "name", k)
-          el(x, NsGen3, "value", v)
-          x.writeEndElement(); x.writeEndElement()
-        }
-        val polys = byBldg.getOrElse(f.feature_id, Seq.empty)
-        val grouped = polys.groupBy(p => (p.surface_id, p.surface_type)).toSeq
-          .sortBy { case ((sid, _), _) => polys.indexWhere(_.surface_id == sid) }
-        grouped.foreach { case ((sid, stype), ps) =>
-          val wrapped = CityGmlReader.SurfaceTypes(stype)
-          if (wrapped) {
-            x.writeStartElement(NsCore3, "boundary")
-            x.writeStartElement(NsCon3, stype)
-            x.writeAttribute(NsGml32, "id", sid)
-          }
-          x.writeStartElement(NsCore3, "lod2MultiSurface")
-          x.writeStartElement(NsGml32, "MultiSurface")
-          ps.foreach { p =>
-            x.writeStartElement(NsGml32, "surfaceMember")
-            x.writeStartElement(NsGml32, "Polygon")
-            if (p.poly_id.nonEmpty) x.writeAttribute(NsGml32, "id", p.poly_id)
-            ring3("exterior", p.exterior)
-            p.interiors.foreach(h => ring3("interior", h))
-            x.writeEndElement(); x.writeEndElement()
-          }
-          x.writeEndElement(); x.writeEndElement()
-          if (wrapped) { x.writeEndElement(); x.writeEndElement() }
-        }
-        x.writeEndElement(); x.writeEndElement()
-      }
-      x.writeEndElement()
-      x.writeEndDocument()
-    } finally { x.close(); w.close() }
-  }
-
-  private def ring3d(x: javax.xml.stream.XMLStreamWriter, kind: String, pts: Seq[XYZ]): Unit = {
-    x.writeStartElement(NsGml, kind)
-    x.writeStartElement(NsGml, "LinearRing")
-    el(x, NsGml, "posList", pts.map(p => s"${p.x} ${p.y} ${p.z}").mkString(" "))
-    x.writeEndElement(); x.writeEndElement()
-  }
-
-  private val NsCore = "http://www.opengis.net/citygml/2.0"
-  private val NsBldg = "http://www.opengis.net/citygml/building/2.0"
-  private val NsGml = "http://www.opengis.net/gml"
-  private val NsGen = "http://www.opengis.net/citygml/generics/2.0"
-
-  private def el(x: javax.xml.stream.XMLStreamWriter, ns: String, name: String, text: String): Unit = {
+  private def el(x: XMLStreamWriter, ns: String, name: String, text: String): Unit = {
     x.writeStartElement(ns, name); x.writeCharacters(text); x.writeEndElement()
   }
 
-  /**
-   * CityJSON 2.0 export with the reference's vertex quantization: precision 3
-   * → transform.scale 0.001, vertices stored as round(v*1000) ints
-   * (`CityJSONDB.java:118-121`).
-   */
-  def exportCityJson(fps: Seq[Footprint], path: String, srs: String = ""): Unit = {
-    val sel = fps.filter(_.feature_type == "Building")
-    val verts = scala.collection.mutable.LinkedHashMap.empty[(Long, Long, Long), Int]
-    def vIdx(x: Double, y: Double, z: Double): Int = {
-      val key = (math.round(x * 1000), math.round(y * 1000), math.round(z * 1000))
-      verts.getOrElseUpdate(key, verts.size)
-    }
-    val objs = sel.map { f =>
-      val extIdx = closedOpen(f.ring).map(p => vIdx(p.x, p.y, f.env.minz))
-      val holeIdx = f.holes.map(h => closedOpen(h).map(p => vIdx(p.x, p.y, f.env.minz)))
-      val boundaries = s"[[${(extIdx +: holeIdx).map(_.mkString("[", ",", "]")).mkString(",")}]]"
-      val attrs = f.attrs.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${jq(k)}:${jq(v)}" }.mkString("{", ",", "}")
-      s"""${jq(f.feature_id)}:{"type":"Building","attributes":$attrs,""" +
-        s""""geometry":[{"type":"MultiSurface","lod":"2","boundaries":$boundaries}]}"""
-    }.mkString(",")
-    val vertArr = verts.keys.map { case (a, b, c) => s"[$a,$b,$c]" }.mkString(",")
-    val meta = if (srs.nonEmpty) s""","metadata":{"referenceSystem":${jq(srs)}}""" else ""
-    val json =
-      s"""{"type":"CityJSON","version":"2.0",""" +
-        s""""transform":{"scale":[0.001,0.001,0.001],"translate":[0.0,0.0,0.0]},""" +
-        s""""CityObjects":{$objs},"vertices":[$vertArr]$meta}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), json.getBytes("UTF-8"))
-  }
+  /** Ground-projection CityJSON export: the [[exportCityJsonFull]] writer
+    * over the footprints' synthesized ground polygons, one `GroundSurface`
+    * face per Building. */
+  def exportCityJson(fps: Seq[Footprint], path: String, srs: String = ""): Unit =
+    exportCityJsonFull(fps, groundPolys(fps), path, srs)
 
   /**
    * Full-surface CityJSON 2.0 export: every boundary polygon with its real
-   * 3D vertices (quantized, precision 3) plus a CityJSON `semantics` object
-   * carrying the surface types — the CityJSON twin of [[exportCityGmlFull]]
-   * (reference full-geometry CityJSON mapping, `CityJSONDB.java:71-142`).
+   * 3D vertices plus a CityJSON `semantics` object carrying the surface
+   * types — the CityJSON twin of [[exportCityGmlFull]] (reference
+   * full-geometry CityJSON mapping, `CityJSONDB.java:71-142`). Vertices
+   * carry the reference's quantization: precision 3 → transform.scale 0.001,
+   * stored as round(v*1000) ints (`CityJSONDB.java:118-121`).
    */
   def exportCityJsonFull(buildings: Seq[Footprint], surfaces: Seq[SurfacePoly],
                          path: String, srs: String = ""): Unit = {
@@ -416,9 +348,6 @@ object Exporters {
         s""""CityObjects":{$objs},"vertices":[$vertArr]$meta}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(path), json.getBytes("UTF-8"))
   }
-
-  private def closedOpen(pts: Seq[XY]): Seq[XY] =
-    if (pts.size > 1 && pts.head == pts.last) pts.dropRight(1) else pts
 
   private def jq(s: String): String =
     "\"" + s.flatMap {

@@ -190,8 +190,7 @@ object IceLite {
    * while keeping the partition as the crash-tolerant commit unit (a crash
    * mid-loop leaves a prefix committed; resume stages only the remainder).
    */
-  def writeResumable(df: DataFrame, table: String, partCol: String,
-                     inListLimit: Int = 1000): (Seq[String], Seq[String]) = {
+  def writeResumable(df: DataFrame, table: String, partCol: String): (Seq[String], Seq[String]) = {
     Files.createDirectories(metaDir(table))
     val snap = currentSnapshot(table)
     val allRaw = df.select(col(partCol).cast("string")).distinct()
@@ -206,17 +205,11 @@ object IceLite {
     if (todo.isEmpty) return (Seq.empty, skipped)
 
     val stage = s"$table/_icelite_stage"
-    // pending filter: a literal In-list is fine for human-scale partition
-    // counts, but at 10^4+ pending values the expression itself bloats the
-    // plan — switch to a broadcast semi-join on the value set
+    // pending filter: the optimizer (OptimizeIn) turns a literal list of
+    // more than 10 values into a hashed InSet, so one filter serves every
+    // pending-partition count
     val pending = if (skipped.isEmpty) df
-      else if (todo.size <= inListLimit) df.where(col(partCol).cast("string").isin(todo: _*))
-      else {
-        import df.sparkSession.implicits._
-        val todoDf = todo.toDF("__todo_pv")
-        df.join(org.apache.spark.sql.functions.broadcast(todoDf),
-          col(partCol).cast("string") === col("__todo_pv"), "left_semi")
-      }
+      else df.where(col(partCol).cast("string").isin(todo: _*))
     // stage all pending partitions in one distributed write; the hash
     // exchange on the key puts each value's rows in one task, so each
     // partition is staged (and committed) as exactly one data file

@@ -239,19 +239,6 @@ class PipelineSpec extends AnyFunSuite {
       s"calibrated keeper = per-source top: $cal")
   }
 
-  test("metadataGate: drops exactly the aspect-violating fixture shapes, keeps the rest") {
-    val imgs = graft.sources.ImageGen.table(spark, 200, 4).toDF()
-    val kept = Pipeline.metadataGate(imgs).select("image_id").as[String].collect().toSet
-    // fixture dims are {16,32,64}: with minSide=16 / maxAspect=3 the only
-    // failing combination is the 4:1 pair (16,64)/(64,16); bpp, fmt and
-    // caption gates all pass by construction
-    val want = imgs.select("image_id", "w", "h").as[(String, Int, Int)].collect()
-      .filter { case (_, w, h) => math.max(w, h).toDouble / math.min(w, h) <= 3.0 }
-      .map(_._1).toSet
-    assert(kept === want)
-    assert(kept.nonEmpty && kept.size < 200, "the aspect gate must bite on the fixture")
-  }
-
   test("normalizeForDedup: accented mirror clusters with its original only when on") {
     // one doc plus a mirrored copy differing ONLY by Latin accents and
     // whitespace runs (every token carries an accent → raw shingle sets are

@@ -60,18 +60,24 @@ class KnnJoinSpec extends AnyFunSuite {
       .select("probe_id", "target_id", "d2", "rnk")
       .as[(String, String, Double, Int)].collect().toSet
     assert(got === want)
-    // the big-probe regime (tcell-partitioned target cache + shuffle joins;
-    // the default above takes the small-probe broadcast regime) must be
-    // row-identical — the regime split is a join-strategy choice only
-    spark.conf.set("spark.graft.knn.smallProbeLimit", "0")
-    try {
-      val gotShuffle = KnnJoin.ringJoin(
-        probes.take(60).toDF("probe_id", "x", "y"),
-        targets.toDF("target_id", "cx", "cy"), k = 3, res = 11, maxR = 24)
-        .select("probe_id", "target_id", "d2", "rnk")
-        .as[(String, String, Double, Int)].collect().toSet
-      assert(gotShuffle === want, "(shuffle regime)")
-    } finally spark.conf.unset("spark.graft.knn.smallProbeLimit")
+    // the default above takes the small-probe broadcast regime; the other
+    // side of each threshold must be row-identical — the split is a
+    // join-strategy choice only: the big-probe regime (tcell-partitioned
+    // target cache + shuffle joins), and the small-probe regime with a 1-row
+    // broadcast limit, whose per-round row guard sends the rounds to the
+    // shuffle join
+    for ((key, value) <- Seq("spark.graft.knn.smallProbeLimit" -> "0",
+                             "spark.graft.knn.broadcastRowsLimit" -> "1")) {
+      spark.conf.set(key, value)
+      try {
+        val gotShuffle = KnnJoin.ringJoin(
+          probes.take(60).toDF("probe_id", "x", "y"),
+          targets.toDF("target_id", "cx", "cy"), k = 3, res = 11, maxR = 24)
+          .select("probe_id", "target_id", "d2", "rnk")
+          .as[(String, String, Double, Int)].collect().toSet
+        assert(gotShuffle === want, s"($key = $value)")
+      } finally spark.conf.unset(key)
+    }
   }
 
   test("ring-budget exhaustion falls back to exact results (no silent truncation)") {

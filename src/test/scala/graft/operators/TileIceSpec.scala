@@ -235,15 +235,14 @@ class TileIceSpec extends AnyFunSuite {
     }
   }
 
-  test("IceLite: resume via broadcast semi-join path (many pending partitions)") {
-    val dir = java.nio.file.Files.createTempDirectory("icelite_semi").toString
-    val table = s"$dir/events_semi"
+  test("IceLite: resume writes only the pending partitions") {
+    val dir = java.nio.file.Files.createTempDirectory("icelite_resume").toString
+    val table = s"$dir/events_resume"
     val df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val (w1, _) = IceLite.writeResumable(
       df.where(col("event_type") === "click"), table, "event_type")
     assert(w1 === Seq("click"))
-    // force the over-limit branch: pending values go through the semi-join
-    val (w2, s2) = IceLite.writeResumable(df, table, "event_type", inListLimit = 0)
+    val (w2, s2) = IceLite.writeResumable(df, table, "event_type")
     assert(s2 === Seq("click") && w2.nonEmpty)
     val back = IceLite.read(spark, table)
     assert(back.count() === df.count())

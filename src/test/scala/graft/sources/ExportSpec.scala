@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model._
 
 class ExportSpec extends AnyFunSuite {
-  import ExportSpec.{GroundGml, GroundGmlV3}
+  import ExportSpec.{GroundCityJsonUntyped, GroundGml, GroundGmlV3}
 
   lazy val fzk = CityGmlReader.toFootprints(
     CityGmlReader.parseFile(graft.Fixtures.fzkV2), 0)
@@ -105,7 +105,7 @@ class ExportSpec extends AnyFunSuite {
     // CityGML 3.0 variant: the same distributed path, the v3 writer — the
     // version-agnostic reader must recover the identical surface set
     val outDir3 = java.nio.file.Files.createTempDirectory("gmldist3").toString
-    Exporters.exportCityGmlDistributed(fps.toDS(), surfs.toDS(), outDir3, version = "v3")
+    Exporters.exportCityGmlDistributed(fps.toDS(), surfs.toDS(), outDir3, dialect = Exporters.GmlV3)
     val backS3 = Seq(0, 7).flatMap { pid =>
       CityGmlReader.toSurfaces(CityGmlReader.parseFile(s"$outDir3/part_$pid.gml"), pid) }
     assert(backS3.map(key).toSet === surfs.map(key).toSet)
@@ -113,7 +113,7 @@ class ExportSpec extends AnyFunSuite {
     // (synthesized LOD0 ground polygons), never attribute-only Buildings
     val outDir4 = java.nio.file.Files.createTempDirectory("gmldist4").toString
     Exporters.exportCityGmlDistributed(fps.toDS(),
-      spark.emptyDataset[SurfacePoly], outDir4, version = "v3")
+      spark.emptyDataset[SurfacePoly], outDir4, dialect = Exporters.GmlV3)
     val back4 = CityGmlReader.toFootprints(
       CityGmlReader.parseFile(s"$outDir4/part_0.gml"), 0)
       .filter(_.feature_type == "Building")
@@ -258,30 +258,50 @@ class ExportSpec extends AnyFunSuite {
   test("footprint-only distributed CityGML export writes closed LinearRings (v2 and v3)") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    for (version <- Seq("v2", "v3")) {
+    for (dialect <- Seq(Exporters.GmlV2, Exporters.GmlV3)) {
       val outDir = java.nio.file.Files.createTempDirectory("gmlground").toString
       Exporters.exportCityGmlDistributed(groundFps.toDS(),
-        spark.emptyDataset[SurfacePoly], outDir, version = version)
+        spark.emptyDataset[SurfacePoly], outDir, dialect = dialect)
       val doc = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$outDir/part_3.gml")), "UTF-8")
       val posLists = "<gml:posList>([^<]*)</gml:posList>".r.findAllMatchIn(doc)
         .map(_.group(1).split(' ').grouped(3).map(_.toSeq).toSeq).toSeq
       // b1 exterior + hole, b2, b3 (no bbox: all three Buildings)
-      assert(posLists.size === 4, s"$version: $doc")
-      posLists.foreach(ring => assert(ring.head === ring.last, s"$version: open ring $ring"))
+      assert(posLists.size === 4, s"$dialect: $doc")
+      posLists.foreach(ring => assert(ring.head === ring.last, s"$dialect: open ring $ring"))
     }
   }
 
   test("footprint-only distributed CityGML export writes the ground-ring documents byte for byte (v2 and v3)") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    for ((version, golden) <- Seq("v2" -> GroundGml, "v3" -> GroundGmlV3)) {
+    for ((dialect, golden) <- Seq(Exporters.GmlV2 -> GroundGml, Exporters.GmlV3 -> GroundGmlV3)) {
       val outDir = java.nio.file.Files.createTempDirectory("gmlgolden").toString
       Exporters.exportCityGmlDistributed(groundFps.toDS(),
-        spark.emptyDataset[SurfacePoly], outDir, groundBox, version = version)
+        spark.emptyDataset[SurfacePoly], outDir, groundBox, dialect = dialect)
       assert(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$outDir/part_3.gml")), "UTF-8") === golden, version)
+        java.nio.file.Paths.get(s"$outDir/part_3.gml")), "UTF-8") === golden, dialect)
     }
+  }
+
+  test("ground-only CityJSON export re-ingests like the untyped ground document, faces typed GroundSurface") {
+    val dir = java.nio.file.Files.createTempDirectory("cjground")
+    val out = dir.resolve("g.city.json")
+    Exporters.exportCityJson(groundFps, out.toString)
+    val untyped = java.nio.file.Files.write(dir.resolve("untyped.city.json"),
+      GroundCityJsonUntyped.getBytes("UTF-8"))
+    val doc = CityJsonReader.parseFile(out.toString)
+    val ref = CityJsonReader.parseFile(untyped.toString)
+    assert(CityJsonReader.toFootprints(doc, 3) === CityJsonReader.toFootprints(ref, 3))
+    val surfaces = CityJsonReader.toSurfaces(doc, 3)
+    assert(surfaces === CityJsonReader.toSurfaces(ref, 3))
+    // one ground face per Building, typed by the document's own semantics
+    assert(surfaces.map(s => (s.feature_id, s.surface_type)) ===
+      Seq("b1", "b2", "b3").map(_ -> "GroundSurface"))
+    val sem = """"semantics":{"surfaces":[{"type":"GroundSurface"}],"values":[0]}"""
+    val json = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
+    assert(java.util.regex.Pattern.quote(sem).r.findAllMatchIn(json).size === 3,
+      "one GroundSurface semantics object per Building")
   }
 
   private def closedSet(r: Seq[XY]): Set[(Double, Double)] =
@@ -348,4 +368,23 @@ object ExportSpec {
     """</gml:LinearRing></gml:exterior></gml:Polygon></gml:surfaceMember></gml:MultiSurface>""" +
     """</core:lod2MultiSurface></con:GroundSurface></core:boundary></bldg:Building>""" +
     """</core:cityObjectMember></core:CityModel>"""
+
+  /** `groundFps` as a ground-only CityJSON document without a `semantics`
+    * object — the reader types such faces by their z (all at the minimum z:
+    * `GroundSurface`). The reference the typed ground export re-ingests
+    * against. */
+  val GroundCityJsonUntyped: String =
+    """{"type":"CityJSON","version":"2.0",""" +
+    """"transform":{"scale":[0.001,0.001,0.001],"translate":[0.0,0.0,0.0]},""" +
+    """"CityObjects":{"b1":{"type":"Building","attributes":{"height":"10.5","name":"A & <b>"},""" +
+    """"geometry":[{"type":"MultiSurface","lod":"2","boundaries":[[[0,1,2,3],[4,5,6]]]}]},""" +
+    """"b2":{"type":"Building","attributes":{},""" +
+    """"geometry":[{"type":"MultiSurface","lod":"2","boundaries":[[[7,8,9]]]}]},""" +
+    """"b3":{"type":"Building","attributes":{"k":"v"},""" +
+    """"geometry":[{"type":"MultiSurface","lod":"2","boundaries":[[[10,11,12]]]}]}},""" +
+    """"vertices":[[457800500,5439000250,1500],[457804000,5439000250,1500],""" +
+    """[457804000,5439003000,1500],[457800500,5439003000,1500],[457801000,5439001000,1500],""" +
+    """[457802000,5439001000,1500],[457802000,5439002000,1500],[457810000,5439000000,0],""" +
+    """[457812000,5439000000,0],[457812000,5439002000,0],[457850000,5439000000,0],""" +
+    """[457851000,5439000000,0],[457851000,5439001000,0]]}"""
 }

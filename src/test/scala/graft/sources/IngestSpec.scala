@@ -59,7 +59,8 @@ class IngestSpec extends AnyFunSuite {
     val fps = CityGmlReader.toFootprints(v2doc, 0)
     val surfaces = CityGmlReader.toSurfaces(v2doc, 0)
     val out = java.nio.file.Files.createTempDirectory("gmlv3").resolve("fzk_v3.gml").toString
-    Exporters.exportCityGmlV3Full(fps.filter(_.feature_type == "Building"), surfaces, out)
+    Exporters.exportCityGmlFull(fps.filter(_.feature_type == "Building"), surfaces, out,
+      dialect = Exporters.GmlV3)
     val txt = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out)), "UTF-8")
     assert(txt.contains("citygml/3.0") && txt.contains("construction/3.0")
       && txt.contains("gml/3.2") && txt.contains("boundary"), "fixture must be v3-shaped")
